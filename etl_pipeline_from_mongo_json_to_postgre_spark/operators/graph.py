@@ -39,14 +39,26 @@ PR_CHECKPOINT_EVERY = 6
 
 def _parse_bytes(s: str) -> int:
     """Parse a Spark byte-size conf string ("10MB", "10m", "10485760b",
-    "-1") to bytes. Only the suffixes Spark itself accepts."""
+    "1pb", "-1") to bytes. Only the suffixes Spark itself accepts;
+    anything else raises ValueError."""
     s = s.strip().lower()
-    for suf, mult in (("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20),
-                      ("kb", 1 << 10), ("t", 1 << 40), ("g", 1 << 30),
-                      ("m", 1 << 20), ("k", 1 << 10), ("b", 1)):
+    for suf, mult in (("pb", 1 << 50), ("tb", 1 << 40), ("gb", 1 << 30),
+                      ("mb", 1 << 20), ("kb", 1 << 10), ("p", 1 << 50),
+                      ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20),
+                      ("k", 1 << 10), ("b", 1)):
         if s.endswith(suf):
             return int(float(s[: -len(suf)]) * mult)
     return int(s)
+
+
+def _broadcast_threshold(conf: str) -> int:
+    """The broadcast-threshold conf in bytes, or -1 (broadcast off, so
+    the "src" layout) when the string cannot be parsed: the layout is a
+    performance hint and must never make pagerank raise."""
+    try:
+        return _parse_bytes(conf)
+    except (ValueError, OverflowError):
+        return -1
 
 
 # Conservative per-row bytes of the (node bigint, rank double) state
@@ -184,7 +196,7 @@ def pagerank(edges: DataFrame, damping: float = DAMPING,
     # ``layout`` explicitly to skip the sizing job.
     if layout is None:
         spark = adj.sparkSession
-        thresh = _parse_bytes(
+        thresh = _broadcast_threshold(
             str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold")))
         if thresh <= 0:
             layout = "src"

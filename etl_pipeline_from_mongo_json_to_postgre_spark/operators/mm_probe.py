@@ -42,22 +42,7 @@ among payload-duplicates — the reference's dedup semantics
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from .multimodal import documents_as_media
-from .similarity import (
-    _DUCK_CENT_DOTS,
-    _DUCK_NORM,
-    _DUCK_V,
-    _dot,
-    _duck_dot,
-    _matrix_dots,
-    _vectors,
-    CENTROIDS,
-    N_CENTROIDS,
-    N_QUERIES,
-    TOPK,
-)
+from .multimodal import _mm_crossmodal_oracle, mm_crossmodal_topk
 
 # Measured r13 (table above): 8 of 16 cells is the knee where mean
 # canonical recall clears 0.74 at both gated SFs; 6 would save 25% of
@@ -65,213 +50,10 @@ from .similarity import (
 MP_NPROBE = 8
 
 
-def _ivf_topk_probed(spark, sf_dir, nprobe: int):
-    """similarity.ann_ivf_topk with a parameterized probe width.
-
-    Identical assignment (argmax centroid dot, ties to the lowest
-    cell), identical probe rank rule (dot DESC, cell ASC), identical
-    exact-cosine re-rank — only the number of probed cells differs, so
-    recall deltas between widths measure the probe window and nothing
-    else."""
-    from pyspark.sql.window import Window
-
-    vecs = _vectors(spark, sf_dir)
-    assigned = vecs.select(
-        "vec_id", "v", "nrm",
-        _matrix_dots(F.col("v"), CENTROIDS).alias("dots"),
-    ).select(
-        "vec_id", "v", "nrm", "dots",
-        F.array_position("dots", F.array_max("dots")).alias("cluster_id"),
-    ).localCheckpoint(eager=True)  # corpus + query side both read it
-
-    qprobe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot"), F.asc("cid"))
-    probes = (
-        assigned.where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.posexplode("dots").alias("pos", "dot"),
-        )
-        .withColumn("cid", (F.col("pos") + 1).cast("long"))
-        .withColumn("probe_rank", F.row_number().over(qprobe_w))
-        .where(F.col("probe_rank") <= nprobe)
-        .select("query_id", "qv", "qn", F.col("cid").alias("cluster_id"))
-    )
-    cand = F.broadcast(probes).join(assigned, "cluster_id").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select("query_id", "neighbor_id", "rank",
-                F.round("cos", 6).alias("cosine"))
-    )
-
-
 def mm_crossmodal_topk_mp(spark, sf_dir):
     """Cross-modal retrieval under the widened probe (module
-    docstring): embedding query -> canonical media payload, same
-    dataflow as multimodal.mm_crossmodal_topk — ONE payload scan into
-    the checkpointed digest projection, broadcast hit list, canonical
-    map computed only over digests a hit touched — with the retriever
-    swapped for the measured nprobe=8 probe."""
-    hits = _ivf_topk_probed(spark, sf_dir, MP_NPROBE)
-    media = documents_as_media(spark, sf_dir).select(
-        "media_id",
-        F.sha2("payload", 256).alias("payload_sha256"),
-        "n_bytes",
-    ).localCheckpoint(eager=True)  # one payload scan; both joins read this
-    hit_media = (
-        F.broadcast(hits)
-        .join(media, hits.neighbor_id == media.media_id)
-        .select(
-            "query_id", "rank", "neighbor_id", "cosine",
-            "payload_sha256", "n_bytes",
-        )
-        .localCheckpoint(eager=True)  # digest list + final join read it
-    )
-    hit_digests = hit_media.select("payload_sha256").distinct()
-    canon = (
-        media.join(F.broadcast(hit_digests), "payload_sha256")
-        .groupBy("payload_sha256")
-        .agg(F.min("media_id").alias("canonical_media_id"))
-    )
-    return (
-        hit_media.join(F.broadcast(canon), "payload_sha256")
-        .select(
-            "query_id", "rank", "neighbor_id", "cosine",
-            "canonical_media_id", "n_bytes", "payload_sha256",
-        )
-    )
-
-
-def crossmodal_recall(spark, sf_dir, nprobe: int):
-    """Parameterized canonical-recall census (NOT registered): per-query
-    recall@k of the nprobe-wide retriever vs exact brute force, at the
-    canonical-payload level — the measurement behind MP_NPROBE and the
-    A/B gate test_mm_probe pins. Same dataflow as
-    multimodal.mm_crossmodal_recall_eval."""
-    from .similarity import ann_cosine_topk
-
-    media = documents_as_media(spark, sf_dir).select(
-        "media_id",
-        F.sha2("payload", 256).alias("payload_sha256"),
-    ).localCheckpoint(eager=True)
-    exact = ann_cosine_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id").withColumn("src", F.lit("exact"))
-    ivf = _ivf_topk_probed(spark, sf_dir, nprobe).select(
-        "query_id", "neighbor_id").withColumn("src", F.lit("ivf"))
-    hits = exact.unionByName(ivf)
-    hm = (
-        F.broadcast(hits)
-        .join(media, hits.neighbor_id == media.media_id)
-        .select("src", "query_id", "payload_sha256")
-        .localCheckpoint(eager=True)
-    )
-    hit_digests = hm.select("payload_sha256").distinct()
-    canon = (
-        media.join(F.broadcast(hit_digests), "payload_sha256")
-        .groupBy("payload_sha256")
-        .agg(F.min("media_id").alias("canonical_media_id"))
-    )
-    hc = (
-        hm.join(F.broadcast(canon), "payload_sha256")
-        .select("src", "query_id", "canonical_media_id")
-        .distinct()
-    )
-    truth = hc.where(F.col("src") == "exact").select(
-        "query_id", "canonical_media_id")
-    pred = hc.where(F.col("src") == "ivf").select(
-        "query_id", "canonical_media_id")
-    n_truth = truth.groupBy("query_id").agg(
-        F.count("*").alias("n_exact_canon"))
-    hitcnt = (
-        pred.join(truth, ["query_id", "canonical_media_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("hits"))
-    )
-    return (
-        n_truth.join(hitcnt, "query_id", "left")
-        .select(
-            "query_id",
-            "n_exact_canon",
-            F.coalesce("hits", F.lit(0).cast("bigint")).alias("hits"),
-            (
-                F.coalesce("hits", F.lit(0).cast("bigint")).cast("double")
-                / F.col("n_exact_canon")
-            ).alias("recall"),
-        )
-    )
-
-
-def _duck_ivf_probed(nprobe: int) -> str:
-    """The ann_ivf_topk oracle with a parameterized probe width —
-    identical rank rules (probe: dot DESC, cell ASC; result: cos DESC,
-    id ASC)."""
-    return f"""
-        WITH vecs AS (
-            SELECT vec_id, {_DUCK_V} AS v, {_DUCK_NORM} AS nrm
-            FROM embeddings
-        ), assigned AS (
-            SELECT vec_id, v, nrm, dots,
-                   list_position(dots, list_max(dots)) AS cluster_id
-            FROM (SELECT vec_id, v, nrm, {_DUCK_CENT_DOTS} AS dots
-                  FROM vecs)
-        ), probes AS (
-            SELECT query_id, qv, qn, cluster_id FROM (
-                SELECT a.vec_id AS query_id, a.v AS qv, a.nrm AS qn,
-                       idx.i AS cluster_id,
-                       row_number() OVER (
-                           PARTITION BY a.vec_id
-                           ORDER BY a.dots[idx.i] DESC, idx.i)
-                           AS probe_rank
-                FROM assigned a,
-                     (SELECT unnest(range(1, {N_CENTROIDS} + 1)) AS i) idx
-                WHERE a.vec_id < {N_QUERIES}
-            ) WHERE probe_rank <= {nprobe}
-        ), scored AS (
-            SELECT p.query_id, t.vec_id AS neighbor_id,
-                   {_duck_dot('p.qv', 't.v')} / (p.qn * t.nrm) AS cos
-            FROM probes p JOIN assigned t ON t.cluster_id = p.cluster_id
-            WHERE t.vec_id <> p.query_id
-        )
-        SELECT query_id, neighbor_id, rank, round(cos, 6) AS cosine FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY cos DESC, neighbor_id)
-                AS rank
-            FROM scored
-        ) WHERE rank <= {TOPK}
-    """
-
-
-def _mm_crossmodal_mp_oracle() -> str:
-    return f"""
-        WITH hits AS ({_duck_ivf_probed(MP_NPROBE)}),
-        media AS (
-            SELECT doc_id AS media_id, sha256(text) AS payload_sha256,
-                   CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-            FROM documents
-        ), hm AS (
-            SELECT h.query_id, h.rank, h.neighbor_id, h.cosine,
-                   m.payload_sha256, m.n_bytes
-            FROM hits h JOIN media m ON m.media_id = h.neighbor_id
-        ), canon AS (
-            SELECT payload_sha256, MIN(media_id) AS canonical_media_id
-            FROM media
-            WHERE payload_sha256 IN (SELECT payload_sha256 FROM hm)
-            GROUP BY 1
-        )
-        SELECT hm.query_id, hm.rank, hm.neighbor_id, hm.cosine,
-               c.canonical_media_id, hm.n_bytes, hm.payload_sha256
-        FROM hm JOIN canon c USING (payload_sha256)
-    """
+    docstring): multimodal.mm_crossmodal_topk at nprobe=MP_NPROBE."""
+    return mm_crossmodal_topk(spark, sf_dir, nprobe=MP_NPROBE)
 
 
 QUERIES = {
@@ -279,5 +61,5 @@ QUERIES = {
 }
 
 ORACLE_SQL = {
-    "mm_crossmodal_topk_mp": _mm_crossmodal_mp_oracle(),
+    "mm_crossmodal_topk_mp": _mm_crossmodal_oracle(MP_NPROBE),
 }

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
 
 from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
+from .similarity import ORACLE_SQL as _SIM_ORACLE
+from .similarity import N_PROBE, _duck_ivf_topk, ann_cosine_topk, ann_ivf_topk
 
 MEDIA_SCHEMA = StructType(
     [
@@ -801,7 +803,7 @@ ORACLE_SQL["mm_video_frame_stats"] = """
     GROUP BY doc_id, frame_no
 """
 
-def mm_crossmodal_topk(spark, sf_dir):
+def mm_crossmodal_topk(spark, sf_dir, nprobe: int = N_PROBE):
     """Cross-modal retrieval: embedding query -> nearest MEDIA PAYLOAD
     (VERDICT r10 task 5) — the pair-mining shape a multimodal training
     pipeline needs, joining the two families that never met: the
@@ -823,10 +825,9 @@ def mm_crossmodal_topk(spark, sf_dir):
     (broadcast again) to the hit digests, then the 40-byte digest keys
     aggregate map-side. At 100 TB: index probe is cell-pruned, media
     side is a bucketed-by-id probe, canonicalization touches only
-    digests that actually matched."""
-    from .similarity import ann_ivf_topk
-
-    hits = ann_ivf_topk(spark, sf_dir)
+    digests that actually matched. `nprobe` is the retriever's probe
+    width (similarity.ann_ivf_topk)."""
+    hits = ann_ivf_topk(spark, sf_dir, nprobe)
     media = documents_as_media(spark, sf_dir).select(
         "media_id",
         F.sha2("payload", 256).alias("payload_sha256"),
@@ -856,7 +857,7 @@ def mm_crossmodal_topk(spark, sf_dir):
     )
 
 
-def mm_crossmodal_recall_eval(spark, sf_dir):
+def mm_crossmodal_recall_eval(spark, sf_dir, nprobe: int = N_PROBE):
     """Quality gate for the cross-modal retriever (VERDICT r12 task 4):
     what does mm_crossmodal_topk's IVF-pruned probe MISS vs exact
     brute-force retrieval? Every other retrieval family in this engine
@@ -875,16 +876,15 @@ def mm_crossmodal_recall_eval(spark, sf_dir):
     digest projection; both hit lists are queries x k rows and
     broadcast into it; the canonical map is computed only over digests
     some hit touched (broadcast semi-join), exactly the
-    mm_crossmodal_topk discipline. Nothing here is corpus x corpus."""
-    from .similarity import ann_cosine_topk, ann_ivf_topk
-
+    mm_crossmodal_topk discipline. Nothing here is corpus x corpus.
+    `nprobe` is the probe width of the retriever under test."""
     media = documents_as_media(spark, sf_dir).select(
         "media_id",
         F.sha2("payload", 256).alias("payload_sha256"),
     ).localCheckpoint(eager=True)  # one payload scan; both joins read this
     exact = ann_cosine_topk(spark, sf_dir).select(
         "query_id", "neighbor_id").withColumn("src", F.lit("exact"))
-    ivf = ann_ivf_topk(spark, sf_dir).select(
+    ivf = ann_ivf_topk(spark, sf_dir, nprobe).select(
         "query_id", "neighbor_id").withColumn("src", F.lit("ivf"))
     hits = exact.unionByName(ivf)
     hm = (
@@ -929,13 +929,11 @@ def mm_crossmodal_recall_eval(spark, sf_dir):
     )
 
 
-def _mm_crossmodal_oracle() -> str:
+def _mm_crossmodal_oracle(nprobe: int = N_PROBE) -> str:
     # DuckDB sha256(VARCHAR) hashes the UTF-8 bytes — verified equal to
     # Spark's sha2(encode(text,'utf-8'), 256) lowercase hex.
-    from .similarity import ORACLE_SQL as _sim_oracle
-
     return f"""
-        WITH hits AS ({_sim_oracle["ann_ivf_topk"]}),
+        WITH hits AS ({_duck_ivf_topk(nprobe)}),
         media AS (
             SELECT doc_id AS media_id, sha256(text) AS payload_sha256,
                    CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
@@ -959,12 +957,10 @@ def _mm_crossmodal_oracle() -> str:
 ORACLE_SQL["mm_crossmodal_topk"] = _mm_crossmodal_oracle()
 
 
-def _mm_crossmodal_recall_oracle() -> str:
-    from .similarity import ORACLE_SQL as _sim_oracle
-
+def _mm_crossmodal_recall_oracle(nprobe: int = N_PROBE) -> str:
     return f"""
-        WITH exact_hits AS ({_sim_oracle["ann_cosine_topk"]}),
-        ivf_hits AS ({_sim_oracle["ann_ivf_topk"]}),
+        WITH exact_hits AS ({_SIM_ORACLE["ann_cosine_topk"]}),
+        ivf_hits AS ({_duck_ivf_topk(nprobe)}),
         media AS (
             SELECT doc_id AS media_id, sha256(text) AS payload_sha256
             FROM documents

@@ -72,46 +72,22 @@ _TRAINED_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 
 
 def _load_trained():
-    """ONLY a missing file is the legitimate bootstrap state (the
-    trainer imports this module before the artifact exists). A
-    corrupted/truncated COMMITTED artifact must raise loudly —
-    swallowing it would silently deregister both trained entries and
-    every suite would stay green with the registry two entries short
-    (r12 review finding).
-
-    r13 (judge advice): a missing file is only legitimate DURING
-    bootstrap. Once the artifact has shipped, the committed fingerprint
-    stamps (tools/entry_fingerprints.json) contain the two trained
-    entries — if those stamps exist but the file is gone, that is an
-    accidentally-dropped artifact (packaging/checkout mistake), and
-    silently shrinking the registry by two green-evidenced entries is
-    the same failure mode as corruption. The trainer opts out via
-    SPARK_GRAFT_SEM_BOOTSTRAP=1 for the genuine first-training case."""
+    """A corrupted/truncated committed artifact raises loudly, and so
+    does a missing one: swallowing either would silently deregister
+    both trained entries and every suite would stay green with the
+    registry two entries short. Only the trainer's genuine first run
+    opts out, via SPARK_GRAFT_SEM_BOOTSTRAP=1 (returns None)."""
     try:
         with open(_TRAINED_PATH) as fh:
             t = json.load(fh)
     except FileNotFoundError:
         if os.environ.get("SPARK_GRAFT_SEM_BOOTSTRAP") == "1":
             return None
-        stamp_path = os.path.join(
-            os.path.dirname(os.path.dirname(
-                os.path.dirname(os.path.abspath(__file__)))),
-            "tools", "entry_fingerprints.json")
-        try:
-            with open(stamp_path) as fh:
-                stamped = json.load(fh)
-        except (OSError, ValueError):
-            return None  # no stamps at all: genuinely pre-bootstrap
-        if any(k in stamped for k in ("dedup_semantic_cells_trained",
-                                      "sem_probe_eval_trained")):
-            raise RuntimeError(
-                f"{_TRAINED_PATH} is missing but "
-                "tools/entry_fingerprints.json carries stamps for the "
-                "trained entries — the committed artifact was dropped. "
-                "Restore it from git, or re-train via "
-                "tools/train_sem_centroids.py (which sets "
-                "SPARK_GRAFT_SEM_BOOTSTRAP=1).")
-        return None
+        raise RuntimeError(
+            f"{_TRAINED_PATH} is missing — the committed artifact was "
+            "dropped. Restore it from git, or re-train via "
+            "tools/train_sem_centroids.py (which sets "
+            "SPARK_GRAFT_SEM_BOOTSTRAP=1).") from None
     return t["centroids"]
 
 

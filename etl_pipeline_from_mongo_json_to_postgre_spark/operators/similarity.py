@@ -20,6 +20,8 @@ bit-identical and thresholds/rankings agree exactly.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column, functions as F
 
@@ -60,6 +62,19 @@ def _dot(a: Column, b: Column) -> Column:
     return _fold_sum(F.zip_with(a, b, lambda x, y: x * y))
 
 
+def _plane_sql(plane: list[float]) -> str:
+    """SQL text of one literal double array. Spark SQL has no literal
+    for nan/inf (repr would render `nanD`, which fails later as an
+    opaque ParseException or unresolved column), so a non-finite value
+    raises here, naming the value."""
+    for v in plane:
+        if not math.isfinite(v):
+            raise ValueError(
+                f"literal plane holds non-finite value {v!r}; only finite "
+                "doubles can be rendered as Spark SQL literals")
+    return "array(" + ", ".join(f"{v!r}D" for v in plane) + ")"
+
+
 def _plane_lit(plane: list[float]) -> Column:
     """Literal double array as ONE F.expr parse (r14): the previous
     per-element form cost one py4j round trip per F.lit — ~0.45 s of
@@ -69,17 +84,13 @@ def _plane_lit(plane: list[float]) -> Column:
     expression). repr() is the shortest round-trip float form and
     Spark's double parser reproduces it bit-exactly — the same
     contract the DuckDB oracles' _duck_list(repr) already relies on."""
-    return F.expr("array(" + ", ".join(f"{v!r}D" for v in plane) + ")")
+    return F.expr(_plane_sql(plane))
 
 
 def _matrix_lit(planes: list[list[float]]) -> Column:
     """Literal matrix (array<array<double>>) as ONE F.expr parse — see
     _plane_lit for the driver-time rationale."""
-    return F.expr(
-        "array(" + ", ".join(
-            "array(" + ", ".join(f"{v!r}D" for v in p) + ")" for p in planes
-        ) + ")"
-    )
+    return F.expr("array(" + ", ".join(_plane_sql(p) for p in planes) + ")")
 
 
 def _matrix_dots(vcol: Column, planes: list[list[float]]) -> Column:
@@ -454,16 +465,19 @@ def dedup_components(spark, sf_dir):
     )
 
 
-def ann_ivf_topk(spark, sf_dir):
+def ann_ivf_topk(spark, sf_dir, nprobe: int = N_PROBE):
     """IVF top-k: the partition-pruned scale path for ANN search.
 
     Every vector is assigned to its max-dot coarse centroid (16 fixed
     literals -> map-side expression, no shuffle); each query probes its
-    4 nearest centroids and searches ONLY those inverted lists. The
-    probe->corpus equi-join on cluster_id is the IVF partition pruning:
-    at 100 TB the corpus is written bucketed/partitioned by cluster_id
-    and a probe touches nprobe/nlist of the data. Query side (20 x 4
-    probes) is broadcast.
+    `nprobe` nearest centroids (probe rank: dot DESC, cell ASC) and
+    searches ONLY those inverted lists. The probe->corpus equi-join on
+    cluster_id is the IVF partition pruning: at 100 TB the corpus is
+    written bucketed/partitioned by cluster_id and a probe touches
+    nprobe/nlist of the data. Query side (20 x nprobe probes) is
+    broadcast. The probe width is a per-query search setting of the
+    one index: only the number of probed cells varies with it, so
+    recall deltas between widths measure the probe window alone.
     """
     from pyspark.sql.window import Window
 
@@ -500,7 +514,7 @@ def ann_ivf_topk(spark, sf_dir):
         )
         .withColumn("cid", (F.col("pos") + 1).cast("long"))
         .withColumn("probe_rank", F.row_number().over(qprobe_w))
-        .where(F.col("probe_rank") <= N_PROBE)
+        .where(F.col("probe_rank") <= nprobe)
         .select("query_id", "qv", "qn", F.col("cid").alias("cluster_id"))
     )
     cand = F.broadcast(probes).join(assigned, "cluster_id").where(
@@ -702,36 +716,42 @@ ORACLE_SQL["dedup_cluster_census"] = ORACLE_SQL["dedup_components"].replace(
 )
 
 
-ORACLE_SQL["ann_ivf_topk"] = f"""
-    WITH vecs AS (
-        SELECT vec_id, {_DUCK_V} AS v, {_DUCK_NORM} AS nrm FROM embeddings
-    ), assigned AS (
-        SELECT vec_id, v, nrm, dots,
-               list_position(dots, list_max(dots)) AS cluster_id
-        FROM (SELECT vec_id, v, nrm, {_DUCK_CENT_DOTS} AS dots FROM vecs)
-    ), probes AS (
-        SELECT query_id, qv, qn, cluster_id FROM (
-            SELECT a.vec_id AS query_id, a.v AS qv, a.nrm AS qn,
-                   idx.i AS cluster_id,
-                   row_number() OVER (
-                       PARTITION BY a.vec_id
-                       ORDER BY a.dots[idx.i] DESC, idx.i) AS probe_rank
-            FROM assigned a,
-                 (SELECT unnest(range(1, {N_CENTROIDS} + 1)) AS i) idx
-            WHERE a.vec_id < {N_QUERIES}
-        ) WHERE probe_rank <= {N_PROBE}
-    ), scored AS (
-        SELECT p.query_id, t.vec_id AS neighbor_id,
-               {_duck_dot('p.qv', 't.v')} / (p.qn * t.nrm) AS cos
-        FROM probes p JOIN assigned t ON t.cluster_id = p.cluster_id
-        WHERE t.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, rank, round(cos, 6) AS cosine FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= {TOPK}
-"""
+def _duck_ivf_topk(nprobe: int = N_PROBE) -> str:
+    """The ann_ivf_topk oracle at probe width `nprobe` — same rank rules
+    (probe: dot DESC, cell ASC; result: cos DESC, id ASC)."""
+    return f"""
+        WITH vecs AS (
+            SELECT vec_id, {_DUCK_V} AS v, {_DUCK_NORM} AS nrm FROM embeddings
+        ), assigned AS (
+            SELECT vec_id, v, nrm, dots,
+                   list_position(dots, list_max(dots)) AS cluster_id
+            FROM (SELECT vec_id, v, nrm, {_DUCK_CENT_DOTS} AS dots FROM vecs)
+        ), probes AS (
+            SELECT query_id, qv, qn, cluster_id FROM (
+                SELECT a.vec_id AS query_id, a.v AS qv, a.nrm AS qn,
+                       idx.i AS cluster_id,
+                       row_number() OVER (
+                           PARTITION BY a.vec_id
+                           ORDER BY a.dots[idx.i] DESC, idx.i) AS probe_rank
+                FROM assigned a,
+                     (SELECT unnest(range(1, {N_CENTROIDS} + 1)) AS i) idx
+                WHERE a.vec_id < {N_QUERIES}
+            ) WHERE probe_rank <= {nprobe}
+        ), scored AS (
+            SELECT p.query_id, t.vec_id AS neighbor_id,
+                   {_duck_dot('p.qv', 't.v')} / (p.qn * t.nrm) AS cos
+            FROM probes p JOIN assigned t ON t.cluster_id = p.cluster_id
+            WHERE t.vec_id <> p.query_id
+        )
+        SELECT query_id, neighbor_id, rank, round(cos, 6) AS cosine FROM (
+            SELECT *, row_number() OVER (
+                PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
+            FROM scored
+        ) WHERE rank <= {TOPK}
+    """
+
+
+ORACLE_SQL["ann_ivf_topk"] = _duck_ivf_topk()
 
 KNN_K = 5
 

@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config.defaults import (
-    OBJECT_STATUS_ALREADY_EXISTS,
     OBJECT_STATUS_MISSING,
     OBJECT_STATUS_NEW,
     STATUS_ERROR,
@@ -92,12 +91,3 @@ def missing_table_audit_rows(spark, tables: list[str], collection_lookup: dict[s
         F.array().cast("array<string>").alias("missing_columns"),
         F.lit(STATUS_MISSING).alias("processing_status"),
     )
-
-
-def classify_object_status(table: str, schema_tables: set[str], existing_tables: set[str]) -> str:
-    """NEW / ALREADY_EXISTS classification (reference pipeline.py:147-152)."""
-    if table in existing_tables:
-        return OBJECT_STATUS_ALREADY_EXISTS
-    if table in schema_tables:
-        return OBJECT_STATUS_NEW
-    return OBJECT_STATUS_NEW

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config.defaults import DEFAULT_DATE_FORMATS
@@ -73,57 +73,6 @@ class MappingPlan:
 
     def _opts(self) -> dict:
         return {"date_formats": self.date_formats}
-
-    def value_expr(self, raw: Column, attr: AttributeMapping) -> Column:
-        source = F.get_json_object(raw, f"$.{attr.source_attr}")
-        return build_cast(source, attr.logical_type, self._opts()).alias(attr.column)
-
-    def keys_expr(self, raw: Column) -> Column:
-        return F.json_object_keys(raw)
-
-    def missing_expr(self, raw: Column) -> Column:
-        """array<string> of target columns whose source attr is absent
-        (reference transformer.py:22-25 appends target_column names)."""
-        keys = self.keys_expr(raw)
-        entries = [
-            F.when(
-                ~F.array_contains(keys, a.source_attr), F.lit(a.column)
-            )
-            for a in self.attributes
-        ]
-        arr = F.array(*entries)
-        return F.filter(arr, lambda x: x.isNotNull())
-
-    def errors_expr(self, raw: Column) -> Column:
-        """array<string> '<source_attr>: <msg>' for present-but-uncastable
-        values (reference transformer.py:36-38,76-77)."""
-        keys = self.keys_expr(raw)
-        entries = []
-        for a in self.attributes:
-            source = F.get_json_object(raw, f"$.{a.source_attr}")
-            casted = build_cast(source, a.logical_type, self._opts())
-            entries.append(
-                F.when(
-                    F.array_contains(keys, a.source_attr)
-                    & source.isNotNull()
-                    & casted.isNull(),
-                    F.lit(f"{a.source_attr}: invalid {a.logical_type} value"),
-                )
-            )
-        return F.filter(F.array(*entries), lambda x: x.isNotNull())
-
-    def projection(self, raw: Column) -> list[Column]:
-        """Mapped columns only (reference drops unmapped attrs,
-        transformer.py:18-38)."""
-        return [self.value_expr(raw, a) for a in self.attributes]
-
-    def object_id_expr(self, raw: Column) -> Column:
-        """str(document.get(object_id_attribute)) for the audit trail
-        (reference pipeline.py:220-229,256)."""
-        attr = self.object_id_attribute
-        if not attr:
-            return F.lit(None).cast("string")
-        return F.get_json_object(raw, f"$.{attr}").cast("string")
 
     def spark_schema_fields(self) -> list[tuple[str, str]]:
         return [(a.column, spark_type_for(a.logical_type)) for a in self.attributes]

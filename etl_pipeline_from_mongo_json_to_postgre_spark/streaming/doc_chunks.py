@@ -21,6 +21,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.text import word_hashes
 from ..operators.chunking import _DUCK_CHUNKS, _WORDS, CHUNK_STRIDE, CHUNK_TOKENS
@@ -84,15 +85,11 @@ def stream_chunk_length_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("stream_chunk_census")
 
 
-def stream_ann_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """queries() entry: IVF index maintenance at ingest — embedding
-    vectors are assigned to their TRAINED coarse cell as they arrive
-    (stateless map against the broadcast trained centroids; exactly
-    what keeps an IVFADC index current as new vectors land), with a
-    complete-mode per-cell occupancy census. Planted-corpus vectors
-    are derived from the arriving vec_ids the same way the batch
-    ann_trained fixture derives them, so the oracle is the batch cell
-    census in SQL. State = one row per cell (16)."""
+def start_ann_cell_assign(spark: SparkSession, sf_dir: str,
+                          query_name: str) -> StreamingQuery:
+    """Start stream_ann_cell_assign's streaming census into the memory
+    sink `query_name` and return the running query handle (its
+    per-batch progress is what tools/stream_ann_decompose.py reads)."""
     from ..operators.ann_trained import (
         _coarse_scores,
         _require_trained,
@@ -122,15 +119,26 @@ def stream_ann_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("cell")
     )
     census = assigned.groupBy("cell").agg(F.count("*").alias("n_vecs"))
-    q = (
+    return (
         census.writeStream.format("memory")
-        .queryName("stream_ann_cells")
+        .queryName(query_name)
         .outputMode("complete")
         .trigger(availableNow=True)
         .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
         .start()
     )
-    q.awaitTermination()
+
+
+def stream_ann_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """queries() entry: IVF index maintenance at ingest — embedding
+    vectors are assigned to their TRAINED coarse cell as they arrive
+    (stateless map against the broadcast trained centroids; exactly
+    what keeps an IVFADC index current as new vectors land), with a
+    complete-mode per-cell occupancy census. Planted-corpus vectors
+    are derived from the arriving vec_ids the same way the batch
+    ann_trained fixture derives them, so the oracle is the batch cell
+    census in SQL. State = one row per cell (16)."""
+    start_ann_cell_assign(spark, sf_dir, "stream_ann_cells").awaitTermination()
     return spark.table("stream_ann_cells")
 
 

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_from_mongo_json_to_postgre_spark.operators.graph import (
+    _broadcast_threshold,
     _parse_bytes,
     checkpoint_partitioned,
     pagerank,
@@ -153,12 +154,33 @@ def test_pagerank_layout_decision_boundaries():
     assert _parse_bytes("10485760b") == ten_mb
     assert _parse_bytes("10485760") == ten_mb
     assert _parse_bytes("-1") == -1
+    assert _parse_bytes("1p") == 1 << 50
+    assert _parse_bytes("1pb") == 1 << 50
+    # an unparsable conf is no reason to crash pagerank: it falls back
+    # to "src", the layout that is correct in either join regime
+    with pytest.raises(ValueError):
+        _parse_bytes("ten megabytes")
+    assert _broadcast_threshold("ten megabytes") == -1
+    assert pagerank_layout_for(97, _broadcast_threshold("ten megabytes")) == "src"
+    assert _broadcast_threshold("10MB") == ten_mb
 
 
 def test_pagerank_explicit_layout_param_respected(smj_spark):
     """layout="dst" pins the key regardless of regime (the documented
     override for callers that know their state size)."""
     ranks = pagerank(_test_edges(smj_spark), iters=1, layout="dst")
-    # dst layout in the SMJ regime: the links scan IS re-shuffled by
-    # the src join — assert the plan still builds and computes
+    # dst layout in the SMJ regime (where the auto rule would pick src):
+    # the src join must re-shuffle the links scan, so an Exchange on src
+    # sits between every links scan and its join
+    link_chains, plan = _pagerank_link_chains(ranks)
+    for chain in link_chains:
+        below_join = []
+        for node in chain:
+            if node.startswith(("SortMergeJoin", "ShuffledHashJoin")):
+                break
+            below_join.append(node)
+        assert any(n.startswith("Exchange hashpartitioning(src")
+                   for n in below_join), (
+            "layout='dst' was not honoured — the links scan reached the "
+            "src join without a shuffle:\n" + plan)
     assert ranks.count() > 0

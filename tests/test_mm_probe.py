@@ -10,13 +10,17 @@ nprobe=8 -> mean 0.740/0.750/0.780 (worst query 0.0 -> 0.4).
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_from_mongo_json_to_postgre_spark.operators import mm_probe
+from etl_pipeline_from_mongo_json_to_postgre_spark.operators import (
+    mm_probe,
+    multimodal,
+    similarity,
+)
 
 SF = "/root/testdata/sf0.001"
 
 
 def _mean_recall(spark, nprobe: int) -> float:
-    return mm_probe.crossmodal_recall(spark, SF, nprobe).agg(
+    return multimodal.mm_crossmodal_recall_eval(spark, SF, nprobe).agg(
         F.avg("recall")).collect()[0][0]
 
 
@@ -37,8 +41,8 @@ def test_mp_topk_is_superset_quality(spark):
     appears in the mp result or was displaced by a neighbor with
     cosine >= c (strictly better fill). Checked via per-query minimum
     cosine: mp's kth cosine is >= base's kth cosine for every query."""
-    base = mm_probe._ivf_topk_probed(spark, SF, 4)
-    mp = mm_probe._ivf_topk_probed(spark, SF, mm_probe.MP_NPROBE)
+    base = similarity.ann_ivf_topk(spark, SF, 4)
+    mp = similarity.ann_ivf_topk(spark, SF, mm_probe.MP_NPROBE)
     b = base.groupBy("query_id").agg(F.min("cosine").alias("kth_base"))
     m = mp.groupBy("query_id").agg(F.min("cosine").alias("kth_mp"))
     bad = b.join(m, "query_id").where(

@@ -115,16 +115,13 @@ def test_trained_plans_have_no_cartesian(spark, sf_dir):
 
 
 def test_dropped_artifact_fails_loudly(monkeypatch, tmp_path):
-    """r13 guard (judge advice): once entry_fingerprints.json carries
-    stamps for the trained entries, a MISSING artifact is a dropped
-    committed file, not bootstrap — _load_trained must raise, not
-    silently shrink the registry by two entries. The trainer's
-    explicit SPARK_GRAFT_SEM_BOOTSTRAP=1 opt-out restores the
-    bootstrap behavior (returns None)."""
+    """A MISSING committed artifact is a dropped file, not bootstrap —
+    _load_trained must raise, not silently shrink the registry by two
+    entries. The trainer's explicit SPARK_GRAFT_SEM_BOOTSTRAP=1
+    opt-out restores the bootstrap behavior (returns None)."""
     monkeypatch.setattr(
         sem_trained, "_TRAINED_PATH", str(tmp_path / "nonexistent.json"))
     monkeypatch.delenv("SPARK_GRAFT_SEM_BOOTSTRAP", raising=False)
-    # stamps in this tree DO contain the trained entries
     with pytest.raises(RuntimeError, match="dropped"):
         sem_trained._load_trained()
     monkeypatch.setenv("SPARK_GRAFT_SEM_BOOTSTRAP", "1")

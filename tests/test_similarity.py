@@ -1,3 +1,4 @@
+import pytest
 
 
 def test_ivf_pq_adc_ranks_are_wellformed(spark, sf_dir):
@@ -105,3 +106,25 @@ def test_triplet_mining_semantics_and_plan(spark, sf_dir):
     assert "partial_min" in plan and "partial_max" in plan
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert node not in plan
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_literal_planes_reject_non_finite_values(spark, bad):
+    """A nan/inf in a literal plane or matrix raises ValueError naming
+    the value at construction, instead of rendering `nanD`/`infD` and
+    failing later with an opaque ParseException."""
+    from etl_pipeline_from_mongo_json_to_postgre_spark.operators.similarity import (
+        _matrix_lit,
+        _plane_lit,
+    )
+
+    with pytest.raises(ValueError, match=repr(bad).lstrip("-")):
+        _plane_lit([0.5, bad, 1.0])
+    with pytest.raises(ValueError, match=repr(bad).lstrip("-")):
+        _matrix_lit([[0.5, 1.0], [bad, 2.0]])
+    # finite literals still round-trip bit-exactly
+    row = spark.range(1).select(
+        _plane_lit([0.1, -2.5]).alias("p"),
+        _matrix_lit([[0.1], [3e-300]]).alias("m"),
+    ).collect()[0]
+    assert row.p == [0.1, -2.5] and row.m == [[0.1], [3e-300]]

@@ -3,17 +3,18 @@
 
 Usage:
     python tools/perf_probe.py [entry ...] [--reps N]
-        [--plans TAG] [--plans-dir rNN] [--out FILE]
+        [--plans DIR] [--out FILE]
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 by default.
 
-For every entry, on ONE warmed session (bench confs + UI enabled):
+For every entry, on ONE warmed session (session.get_spark, the engine's
+one session factory):
   - best-of-N noop wall (the bench methodology),
   - planning time (df construction + executedPlan materialization),
   - number of Spark jobs the timed action launches (fixed-overhead
     proxy: each job is a driver round-trip + at least one stage),
-and with --plans TAG writes plans/<plans-dir>/<entry>_<TAG>.txt.
-Probe-only; nothing here is used by bench.py or the driver. (Was
-tools/perf_probe_r13.py; renamed + round-parametrized for r14.)
+    counted through the status tracker, which works with the UI off,
+and with --plans DIR writes DIR/<entry>.txt (DIR must be outside the
+repository). Probe-only; nothing here is used by bench.py or the driver.
 """
 
 from __future__ import annotations
@@ -25,9 +26,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+sys.path.insert(0, REPO)
 
 DEFAULT_ENTRIES = [
     "graph_pagerank_parts", "graph_label_propagation", "kmeans_train",
@@ -45,33 +45,6 @@ DEFAULT_ENTRIES = [
 ]
 
 
-def build_session(cpus: int):
-    """bench-equivalent session with the UI on for stage inspection."""
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("perf_probe")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4055")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.driver.extraJavaOptions",
-                "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing")
-        .getOrCreate()
-    )
-
-
 def explain_formatted(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -85,18 +58,22 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("entries", nargs="*", default=None)
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--plans", default=None,
-                    help="write plans/<plans-dir>/<entry>_<TAG>.txt")
-    ap.add_argument("--plans-dir", default="r14",
-                    help="subdirectory of plans/ for --plans output")
+    ap.add_argument("--plans", default=None, metavar="DIR",
+                    help="write DIR/<entry>.txt (DIR outside the repository)")
     ap.add_argument("--out", default=None, help="write JSON results here")
     args = ap.parse_args()
     entries = args.entries or DEFAULT_ENTRIES
+    if args.plans:
+        plans_dir = os.path.realpath(args.plans)
+        if os.path.commonpath([plans_dir, REPO]) == REPO:
+            ap.error(f"--plans {args.plans} is inside the repository")
+        os.makedirs(plans_dir, exist_ok=True)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    from etl_pipeline_from_mongo_json_to_postgre_spark.session import get_spark
+
+    spark = get_spark(app_name="perf_probe", cpus=cpus)
 
     from __spark_entry__ import queries
 
@@ -125,10 +102,7 @@ def main() -> None:
         df._jdf.queryExecution().executedPlan()
         plan_s = time.time() - t_plan0
         if args.plans:
-            os.makedirs(os.path.join(REPO, "plans", args.plans_dir),
-                        exist_ok=True)
-            with open(os.path.join(REPO, "plans", args.plans_dir,
-                                   f"{name}_{args.plans}.txt"), "w") as fh:
+            with open(os.path.join(plans_dir, f"{name}.txt"), "w") as fh:
                 fh.write(explain_formatted(registry[name](spark, sf_dir)))
         best, best_jobs = None, 0
         for rep in range(args.reps):

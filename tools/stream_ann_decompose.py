@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,47 +29,16 @@ from pyspark.sql import functions as F
 
 
 def run_decomposed(spark, sf_dir: str) -> dict:
-    """stream_ann_cell_assign's dataflow (streaming/doc_chunks.py:87)
-    with the query handle retained so per-batch progress survives.
+    """stream_ann_cell_assign's dataflow (streaming/doc_chunks.py) with
+    the query handle retained so per-batch progress survives.
     Returns {'batches': [...], 'in_batch_ms': N, 'overhead_ms': N,
-    'n_rows': N}."""
-    from etl_pipeline_from_mongo_json_to_postgre_spark.operators.ann_trained import (
-        _coarse_scores,
-        _require_trained,
-        planted_v_column,
+    'n_rows': N, 'qname': <memory-sink table>}."""
+    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.doc_chunks import (
+        start_ann_cell_assign,
     )
-    from etl_pipeline_from_mongo_json_to_postgre_spark.session import tune_for_oracle
-    from etl_pipeline_from_mongo_json_to_postgre_spark.sources.parquet import load_table
 
-    _require_trained()
-    tune_for_oracle(spark)
-    load_table(spark, sf_dir, "embeddings")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(src).schema
-    watch_dir = tempfile.mkdtemp(prefix="embeddings_decomp_")
-    os.symlink(src, os.path.join(watch_dir, "embeddings.parquet"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch_dir)
-        .select("vec_id")
-    )
-    assigned = stream.select(
-        _coarse_scores(planted_v_column()).alias("scores")
-    ).select(
-        F.array_position("scores", F.array_max("scores"))
-        .cast("bigint").alias("cell")
-    )
-    census = assigned.groupBy("cell").agg(F.count("*").alias("n_vecs"))
     qname = f"decomp_{abs(hash(sf_dir)) % 10_000}"
-    q = (
-        census.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
-    )
+    q = start_ann_cell_assign(spark, sf_dir, qname)
     q.awaitTermination()
     batches = []
     for p in q.recentProgress:
@@ -90,7 +58,7 @@ def run_decomposed(spark, sf_dir: str) -> dict:
         "in_batch_ms": sum(b["addBatch_ms"] for b in batches),
         "overhead_ms": sum(b["overhead_ms"] for b in batches),
         "n_rows": n_rows,
-        "qname": qname,  # the memory-sink table (twin-equivalence pin)
+        "qname": qname,
     }
 
 
