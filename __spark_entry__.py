@@ -9,6 +9,8 @@ Implementations live in etl_pipeline_from_mongo_json_to_postgre_spark/
 module only assembles the registries: a plain union of every module's
 QUERIES / ORACLE_SQL in _MODULES order. Entry names are unique across
 modules (tests/test_registry.py), so the union never shadows one.
+Every builder, entry() included, runs inside _boundary, which tunes the
+caller's session before the builder starts.
 """
 
 from __future__ import annotations
@@ -53,6 +55,7 @@ from etl_pipeline_from_mongo_json_to_postgre_spark.operators import (
     transform_queries,
     variant_ingest,
 )
+from etl_pipeline_from_mongo_json_to_postgre_spark.session import tune_for_oracle
 from etl_pipeline_from_mongo_json_to_postgre_spark.sources import (
     binary_source,
     csv_source,
@@ -85,29 +88,36 @@ def entry(spark: SparkSession) -> DataFrame:
     through the mapping/transform engine, pivot the audit trail
     (object_name x processing_status) — the reference's dashboard A1
     over a real engine-produced audit frame."""
-    return transform_queries.audit_status_pivot(spark, "/root/testdata/sf0.001")
+    return _boundary(transform_queries.audit_status_pivot)(
+        spark, "/root/testdata/sf0.001")
 
 
-def _ntz_outputs(fn: Callable) -> Callable:
-    """Cast every TIMESTAMP_LTZ output column to TIMESTAMP_NTZ at the
-    registry boundary.
+def _boundary(fn: Callable) -> Callable:
+    """The registry boundary: tune the caller's session, run the
+    builder, then cast every TIMESTAMP_LTZ output column to
+    TIMESTAMP_NTZ.
 
-    Why: PySpark ``collect()`` converts TimestampType through the
+    Why tune here: the driver hands us its own session (ANSI on, any
+    session time zone), and builders and their helpers assume the
+    session.SESSION_CONFS settings. This is the one place they are
+    applied; builders never call tune_for_oracle themselves.
+
+    Why cast: PySpark ``collect()`` converts TimestampType through the
     PYTHON PROCESS timezone (datetime.fromtimestamp), so a non-UTC
     driver host would shift collected datetimes while the DuckDB oracle
     stays UTC-naive — a whole class of spurious hash mismatches
     (verified 2026-08-14: exactly the ts-output entries fail under
-    TZ=America/New_York, everything else green). Every query pins the
-    SESSION timezone to UTC (tune_for_oracle), so the LTZ->NTZ cast is
-    value-preserving, and NTZ collects to a naive datetime with no
-    process-timezone involvement — parity now holds under ANY driver
-    host timezone."""
+    TZ=America/New_York, everything else green). The tune step pins the
+    session timezone to UTC, so the LTZ->NTZ cast is value-preserving,
+    and NTZ collects to a naive datetime with no process-timezone
+    involvement — parity now holds under ANY driver host timezone."""
     from functools import wraps
 
     from pyspark.sql.types import TimestampType
 
     @wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+        tune_for_oracle(spark)
         df = fn(spark, sf_dir)
         from pyspark.sql import functions as F
 
@@ -124,7 +134,7 @@ def _ntz_outputs(fn: Callable) -> Callable:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _MODULES:
-        q.update((name, _ntz_outputs(fn)) for name, fn in mod.QUERIES.items())
+        q.update((name, _boundary(fn)) for name, fn in mod.QUERIES.items())
     return q
 
 

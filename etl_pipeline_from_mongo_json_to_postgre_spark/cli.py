@@ -1,8 +1,12 @@
 """CLI entry point (reference etl_pipeline/cli.py:8-32).
 
-Same argument surface plus Spark/sink knobs. Default sink is parquet
+Same argument surface plus sink knobs. Default sink is parquet
 (``--output-dir``) so a run works with no database; ``--jdbc`` switches
-to the Postgres path (DDL bootstrap + batched writes).
+to the Postgres path (DDL bootstrap + batched writes). The session
+comes from ``session.get_spark``, so a CLI run has the same UTC,
+non-ANSI and LTZ-timestamp settings as the tests; it runs on
+``local[N]`` with N = ``SPARK_GRAFT_CPUS`` (default: all cores) and
+``SPARK_DRIVER_MEMORY`` (default 16g).
 
     python -m etl_pipeline_from_mongo_json_to_postgre_spark.cli \
         --input Data/input.json --mapping-config config/mapping.yaml \
@@ -29,26 +33,17 @@ def parse_args(argv=None):
                         help="Parquet output directory (default sink).")
     parser.add_argument("--jdbc", action="store_true",
                         help="Write to Postgres via JDBC instead of parquet.")
-    parser.add_argument("--master", default="local[*]", help="Spark master.")
-    parser.add_argument("--shuffle-partitions", type=int, default=32)
     return parser.parse_args(argv)
 
 
 def main(argv=None) -> int:
     args = parse_args(argv)
     try:
-        from pyspark.sql import SparkSession
-
         from .config.loader import load_config, validate_app_config, validate_mapping_config
         from .pipeline import format_summary, run, write_run_jdbc, write_run_parquet
+        from .session import get_spark
 
-        spark = (
-            SparkSession.builder.master(args.master)
-            .appName("etl-pipeline-spark")
-            .config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-            .config("spark.sql.adaptive.enabled", "true")
-            .getOrCreate()
-        )
+        spark = get_spark(app_name="etl-pipeline-spark")
         result = run(spark, args.input, args.mapping_config, args.app_config)
         if args.jdbc:
             app = validate_app_config(load_config(args.app_config) if args.app_config else {})

@@ -9,7 +9,7 @@ Determinism discipline for oracle parity:
 - double aggregations go through exact DECIMAL arithmetic, then CAST to
   DOUBLE at the end (FP summation order differs between engines);
 - top-k queries always carry a unique tie-break key;
-- timestamps compare under UTC sessions (session.tune_for_oracle).
+- timestamps compare under UTC sessions (session.SESSION_CONFS).
 
 Scale notes are inline: broadcast hints on bounded dims, aggregate
 pushdown before joins, no driver-side collects anywhere.
@@ -21,12 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_oracle(spark)
     return load_table(spark, sf_dir, name)
 
 
@@ -1853,7 +1851,6 @@ def w4_windowed_distinct_count(spark, sf_dir):
     (type,user) aggregate; the window runs over |types| x |days| rows
     only. The naive alternative (collect_set over a window) ships every
     user id through every frame — O(days x users) state."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     day = F.to_date("ts").alias("day")
     firsts = (

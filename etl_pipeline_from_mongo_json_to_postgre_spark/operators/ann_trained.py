@@ -52,7 +52,6 @@ import os
 import numpy as np
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 from .similarity import (
     _duck_fold_sum,
@@ -165,7 +164,6 @@ def planted_vectors(spark, sf_dir):
     spine. Column-pruned scan (vec_id only); v is one map-side
     expression — additions parenthesized (blob + pattern) + noise so
     DuckDB mirrors the float order exactly."""
-    tune_for_oracle(spark)
     spine = fan_out(spark, load_table(spark, sf_dir, "embeddings")).select("vec_id")
     return spine.select("vec_id", planted_v_column().alias("v"))
 

@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 # Deterministic per-basket cap: baskets are truncated to their
@@ -113,7 +112,6 @@ def basket_association_rules(spark, sf_dir):
     broadcast, the marginal join degrades gracefully to a shuffle on
     item id). All ratios are single fp divisions of exact integer
     counts in identical operand order on both engines."""
-    tune_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     pairs = copurchase_pairs(li)
     rules = pairs.select(
@@ -158,7 +156,6 @@ def basket_copurchase_pairs(spark, sf_dir):
     """Market-basket pair counts: for every unordered pair of parts
     bought together in at least MIN_PAIR_COUNT orders, the number of
     co-occurrences. See ``copurchase_pairs`` for the plan shape."""
-    tune_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return copurchase_pairs(li)
 
@@ -168,7 +165,6 @@ def events_heavy_hitters(spark, sf_dir):
     type (count DESC, user_id ASC ties). Two-stage: per-(type, user)
     counts combine map-side; the top-K window then sorts only
     count-sized rows within each type partition."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("event_type", "user_id").agg(
         F.count("*").alias("n_events")
@@ -195,7 +191,6 @@ def events_audience_overlap(spark, sf_dir):
     pair map-side after ONE user-keyed shuffle, never a row self-join
     of the events table; set sizes broadcast back onto the
     10-row pair frame."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     common = copurchase_pairs(
         ev, basket_col="user_id", item_col="event_type", min_count=1

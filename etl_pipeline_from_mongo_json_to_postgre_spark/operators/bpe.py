@@ -33,7 +33,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text import chars, duck_ws_tokens, ws_tokens
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 N_MERGES = 6
@@ -46,7 +45,6 @@ def _word_types(spark, sf_dir):
     corpus frequencies — the only corpus-sized pass of the trainer.
     Single-char words can never merge, so they are dropped here (same
     filter as corpus.text_bpe_merge_step)."""
-    tune_for_oracle(spark)
     d = fan_out(spark, load_table(spark, sf_dir, "documents"))
     return (
         d.select(F.explode(ws_tokens(F.col("text"))).alias("w"))

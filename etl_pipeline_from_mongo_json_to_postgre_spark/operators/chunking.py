@@ -37,7 +37,6 @@ from ..functions.text import (
     word_hashes,
     ws_tokens,
 )
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 CHUNK_TOKENS = 64
@@ -48,7 +47,6 @@ _DUCK_WORDS = DUCK_WS_TOKENS
 
 
 def _docs(spark, sf_dir):
-    tune_for_oracle(spark)
     return fan_out(spark, load_table(spark, sf_dir, "documents"))
 
 

@@ -20,12 +20,10 @@ from ..functions.text import (
     duck_ws_tokens,
     ws_tokens,
 )
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 
 def _docs(spark, sf_dir):
-    tune_for_oracle(spark)
     return fan_out(spark, load_table(spark, sf_dir, "documents"))
 
 

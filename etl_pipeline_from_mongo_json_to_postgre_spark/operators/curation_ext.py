@@ -23,7 +23,6 @@ from ..functions.text import (
     shingle_hashes,
     word_hashes,
 )
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 SPLIT_BUCKETS = 100
@@ -52,12 +51,10 @@ Z_FENCE = 2.5
 
 
 def _docs(spark, sf_dir):
-    tune_for_oracle(spark)
     return fan_out(spark, load_table(spark, sf_dir, "documents"))
 
 
 def _t(spark, sf_dir, name):
-    tune_for_oracle(spark)
     return load_table(spark, sf_dir, name)
 
 

@@ -35,7 +35,6 @@ from ..functions.text import (
     word_hashes,
     ws_tokens,
 )
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 # Fixed minhash permutation parameters (a*h + b) % MOD — deterministic,
@@ -51,7 +50,6 @@ JACCARD_THRESHOLD = 0.5
 
 
 def _docs(spark, sf_dir):
-    tune_for_oracle(spark)
     # fan_out: single-row-group scans single-thread the shingle/minhash
     # (and regex) pipelines otherwise; no-op on pre-split input
     return fan_out(spark, load_table(spark, sf_dir, "documents"))
@@ -860,7 +858,6 @@ def fuzzy_name_pairs(spark, sf_dir):
     a block, which is why production blocking keys must be selective
     (document-level analog: dedup_minhash_pairs' band buckets).
     """
-    tune_for_oracle(spark)
     p = load_table(spark, sf_dir, "part")
     names = (
         p.select(

@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 DAMPING = 0.85
@@ -234,7 +233,6 @@ def pagerank_ranks(spark, sf_dir):
     registry entry is graph_pagerank_parts below."""
     from .association import copurchase_pairs
 
-    tune_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     edges = copurchase_pairs(li, min_count=1).select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")
@@ -288,7 +286,6 @@ def graph_triangle_count(spark, sf_dir):
     from the degree aggregate (sum d*(d-1)/2), not a join."""
     from .association import copurchase_pairs
 
-    tune_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     edges = (
         copurchase_pairs(li, min_count=1)
@@ -356,7 +353,6 @@ def graph_label_propagation(spark, sf_dir):
     """
     from .association import copurchase_pairs
 
-    tune_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     und = copurchase_pairs(li, min_count=1).select(
@@ -475,7 +471,6 @@ def graph_kcore_parts(spark, sf_dir):
     monotonicity once converged)."""
     from .association import copurchase_pairs
 
-    tune_for_oracle(spark)
     li = load_table(spark, sf_dir, "lineitem")
     edges = copurchase_pairs(li, min_count=KCORE_MIN_PAIR).select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")

@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 UPD_MOD = 7
@@ -31,7 +30,6 @@ INSERT_KEY_OFFSET = 10_000_000
 
 
 def _orders(spark, sf_dir):
-    tune_for_oracle(spark)
     return load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
@@ -305,7 +303,6 @@ def oplog_apply(ops, key="doc_key", seq="seq", op_col="op",
 def inc_oplog_apply(spark, sf_dir):
     """CDC op-log replay over the synthetic events-derived change stream
     (see _oplog): final state of every live document key."""
-    tune_for_oracle(spark)
     return oplog_apply(_oplog(spark, sf_dir))
 
 
@@ -342,10 +339,8 @@ def inc_agg_refresh(spark, sf_dir):
     history. Works for any algebraic aggregate (count/sum/min/max;
     avg via sum+count); holistic aggregates (median, distinct) need
     the sketch route (cf. approx_distinct_rollup)."""
-    from ..session import tune_for_oracle
     from ..sources.parquet import load_table
 
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"),
         "event_type",
@@ -381,10 +376,8 @@ def user_acquisition_census(spark, sf_dir):
     Scale shape: first-seen is a user-keyed MIN aggregate
     (user-cardinality) broadcast-joined back onto the (day, user)
     distinct pair set; both censuses combine map-side."""
-    from ..session import tune_for_oracle
     from ..sources.parquet import load_table
 
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "user_id"
     )

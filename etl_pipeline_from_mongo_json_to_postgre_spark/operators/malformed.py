@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from ..operators.transform import transform_collection
 from ..plans.mapping_plan import MappingPlan
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 RUN_TS = "2024-06-01 00:00:00"
@@ -44,7 +43,6 @@ def p14_malformed_doc_isolation(spark, sf_dir):
     docs become error rows with NULL object_id, everything else is
     untouched 'success' with its id intact. Oracle recomputes the
     census from the raw table via the same doc_id rule."""
-    tune_for_oracle(spark)
     docs = fan_out(spark, load_table(spark, sf_dir, "documents"))
     good = F.to_json(F.struct("doc_id", "lang"))
     broken = F.concat(F.lit('{"doc_id": '), F.col("doc_id").cast("string"),

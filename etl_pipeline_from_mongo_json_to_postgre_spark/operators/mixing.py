@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text import MOD, char_fold_hash, duck_char_fold_hash
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 N_BUCKETS = 1024
@@ -41,7 +40,6 @@ _DUCK_WORDS = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
 def _docs(spark, sf_dir):
-    tune_for_oracle(spark)
     return fan_out(spark, load_table(spark, sf_dir, "documents"))
 
 

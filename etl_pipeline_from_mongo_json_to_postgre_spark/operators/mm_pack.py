@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.sampling import scrambled_key, scrambled_key_sql
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 from .corpus import SHARDS, _DUCK_WORDS, _words
 from .multimodal import _ppm_bytes, _payload_table
@@ -69,7 +68,6 @@ def _packed_docs(spark, sf_dir, carry_content: bool = False):
     columns ride the SAME shard-aligned join (the writer's path), so
     materializing shards costs no second documents scan, no second
     payload synthesis, and no extra join (r10 review)."""
-    tune_for_oracle(spark)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     docs = fan_out(spark, load_table(spark, sf_dir, "documents")).select(
@@ -89,8 +87,8 @@ def _packed_docs(spark, sf_dir, carry_content: bool = False):
     # the join key, so equal doc_ids are co-located, and including
     # shard in the equi-join condition lets the planner prove it —
     # everything downstream (window, aggregate) reuses this layout.
-    # The proof reaches a SHUFFLED join only because tune_for_oracle
-    # sets requireAllClusterKeysForCoPartition=false (see session.py:
+    # The proof reaches a SHUFFLED join only because the session sets
+    # requireAllClusterKeysForCoPartition=false (session.SESSION_CONFS:
     # with the default true, the planner insists children be
     # partitioned on the FULL join key set and re-shuffles onto
     # (shard, doc_id), then back onto shard for the window — two extra

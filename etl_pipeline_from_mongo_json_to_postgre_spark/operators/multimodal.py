@@ -36,7 +36,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 from .similarity import ORACLE_SQL as _SIM_ORACLE
 from .similarity import N_PROBE, _duck_ivf_topk, ann_cosine_topk, ann_ivf_topk
@@ -65,7 +64,6 @@ FEATURE_SCHEMA = StructType(
 def documents_as_media(spark, sf_dir) -> DataFrame:
     """Synthesize a media table from documents: utf-8 payload bytes +
     metadata. Stands in for an image/audio table with the same shape."""
-    tune_for_oracle(spark)
     # fan_out: mapInPandas decode/feature batches single-thread on a
     # one-row-group scan otherwise
     d = fan_out(spark, load_table(spark, sf_dir, "documents"))
@@ -548,7 +546,6 @@ def _wav_bytes(doc_id: int) -> bytes:
 
 
 def _media_ids(spark, sf_dir) -> DataFrame:
-    tune_for_oracle(spark)
     ids = fan_out(spark, load_table(spark, sf_dir, "documents")).select(
         F.col("doc_id").alias("media_id"))
     target = spark.sparkContext.defaultParallelism

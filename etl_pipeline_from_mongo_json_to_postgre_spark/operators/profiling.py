@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 # (column, min/max cast) — doubles go through DECIMAL so the stringified
@@ -38,7 +37,6 @@ _PROFILE_COLS = (
 def dq_column_profile(spark, sf_dir):
     """Per-column profile of the orders table: non-null count, exact
     distinct count, min/max (stringified) — one scan, one aggregate."""
-    tune_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     aggs = [F.count("*").alias("n_rows")]
     for c, mcast in _PROFILE_COLS:
@@ -68,7 +66,6 @@ def dq_null_violations(spark, sf_dir):
     aggregation — one pass, one tiny result row per constraint via
     stack, the engine twin of the reference's per-document
     validation-error audit (transformer.py error capture)."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     known = ("click", "view", "purchase", "signup", "error")
     agg = ev.agg(
@@ -104,7 +101,6 @@ def zorder_bucket_census(spark, sf_dir):
     whole-stage codegen, one hash shuffle on the bucket id."""
     from ..storage import morton_key
 
-    tune_for_oracle(spark)
     l = load_table(spark, sf_dir, "lineitem")
     b = l.agg(
         F.min("l_partkey"), F.max("l_partkey"),
@@ -170,7 +166,6 @@ def dq_chisq_independence(spark, sf_dir):
     the scalar-propagation pattern). Per-cell (o-e)^2/e contributions
     are quantized to bigint before the grid-sized SUM, so accumulation
     is order-free across engines."""
-    tune_for_oracle(spark)
     d = load_table(spark, sf_dir, "documents")
     obs = (
         d.groupBy("lang", "source")
@@ -311,7 +306,6 @@ def dq_histogram(spark, sf_dir):
     need the full shape, not point quantiles. One hash shuffle carrying
     (type, bucket) counts — map-side combined, bucket census is
     O(types x buckets) regardless of row count."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(
@@ -339,7 +333,6 @@ def dq_histogram_equidepth(spark, sf_dir):
     assignment is a pure array expression on the scan. Both engines
     interpolate percentiles identically on identical doubles, so bucket
     edges are bit-equal."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     probs = "array(" + ", ".join(str(p) for p in DEPTH_PROBS) + ")"
     bounds = ev.groupBy("event_type").agg(
@@ -364,7 +357,6 @@ def dq_key_skew(spark, sf_dir):
     skew.py) or AQE's skew split will do. Two map-side-combined
     aggregates (per-key counts; 1-row total) and a top-K window over
     count-sized rows; shares are rounded for cross-engine stability."""
-    tune_for_oracle(spark)
     from pyspark.sql.window import Window
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -427,7 +419,6 @@ def heavy_user_candidates(spark, sf_dir, support=None):
     exact threshold to the clamped absolute share too, so the
     no-false-negative guarantee stays aligned with what the sketch can
     actually promise (ADVICE r6)."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     if support is None:
         users = ev.agg(F.count_distinct("user_id")).first()[0]
@@ -454,7 +445,6 @@ def approx_heavy_users(spark, sf_dir):
     test_freq_items_superset_guarantee), so the guarantee is
     falsifiable — not the empty-set-⊆-anything it was under the fixed
     0.02 support."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     total, users = ev.agg(
         F.count("*"), F.count_distinct("user_id")
@@ -487,7 +477,6 @@ def dq_five_number_summary(spark, sf_dir):
     with. One exact-percentile aggregate keyed by language (the
     percentile array computes all three quartiles in one pass), then
     the fence count reuses the same key partitioning."""
-    tune_for_oracle(spark)
     d = load_table(spark, sf_dir, "documents")
     stats = d.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -526,7 +515,6 @@ def dq_value_ecdf(spark, sf_dir):
     an independent conditional count in the same aggregate, so the
     shuffle carries |types| x |grid| integers. Shares are exact
     integer ratios rounded for display."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     aggs = [
         F.count(F.when(F.col("value") <= g, 1)).alias(f"le_{g}")
@@ -561,7 +549,6 @@ def dq_mad_outliers(spark, sf_dir):
     forces each type's values through its reducer — the documented
     sketch swap at 100 TB is percentile_approx (cf.
     approx_value_quantiles), same plan otherwise."""
-    tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     # med and mad are type-cardinality and each feeds a later pass over
     # the fact table: the barriers hold the query to its inherent THREE
@@ -611,7 +598,6 @@ def dq_referential_violations(spark, sf_dir):
     map-side, so the join build input is key-cardinality); small key
     sets broadcast under AQE. Output is one row per edge: constant-size
     regardless of data."""
-    tune_for_oracle(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     li = load_table(spark, sf_dir, "lineitem")
@@ -788,7 +774,6 @@ def dq_order_reconciliation(spark, sf_dir):
     census aggregate. Orders without any lineitem surface as
     orphan_orders (LEFT join, not dropped). The tolerance predicate is
     exact decimal arithmetic scaled by 100 — no fp boundary flake."""
-    tune_for_oracle(spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     l = load_table(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice").cast("decimal(12,2)") * (
@@ -839,7 +824,6 @@ def dq_json_type_drift(spark, sf_dir):
     from ..functions.sampling import scrambled_key
     from .transform_queries import _orders_as_docs
 
-    tune_for_oracle(spark)
     docs = _orders_as_docs(spark, sf_dir)
     v = F.parse_json("raw_json")
 

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 QUANTILES = [0.25, 0.5, 0.75, 0.95]
@@ -35,7 +34,6 @@ def approx_quantile_sketch(spark, sf_dir):
     """Per-returnflag price quantiles from the rank sketch, gated by
     the exact envelope. Output: l_returnflag, n_rows (exact, oracle-
     recomputed), within_bounds_q{25,50,75,95} booleans (oracle: TRUE)."""
-    tune_for_oracle(spark)
     li = fan_out(spark, load_table(spark, sf_dir, "lineitem"))
     lo = [max(0.0, p - _EPS) for p in QUANTILES]
     hi = [min(1.0, p + _EPS) for p in QUANTILES]
@@ -113,7 +111,6 @@ def approx_quantile_rollup(spark, sf_dir):
     BASE_ERR*n rank margin is >= ~2 ranks."""
     from pyspark.sql.window import Window
 
-    tune_for_oracle(spark)
     li = fan_out(spark, load_table(spark, sf_dir, "lineitem"))
     grid = [j / GRID_N for j in range(GRID_N + 1)]
     grid_a = "array(" + ",".join(repr(p) for p in grid) + ")"
@@ -180,7 +177,6 @@ def approx_quantile_rollup_raw(spark, sf_dir):
     gate above (same pattern as approx_distinct_rollup_sketch_raw)."""
     from pyspark.sql.window import Window
 
-    tune_for_oracle(spark)
     li = fan_out(spark, load_table(spark, sf_dir, "lineitem"))
     grid = [j / GRID_N for j in range(GRID_N + 1)]
     grid_a = "array(" + ",".join(repr(p) for p in grid) + ")"

@@ -38,7 +38,6 @@ from ..functions.text import (
     word_hashes,
     ws_tokens,
 )
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 TOP2_MAX = 0.20
@@ -55,7 +54,6 @@ def text_gopher_repetition(spark, sf_dir):
     the Gopher repetition gate per document. Documents too short for a
     gram size contribute zero occurrences there (share 0: nothing
     repeats)."""
-    tune_for_oracle(spark)
     d = fan_out(spark, load_table(spark, sf_dir, "documents"))
     w = _WORDS(F.col("text"))
     staged = d.where(F.size(w) > 0).select(

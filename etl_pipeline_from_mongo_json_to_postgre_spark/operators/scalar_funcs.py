@@ -29,14 +29,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 RUN_TS = "2024-06-01 00:00:00"
 
 
 def _t(spark, sf_dir, name):
-    tune_for_oracle(spark)
     return load_table(spark, sf_dir, name)
 
 

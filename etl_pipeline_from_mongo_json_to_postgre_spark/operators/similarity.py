@@ -26,7 +26,6 @@ import numpy as np
 from pyspark.sql import Column, functions as F
 
 from ..functions.sampling import scrambled_bucket, scrambled_bucket_sql
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 DIM = 64
@@ -114,7 +113,6 @@ def _vectors(spark, sf_dir, *extra_cols: str):
     """(vec_id[, *extra_cols], v, nrm) — the family's one embedding
     projection; every entry goes through here so the cast/norm/fan-out
     discipline (and thus oracle bit-exactness) stays in one place."""
-    tune_for_oracle(spark)
     # fan_out: the single-row-group scan would otherwise run EVERY
     # hyperplane dot product in one task (measured: the whole LSH
     # pipeline single-threaded at sf0.1)
@@ -913,7 +911,6 @@ def emb_dim_stats(spark, sf_dir):
     size. Mean goes through an exact integer sum of floor(x * 2^20)
     (exact double scaling), divided once in identical operand order on
     both engines."""
-    tune_for_oracle(spark)
     e = fan_out(spark, load_table(spark, sf_dir, "embeddings"))
     vals = e.select(
         F.posexplode(_emb_d(F.col("embedding"))).alias("pos", "x")

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 N_SALTS = 16
@@ -84,7 +83,6 @@ def skew_salted_agg(spark, sf_dir):
     """lineitem has only 3 returnflag values — the worst-case skewed
     groupBy (every row funnels into 3 reducers). Salted two-phase
     aggregation computes count / sum / avg identically."""
-    tune_for_oracle(spark)
     l = load_table(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("decimal(18,2)")
     return salted_groupby(
@@ -106,7 +104,6 @@ def skew_salted_agg(spark, sf_dir):
 def skew_salted_join(spark, sf_dir):
     """Orders ⋈ customer with the fact side salted and the dim
     replicated x16; per-segment revenue totals match the plain join."""
-    tune_for_oracle(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey"), "o_totalprice"
     )

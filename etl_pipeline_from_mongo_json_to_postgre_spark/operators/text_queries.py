@@ -11,14 +11,12 @@ from pyspark.sql import functions as F
 
 from ..functions.sampling import scrambled_key, scrambled_key_sql
 from ..functions.text import MOD, char_fold_hash, duck_char_fold_hash
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 STOPWORDS = ("the", "a")
 
 
 def _docs(spark, sf_dir):
-    tune_for_oracle(spark)
     # fan_out: single-row-group scans single-thread the shingle/minhash
     # (and regex) pipelines otherwise; no-op on pre-split input
     return fan_out(spark, load_table(spark, sf_dir, "documents"))

@@ -18,14 +18,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 ROLL_WINDOW_US = 3_600_000_000  # 1 hour in microseconds
 
 
 def _events(spark, sf_dir):
-    tune_for_oracle(spark)
     return load_table(spark, sf_dir, "events")
 
 

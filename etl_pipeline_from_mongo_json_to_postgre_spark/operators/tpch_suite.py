@@ -25,12 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_oracle(spark)
     return load_table(spark, sf_dir, name)
 
 

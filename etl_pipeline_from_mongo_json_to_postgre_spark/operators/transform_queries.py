@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from ..functions.casts import multi_format_date, multi_format_timestamp, normalize_boolean
 from ..operators.transform import transform_collection
 from ..plans.mapping_plan import MappingPlan
-from ..session import tune_for_oracle
 from ..sources.parquet import fan_out, load_table
 
 RUN_TS = "2024-06-01 00:00:00"
@@ -73,7 +72,6 @@ def _orders_as_docs(spark, sf_dir):
 
 
 def p1_mapped_projection(spark, sf_dir):
-    tune_for_oracle(spark)
     docs = _orders_as_docs(spark, sf_dir)
     data, _ = transform_collection(docs, _ORDERS_PLAN, ingested_at=RUN_TS)
     return data.select(
@@ -99,7 +97,6 @@ def audit_missing_columns_report(spark, sf_dir):
     """The missing-attributes report (reference ui/run_pipeline.py:395-433,
     postgres_audit_repository.py:39-111): explode audit missing_columns,
     count per (object_name, column)."""
-    tune_for_oracle(spark)
     docs = _orders_as_docs(spark, sf_dir)
     _, audit = transform_collection(docs, _ORDERS_PLAN, ingested_at=RUN_TS)
     # explode_outer, NOT explode: explode's implicit `size(arr) > 0`
@@ -125,7 +122,6 @@ def audit_status_pivot(spark, sf_dir):
     """Flagship A1 over a real audit frame: ingest orders + lineitem as
     document collections, pivot object_name x processing_status
     (reference ui/audit_dashboard.py:100-123)."""
-    tune_for_oracle(spark)
     docs = _orders_as_docs(spark, sf_dir)
     _, audit_o = transform_collection(docs, _ORDERS_PLAN, ingested_at=RUN_TS)
     li = _fan_out(spark, load_table(spark, sf_dir, "lineitem"))
@@ -175,7 +171,6 @@ def audit_report_assembly(spark, sf_dir):
     to (day, collection) cardinality before shuffling; the
     table->collection lookup is a broadcast.
     """
-    tune_for_oracle(spark)
     docs = _orders_as_docs(spark, sf_dir)
     _, audit_o = transform_collection(docs, _ORDERS_PLAN, ingested_at=RUN_TS)
     li = _fan_out(spark, load_table(spark, sf_dir, "lineitem"))
@@ -331,7 +326,6 @@ _DOCS_PLAN = MappingPlan.from_config(
 
 
 def p2_p3_missing_error_semantics(spark, sf_dir):
-    tune_for_oracle(spark)
     rows = [(i, json.dumps(d)) for i, d in enumerate(_DOCS)]
     df = spark.createDataFrame(rows, "doc_idx int, raw_json string")
     data, audit = transform_collection(df, _DOCS_PLAN, ingested_at=RUN_TS)
@@ -454,7 +448,6 @@ _DATE_INPUTS = [
 
 
 def p4_multiformat_date(spark, sf_dir):
-    tune_for_oracle(spark)
     df = spark.createDataFrame(_DATE_INPUTS, "idx int, raw string")
     return df.select("idx", multi_format_date(F.col("raw")).alias("parsed"))
 
@@ -470,7 +463,6 @@ ORACLE_SQL["p4_multiformat_date"] = """
 
 
 def p5_multiformat_datetime(spark, sf_dir):
-    tune_for_oracle(spark)
     df = spark.createDataFrame(_DATE_INPUTS, "idx int, raw string")
     return df.select("idx", multi_format_timestamp(F.col("raw")).alias("parsed"))
 
@@ -501,7 +493,6 @@ _BOOL_INPUTS = [
 
 
 def p6_boolean_normalize(spark, sf_dir):
-    tune_for_oracle(spark)
     df = spark.createDataFrame(_BOOL_INPUTS, "idx int, raw string")
     return df.select("idx", normalize_boolean(F.col("raw")).alias("flag"))
 

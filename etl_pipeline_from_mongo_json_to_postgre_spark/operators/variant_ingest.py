@@ -3,11 +3,10 @@
 The classic S1/P1 path re-parses raw_json through a full from_json
 schema; dq_json_type_drift proved Spark 4 VARIANT works in this
 environment, so this module is the modernized ingest: documents are
-parsed ONCE into a binary-encoded VARIANT column
-(sources/json_source.read_collections_distributed(as_variant=True) is
-the source-side switch) and every mapped attribute extraction is a
-``try_variant_get`` pushed into the projection — repeated extraction
-never re-tokenizes the document, and missing attributes surface as
+parsed ONCE into a binary-encoded VARIANT column and every mapped
+attribute extraction is a ``try_variant_get`` pushed into the
+projection — repeated extraction never re-tokenizes the document, and
+missing attributes surface as
 NULLs exactly like the MappingPlan path (reference transformer.py's
 missing-attribute semantics, mirrored by p1_mapped_projection).
 
@@ -27,7 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from .transform_queries import _orders_as_docs
 
 
@@ -36,7 +34,6 @@ def p1_variant_projection(spark, sf_dir):
     try_variant_get per mapped attribute (bigint/string/double/date
     casts ride the variant getter; missing attribute -> NULL ->
     missing_cols marker), output identical to p1_mapped_projection."""
-    tune_for_oracle(spark)
     docs = _orders_as_docs(spark, sf_dir)
     staged = docs.select(F.parse_json("raw_json").alias("doc"))
     vg = F.try_variant_get

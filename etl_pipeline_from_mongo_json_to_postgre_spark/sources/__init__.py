@@ -1,7 +1,6 @@
 from .json_source import (
     collections_to_raw_df,
     load_input_json,
-    read_collections_distributed,
     validate_input_shape,
 )
 from .parquet import TABLES, load_table, load_tables, register_views
@@ -12,7 +11,6 @@ __all__ = [
     "load_input_json",
     "load_table",
     "load_tables",
-    "read_collections_distributed",
     "register_views",
     "validate_input_shape",
 ]

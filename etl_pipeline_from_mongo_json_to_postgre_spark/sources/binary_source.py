@@ -32,7 +32,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from ._stage import guard_stage_rows, stage_dir
 from .parquet import load_table
 
@@ -129,7 +128,6 @@ def s13_binaryfile_media_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     file counts, byte totals (the reader's `length` AND re-measured
     octet_length(content)), and decoded character totals — so a
     dropped/truncated file or path mis-parse fails the value hash."""
-    tune_for_oracle(spark)
     path = stage_document_files(spark, sf_dir)
     df = read_media_files(spark, path)
     chars = F.length(F.decode(F.col("content"), "UTF-8"))

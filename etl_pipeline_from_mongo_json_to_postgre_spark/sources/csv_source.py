@@ -26,7 +26,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..session import tune_for_oracle
 from ._stage import guard_stage_rows, stage_dir
 from .parquet import load_table
 
@@ -96,7 +95,6 @@ def s10_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-lang census (docs, chars, malformed count). A value drift or a
     silently-dropped/corrupted row breaks parity with the parquet-direct
     oracle."""
-    tune_for_oracle(spark)
     path = stage_documents_csv(spark, sf_dir)
     df = read_documents_csv(spark, path)
     return df.groupBy("lang").agg(

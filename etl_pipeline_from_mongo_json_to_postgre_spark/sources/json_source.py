@@ -35,8 +35,8 @@ def validate_input_shape(data: object) -> dict[str, list]:
 def load_input_json(path: str) -> dict[str, list]:
     """Driver-side load + validation (reference ingestion.py:7-30).
 
-    Suitable for config-scale inputs; for data-scale inputs use
-    read_collections_distributed.
+    Suitable for config-scale inputs; for data-scale inputs stage one
+    line-delimited file per collection and use read_collection_jsonl.
     """
     try:
         with open(path, "r", encoding="utf-8") as fh:
@@ -81,32 +81,3 @@ def read_collection_jsonl(spark: SparkSession, path: str) -> DataFrame:
         .select(F.col("value").alias("raw_json"))
     )
 
-
-def read_collections_distributed(
-    spark: SparkSession, path: str, collections: list[str],
-    as_variant: bool = False,
-) -> dict[str, DataFrame]:
-    """Distributed variant: spark.read reads the multi-collection file,
-    one explode per collection (reference S1's Spark mapping, SURVEY
-    §2.1). Best for large single-file inputs; each collection becomes
-    raw-JSON rows via to_json so the MappingPlan path is identical.
-
-    ``as_variant=True`` (VERDICT r6 task 7) lands each document as a
-    Spark 4 VARIANT column ``doc`` instead of a raw_json string: the
-    document is parsed ONCE at ingest and every downstream mapped
-    extraction is a try_variant_get against the binary-encoded value —
-    no re-parse per attribute (operators/variant_ingest.py is the
-    mapped-projection consumer; plan-pinned single parse)."""
-    base = spark.read.option("multiLine", True).json(path)
-    out: dict[str, DataFrame] = {}
-    for name in collections:
-        if name not in base.columns:
-            continue
-        raw = base.select(
-            F.explode(F.col(name)).alias("_doc")
-        ).select(F.to_json("_doc").alias("raw_json"))
-        out[name] = (
-            raw.select(F.parse_json("raw_json").alias("doc"))
-            if as_variant else raw
-        )
-    return out

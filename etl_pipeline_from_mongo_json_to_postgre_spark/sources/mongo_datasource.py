@@ -234,10 +234,8 @@ def s3_mongo_datasource_scan(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from ..session import tune_for_oracle
     from .parquet import load_table
 
-    tune_for_oracle(spark)
     register(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     # Stage the export fixture. Harness-only (at scale the data is

@@ -23,7 +23,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from ._stage import guard_stage_rows, stage_dir
 from .csv_source import MAX_STAGE_ROWS
 from .parquet import load_table
@@ -61,7 +60,6 @@ def s11_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized read → per-lang census (docs, chars, distinct sources).
     Any row lost or value drifted through the write/read path breaks
     parity with the parquet-direct oracle."""
-    tune_for_oracle(spark)
     path = stage_documents_orc(spark, sf_dir)
     df = read_documents_orc(spark, path)
     return df.groupBy("lang").agg(

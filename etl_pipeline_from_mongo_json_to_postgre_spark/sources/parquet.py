@@ -20,7 +20,7 @@ plain TimestampType (TIMESTAMP_LTZ):
   as TIMESTAMP_NTZ, which breaks ``withWatermark`` / ``unix_micros``
   call sites. We disable the inference per-read and additionally cast
   any NTZ column that still escapes to ``timestamp``. The session
-  timezone is pinned UTC (session.tune_for_oracle), so NTZ->LTZ is
+  timezone is pinned UTC (session.SESSION_CONFS), so NTZ->LTZ is
   value-preserving and DuckDB (UTC-naive) parity holds.
 """
 

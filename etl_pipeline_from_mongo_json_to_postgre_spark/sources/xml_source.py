@@ -32,7 +32,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..session import tune_for_oracle
 from ._stage import guard_stage_rows, stage_dir
 from .parquet import load_table
 
@@ -121,7 +120,6 @@ def s12_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     XML round trip, so entity-escaping or whitespace-trimming drift
     breaks parity with the parquet-direct oracle — a stronger fidelity
     gate than the carried n_chars column alone."""
-    tune_for_oracle(spark)
     path = stage_documents_xml(spark, sf_dir)
     df = read_documents_xml(spark, path)
     return df.groupBy("lang").agg(

@@ -25,7 +25,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.text import word_hashes
 from ..operators.chunking import _DUCK_CHUNKS, _WORDS, CHUNK_STRIDE, CHUNK_TOKENS
-from ..session import tune_for_oracle
 from ..sources.parquet import load_table
 
 
@@ -54,7 +53,6 @@ def stream_chunk_length_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilt identically here), one complete-mode aggregate over
     n_tokens. Oracle = the same census in batch SQL over the chunk
     CTE."""
-    tune_for_oracle(spark)
     stream = documents_stream(spark, sf_dir)
     w = _WORDS(F.col("text"))
     staged = stream.where(F.size(w) > 0).select(
@@ -97,7 +95,6 @@ def start_ann_cell_assign(spark: SparkSession, sf_dir: str,
     )
 
     _require_trained()
-    tune_for_oracle(spark)
     load_table(spark, sf_dir, "embeddings")  # sets reader confs
     src = os.path.join(sf_dir, "embeddings.parquet")
     schema = spark.read.parquet(src).schema

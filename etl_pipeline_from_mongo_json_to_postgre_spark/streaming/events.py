@@ -88,9 +88,6 @@ def run_stream_to_memory(spark: SparkSession, sf_dir: str,
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """queries() entry: full streaming execution, oracle-checked
     against the equivalent batch SQL."""
-    from ..session import tune_for_oracle
-
-    tune_for_oracle(spark)
     return run_stream_to_memory(spark, sf_dir)
 
 
@@ -101,9 +98,6 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tumbling path; the window fan-out happens map-side before the
     keyed-state aggregation, so sliding costs window/slide x the
     tumbling shuffle volume, not a re-scan per pane."""
-    from ..session import tune_for_oracle
-
-    tune_for_oracle(spark)
     q = (
         windowed_counts(events_stream(spark, sf_dir), slide="30 minutes")
         .writeStream.format("memory")
@@ -150,9 +144,6 @@ def _run_late_drop_stream(spark: SparkSession, sf_dir: str):
     import shutil
     import time as _time
 
-    from ..session import tune_for_oracle
-
-    tune_for_oracle(spark)
     events = normalize_timestamps(load_table(spark, sf_dir, "events"))
     max_ts = events.agg(F.max("ts")).collect()[0][0]  # one scalar
     is_plant = (F.col("event_id") % LATE_PLANT_MOD == 0) & (
@@ -346,9 +337,6 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch twin below for the final answer — the streaming pass
     verifies the stateful plumbing; the returned frame is the complete
     session list, oracle-checked against DuckDB window SQL."""
-    from ..session import tune_for_oracle
-
-    tune_for_oracle(spark)
     stream = events_stream(spark, sf_dir)
     q = (
         sessionize(stream)
@@ -398,9 +386,6 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     other classic streaming OOM (cf. stream_dedup_keys). Oracle: the
     equivalent batch self-join (complete at availableNow since every
     row is processed)."""
-    from ..session import tune_for_oracle
-
-    tune_for_oracle(spark)
     src = events_stream(spark, sf_dir)
     clicks = (
         src.where(F.col("event_type") == "click")
@@ -449,9 +434,6 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming OOM at scale). Output is the deduped KEY SET (which row
     of a duplicate group survives is arrival-order-dependent, so only
     the keys are deterministic); oracle = batch SELECT DISTINCT."""
-    from ..session import tune_for_oracle
-
-    tune_for_oracle(spark)
     name = "stream_dedup_keys_tbl"
     deduped = (
         events_stream(spark, sf_dir)
@@ -564,9 +546,7 @@ def stream_oplog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin inc_oplog_apply (the replay is deterministic, so the
     stream-maintained table converges to the batch answer)."""
     from ..operators.incremental import oplog_from
-    from ..session import tune_for_oracle
 
-    tune_for_oracle(spark)
     ops = oplog_from(events_stream(spark, sf_dir))
     name = "stream_oplog_tbl"
     q = (
@@ -627,9 +607,6 @@ def stream_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
     to the max expected cross-file skew — the state cost scales with
     (distinct keys per delay window), not with raised-delay duration
     times traffic, because keys are dropped as the watermark passes."""
-    from ..session import tune_for_oracle
-
-    tune_for_oracle(spark)
     name = "stream_windowed_distinct_tbl"
     deduped = (
         events_stream(spark, sf_dir)

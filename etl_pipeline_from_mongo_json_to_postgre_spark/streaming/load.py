@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from ..operators.transform import transform_collection
 from ..plans.mapping_plan import MappingPlan
-from ..session import tune_for_oracle
 from ..sinks.jdbc import write_table
 from ..sources.parquet import load_table
 
@@ -132,7 +131,6 @@ def stream_load_audit_census(spark, sf_dir):
     status stays 'success' — the reference's P2/P3 semantics). The
     oracle recomputes the same census from the raw documents table, so
     a dropped or doubled micro-batch hash-mismatches."""
-    tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     raw = docs.select(
         F.to_json(

@@ -42,7 +42,6 @@ from ..operators.similarity import (
     _vectors,
 )
 from ..functions.sampling import scrambled_bucket
-from ..session import tune_for_oracle
 
 BATCH_OUT_SCHEMA = "vec_id bigint, is_dup boolean, canonical_id bigint"
 
@@ -162,7 +161,6 @@ def stream_semantic_dedup(spark, sf_dir):
     EXACTLY inc_semantic_dedup's SQL: if the engine dropped, doubled,
     or misclassified any micro-batch, the union could not hash-match
     the batch twin."""
-    tune_for_oracle(spark)
     assigned = assign_cells(_vectors(spark, sf_dir)).localCheckpoint(
         eager=True
     )  # index + arrival slices read it once
@@ -251,7 +249,6 @@ def stream_semantic_dedup_mp(spark, sf_dir):
     is 2x probed-cell occupancy and the sink/redelivery contract is
     unchanged (test_stream_semantic.py; harness shared via
     _run_classify_stream)."""
-    tune_for_oracle(spark)
     assigned = assign_cells_mp(_vectors(spark, sf_dir)).localCheckpoint(
         eager=True
     )  # index + arrival slices read it once

@@ -32,7 +32,6 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune_for_oracle
 from .events import SESSION_GAP_MIN, events_stream
 
 GAP = f"{SESSION_GAP_MIN} minutes"
@@ -64,7 +63,6 @@ def stream_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs a batch flush for exactly that reason). A continuous
     deployment would switch to append mode + ``withWatermark`` so the
     state store evicts sessions older than the lateness bound."""
-    tune_for_oracle(spark)
     ckpt = tempfile.mkdtemp(prefix="ckpt_sess_native_")
     # State-partition sizing: a streaming aggregation's state store
     # count is fixed by spark.sql.shuffle.partitions at FIRST run of a

@@ -148,8 +148,7 @@ def test_association_rules_math(spark):
 
     import unittest.mock as mock
 
-    with mock.patch.object(association, "load_table", return_value=df), \
-         mock.patch.object(association, "tune_for_oracle", lambda s: None):
+    with mock.patch.object(association, "load_table", return_value=df):
         out = {(r.antecedent, r.consequent): r
                for r in association.basket_association_rules(spark, "x").collect()}
     # pair (3,5) co-occurs 3x of 5 baskets; item 3 in 4, item 5 in 3

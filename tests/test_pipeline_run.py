@@ -7,13 +7,17 @@ documented control flow.
 """
 
 import json
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_from_mongo_json_to_postgre_spark import pipeline
-from etl_pipeline_from_mongo_json_to_postgre_spark.cli import main as cli_main
 from etl_pipeline_from_mongo_json_to_postgre_spark.errors import ConfigError
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 MAPPING = {
     "collections": {
@@ -159,31 +163,70 @@ def test_invalid_mapping_raises(spark):
         }})
 
 
-def test_cli_end_to_end(spark, tmp_path, schema_sql):
+def _cli(*argv, tz="UTC"):
+    """Run the CLI as users do: its own process, hence its own session
+    (in-process, getOrCreate would hand it this suite's session)."""
+    env = {**os.environ, "TZ": tz, "SPARK_GRAFT_CPUS": "2",
+           "SPARK_DRIVER_MEMORY": "1g"}
+    return subprocess.run(
+        [sys.executable, "-m",
+         "etl_pipeline_from_mongo_json_to_postgre_spark.cli", *argv],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=600)
+
+
+def _parquet_rows(spark, path):
+    df = spark.read.parquet(path)
+    return df.columns, sorted(map(repr, df.collect()))
+
+
+def test_cli_end_to_end(spark, tmp_path):
+    """The CLI under a New York host clock writes exactly what an
+    in-process run on the suite's session writes: a zone-offset
+    timestamp just before local midnight keeps its UTC date, and
+    ingested_at is the UTC ingestion date."""
+    events = {"events": {
+        "target_table": "public.events",
+        "object_id_attribute": "event_id",
+        "mappings": {
+            "event_id": {"column": "event_id", "type": "integer"},
+            "day": {"column": "day", "type": "date"},
+            "at": {"column": "at", "type": "datetime"},
+            "local_at": {"column": "local_at", "type": "datetime"},
+        },
+    }}
+    mapping_cfg = {"collections": {**MAPPING["collections"], **events}}
+    doc = {"events": [{"event_id": 1, "day": "2024-03-09T23:30:00-0500",
+                       "at": "2024-03-09T23:30:00-0500",
+                       "local_at": "2024-03-09T23:30:00"}]}
     inp = tmp_path / "input.json"
-    inp.write_text(json.dumps(INPUT))
+    inp.write_text(json.dumps({**INPUT, **doc}))
     mapping = tmp_path / "mapping.json"
-    mapping.write_text(json.dumps(MAPPING))
-    out = tmp_path / "out"
-    rc = cli_main([
-        "--input", str(inp), "--mapping-config", str(mapping),
-        "--output-dir", str(out), "--master", "local[4]",
-        "--shuffle-partitions", "4",
-    ])
-    assert rc == 0
+    mapping.write_text(json.dumps(mapping_cfg))
+    out, ref = tmp_path / "out", tmp_path / "ref"
+
+    proc = _cli("--input", str(inp), "--mapping-config", str(mapping),
+                "--output-dir", str(out), tz="America/New_York")
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    pipeline.write_run_parquet(
+        pipeline.run(spark, str(inp), str(mapping)), str(ref))
+
+    names = sorted(os.listdir(ref))
+    assert sorted(os.listdir(out)) == names
+    assert "data_events.parquet" in names
+    for name in names:
+        assert _parquet_rows(spark, str(out / name)) == _parquet_rows(
+            spark, str(ref / name)), name
+    day = spark.read.parquet(str(out / "data_events.parquet")).first()["day"]
+    assert str(day) == "2024-03-10"
     audit = spark.read.parquet(str(out / "ingestion_audit.parquet"))
-    assert audit.count() == 5  # no schema.sql -> no missing-table row
-    data = spark.read.parquet(str(out / "data_customers.parquet"))
-    assert data.count() == 3
+    assert audit.count() == 6  # no schema.sql -> no missing-table row
 
 
-def test_cli_error_exit(tmp_path, capsys):
-    rc = cli_main([
-        "--input", str(tmp_path / "missing.json"),
-        "--mapping-config", str(tmp_path / "missing.yaml"),
-    ])
-    assert rc == 1
-    assert "Pipeline error" in capsys.readouterr().err
+def test_cli_error_exit(tmp_path):
+    proc = _cli("--input", str(tmp_path / "missing.json"),
+                "--mapping-config", str(tmp_path / "missing.yaml"))
+    assert proc.returncode == 1
+    assert "Pipeline error" in proc.stderr
 
 
 def test_write_with_metrics_single_pass(spark, tmp_path):

@@ -50,9 +50,31 @@ def test_ntz_output_shim(spark):
             [(1, datetime.datetime(2024, 3, 1, 12, 0))], "id long, ts timestamp"
         ).select("id", "ts", F.date_trunc("hour", "ts").alias("h"))
 
-    wrapped = e._ntz_outputs(fake_query)
+    wrapped = e._boundary(fake_query)
     df = wrapped(spark, "unused")
     assert [f.dataType.typeName() for f in df.schema.fields] == [
         "long", "timestamp_ntz", "timestamp_ntz"]
     row = df.collect()[0]
     assert row.ts == datetime.datetime(2024, 3, 1, 12, 0)
+
+
+def test_boundary_tunes_the_callers_session(spark, sf_dir, duck):
+    """The driver runs entries on its own session (ANSI on, any time
+    zone) and builders do not tune it themselves: the boundary must.
+    p1_mapped_projection's dates shift under a New York session."""
+    import __spark_entry__ as e
+    from tests.oracle_compare import compare
+
+    name = "p1_mapped_projection"
+    tz, ansi = "spark.sql.session.timeZone", "spark.sql.ansi.enabled"
+    saved = {k: spark.conf.get(k) for k in (tz, ansi)}
+    try:
+        spark.conf.set(tz, "America/New_York")
+        spark.conf.set(ansi, "true")
+        ok, msg = compare(e.queries()[name](spark, sf_dir), duck,
+                          e.oracle_sql()[name])
+        assert ok, msg
+        assert (spark.conf.get(tz), spark.conf.get(ansi)) == ("UTC", "false")
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

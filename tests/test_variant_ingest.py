@@ -1,8 +1,5 @@
 """VARIANT-native ingest path (VERDICT r6 task 7): twin-equivalence
-with the MappingPlan projection, the single-parse plan shape, and the
-source-side as_variant switch."""
-
-from pyspark.sql import functions as F
+with the MappingPlan projection and the single-parse plan shape."""
 
 from etl_pipeline_from_mongo_json_to_postgre_spark.operators import (
     transform_queries,
@@ -31,27 +28,3 @@ def test_variant_plan_parses_once(spark, sf_dir):
     assert plan.count("try_variant_get") >= 5
     assert "from_json" not in plan
 
-
-def test_source_variant_mode(spark, tmp_path):
-    """read_collections_distributed(as_variant=True) lands a VARIANT
-    doc column; attribute extraction works without re-parsing."""
-    import json
-
-    from etl_pipeline_from_mongo_json_to_postgre_spark.sources.json_source import (
-        read_collections_distributed,
-    )
-
-    payload = {"orders": [{"k": 1, "s": "A"}, {"k": 2, "s": "B"}],
-               "customers": [{"id": 7}]}
-    p = tmp_path / "multi.json"
-    p.write_text(json.dumps(payload))
-    out = read_collections_distributed(spark, str(p), ["orders", "customers"],
-                                       as_variant=True)
-    orders = out["orders"]
-    assert orders.schema["doc"].dataType.typeName() == "variant"
-    rows = orders.select(
-        F.try_variant_get("doc", "$.k", "bigint").alias("k"),
-        F.try_variant_get("doc", "$.s", "string").alias("s"),
-    ).orderBy("k").collect()
-    assert [(r.k, r.s) for r in rows] == [(1, "A"), (2, "B")]
-    assert out["customers"].count() == 1

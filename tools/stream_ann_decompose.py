@@ -63,10 +63,15 @@ def run_decomposed(spark, sf_dir: str) -> dict:
 
 
 def main() -> int:
-    from etl_pipeline_from_mongo_json_to_postgre_spark.session import get_spark
+    from etl_pipeline_from_mongo_json_to_postgre_spark.session import (
+        get_spark,
+        tune_for_oracle,
+    )
 
     sf_dirs = sys.argv[1:] or ["/root/testdata/sf0.001", "/root/testdata/sf0.1"]
-    spark = get_spark(app_name="stream_ann_decompose")
+    # start_ann_cell_assign runs outside the registry boundary, so tune
+    # here as the boundary would (shuffle partitions max(cores, 8))
+    spark = tune_for_oracle(get_spark(app_name="stream_ann_decompose"))
     print("| sf_dir | rep | batches | input rows | in-batch (addBatch) ms "
           "| setup/commit ms | overhead share |")
     print("|---|---|---|---|---|---|---|")
