@@ -42,18 +42,39 @@ def transform_collection(
     deterministic tests; defaults to current_timestamp() (reference
     stamps one ingestion_date per run, pipeline.py:91-92).
     """
+    enriched = enrich_collection(df, plan, raw_col=raw_col, ingested_at=ingested_at)
+    return split_enriched(enriched, plan, object_status=object_status)
+
+
+def enrich_collection(
+    df: DataFrame,
+    plan: MappingPlan,
+    raw_col: str | None = None,
+    ingested_at=None,
+) -> DataFrame:
+    """The parse-and-cast half of transform_collection: the plan's
+    projection plus ingested_at, source_collection and status. Both
+    outputs of split_enriched are projections of this frame, so a
+    caller that materializes it once parses each document once."""
     ts = F.lit(ingested_at).cast("timestamp") if ingested_at is not None else F.current_timestamp()
     projected = plan.apply(df, raw_col=raw_col)
 
     status = F.when(F.size("transform_errors") > 0, F.lit(STATUS_ERROR)).otherwise(
         F.lit(STATUS_SUCCESS)
     )
-    enriched = (
+    return (
         projected.withColumn("ingested_at", ts)
         .withColumn("source_collection", F.lit(plan.collection))
         .withColumn("status", status)
     )
 
+
+def split_enriched(
+    enriched: DataFrame,
+    plan: MappingPlan,
+    object_status: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(data_df, audit_df) projected from an enrich_collection frame."""
     data_cols = [a.column for a in plan.attributes] + [
         plan.raw_json_column,
         "ingested_at",

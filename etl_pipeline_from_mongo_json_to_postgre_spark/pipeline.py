@@ -6,15 +6,21 @@ collection — raw-JSON read -> MappingPlan projection -> (data_df,
 audit_df) — plus a run-level audit union; execution happens when sinks
 consume the frames (JDBC write, parquet write, or temp-view
 registration), so Catalyst sees whole-collection plans and the
-per-document loop disappears entirely.
+per-document loop disappears entirely. Each collection's enriched
+frame (parsed, cast, stamped) is a non-eager local checkpoint: the
+first sink that runs it stores its rows, and the data frame, the audit
+part and every later sink or report read those rows, so each document
+is parsed once per run. The stored blocks are freed when the
+RunResult's frames are garbage-collected.
 
 Static-analysis phase parity (pipeline.py:43-92): expected-vs-input
 collection diff, schema.sql table scan, table lookups, ingestion-date
 stamp. Per-collection phase parity (:128-186): unmapped-collection
 skip, NEW/MISSING/ALREADY_EXISTS object status, DDL-on-demand (JDBC
 mode). Summary parity (reporting.py:36-95): the PipelineReport counters
-are re-derived with aggregations over the audit frame — no mutable
-driver-side accumulation.
+come from one per-collection aggregation over the stored audit rows,
+summed on the driver for the run totals — no mutable driver-side
+accumulation.
 
 Failure-isolation semantics (SURVEY §7 hard-part #2): the reference
 rolls back individual failed INSERTs and continues (pipeline.py:238-249).
@@ -50,7 +56,11 @@ from .config.loader import (
     validate_mapping_config,
 )
 from .errors import ConfigError
-from .operators.transform import missing_table_audit_rows, transform_collection
+from .operators.transform import (
+    enrich_collection,
+    missing_table_audit_rows,
+    split_enriched,
+)
 from .plans.mapping_plan import MappingPlan
 from .sources.json_source import collections_to_raw_df, load_input_json
 
@@ -69,7 +79,8 @@ def load_schema_tables(schema_path: str) -> set[str]:
 @dataclass
 class RunResult:
     """Everything the reference's PipelineReport + side effects carried,
-    as DataFrames and metadata. Frames are lazy until a sink runs them."""
+    as DataFrames and metadata. Frames are lazy until a sink runs them;
+    the first one stores each collection's transformed rows for the rest."""
 
     ingestion_date: str
     data_frames: dict[str, DataFrame]              # collection -> destination frame
@@ -119,30 +130,34 @@ class RunResult:
 
     def summary(self) -> dict[str, Any]:
         """KPI + per-collection metrics (reference reporting.py:36-95),
-        one aggregation pass over the audit frame."""
+        one aggregation over the audit frame: per-collection counts,
+        whose sums on the driver are the KPI totals."""
         # missing-TABLE audit rows carry processing_status='missing' and no
         # document; everything else is one row per processed document
-        doc_rows = self.audit_df.where(F.col("processing_status").isin(
-            STATUS_SUCCESS, STATUS_ERROR))
-        agg = doc_rows.agg(
-            F.count("*").alias("total_docs"),
-            F.count(F.when(F.col("processing_status") == STATUS_ERROR, 1)).alias("error_docs"),
-            F.count(F.when(F.size("missing_columns") > 0, 1)).alias("missing_col_docs"),
-        ).collect()[0]
-        per_collection = {
-            r["source_collection"]: {"processed": r["processed"], "errors": r["errors"]}
-            for r in doc_rows.groupBy("source_collection").agg(
+        counts = (
+            self.audit_df
+            .where(F.col("processing_status").isin(STATUS_SUCCESS, STATUS_ERROR))
+            .groupBy("source_collection")
+            .agg(
                 F.count("*").alias("processed"),
                 F.count(F.when(F.col("processing_status") == STATUS_ERROR, 1)).alias("errors"),
-            ).collect()
+                F.count(F.when(F.size("missing_columns") > 0, 1)).alias("missing"),
+            )
+            .collect()
+        )
+        total = sum(r["processed"] for r in counts)
+        errors = sum(r["errors"] for r in counts)
+        per_collection = {
+            r["source_collection"]: {"processed": r["processed"], "errors": r["errors"]}
+            for r in counts
             if r["source_collection"] is not None
         }
         return {
             "ingestion_date": self.ingestion_date,
-            "total_documents": agg["total_docs"],
-            "successful_documents": agg["total_docs"] - agg["error_docs"],
-            "documents_with_errors": agg["error_docs"],
-            "documents_with_missing_columns": agg["missing_col_docs"],
+            "total_documents": total,
+            "successful_documents": total - errors,
+            "documents_with_errors": errors,
+            "documents_with_missing_columns": sum(r["missing"] for r in counts),
             "insert_failures": 0,  # validate-before-write: see module docstring
             "missing_collections": sorted(self.missing_collections),
             "unmapped_collections": sorted(self.unmapped_collections),
@@ -265,9 +280,12 @@ def run(
         object_statuses[target] = status
 
         plan = MappingPlan.from_config(coll, spec, date_formats=runtime.get("date_formats"))
-        data_df, audit_df = transform_collection(
-            raw_frames[coll], plan, object_status=status, ingested_at=ing_date
-        )
+        # stored by the first sink that runs it; every later sink and
+        # report reads the stored rows instead of parsing again
+        enriched = enrich_collection(
+            raw_frames[coll], plan, ingested_at=ing_date
+        ).localCheckpoint(eager=False)
+        data_df, audit_df = split_enriched(enriched, plan, object_status=status)
         data_frames[coll] = data_df
         target_tables[coll] = target
         audit_parts.append(audit_df)

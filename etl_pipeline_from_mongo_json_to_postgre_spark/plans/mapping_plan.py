@@ -107,17 +107,24 @@ class MappingPlan:
         src = {a.column: f"__src_{a.column}" for a in self.attributes}
 
         doc = F.from_json(raw, "map<string,string>")
+        # the id is a top-level key of the parsed document, looked up
+        # like every mapped attribute (a dotted name is not a JSON path)
+        object_id = (
+            F.col("__doc")[self.object_id_attribute]
+            if self.object_id_attribute
+            else F.lit(None).cast("string")
+        )
         stage1_cols = [
             F.col("__doc")[a.source_attr].alias(src[a.column])
             for a in self.attributes
-        ] + [F.map_keys(F.col("__doc")).alias("__keys")]
+        ] + [F.map_keys(F.col("__doc")).alias("__keys"), object_id.alias("__object_id")]
         stage2_cols = (
             [
                 build_cast(F.col(src[a.column]), a.logical_type, opts).alias(a.column)
                 for a in self.attributes
             ]
             + [F.col(src[a.column]) for a in self.attributes]
-            + [F.col("__keys"), raw.alias(self.raw_json_column)]
+            + [F.col("__keys"), raw.alias(self.raw_json_column), F.col("__object_id")]
         )
         missing = F.filter(
             F.array(
@@ -154,19 +161,13 @@ class MappingPlan:
             ),
             lambda x: x.isNotNull(),
         )
-        object_id = (
-            F.get_json_object(F.col(self.raw_json_column), f"$.{self.object_id_attribute}")
-            .cast("string")
-            if self.object_id_attribute
-            else F.lit(None).cast("string")
-        )
         final_cols = (
             [F.col(a.column) for a in self.attributes]
             + [
                 F.col(self.raw_json_column),
                 missing.alias("missing_columns"),
                 errors.alias("transform_errors"),
-                object_id.alias("_object_id"),
+                F.col("__object_id").alias("_object_id"),
             ]
         )
         return {

@@ -52,16 +52,21 @@ def collections_to_raw_df(
     """Each collection -> DataFrame with a single ``raw_json`` string
     column (one JSON document per row). Document structure stays opaque
     until a MappingPlan projects it — mirrors the reference keeping the
-    full document for the raw-JSON column (pipeline.py:231-233)."""
-    out: dict[str, DataFrame] = {}
-    for name, docs in data.items():
-        rows = [(json.dumps(d, default=str),) for d in docs]
-        if rows:
-            df = spark.createDataFrame(rows, "raw_json string")
-        else:
-            df = spark.createDataFrame([], "raw_json string")
-        out[name] = df
-    return out
+    full document for the raw-JSON column (pipeline.py:231-233).
+
+    The ``json.dumps`` text of every document goes to the JVM once, as
+    one Arrow table per collection, and is planned as a local table
+    scan: no job over these frames starts a Python worker. ``json.dumps``
+    escapes every non-ASCII character (``ensure_ascii``), so the text is
+    valid UTF-8 for Arrow even when a string holds a lone surrogate."""
+    import pyarrow as pa
+
+    return {
+        name: spark.createDataFrame(pa.table({
+            "raw_json": pa.array([json.dumps(d, default=str) for d in docs], pa.string()),
+        }))
+        for name, docs in data.items()
+    }
 
 
 def read_collection_jsonl(spark: SparkSession, path: str) -> DataFrame:

@@ -6,16 +6,19 @@ report frames, KPI summary — golden expectations from the reference's
 documented control flow.
 """
 
+import datetime
 import json
 import os
 import subprocess
 import sys
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_from_mongo_json_to_postgre_spark import pipeline
 from etl_pipeline_from_mongo_json_to_postgre_spark.errors import ConfigError
+from etl_pipeline_from_mongo_json_to_postgre_spark.storage import physical_plan
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -149,6 +152,139 @@ def test_summary(result):
     assert "Total documents: 5" in text and "ghosts" in text
 
 
+def _parquet_values(spark, path):
+    """(simple schema, sorted rows) of a parquet output; timestamps are
+    rendered by the session (UTC) so the rows do not depend on the
+    host's time zone."""
+    df = spark.read.parquet(path)
+    rows = df.select([
+        F.col(f.name).cast("string") if f.dataType.typeName() == "timestamp"
+        else F.col(f.name)
+        for f in df.schema.fields
+    ]).collect()
+    return df.schema.simpleString(), sorted((tuple(r) for r in rows), key=repr)
+
+
+TS = "2024-06-01 00:00:00"
+GOLDEN_SUMMARY = {
+    "ingestion_date": "2024-06-01",
+    "total_documents": 5,
+    "successful_documents": 3,
+    "documents_with_errors": 2,
+    "documents_with_missing_columns": 1,
+    "insert_failures": 0,
+    "missing_collections": ["products"],
+    "unmapped_collections": ["ghosts"],
+    "missing_tables_input": ["public.legacy_widgets"],
+    "missing_tables_db": ["public.customers"],
+    "object_statuses": {"public.customers": "MISSING",
+                        "public.legacy_widgets": "MISSING",
+                        "public.orders": "ALREADY_EXISTS"},
+    "per_collection": {"customers": {"processed": 3, "errors": 1},
+                       "orders": {"processed": 2, "errors": 1}},
+    "rename_maps": {},
+}
+GOLDEN_PARQUET = {
+    "data_customers.parquet": (
+        "struct<customer_id:int,name:string,signup_date:date,raw_json:string,"
+        "ingested_at:timestamp,source_collection:string,status:string>",
+        [
+            (1, "Ann", datetime.date(2024, 1, 15),
+             '{"customer_id": 1, "name": "Ann", "signup_date": "2024-01-15"}',
+             TS, "customers", "success"),
+            (2, "Bob", None,
+             '{"customer_id": 2, "name": "Bob", "signup_date": "bad-date"}',
+             TS, "customers", "error"),
+            (3, "Cy", None, '{"customer_id": 3, "name": "Cy"}',
+             TS, "customers", "success"),
+        ],
+    ),
+    "data_orders.parquet": (
+        "struct<order_id:int,amount:decimal(38,18),raw_json:string,"
+        "ingested_at:timestamp,source_collection:string,status:string>",
+        [
+            (10, Decimal("12.500000000000000000"),
+             '{"order_id": 10, "amount": "12.50"}', TS, "orders", "success"),
+            (11, None, '{"order_id": 11, "amount": "oops"}', TS, "orders", "error"),
+        ],
+    ),
+    "ingestion_audit.parquet": (
+        "struct<ingested_at:timestamp,object_id:string,source_collection:string,"
+        "object_name:string,object_status:string,missing_columns:array<string>,"
+        "processing_status:string>",
+        [
+            (TS, "1", "customers", "public.customers", "MISSING", [], "success"),
+            (TS, "10", "orders", "public.orders", "ALREADY_EXISTS", [], "success"),
+            (TS, "11", "orders", "public.orders", "ALREADY_EXISTS", [], "error"),
+            (TS, "2", "customers", "public.customers", "MISSING", [], "error"),
+            (TS, "3", "customers", "public.customers", "MISSING",
+             ["signup_date"], "success"),
+            (TS, None, None, "public.legacy_widgets", "MISSING", [], "missing"),
+        ],
+    ),
+    "missing_attributes_report.parquet": (
+        "struct<ingestion_date:date,object_name:string,missing_columns:array<string>>",
+        [(datetime.date(2024, 6, 1), "public.customers", ["signup_date"])],
+    ),
+}
+
+
+def test_golden_run_outputs(spark, result, tmp_path):
+    """Every value a run reports and writes, as literals: the summary
+    dict and every row of every parquet output."""
+    out = str(tmp_path / "out")
+    pipeline.write_run_parquet(result, out)
+    assert result.summary() == GOLDEN_SUMMARY
+    assert sorted(os.listdir(out)) == sorted(GOLDEN_PARQUET)
+    for name, want in GOLDEN_PARQUET.items():
+        assert _parquet_values(spark, os.path.join(out, name)) == want, name
+
+
+def test_run_parses_each_document_once(result):
+    """The sinks and the reports read the run's stored enriched frames:
+    none of their physical plans parses a document again."""
+    frames = [result.audit_df, result.missing_attributes_report(),
+              *result.data_frames.values()]
+    for df in frames:
+        assert "from_json" not in physical_plan(df), physical_plan(df)
+
+
+def test_run_with_empty_collection(spark, tmp_path):
+    """A mapped collection given as [] writes an empty data table with
+    the mapped columns, adds no audit rows, and leaves the totals those
+    of the other collections."""
+    mapping = {"collections": {
+        **MAPPING["collections"],
+        "refunds": {
+            "target_table": "public.refunds",
+            "object_id_attribute": "refund_id",
+            "mappings": {
+                "refund_id": {"column": "refund_id", "type": "integer"},
+                "reason": {"column": "reason", "type": "text"},
+            },
+        },
+    }}
+    res = pipeline.run(spark, {**INPUT, "refunds": []}, mapping,
+                       ingestion_date="2024-06-01")
+    out = str(tmp_path / "out")
+    pipeline.write_run_parquet(res, out)
+
+    refunds = spark.read.parquet(os.path.join(out, "data_refunds.parquet"))
+    assert refunds.count() == 0
+    assert refunds.columns == ["refund_id", "reason", "raw_json", "ingested_at",
+                               "source_collection", "status"]
+    audit = spark.read.parquet(os.path.join(out, "ingestion_audit.parquet"))
+    assert audit.where(F.col("source_collection") == "refunds").count() == 0
+    assert audit.count() == 5
+
+    s = res.summary()
+    assert s["per_collection"] == GOLDEN_SUMMARY["per_collection"]
+    for key in ("total_documents", "successful_documents",
+                "documents_with_errors", "documents_with_missing_columns"):
+        assert s[key] == GOLDEN_SUMMARY[key], key
+    assert s["object_statuses"]["public.refunds"] == "NEW"
+
+
 def test_load_schema_tables(schema_sql):
     tables = pipeline.load_schema_tables(schema_sql)
     assert tables == {"public.customers", "public.legacy_widgets",
@@ -172,11 +308,6 @@ def _cli(*argv, tz="UTC"):
         [sys.executable, "-m",
          "etl_pipeline_from_mongo_json_to_postgre_spark.cli", *argv],
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=600)
-
-
-def _parquet_rows(spark, path):
-    df = spark.read.parquet(path)
-    return df.columns, sorted(map(repr, df.collect()))
 
 
 def test_cli_end_to_end(spark, tmp_path):
@@ -214,7 +345,7 @@ def test_cli_end_to_end(spark, tmp_path):
     assert sorted(os.listdir(out)) == names
     assert "data_events.parquet" in names
     for name in names:
-        assert _parquet_rows(spark, str(out / name)) == _parquet_rows(
+        assert _parquet_values(spark, str(out / name)) == _parquet_values(
             spark, str(ref / name)), name
     day = spark.read.parquet(str(out / "data_events.parquet")).first()["day"]
     assert str(day) == "2024-03-10"

@@ -104,3 +104,41 @@ def test_nested_values_survive_only_in_raw_json(spark):
     row = data.collect()[0]
     assert json.loads(row["raw_json"])["name"] == {"first": "X"}
     assert json.loads(row["name"]) == {"first": "X"}  # mapped col: JSON text
+
+
+# raw document text -> object_id; numbers come back in the form Spark's
+# JSON parser renders them
+OBJECT_ID_CASES = [
+    ('{"k": 0, "id": 1.50}', "1.5"),
+    ('{"k": 1, "id": 1e5}', "100000.0"),
+    ('{"k": 2, "id": {"$oid": "x"}}', '{"$oid":"x"}'),
+    ('{"k": 3, "id": "abc"}', "abc"),
+    ('{"k": 4, "id": null}', None),
+    ('{"k": 5}', None),
+    ('{"k": 6, "id": true}', "true"),
+    ('{"k": 7, "id": 12345678901234567890}', "12345678901234567890"),
+]
+
+
+def test_object_id_read_from_parsed_document(spark):
+    """object_id is the attribute's value in the parsed document: JSON
+    null and an absent key give NULL, nested values their compact text."""
+    spec = {"target_table": "t", "object_id_attribute": "id",
+            "mappings": {"k": {"column": "k", "type": "integer"}}}
+    raw = spark.createDataFrame([(t,) for t, _ in OBJECT_ID_CASES], "raw_json string")
+    _, audit = transform_collection(raw, MappingPlan.from_config("c", spec),
+                                    ingested_at="2024-06-01 00:00:00")
+    got = sorted((r["object_id"] for r in audit.collect()), key=repr)
+    assert got == sorted((want for _, want in OBJECT_ID_CASES), key=repr)
+
+
+def test_dotted_object_id_attribute_is_a_top_level_key(spark):
+    """A name with '.' is looked up as one key, like a mapped attribute,
+    not as a JSON path into a nested object."""
+    spec = {"target_table": "t", "object_id_attribute": "a.b",
+            "mappings": {"a.b": {"column": "ab", "type": "integer"}}}
+    raw = spark.createDataFrame([('{"a.b": 7, "a": {"b": 8}}',)], "raw_json string")
+    data, audit = transform_collection(raw, MappingPlan.from_config("c", spec),
+                                       ingested_at="2024-06-01 00:00:00")
+    assert data.first()["ab"] == 7
+    assert audit.first()["object_id"] == "7"
