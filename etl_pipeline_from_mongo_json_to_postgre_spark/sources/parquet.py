@@ -7,8 +7,8 @@ API stays the same.
 Timestamp normalization: the testdata has been re-encoded between
 rounds (TIMESTAMP(NANOS) in one round, timestamp[us] with no timezone
 in the next), so the loader absorbs BOTH encodings and guarantees that
-every timestamp column leaving ``load_table``/``events_stream`` is
-plain TimestampType (TIMESTAMP_LTZ):
+every timestamp column leaving ``read_normalized`` (``load_table`` and
+the streaming ``watch_table``) is plain TimestampType (TIMESTAMP_LTZ):
 
 * TIMESTAMP(NANOS): Spark's vectorized reader rejects it; we read
   those columns as nanosecond longs (spark.sql.legacy.parquet.
@@ -85,8 +85,11 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
+def read_normalized(spark: SparkSession, path: str, read) -> DataFrame:
+    """``read(path)`` (a batch or a streaming reader) under the
+    timestamp read confs, with every timestamp column converted to
+    TimestampType. ``load_table`` and ``streaming.harness.watch_table``
+    both read through here, so batch and stream convert in one place."""
     nano_cols = _nano_ts_columns(path)
     if nano_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -96,10 +99,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     except Exception:
         pass
-    df = spark.read.parquet(path)
+    df = read(path)
     for c in nano_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` DIV 1000)"))
     return normalize_timestamps(df)
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return read_normalized(
+        spark, os.path.join(sf_dir, f"{name}.parquet"), spark.read.parquet)
 
 
 def load_evolving(spark: SparkSession, path: str) -> DataFrame:

@@ -1,3 +1,4 @@
-from .events import events_stream, run_stream_to_memory, windowed_counts
+from .events import windowed_counts
+from .harness import drain_to_memory, staged_stream, watch_table
 
-__all__ = ["events_stream", "run_stream_to_memory", "windowed_counts"]
+__all__ = ["drain_to_memory", "staged_stream", "watch_table", "windowed_counts"]

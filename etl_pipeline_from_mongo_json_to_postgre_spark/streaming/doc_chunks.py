@@ -5,8 +5,10 @@ files, each is chunked into overlapping token windows ON ARRIVAL
 (stateless map — chunking needs no cross-document state), and a
 running census aggregates downstream. This module runs the SAME chunk
 expression as operators/chunking.py through the real streaming engine
-(file source, availableNow trigger, memory sink), so the batch oracle
-checks the streaming execution path bit-for-bit.
+(``harness.watch_table`` source, availableNow trigger,
+``harness.drain_to_memory`` sink), so the batch oracle checks the
+streaming execution path bit-for-bit. ``stream_ann_cell_assign`` runs
+the same plumbing over the embeddings table.
 
 Scale note: stateless per-document chunking keeps streaming state at
 exactly the census aggregate (|distinct n_tokens| rows — at most
@@ -16,32 +18,12 @@ production (foreachBatch parquet/JDBC), never through state.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.text import word_hashes
 from ..operators.chunking import _DUCK_CHUNKS, _WORDS, CHUNK_STRIDE, CHUNK_TOKENS
-from ..sources.parquet import load_table
-
-
-def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the documents parquet (symlink-dir pattern of
-    streaming/events.events_stream: the file source watches a
-    directory; in production this is the landing path)."""
-    load_table(spark, sf_dir, "documents")  # sets nanos/NTZ confs
-    src = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(src).schema
-    watch_dir = tempfile.mkdtemp(prefix="documents_stream_")
-    os.symlink(src, os.path.join(watch_dir, "documents.parquet"))
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch_dir)
-    )
+from .harness import drain_to_memory, watch_table
 
 
 def stream_chunk_length_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,7 +35,7 @@ def stream_chunk_length_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilt identically here), one complete-mode aggregate over
     n_tokens. Oracle = the same census in batch SQL over the chunk
     CTE."""
-    stream = documents_stream(spark, sf_dir)
+    stream = watch_table(spark, sf_dir, "documents")
     w = _WORDS(F.col("text"))
     staged = stream.where(F.size(w) > 0).select(
         "doc_id", word_hashes(w).alias("wh"))
@@ -71,23 +53,14 @@ def stream_chunk_length_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c.n_tokens").alias("n_tokens"))
         .agg(F.count("*").alias("n_chunks"))
     )
-    q = (
-        census.writeStream.format("memory")
-        .queryName("stream_chunk_census")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    drain_to_memory(census, "stream_chunk_census", "complete")
     return spark.table("stream_chunk_census")
 
 
-def start_ann_cell_assign(spark: SparkSession, sf_dir: str,
-                          query_name: str) -> StreamingQuery:
-    """Start stream_ann_cell_assign's streaming census into the memory
-    sink `query_name` and return the running query handle (its
-    per-batch progress is what tools/stream_ann_decompose.py reads)."""
+def ann_cell_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """stream_ann_cell_assign's streaming per-cell census over the
+    arriving embeddings, ready to drain (tools/stream_ann_decompose.py
+    drains it too and reads the query's per-batch progress)."""
     from ..operators.ann_trained import (
         _coarse_scores,
         _require_trained,
@@ -95,17 +68,7 @@ def start_ann_cell_assign(spark: SparkSession, sf_dir: str,
     )
 
     _require_trained()
-    load_table(spark, sf_dir, "embeddings")  # sets reader confs
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(src).schema
-    watch_dir = tempfile.mkdtemp(prefix="embeddings_stream_")
-    os.symlink(src, os.path.join(watch_dir, "embeddings.parquet"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch_dir)
-        .select("vec_id")
-    )
+    stream = watch_table(spark, sf_dir, "embeddings").select("vec_id")
     # ONE definition of the planted vector, shared with the batch path;
     # scores staged as a column so the 16x64 dot block evaluates once
     # per row (CollapseProject keeps multi-referenced columns staged)
@@ -115,15 +78,7 @@ def start_ann_cell_assign(spark: SparkSession, sf_dir: str,
         F.array_position("scores", F.array_max("scores"))
         .cast("bigint").alias("cell")
     )
-    census = assigned.groupBy("cell").agg(F.count("*").alias("n_vecs"))
-    return (
-        census.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
-    )
+    return assigned.groupBy("cell").agg(F.count("*").alias("n_vecs"))
 
 
 def stream_ann_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,7 +90,8 @@ def stream_ann_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     are derived from the arriving vec_ids the same way the batch
     ann_trained fixture derives them, so the oracle is the batch cell
     census in SQL. State = one row per cell (16)."""
-    start_ann_cell_assign(spark, sf_dir, "stream_ann_cells").awaitTermination()
+    drain_to_memory(ann_cell_census(spark, sf_dir), "stream_ann_cells",
+                    "complete")
     return spark.table("stream_ann_cells")
 
 

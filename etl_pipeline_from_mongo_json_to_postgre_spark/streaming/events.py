@@ -6,7 +6,9 @@ replacement is readStream -> windowed aggregation with watermark ->
 sink. The batch twin (operators/analytics.tumbling_window_agg) shares
 the same plan shape, so correctness is oracle-checked there; these
 functions run the *streaming* execution path (availableNow trigger for
-bounded runs, memory/foreachBatch sinks).
+bounded runs, memory/foreachBatch sinks). Every entry reads the events
+table through ``harness.watch_table`` and drains through
+``harness.drain_to_memory``.
 
 At scale: the parquet source becomes Kafka/files-on-arrival, the
 memory sink becomes foreachBatch JDBC (mirroring the reference's
@@ -16,37 +18,12 @@ Postgres load), and the watermark bounds state for late data.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.parquet import load_table, normalize_timestamps
-
-
-def events_stream(spark: SparkSession, sf_dir: str,
-                  max_files_per_trigger: int = 1) -> DataFrame:
-    """readStream over the events parquet (schema taken from a batch
-    read through the nanos-safe loader)."""
-    load_table(spark, sf_dir, "events")  # side effect: sets nanosAsLong/NTZ confs
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    # The file-stream source needs a *directory* to watch (its basePath
-    # must be a directory); the testdata table is a single file, so
-    # expose it through a symlink dir. In production this is the
-    # landing directory files arrive into.
-    watch_dir = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(src, os.path.join(watch_dir, "events.parquet"))
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(watch_dir)
-    )
-    # same nanos->timestamp conversion as the batch loader
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    # and the same NTZ->LTZ normalization (watermarks need TIMESTAMP)
-    return normalize_timestamps(stream)
+from ..sources.parquet import load_table
+from .harness import _scratch_dir, drain_to_memory, watch_table
 
 
 def windowed_counts(stream: DataFrame, window: str = "1 hour",
@@ -67,28 +44,12 @@ def windowed_counts(stream: DataFrame, window: str = "1 hour",
     )
 
 
-def run_stream_to_memory(spark: SparkSession, sf_dir: str,
-                         table_name: str = "stream_windowed") -> DataFrame:
-    """Execute the windowed aggregation through the streaming engine
-    (availableNow: process everything available, then stop) into a
-    memory sink; returns the final result DataFrame."""
-    q = (
-        windowed_counts(events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table_name)
-
-
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """queries() entry: full streaming execution, oracle-checked
     against the equivalent batch SQL."""
-    return run_stream_to_memory(spark, sf_dir)
+    drain_to_memory(windowed_counts(watch_table(spark, sf_dir, "events")),
+                    "stream_windowed", "complete")
+    return spark.table("stream_windowed")
 
 
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,16 +59,10 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tumbling path; the window fan-out happens map-side before the
     keyed-state aggregation, so sliding costs window/slide x the
     tumbling shuffle volume, not a re-scan per pane."""
-    q = (
-        windowed_counts(events_stream(spark, sf_dir), slide="30 minutes")
-        .writeStream.format("memory")
-        .queryName("stream_sliding")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_slide_"))
-        .start()
-    )
-    q.awaitTermination()
+    drain_to_memory(
+        windowed_counts(watch_table(spark, sf_dir, "events"),
+                        slide="30 minutes"),
+        "stream_sliding", "complete")
     return spark.table("stream_sliding")
 
 
@@ -139,12 +94,12 @@ def _run_late_drop_stream(spark: SparkSession, sf_dir: str):
     windows with the late contributions and hash-mismatch.
 
     Returns (census_rows, schema, progress) — the caller materializes;
-    scratch dirs are removed before returning (r9 stream-load advice).
+    the staged waves are removed before returning.
     """
     import shutil
     import time as _time
 
-    events = normalize_timestamps(load_table(spark, sf_dir, "events"))
+    events = load_table(spark, sf_dir, "events")
     max_ts = events.agg(F.max("ts")).collect()[0][0]  # one scalar
     is_plant = (F.col("event_id") % LATE_PLANT_MOD == 0) & (
         F.col("ts") < F.lit(max_ts) - F.expr(
@@ -157,9 +112,9 @@ def _run_late_drop_stream(spark: SparkSession, sf_dir: str):
         events.where(~is_plant & is_tail),
         events.where(is_plant),
     ]
-    watch = tempfile.mkdtemp(prefix="late_watch_")
-    scratch = tempfile.mkdtemp(prefix="late_stage_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_late_")
+    scratch = _scratch_dir("late_")
+    watch = os.path.join(scratch, "watch")
+    os.mkdir(watch)
     try:
         base = _time.time() - 900
         for i, wave in enumerate(waves):
@@ -196,20 +151,11 @@ def _run_late_drop_stream(spark: SparkSession, sf_dir: str):
             .select(F.col("w.start").alias("window_start"),
                     "event_type", "cnt", "value_sum")
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("stream_late_drop")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
+        q = drain_to_memory(agg, "stream_late_drop", "append")
         result = spark.table("stream_late_drop")
         return result.collect(), result.schema, list(q.recentProgress)
     finally:
-        for d in (watch, scratch, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def stream_late_drop_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,17 +283,8 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch twin below for the final answer — the streaming pass
     verifies the stateful plumbing; the returned frame is the complete
     session list, oracle-checked against DuckDB window SQL."""
-    stream = events_stream(spark, sf_dir)
-    q = (
-        sessionize(stream)
-        .writeStream.format("memory")
-        .queryName("stream_sessions")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_sess_"))
-        .start()
-    )
-    q.awaitTermination()
+    drain_to_memory(sessionize(watch_table(spark, sf_dir, "events")),
+                    "stream_sessions", "update")
     closed_in_stream = spark.table("stream_sessions")
     # batch twin for the full answer (sessions still open at stream end):
     # identical gap semantics via window functions
@@ -386,7 +323,7 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     other classic streaming OOM (cf. stream_dedup_keys). Oracle: the
     equivalent batch self-join (complete at availableNow since every
     row is processed)."""
-    src = events_stream(spark, sf_dir)
+    src = watch_table(spark, sf_dir, "events")
     clicks = (
         src.where(F.col("event_type") == "click")
         .select(
@@ -397,7 +334,7 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "2 hours")
     )
     purchases = (
-        events_stream(spark, sf_dir)
+        watch_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .select(
             "user_id",
@@ -413,17 +350,8 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("click_ts") < F.col("purchase_ts")),
     ).select("purchase_id", "click_id", "user_id", "purchase_value")
-    name = "stream_join_tbl"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    drain_to_memory(joined, "stream_join_tbl", "append")
+    return spark.table("stream_join_tbl")
 
 
 def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,26 +362,17 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming OOM at scale). Output is the deduped KEY SET (which row
     of a duplicate group survives is arrival-order-dependent, so only
     the keys are deterministic); oracle = batch SELECT DISTINCT."""
-    name = "stream_dedup_keys_tbl"
     deduped = (
-        events_stream(spark, sf_dir)
+        watch_table(spark, sf_dir, "events")
         .withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    drain_to_memory(deduped, "stream_dedup_keys_tbl", "append")
     # late rows past the watermark could re-emit a key in a real
     # unbounded run; the contract is distinct-within-watermark, so the
     # comparison normalizes with a batch distinct
-    return spark.table(name).distinct()
+    return spark.table("stream_dedup_keys_tbl").distinct()
 
 
 def oplog_apply_stream(ops: DataFrame) -> DataFrame:
@@ -547,21 +466,11 @@ def stream_oplog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-maintained table converges to the batch answer)."""
     from ..operators.incremental import oplog_from
 
-    ops = oplog_from(events_stream(spark, sf_dir))
-    name = "stream_oplog_tbl"
-    q = (
-        oplog_apply_stream(ops)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_oplog_"))
-        .start()
-    )
-    q.awaitTermination()
+    ops = oplog_from(watch_table(spark, sf_dir, "events"))
+    drain_to_memory(oplog_apply_stream(ops), "stream_oplog_tbl", "update")
     from pyspark.sql.window import Window
 
-    updates = spark.table(name)
+    updates = spark.table("stream_oplog_tbl")
     # latest update per key = the row from the LAST micro-batch that
     # touched it; memory-sink rows arrive in batch-append order, so tag
     # them (single-batch under availableNow here: each key appears once)
@@ -607,9 +516,8 @@ def stream_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
     to the max expected cross-file skew — the state cost scales with
     (distinct keys per delay window), not with raised-delay duration
     times traffic, because keys are dropped as the watermark passes."""
-    name = "stream_windowed_distinct_tbl"
     deduped = (
-        events_stream(spark, sf_dir)
+        watch_table(spark, sf_dir, "events")
         .withColumn("hour", F.date_trunc("hour", "ts"))
         .withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["hour", "user_id"])
@@ -617,17 +525,10 @@ def stream_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
     agg = deduped.groupBy(F.window("ts", "1 hour").alias("w")).agg(
         F.count("*").alias("distinct_users")
     )
-    q = (
-        agg.select(F.col("w.start").alias("window_start"), "distinct_users")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    drain_to_memory(
+        agg.select(F.col("w.start").alias("window_start"), "distinct_users"),
+        "stream_windowed_distinct_tbl", "complete")
+    return spark.table("stream_windowed_distinct_tbl")
 
 
 ORACLE_SQL = {

@@ -6,29 +6,38 @@ pipeline (etl_pipeline/pipeline.py:91-92 stamps a fresh ingestion_date
 per run). The idiomatic Spark replacement is a Structured Streaming
 source feeding the SAME mapping/transform engine per micro-batch, with
 ``foreachBatch`` fanning each batch out to the two JDBC sinks (data
-table + audit table) exactly like the batch path does.
+table + audit table) exactly like the batch path does. Each micro-batch
+takes the cut ``pipeline.run`` takes: ``enrich_collection`` once,
+stored, then ``split_enriched`` into the data and audit frames, so a
+document is parsed once for both writes.
 
 Delivery semantics: foreachBatch + JDBC append is at-least-once — a
 retried micro-batch re-appends. Production dedup key: (batch_id stamped
 into the rows, object_id); the checkpoint guarantees batch_id stability
-across retries, so a MERGE/upsert keyed on it is exactly-once. Batch
-writes stay partition-parallel (write_table caps connections and keeps
-one transaction per partition).
+across retries, so a MERGE/upsert keyed on it is exactly-once; that is
+why ``stream_load`` takes the checkpoint dir from its caller, who keeps
+it. Batch writes stay partition-parallel (write_table caps connections
+and keeps one transaction per partition).
+
+The registry entry below stages its documents with
+``harness.staged_stream``, which removes the arrivals, the sink and the
+checkpoint once the census is collected.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.transform import transform_collection
+from ..config.defaults import OBJECT_STATUS_NEW
+from ..operators.transform import enrich_collection, split_enriched
 from ..plans.mapping_plan import MappingPlan
 from ..sinks.jdbc import write_table
 from ..sources.parquet import load_table
+from .harness import staged_stream
 
 AUDIT_TABLE = "doc_audit.ingestion_audit"
 
@@ -49,11 +58,13 @@ def jdbc_batch_writer(plan: MappingPlan, db_config: Mapping,
 
 
 def stream_load(stream_df: DataFrame, plan: MappingPlan,
-                batch_writer: BatchWriter, raw_col: str | None = None,
-                checkpoint_dir: str | None = None, ingested_at=None):
+                batch_writer: BatchWriter, checkpoint_dir: str,
+                raw_col: str | None = None, ingested_at=None):
     """Run the mapping transform over every micro-batch of ``stream_df``
     (a streaming DataFrame with the collection's raw JSON documents) and
-    hand (data_df, audit_df) to ``batch_writer``.
+    hand (data_df, audit_df) to ``batch_writer``. ``checkpoint_dir`` is
+    the caller's: a run on the same dir resumes after the last
+    committed batch.
 
     Returns the started StreamingQuery (availableNow trigger: drain
     what's available, then stop — callers own awaitTermination). Swap
@@ -62,18 +73,22 @@ def stream_load(stream_df: DataFrame, plan: MappingPlan,
     """
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        data, audit = transform_collection(
+        enriched = enrich_collection(
             batch_df, plan, raw_col=raw_col, ingested_at=ingested_at
-        )
-        batch_writer(data, audit, batch_id)
+        ).persist()
+        try:
+            data, audit = split_enriched(
+                enriched, plan, object_status=OBJECT_STATUS_NEW)
+            batch_writer(data, audit, batch_id)
+        finally:
+            # released per batch: on an unbounded stream the stored
+            # blocks must not wait for garbage collection
+            enriched.unpersist()
 
     return (
         stream_df.writeStream.foreachBatch(_process)
         .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_load_"),
-        )
+        .option("checkpointLocation", checkpoint_dir)
         .start()
     )
 
@@ -151,27 +166,14 @@ def stream_load_audit_census(spark, sf_dir):
             )
         ).alias("raw_json")
     )
-    # All three scratch dirs (staged table copy, parquet sink,
-    # checkpoint) are removed before returning (r9 advice: repeated
-    # census/bench sweeps were accumulating full-table copies in /tmp).
     # The census is |statuses| rows, so it is materialized eagerly and
     # re-wrapped as a local DataFrame — a bounded, metadata-sized
     # collect, after which nothing references the scratch files.
-    import shutil
-
-    stage_dir = tempfile.mkdtemp(prefix="load_stage_")
-    out_dir = tempfile.mkdtemp(prefix="load_out_")
-    ckpt_dir = tempfile.mkdtemp(prefix="ckpt_load_")
-    try:
-        raw.repartition(4).write.mode("overwrite").parquet(stage_dir)
-        stream = (
-            spark.readStream.schema("raw_json string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
-        q = stream_load(stream, _LOAD_PLAN, parquet_batch_writer(out_dir),
-                        checkpoint_dir=ckpt_dir, ingested_at=RUN_TS)
-        q.awaitTermination()
+    with staged_stream(spark, raw, "raw_json string") as (stream, scratch):
+        out_dir = os.path.join(scratch, "out")
+        stream_load(stream, _LOAD_PLAN, parquet_batch_writer(out_dir),
+                    checkpoint_dir=os.path.join(scratch, "ckpt"),
+                    ingested_at=RUN_TS).awaitTermination()
         audit = spark.read.parquet(os.path.join(out_dir, "audit"))
         census = audit.groupBy("processing_status").agg(
             F.count("*").cast("bigint").alias("n_docs"),
@@ -182,9 +184,6 @@ def stream_load_audit_census(spark, sf_dir):
             ).alias("n_missing_lang"),
         )
         return spark.createDataFrame(census.collect(), census.schema)
-    finally:
-        for d in (stage_dir, out_dir, ckpt_dir):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 QUERIES = {

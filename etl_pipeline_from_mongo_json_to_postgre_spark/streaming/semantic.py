@@ -25,8 +25,6 @@ test_stream_semantic.py::test_redelivered_batch_adds_no_canonicals.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -42,6 +40,7 @@ from ..operators.similarity import (
     _vectors,
 )
 from ..functions.sampling import scrambled_bucket
+from .harness import staged_stream
 
 BATCH_OUT_SCHEMA = "vec_id bigint, is_dup boolean, canonical_id bigint"
 
@@ -105,53 +104,40 @@ def semantic_batch_writer(out_dir: str):
 
 def _run_classify_stream(spark, arriving: DataFrame, arr_schema: str,
                          index: DataFrame, classify) -> DataFrame:
-    """The ONE streaming harness both semantic twins run (r12 review:
-    the mp twin had copy-pasted it): arriving slice staged as 4 arrival
-    files -> file readStream (one micro-batch per file) -> foreachBatch
-    ``classify(batch, index)`` -> idempotent overwrite-per-batch sink
-    -> union of the written batches, scratch dirs removed before
-    returning. An EMPTY arriving slice fires zero micro-batches, so the
-    b* glob matches nothing and spark.read would raise PATH_NOT_FOUND
-    instead of matching the oracle's empty result (r11 review) — the
-    batch twins return an empty frame on the same input.
+    """The ONE classify loop both semantic twins run (r12 review: the
+    mp twin had copy-pasted it): arriving slice through
+    ``harness.staged_stream`` (4 arrival files, one micro-batch each)
+    -> foreachBatch ``classify(batch, index)`` -> idempotent
+    overwrite-per-batch sink -> union of the written batches. An EMPTY
+    arriving slice fires zero micro-batches, so no batch dir exists and
+    spark.read would raise PATH_NOT_FOUND instead of matching the
+    oracle's empty result (r11 review) — the batch twins return an
+    empty frame on the same input.
 
     The result is |arriving slice| rows (10% of the embedding table —
     bounded and small at every test SF); like stream_load_audit_census
-    it is materialized eagerly and re-wrapped as a local DataFrame so
-    the scratch dirs (staged arrivals, sink, checkpoint) can be
-    removed before returning."""
-    stage_dir = tempfile.mkdtemp(prefix="sem_stage_")
-    out_dir = tempfile.mkdtemp(prefix="sem_out_")
-    ckpt_dir = tempfile.mkdtemp(prefix="ckpt_sem_")
-    try:
-        arriving.repartition(4).write.mode("overwrite").parquet(stage_dir)
-        stream = (
-            spark.readStream
-            .schema(arr_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
+    it is materialized eagerly and re-wrapped as a local DataFrame
+    before the staged scratch is removed."""
+    with staged_stream(spark, arriving, arr_schema) as (stream, scratch):
+        out_dir = os.path.join(scratch, "out")
         writer = semantic_batch_writer(out_dir)
 
         def _process(batch_df: DataFrame, batch_id: int) -> None:
             writer(classify(batch_df, index), batch_id)
 
-        q = (
+        (
             stream.writeStream.foreachBatch(_process)
             .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
+            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-        if not any(d.startswith("b") for d in os.listdir(out_dir)):
+        if not os.path.isdir(out_dir):
             return spark.createDataFrame([], BATCH_OUT_SCHEMA)
         result = spark.read.schema(BATCH_OUT_SCHEMA).parquet(
             os.path.join(out_dir, "b*")
         )
         return spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        for d in (stage_dir, out_dir, ckpt_dir):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 def stream_semantic_dedup(spark, sf_dir):

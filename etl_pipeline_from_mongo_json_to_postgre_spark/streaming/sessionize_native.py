@@ -19,6 +19,10 @@ oracle below uses the same strict-> split as stream_sessionize's (the
 fixtures additionally contain no exact-gap adjacency at any shipped
 SF, also probed).
 
+The entry reads the events table through ``harness.watch_table`` and
+drains through ``harness.drain_to_memory``; the only thing it adds is
+a scoped shuffle-partition setting for its state store.
+
 Reference parity: the reference has no streaming at all (its only
 incrementality is re-running the batch, etl_pipeline/pipeline.py); this
 is the SURVEY §2.8 extension family.
@@ -26,13 +30,11 @@ is the SURVEY §2.8 extension family.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events import SESSION_GAP_MIN, events_stream
+from .events import SESSION_GAP_MIN
+from .harness import drain_to_memory, watch_table
 
 GAP = f"{SESSION_GAP_MIN} minutes"
 
@@ -63,7 +65,6 @@ def stream_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs a batch flush for exactly that reason). A continuous
     deployment would switch to append mode + ``withWatermark`` so the
     state store evicts sessions older than the lateness bound."""
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sess_native_")
     # State-partition sizing: a streaming aggregation's state store
     # count is fixed by spark.sql.shuffle.partitions at FIRST run of a
     # checkpoint; each partition pays a per-commit file create/fsync.
@@ -76,24 +77,12 @@ def stream_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
-            sessionize_native(events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName("stream_sessions_native")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-        # the memory sink holds the complete result in driver memory —
-        # nothing references the checkpoint files once the query has
-        # terminated, so the scratch dir goes away immediately (same
-        # discipline as stream_load_audit_census, r9 advice)
+        drain_to_memory(
+            sessionize_native(watch_table(spark, sf_dir, "events")),
+            "stream_sessions_native", "complete")
         return spark.table("stream_sessions_native")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 QUERIES = {

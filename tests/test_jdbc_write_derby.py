@@ -122,7 +122,9 @@ def test_stream_load_foreachbatch_into_real_jdbc(spark, db, tmp_path, sf_dir):
     from etl_pipeline_from_mongo_json_to_postgre_spark.plans.mapping_plan import (
         MappingPlan,
     )
-    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming import events as se
+    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.harness import (
+        watch_table,
+    )
     from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.load import (
         jdbc_batch_writer,
         stream_load,
@@ -142,7 +144,7 @@ def test_stream_load_foreachbatch_into_real_jdbc(spark, db, tmp_path, sf_dir):
             },
         },
     )
-    stream = se.events_stream(spark, sf_dir).select(
+    stream = watch_table(spark, sf_dir, "events").select(
         F.to_json(F.struct("event_id", "user_id", "event_type", "value"))
         .alias("raw_json")
     )

@@ -5,7 +5,7 @@ The driver's testdata re-encoded its timestamps between rounds
 Spark's read type to TIMESTAMP_NTZ and broke every withWatermark /
 unix_micros call site (six queries, one crashed bench). This test pins
 the loader contract: every timestamp-ish source column comes out of
-``load_table`` / ``events_stream`` as plain TimestampType — never
+``load_table`` / ``watch_table`` as plain TimestampType — never
 TimestampNTZType, never a raw bigint of nanos.
 """
 
@@ -20,7 +20,7 @@ from etl_pipeline_from_mongo_json_to_postgre_spark.sources.parquet import (
     TABLES,
     load_table,
 )
-from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.events import events_stream
+from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.harness import watch_table
 
 SF_DIRS = [
     d for d in ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
@@ -54,7 +54,7 @@ def test_load_table_never_exposes_ntz(spark, sf_dir, name):
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
 def test_events_stream_ts_is_watermarkable(spark, sf_dir):
-    stream = events_stream(spark, sf_dir)
+    stream = watch_table(spark, sf_dir, "events")
     dt = stream.schema["ts"].dataType
     assert isinstance(dt, TimestampType), f"stream ts is {dt}, not TIMESTAMP"
     # the actual contract: withWatermark analyzes cleanly

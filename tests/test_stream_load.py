@@ -52,3 +52,36 @@ def test_registry_census_statuses(spark, sf_dir):
     assert set(rows) == {"success", "error"}
     for r in rows.values():
         assert r["n_docs"] == r["n_distinct_ids"]
+
+
+def test_micro_batch_is_parsed_once(spark, tmp_path):
+    """stream_load stores each micro-batch's enriched frame: once the
+    data write has computed it, the audit frame reads the stored rows
+    (InMemoryTableScan) and runs no from_json of its own. The cached
+    subtree printed under InMemoryRelation is the one parse the data
+    write already ran."""
+    from etl_pipeline_from_mongo_json_to_postgre_spark.storage import (
+        physical_plan,
+    )
+
+    docs = [f'{{"doc_id": {i}, "lang": "en", "n_chars": {i}}}'
+            for i in range(20)]
+    stage = str(tmp_path / "stage")
+    spark.createDataFrame([(d,) for d in docs], "raw_json string") \
+        .repartition(2).write.parquet(stage)
+    stream = (spark.readStream.schema("raw_json string")
+              .option("maxFilesPerTrigger", 1).parquet(stage))
+    plans = []
+
+    def writer(data_df, audit_df, batch_id):
+        data_df.write.parquet(str(tmp_path / "data" / f"b{batch_id}"))
+        plans.append(physical_plan(audit_df))
+
+    L.stream_load(stream, L._LOAD_PLAN, writer,
+                  checkpoint_dir=str(tmp_path / "ckpt"),
+                  ingested_at=L.RUN_TS).awaitTermination()
+    assert plans
+    for plan in plans:
+        above_store = plan.split("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in above_store, plan
+        assert "from_json" not in above_store, plan

@@ -1,7 +1,9 @@
 """Structured Streaming execution path (availableNow -> memory sink)."""
 
 from etl_pipeline_from_mongo_json_to_postgre_spark.streaming import (
-    run_stream_to_memory,
+    drain_to_memory,
+    watch_table,
+    windowed_counts,
 )
 
 
@@ -9,7 +11,9 @@ def test_stream_matches_batch_plan(spark, sf_dir):
     from etl_pipeline_from_mongo_json_to_postgre_spark.sources.parquet import load_table
     from pyspark.sql import functions as F
 
-    result = run_stream_to_memory(spark, sf_dir, table_name="t_stream_test")
+    drain_to_memory(windowed_counts(watch_table(spark, sf_dir, "events")),
+                    "t_stream_test", "complete")
+    result = spark.table("t_stream_test")
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -25,18 +29,17 @@ def test_stream_matches_batch_plan(spark, sf_dir):
     assert len(got) > 0
 
 
-def test_sessionize_stream_matches_batch(spark, sf_dir):
+def test_sessionize_stream_matches_batch(spark, sf_dir, tmp_path):
     """Every session the stateful streaming operator closes must appear
     identically (start/end/count) in the batch window-function answer;
     batch-only extras are exactly the sessions still open at drain."""
-    import tempfile
     from etl_pipeline_from_mongo_json_to_postgre_spark.streaming import events as se
 
-    stream = se.events_stream(spark, sf_dir)
+    stream = watch_table(spark, sf_dir, "events")
     q = (se.sessionize(stream)
          .writeStream.format("memory").queryName("sess_check")
          .outputMode("update").trigger(availableNow=True)
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_sc_")).start())
+         .option("checkpointLocation", str(tmp_path / "ckpt")).start())
     assert q.awaitTermination(300)
     streamed = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
@@ -54,7 +57,7 @@ def test_sessionize_stream_matches_batch(spark, sf_dir):
     assert len(open_sessions) == len(users_open)
 
 
-def test_stream_load_foreachbatch(spark, sf_dir):
+def test_stream_load_foreachbatch(spark, sf_dir, tmp_path):
     """Incremental load path (streaming/load.py): events stream as raw
     JSON documents -> mapping transform per micro-batch -> batch writer.
     The writer here collects instead of JDBC-appending (no live DB in
@@ -67,7 +70,6 @@ def test_stream_load_foreachbatch(spark, sf_dir):
     from etl_pipeline_from_mongo_json_to_postgre_spark.sources.parquet import (
         load_table,
     )
-    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming import events as se
     from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.load import (
         stream_load,
     )
@@ -85,7 +87,7 @@ def test_stream_load_foreachbatch(spark, sf_dir):
             },
         },
     )
-    stream = se.events_stream(spark, sf_dir).select(
+    stream = watch_table(spark, sf_dir, "events").select(
         F.to_json(F.struct("event_id", "user_id", "event_type", "value")).alias(
             "raw_json"
         )
@@ -103,6 +105,7 @@ def test_stream_load_foreachbatch(spark, sf_dir):
         seen["batches"] += 1
 
     q = stream_load(stream, plan, writer, raw_col="raw_json",
+                    checkpoint_dir=str(tmp_path / "ckpt"),
                     ingested_at="2024-06-01 00:00:00")
     assert q.awaitTermination(300)
     n_events = load_table(spark, sf_dir, "events").count()
@@ -120,13 +123,8 @@ def test_watermark_drops_late_data_in_append_mode(spark, tmp_path):
     late-data contract the 100 TB streaming path relies on for bounded
     state."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
-
-    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.events import (
-        windowed_counts,
-    )
 
     watch = str(tmp_path / "watch")
     os.makedirs(watch)
@@ -175,7 +173,7 @@ def test_watermark_drops_late_data_in_append_mode(spark, tmp_path):
         .queryName("late_data_check")
         .outputMode("append")
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_late_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     assert q.awaitTermination(300)
@@ -195,7 +193,6 @@ def test_windowed_distinct_multifile_within_watermark(spark, tmp_path):
     cross-file event-time disorder stays within the 2h dedup delay —
     returning users seen again in a later batch must not be re-counted."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -250,7 +247,7 @@ def test_windowed_distinct_multifile_within_watermark(spark, tmp_path):
         .queryName("multifile_distinct_check")
         .outputMode("complete")
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_mfd_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     assert q.awaitTermination(300)
@@ -405,3 +402,36 @@ def test_late_drop_census_planted_rows_are_exactly_the_delta(spark, sf_dir):
         F.col("full_cnt") != F.col("stream_cnt") + F.col("plant_cnt")
     )
     assert bad.count() == 0, bad.limit(5).collect()
+
+
+def test_streaming_entries_leave_no_scratch(spark, sf_dir):
+    """Streaming entries keep their scratch under the one harness root:
+    the temp dir gains nothing else, and once the queries have stopped
+    the root holds only watch dirs (no checkpoint, staged arrivals or
+    sink outlives its query)."""
+    import os
+    import tempfile
+
+    import __spark_entry__ as e
+    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming import harness
+
+    registry = e.queries()
+    names = ("stream_windowed_counts", "stream_sessionize_native",
+             "stream_chunk_length_census", "stream_late_drop_census",
+             "stream_load_audit_census", "stream_semantic_dedup")
+
+    def run_all():
+        for name in names:
+            registry[name](spark, sf_dir).collect()
+
+    # warm pass: the JVM extracts its native codecs (snappy, lz4) and
+    # its session artifact dir into the temp dir on first use
+    run_all()
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    run_all()
+    root = harness._root()
+    root_name = os.path.basename(root)
+    assert set(os.listdir(tmp)) - {root_name} == before - {root_name}
+    leftovers = [d for d in os.listdir(root) if not d.startswith("watch_")]
+    assert leftovers == [], leftovers

@@ -34,12 +34,14 @@ def run_decomposed(spark, sf_dir: str) -> dict:
     Returns {'batches': [...], 'in_batch_ms': N, 'overhead_ms': N,
     'n_rows': N, 'qname': <memory-sink table>}."""
     from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.doc_chunks import (
-        start_ann_cell_assign,
+        ann_cell_census,
+    )
+    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.harness import (
+        drain_to_memory,
     )
 
     qname = f"decomp_{abs(hash(sf_dir)) % 10_000}"
-    q = start_ann_cell_assign(spark, sf_dir, qname)
-    q.awaitTermination()
+    q = drain_to_memory(ann_cell_census(spark, sf_dir), qname, "complete")
     batches = []
     for p in q.recentProgress:
         d = p["durationMs"]
@@ -69,7 +71,7 @@ def main() -> int:
     )
 
     sf_dirs = sys.argv[1:] or ["/root/testdata/sf0.001", "/root/testdata/sf0.1"]
-    # start_ann_cell_assign runs outside the registry boundary, so tune
+    # the census runs outside the registry boundary, so tune
     # here as the boundary would (shuffle partitions max(cores, 8))
     spark = tune_for_oracle(get_spark(app_name="stream_ann_decompose"))
     print("| sf_dir | rep | batches | input rows | in-batch (addBatch) ms "
