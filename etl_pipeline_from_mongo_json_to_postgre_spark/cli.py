@@ -39,16 +39,13 @@ def parse_args(argv=None):
 def main(argv=None) -> int:
     args = parse_args(argv)
     try:
-        from .config.loader import load_config, validate_app_config, validate_mapping_config
         from .pipeline import format_summary, run, write_run_jdbc, write_run_parquet
         from .session import get_spark
 
         spark = get_spark(app_name="etl-pipeline-spark")
         result = run(spark, args.input, args.mapping_config, args.app_config)
         if args.jdbc:
-            app = validate_app_config(load_config(args.app_config) if args.app_config else {})
-            mapping = validate_mapping_config(load_config(args.mapping_config))
-            write_run_jdbc(spark, result, app, mapping)
+            write_run_jdbc(spark, result)
         else:
             write_run_parquet(result, args.output_dir)
         print(format_summary(result.summary()))

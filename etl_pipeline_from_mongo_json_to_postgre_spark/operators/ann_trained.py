@@ -38,7 +38,7 @@ scale path.
 
 Scale shape: identical to ann_ivf_pq_topk — assignment and coding are
 map-side expressions against broadcast literals; the probe join
-carries (vec_id, cell, 4 codes) per corpus row, never vectors; at
+carries (vec_id, cell_id, 4 codes) per corpus row, never vectors; at
 100 TB the trained literals are exactly what a real index build
 broadcasts. Training itself is K passes for init + iters Lloyd rounds
 with K*dim-sized driver traffic (see kmeans.py docstring).
@@ -56,10 +56,14 @@ from ..sources.parquet import fan_out, load_table
 from .similarity import (
     _duck_fold_sum,
     _duck_list,
+    _exact_l2_topk,
     _fold_sum,
     _matrix_dots,
     _matrix_lit,
     _plane_lit,
+    adc_topk,
+    assign_cells,
+    recall_at_k,
 )
 
 DIM = 64
@@ -199,7 +203,7 @@ def _sub_sq_dists(rescol, s: int):
 
 
 def _trained_base(spark, sf_dir):
-    """(vec_id, v, cell, codes) checkpoint — see _trained_parts."""
+    """(vec_id, v, cell_id, codes) checkpoint — see _trained_parts."""
     return _trained_parts(spark, sf_dir)[0]
 
 
@@ -213,23 +217,20 @@ def _trained_parts(spark, sf_dir):
     fold — bit-identical) instead of materializing nlist doubles per
     corpus row. The constructed scores Column is returned so the probe
     side reuses the expression OBJECT — building the 16x64 literal
-    matrix is ~1k py4j round trips of driver time per construction."""
+    matrix is ~1k py4j round trips of driver time per construction.
+    Cells come from the family's one assignment (assign_cells)."""
     _require_trained()
     scores_col = _coarse_scores(F.col("v"))
     base = (
-        planted_vectors(spark, sf_dir)
-        .select("vec_id", "v", scores_col.alias("scores"))
-        .select(
-            "vec_id", "v", "scores",
-            F.array_position("scores", F.array_max("scores")).alias("cell"),
-        )
+        assign_cells(planted_vectors(spark, sf_dir).select("vec_id", "v"),
+                     scores_col)
         .withColumn(
             "res",
             F.zip_with(
                 F.col("v"),
                 F.element_at(
                     _matrix_lit(TRAINED_CENTROIDS),
-                    F.col("cell").cast("int"),
+                    F.col("cell_id").cast("int"),
                 ),
                 lambda x, y: x - y,
             ),
@@ -242,12 +243,12 @@ def _trained_parts(spark, sf_dir):
         # TWICE per row (measured: base materialization 8.9 -> 5.5 s at
         # sf0.1, rows bit-identical; the bound column evaluates once)
         .select(
-            "vec_id", "v", "cell",
+            "vec_id", "v", "cell_id",
             *[_sub_sq_dists(F.col("res"), s).alias(f"_d{s}")
               for s in range(TSUB)],
         )
         .select(
-            "vec_id", "v", "cell",
+            "vec_id", "v", "cell_id",
             F.array(*[
                 F.array_position(
                     F.col(f"_d{s}"), F.array_min(F.col(f"_d{s}"))
@@ -265,14 +266,14 @@ def ann_ivf_pq_trained_topk(spark, sf_dir):
     the planted corpus: canonical per-probed-cell residual LUTs (the
     query recomputes its 4x8 table against each probed cell's
     centroid), candidates scored with 4 table lookups + 3 adds, corpus
-    side of the probe join carries only (vec_id, cell, codes)."""
+    side of the probe join carries only (vec_id, cell_id, codes)."""
     return _topk_from_base(*_trained_parts(spark, sf_dir))
 
 
 def _topk_from_base(base, scores_col=None):
     from pyspark.sql.window import Window
 
-    cand = base.select("vec_id", "cell", "codes")
+    cand = base.select("vec_id", "cell_id", "codes")
 
     cent_lit = _matrix_lit(TRAINED_CENTROIDS)
     qprobe_w = Window.partitionBy("query_id").orderBy(
@@ -301,27 +302,12 @@ def _topk_from_base(base, scores_col=None):
         )
         .select(
             "query_id",
-            F.col("cid").alias("cell"),
+            F.col("cid").alias("cell_id"),
             F.array(*[_sub_sq_dists(F.col("qres"), s)
                       for s in range(TSUB)]).alias("lut"),
         )
     )
-    adc = None
-    for s in range(1, TSUB + 1):
-        term = F.element_at(F.element_at("lut", s), F.element_at("codes", s))
-        adc = term if adc is None else adc + term
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        F.broadcast(probes).join(cand, "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                adc.alias("adc"))
-        .withColumn("rank", F.row_number().over(rank_w))
-        .where(F.col("rank") <= T_TOPK)
-        .select("query_id", "neighbor_id", "rank",
-                F.round("adc", 6).alias("adc_dist"))
-    )
+    return adc_topk(probes, cand, TSUB, T_TOPK)
 
 
 def ann_pq_trained_recall(spark, sf_dir):
@@ -334,42 +320,10 @@ def ann_pq_trained_recall(spark, sf_dir):
 
     The exact baseline and the ADC path share ONE checkpointed base:
     the planted corpus is materialized once, not once per side."""
-    from pyspark.sql.window import Window
-
     base, scores_col = _trained_parts(spark, sf_dir)
-    vecs = base.select("vec_id", "v")
-    queries = vecs.where(F.col("vec_id") < T_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    l2 = _fold_sum(F.zip_with(F.col("qv"), F.col("v"),
-                              lambda x, y: (x - y) * (x - y)))
-    w = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
-    exact = (
-        F.broadcast(queries).crossJoin(vecs)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                l2.alias("d2"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= T_TOPK)
-        .select("query_id", "neighbor_id")
-    )
+    exact = _exact_l2_topk(base.select("vec_id", "v"), T_NQ, T_TOPK)
     pq = _topk_from_base(base, scores_col).select("query_id", "neighbor_id")
-    hitcnt = (
-        pq.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("hits"))
-    )
-    qids = exact.select("query_id").distinct()
-    return (
-        qids.join(hitcnt, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("hits", F.lit(0).cast("bigint")).alias("hits"),
-            (
-                F.coalesce("hits", F.lit(0).cast("bigint")).cast("double")
-                / F.lit(float(T_TOPK))
-            ).alias("recall"),
-        )
-    )
+    return recall_at_k(pq, exact, T_TOPK)
 
 
 # ---------------------------------------------------------------------------

@@ -123,6 +123,61 @@ def _minhash_cols(sh):
     ]
 
 
+_MH = [f"mh{j}" for j in range(16)]
+
+
+def _minhash_bands(sigs, *carry: str):
+    """(doc_id, *carry, band, band_key): the 16 minhash components cut
+    into 4 bands x 4 rows, each band keyed by xxhash64 over its 4
+    values — a fast fixed-width shuffle key that never reaches an
+    output, so DuckDB reproduces the candidate set by joining on the
+    raw 4-component tuples (equal tuples <=> equal keys, modulo 2^-64
+    collisions)."""
+    return sigs.select(
+        "doc_id",
+        *carry,
+        F.posexplode(
+            F.array(
+                *[
+                    F.xxhash64(*[F.col(f"mh{b * 4 + r}") for r in range(4)])
+                    for b in range(4)
+                ]
+            )
+        ).alias("band", "band_key"),
+    )
+
+
+def _band_candidates(banded, *carry: str):
+    """Band self-join of a banded (doc_id, *carry, band, band_key)
+    frame: distinct (doc_a < doc_b) pairs sharing any band key, each
+    side's ``carry`` columns renamed a<col> / b<col>. The join never
+    builds the n^2 cross product, only same-bucket pairs."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *[F.col(f"a.{c}").alias(f"a{c}") for c in carry],
+            *[F.col(f"b.{c}").alias(f"b{c}") for c in carry],
+        )
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
+def _est_jaccard():
+    """Estimated Jaccard of a candidate pair: the share of its 16
+    minhash components (amh<j> vs bmh<j>) that are equal."""
+    return sum(
+        F.when(F.col(f"amh{j}") == F.col(f"bmh{j}"), 1).otherwise(0) for j in range(16)
+    ) / F.lit(16.0)
+
+
 def dedup_minhash_signature(spark, sf_dir):
     """Per-document 16-component MinHash signature over 3-word shingles.
     Pure projection — zero shuffle; the oracle reproduces every bit via
@@ -136,7 +191,7 @@ def dedup_minhash_signature(spark, sf_dir):
     # blocks the collapse of the sh projection, and sh's lambda reads wh
     # k+2 times, blocking the wh collapse. Single-reference consumers
     # (the jaccard family) need an explicit localCheckpoint barrier —
-    # see dedup_ngram_jaccard (measured ~100x there).
+    # see _shingle_sets (measured ~100x there).
     staged = (
         d.where(F.size(w) >= 3)
         .select("doc_id", word_hashes(w).alias("wh"))
@@ -179,41 +234,14 @@ def dedup_minhash_pairs(spark, sf_dir):
     # CacheManager across the driver's many query invocations per
     # session.
     sigs = dedup_minhash_signature(spark, sf_dir).localCheckpoint(eager=True)
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(*[F.col(f"mh{b * 4 + r}") for r in range(4)])
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cand = _band_candidates(_minhash_bands(sigs))
     x = sigs.select(F.col("doc_id").alias("doc_a"),
                     *[F.col(f"mh{j}").alias(f"amh{j}") for j in range(16)])
     y = sigs.select(F.col("doc_id").alias("doc_b"),
                     *[F.col(f"mh{j}").alias(f"bmh{j}") for j in range(16)])
-    est = sum(
-        F.when(F.col(f"amh{j}") == F.col(f"bmh{j}"), 1).otherwise(0) for j in range(16)
-    ) / F.lit(16.0)
     return (
         cand.join(x, "doc_a").join(y, "doc_b")
-        .select("doc_a", "doc_b", est.alias("est_jaccard"))
+        .select("doc_a", "doc_b", _est_jaccard().alias("est_jaccard"))
         .where(F.col("est_jaccard") >= JACCARD_THRESHOLD)
     )
 
@@ -294,41 +322,11 @@ def dedup_minhash_pairs_fast_raw(spark, sf_dir):
         .select("doc_id", sh.alias("sh"))
         .select("doc_id", *mh)
     )
-    bands = sigs.select(
-        "doc_id",
-        *[F.col(f"mh{j}") for j in range(16)],
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(*[F.col(f"mh{b * 4 + r}") for r in range(4)])
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
     # eager localCheckpoint: one materialization shared by both join
     # branches, blocks GC-reclaimed (see dedup_minhash_pairs)
-    bands = bands.localCheckpoint(eager=True)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            *[F.col(f"a.mh{j}").alias(f"amh{j}") for j in range(16)],
-            *[F.col(f"b.mh{j}").alias(f"bmh{j}") for j in range(16)],
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    est = sum(
-        F.when(F.col(f"amh{j}") == F.col(f"bmh{j}"), 1).otherwise(0) for j in range(16)
-    ) / F.lit(16.0)
-    return cand.select("doc_a", "doc_b", est.alias("est_jaccard")).where(
+    bands = _minhash_bands(sigs, *_MH).localCheckpoint(eager=True)
+    cand = _band_candidates(bands, *_MH)
+    return cand.select("doc_a", "doc_b", _est_jaccard().alias("est_jaccard")).where(
         F.col("est_jaccard") >= JACCARD_THRESHOLD
     )
 
@@ -509,24 +507,9 @@ def dedup_simhash_pairs(spark, sf_dir):
             ])
         ).alias("band", "band_key"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cand = _band_candidates(banded, "simhash")
     hamming = F.bit_count(
-        F.col("sim_a").bitwiseXOR(F.col("sim_b"))
+        F.col("asimhash").bitwiseXOR(F.col("bsimhash"))
     ).cast("int")
     return (
         cand.select("doc_a", "doc_b", hamming.alias("hamming"))
@@ -538,30 +521,42 @@ def dedup_simhash_pairs(spark, sf_dir):
 # n-gram jaccard
 # ---------------------------------------------------------------------------
 
-def dedup_ngram_jaccard(spark, sf_dir):
-    """Pairwise Jaccard over distinct 3-word-shingle sets, blocked by
-    lang (a real pipeline blocks by cheap keys to avoid n^2). Integer
-    set arithmetic -> exact parity; pairs with J >= 0.5 survive."""
+def _shingle_sets(spark, sf_dir, ordered: bool = False):
+    """(doc_id, lang, sh): each document's distinct 3-word-shingle hash
+    set (empty sets dropped), checkpointed for its several readers;
+    ``ordered`` sorts each set ascending inside the checkpoint, once
+    per document, rather than in every reader.
+
+    TWO barriers. (1) after wh: CollapseProject otherwise inlines the
+    whole word-hash pipeline into every element_at inside the shingle
+    lambda — ~150 re-evaluations of wh per doc (3 offsets x ~50
+    shingles), measured 50s -> 0.5s at sf0.1 for this single
+    materialization. (2) after sh: every caller reads the frame more
+    than once; left lazy, each branch re-evaluates the pipeline and
+    Generate inlines it per exploded row (~25x measured at sf0.001).
+    localCheckpoint over cache() so blocks are GC-reclaimed instead of
+    leaking in the CacheManager."""
     d = _docs(spark, sf_dir)
     w = _words(F.col("text"))
-    # TWO barriers. (1) after wh: CollapseProject otherwise inlines the
-    # whole word-hash pipeline into every element_at inside the shingle
-    # lambda — ~150 re-evaluations of wh per doc (3 offsets x ~50
-    # shingles), measured 50s -> 0.5s at sf0.1 for this single
-    # materialization. (2) after sh: the frame is read 3x below (sizes
-    # + both join sides); left lazy, each branch re-evaluates the
-    # pipeline and Generate inlines it per exploded row (~25x measured
-    # at sf0.001). localCheckpoint over cache() so blocks are
-    # GC-reclaimed instead of leaking in the CacheManager.
     staged = d.select(
         "doc_id", "lang", word_hashes(w).alias("wh")
     ).localCheckpoint(eager=True)
-    docs = (
-        staged
-        .select("doc_id", "lang", F.array_distinct(shingle_hashes(F.col("wh"), k=3)).alias("sh"))
+    sh = F.array_distinct(shingle_hashes(F.col("wh"), k=3))
+    if ordered:
+        sh = F.array_sort(sh)
+    return (
+        staged.select("doc_id", "lang", sh.alias("sh"))
         .where(F.size("sh") > 0)
         .localCheckpoint(eager=True)
     )
+
+
+def _shingle_overlap(docs):
+    """(doc_a, doc_b, common, na, nb) for every lang-blocked pair
+    (doc_a < doc_b) sharing a shingle: an inverted-index equi-join on
+    (lang, shingle hash) carrying counts only (no string payload
+    through the shuffle), then the two set sizes. ``docs``: a
+    _shingle_sets frame."""
     sizes = docs.select("doc_id", F.size("sh").alias("n_sh"))
     exploded = docs.select("doc_id", "lang", F.explode("sh").alias("s"))
     a, b = exploded.alias("a"), exploded.alias("b")
@@ -579,19 +574,26 @@ def dedup_ngram_jaccard(spark, sf_dir):
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    jac = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("common").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("common")),
-                6,
-            ).alias("jaccard"),
-        )
+    return common.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _jaccard():
+    """Exact set Jaccard from the (common, na, nb) counts, rounded to
+    6 dp (integer set arithmetic -> exact parity)."""
+    return F.round(
+        F.col("common").cast("double")
+        / (F.col("na") + F.col("nb") - F.col("common")),
+        6,
     )
+
+
+def dedup_ngram_jaccard(spark, sf_dir):
+    """Pairwise Jaccard over distinct 3-word-shingle sets, blocked by
+    lang (a real pipeline blocks by cheap keys to avoid n^2). Integer
+    set arithmetic -> exact parity; pairs with J >= 0.5 survive.
+    Steps: _shingle_sets -> _shingle_overlap -> _jaccard."""
+    jac = _shingle_overlap(_shingle_sets(spark, sf_dir)).select(
+        "doc_a", "doc_b", _jaccard().alias("jaccard"))
     return jac.where(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
@@ -612,26 +614,9 @@ def dedup_jaccard_prefix(spark, sf_dir):
 
     Oracle: shares dedup_ngram_jaccard's SQL verbatim — the two
     operators are result-identical by construction, which IS the
-    property worth pinning."""
-    d = _docs(spark, sf_dir)
-    w = _words(F.col("text"))
-    # wh barrier first: prevents CollapseProject from inlining the
-    # word-hash pipeline into every element_at of the shingle lambda
-    # (see dedup_ngram_jaccard — measured ~100x on this materialization)
-    staged = d.select(
-        "doc_id", "lang", word_hashes(w).alias("wh")
-    ).localCheckpoint(eager=True)
-    docs = (
-        staged
-        .select(
-            "doc_id", "lang",
-            F.array_sort(
-                F.array_distinct(shingle_hashes(F.col("wh"), k=3))
-            ).alias("sh"),
-        )
-        .where(F.size("sh") > 0)
-        .localCheckpoint(eager=True)  # read 2x: prefix explode + verify join
-    )
+    property worth pinning. Shares _shingle_sets (ordered; read 2x:
+    prefix explode + verify join) and _jaccard with it."""
+    docs = _shingle_sets(spark, sf_dir, ordered=True)
     n = F.size("sh")
     prefix_len = (n - F.ceil(n * F.lit(JACCARD_THRESHOLD)) + 1).cast("int")
     prefixes = docs.select(
@@ -664,15 +649,7 @@ def dedup_jaccard_prefix(spark, sf_dir):
             F.size("sha").alias("na"),
             F.size("shb").alias("nb"),
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("common").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("common")),
-                6,
-            ).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
     )
     return verified.where(F.col("jaccard") >= JACCARD_THRESHOLD)
 
@@ -703,18 +680,8 @@ def inc_dedup_merge(spark, sf_dir):
     from ..functions.sampling import scrambled_key
 
     sigs = dedup_minhash_signature(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        *[F.col(f"mh{j}") for j in range(16)],
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(*[F.col(f"mh{b * 4 + r}") for r in range(4)])
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "band_key"),
-    ).localCheckpoint(eager=True)  # batch + index slices read it once
+    bands = _minhash_bands(sigs, *_MH).localCheckpoint(
+        eager=True)  # batch + index slices read it once
     is_batch = scrambled_key(F.col("doc_id"), INC_BATCH_MOD) == 0
     batch_b = bands.where(is_batch).alias("a")
     index_b = bands.where(~is_batch).alias("b")
@@ -732,12 +699,8 @@ def inc_dedup_merge(spark, sf_dir):
         )
         .dropDuplicates(["doc_id", "idx_id"])
     )
-    est = sum(
-        F.when(F.col(f"amh{j}") == F.col(f"bmh{j}"), 1).otherwise(0)
-        for j in range(16)
-    ) / F.lit(16.0)
     matches = (
-        cand.where(est >= JACCARD_THRESHOLD)
+        cand.where(_est_jaccard() >= JACCARD_THRESHOLD)
         .groupBy("doc_id")
         .agg(F.min("idx_id").alias("min_idx"))
     )
@@ -759,49 +722,13 @@ def dedup_containment_pairs(spark, sf_dir):
     long one (quote extraction, boilerplate wrapping, chunk reuse).
     Pairs where EITHER direction >= 0.6 survive.
 
-    Scale shape: identical inverted-index plan to dedup_ngram_jaccard —
-    shingle-hash equi-join within blocking keys carrying counts only;
-    the direction ratios are per-pair arithmetic after the count join,
+    Scale shape: dedup_ngram_jaccard's steps (_shingle_sets ->
+    _shingle_overlap); the direction ratios are per-pair arithmetic after the count join,
     so asymmetry costs nothing extra."""
-    d = _docs(spark, sf_dir)
-    w = _words(F.col("text"))
-    # wh barrier first: prevents CollapseProject from inlining the
-    # word-hash pipeline into every element_at of the shingle lambda
-    # (see dedup_ngram_jaccard — measured ~100x on this materialization)
-    staged = d.select(
-        "doc_id", "lang", word_hashes(w).alias("wh")
-    ).localCheckpoint(eager=True)
-    docs = (
-        staged
-        .select(
-            "doc_id", "lang",
-            F.array_distinct(shingle_hashes(F.col("wh"), k=3)).alias("sh"),
-        )
-        .where(F.size("sh") > 0)
-        .localCheckpoint(eager=True)  # sizes + both join sides, built once
-    )
-    sizes = docs.select("doc_id", F.size("sh").alias("n_sh"))
-    exploded = docs.select("doc_id", "lang", F.explode("sh").alias("s"))
-    a, b = exploded.alias("a"), exploded.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
     cont_a = F.round(F.col("common").cast("double") / F.col("na"), 6)
     cont_b = F.round(F.col("common").cast("double") / F.col("nb"), 6)
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shingle_overlap(_shingle_sets(spark, sf_dir))
         .select(
             "doc_a", "doc_b", "common",
             cont_a.alias("containment_a"), cont_b.alias("containment_b"),

@@ -65,6 +65,56 @@ _DUCK_BUCKETS = f"""
 """
 
 
+def _bucket_spine(spark):
+    """(bucket) for every one of the N_BUCKETS buckets, from range(),
+    so zero-count buckets still get a model row."""
+    return spark.range(N_BUCKETS).select(F.col("id").cast("bigint").alias("bucket"))
+
+
+def _bucket_model(spark, toks):
+    """The hashed-unigram bucket model of a (lang, bucket) token
+    stream: (bucket, c_raw, c_tgt, n_raw, n_tgt) over the full bucket
+    spine — raw count and FILTERed target count in ONE bucket-keyed
+    aggregate, plus the broadcast corpus totals."""
+    counts = toks.groupBy("bucket").agg(
+        F.count("*").alias("c_raw"),
+        F.count_if(F.col("lang") == TARGET_LANG).alias("c_tgt"),
+    )
+    model = (
+        _bucket_spine(spark).join(counts, "bucket", "left")
+        .select("bucket",
+                F.coalesce("c_raw", F.lit(0)).alias("c_raw"),
+                F.coalesce("c_tgt", F.lit(0)).alias("c_tgt"))
+    )
+    totals = model.agg(F.sum("c_raw").alias("n_raw"), F.sum("c_tgt").alias("n_tgt"))
+    return model.crossJoin(F.broadcast(totals))
+
+
+def _smoothed(c, n):
+    """Jelinek-Mercer mix of the count model with the uniform over
+    buckets: (1-l)*c/n + l/B."""
+    return (F.lit(1 - SMOOTH_LAMBDA) * F.col(c)
+            / F.greatest(F.col(n), F.lit(1))
+            + F.lit(SMOOTH_LAMBDA / N_BUCKETS))
+
+
+def _log_ratio():
+    """``lr``: the DSIR per-bucket log p_target - log p_raw over a
+    _bucket_model row, rounded to 9 dp as DECIMAL(18,9) (order-free
+    sums)."""
+    return F.round(
+        F.log(_smoothed("c_tgt", "n_tgt")) - F.log(_smoothed("c_raw", "n_raw")),
+        9,
+    ).cast("decimal(18,9)").alias("lr")
+
+
+def _bucket_weight():
+    """``w``: the fixed synthetic classifier weight of a bucket (see
+    _W_MULT below)."""
+    return ((F.col("bucket") + 1) * _W_MULT % _W_RANGE - (_W_RANGE - 1) / 2
+            ).cast("bigint").alias("w")
+
+
 def sample_importance_weights(spark, sf_dir):
     """DSIR importance weight per document: log p_target(doc) -
     log p_raw(doc) under hashed-unigram models of the target domain
@@ -89,31 +139,7 @@ def sample_importance_weights(spark, sf_dir):
     # count in the same bucket-keyed aggregate (at 100 TB the corpus is
     # scanned exactly twice total — once for the model, once for the
     # scoring join; there is no third target-only pass)
-    counts = toks.groupBy("bucket").agg(
-        F.count("*").alias("c_raw"),
-        F.count_if(F.col("lang") == TARGET_LANG).alias("c_tgt"),
-    )
-    spine = spark.range(N_BUCKETS).select(F.col("id").cast("bigint").alias("bucket"))
-    model = (
-        spine.join(counts, "bucket", "left")
-        .select("bucket",
-                F.coalesce("c_raw", F.lit(0)).alias("c_raw"),
-                F.coalesce("c_tgt", F.lit(0)).alias("c_tgt"))
-    )
-    totals = model.agg(F.sum("c_raw").alias("n_raw"), F.sum("c_tgt").alias("n_tgt"))
-
-    def smoothed(c, n):
-        return (F.lit(1 - SMOOTH_LAMBDA) * F.col(c)
-                / F.greatest(F.col(n), F.lit(1))
-                + F.lit(SMOOTH_LAMBDA / N_BUCKETS))
-
-    logratio = model.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        F.round(
-            F.log(smoothed("c_tgt", "n_tgt")) - F.log(smoothed("c_raw", "n_raw")),
-            9,
-        ).cast("decimal(18,9)").alias("lr"),
-    )
+    logratio = _bucket_model(spark, toks).select("bucket", _log_ratio())
     return (
         toks.join(F.broadcast(logratio), "bucket")
         .groupBy("doc_id", "lang")
@@ -144,12 +170,7 @@ def text_classifier_score(spark, sf_dir):
     shape with a deterministic stand-in for the trained weights."""
     d = _docs(spark, sf_dir)
     toks = _doc_buckets(d)
-    spine = spark.range(N_BUCKETS).select(F.col("id").cast("bigint").alias("bucket"))
-    weights = spine.select(
-        "bucket",
-        ((F.col("bucket") + 1) * _W_MULT % _W_RANGE - (_W_RANGE - 1) / 2)
-        .cast("bigint").alias("w"),
-    )
+    weights = _bucket_spine(spark).select("bucket", _bucket_weight())
     return (
         toks.join(F.broadcast(weights), "bucket")
         .groupBy("doc_id")
@@ -210,33 +231,8 @@ def _mixture_frames(spark, sf_dir, shared: bool = False):
     single-consumer plan)."""
     d = _docs(spark, sf_dir)
     toks = _doc_buckets_src(d)
-    counts = toks.groupBy("bucket").agg(
-        F.count("*").alias("c_raw"),
-        F.count_if(F.col("lang") == TARGET_LANG).alias("c_tgt"),
-    )
-    spine = spark.range(N_BUCKETS).select(F.col("id").cast("bigint").alias("bucket"))
-    model = (
-        spine.join(counts, "bucket", "left")
-        .select("bucket",
-                F.coalesce("c_raw", F.lit(0)).alias("c_raw"),
-                F.coalesce("c_tgt", F.lit(0)).alias("c_tgt"))
-    )
-    totals = model.agg(F.sum("c_raw").alias("n_raw"), F.sum("c_tgt").alias("n_tgt"))
-
-    def smoothed(c, n):
-        return (F.lit(1 - SMOOTH_LAMBDA) * F.col(c)
-                / F.greatest(F.col(n), F.lit(1))
-                + F.lit(SMOOTH_LAMBDA / N_BUCKETS))
-
-    scores = model.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        F.round(
-            F.log(smoothed("c_tgt", "n_tgt")) - F.log(smoothed("c_raw", "n_raw")),
-            9,
-        ).cast("decimal(18,9)").alias("lr"),
-        ((F.col("bucket") + 1) * _W_MULT % _W_RANGE - (_W_RANGE - 1) / 2)
-        .cast("bigint").alias("w"),
-    )
+    scores = _bucket_model(spark, toks).select(
+        "bucket", _log_ratio(), _bucket_weight())
     per_doc = (
         toks.join(F.broadcast(scores), "bucket")
         .groupBy("doc_id", "source")

@@ -82,6 +82,58 @@ _BASE_ERR = 1.0 / GRID_N + 1.0 / ACCURACY
 _EPS_MERGE = 1.5 * _BASE_ERR  # published bound + 50% margin (cf. _EPS)
 
 
+def _shard_cdf(li):
+    """(shard, cdf): the per-(l_returnflag, ship-month) shard summaries
+    — exact count ``sn`` + the 41-point approx_percentile grid ``g`` —
+    and their merged per-flag weighted CDF (v, w, cw). Right-endpoint
+    points: each grid value g[j] (j>=1) weighs sn/GRID_N, so the
+    cumulative weight at g[j] is exactly j*sn/GRID_N, the sketch's rank
+    estimate for g[j]. Sketch-sized: |shards| x 41 rows, never raw
+    data."""
+    from pyspark.sql.window import Window
+
+    grid = [j / GRID_N for j in range(GRID_N + 1)]
+    grid_a = "array(" + ",".join(repr(p) for p in grid) + ")"
+    shard = li.groupBy(
+        "l_returnflag", F.trunc("l_shipdate", "month").alias("shard_month")
+    ).agg(
+        F.count("*").cast("double").alias("sn"),
+        F.expr(
+            f"approx_percentile(l_extendedprice, {grid_a}, {ACCURACY})"
+        ).alias("g"),
+    )
+    pts = shard.select(
+        "l_returnflag",
+        F.explode(F.expr(
+            f"transform(sequence(1, {GRID_N}), "
+            f"j -> struct(CAST(element_at(g, j + 1) AS DOUBLE) AS v, "
+            f"sn / {GRID_N} AS w))"
+        )).alias("pt"),
+    ).select("l_returnflag", F.col("pt.v").alias("v"), F.col("pt.w").alias("w"))
+    cum = Window.partitionBy("l_returnflag").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, 0)
+    cdf = pts.withColumn("cw", F.sum("w").over(cum))
+    return shard, cdf
+
+
+def _merge_cdf(cdf, tot, prefix: str, *keys: str):
+    """Merged p-quantile per flag for every p in QUANTILES, named
+    <prefix><pct>: the smallest grid value whose cumulative weight
+    reaches p * n_rows. ``tot``: (l_returnflag, n_rows, *keys), joined
+    as a broadcast and kept as group keys."""
+    sel = [
+        F.min(
+            F.when(
+                F.col("cw") >= F.col("n_rows") * F.lit(p) - F.lit(1e-6),
+                F.col("v"),
+            )
+        ).alias(f"{prefix}{int(p * 100)}")
+        for p in QUANTILES
+    ]
+    return cdf.join(F.broadcast(tot), "l_returnflag").groupBy(
+        "l_returnflag", "n_rows", *keys).agg(*sel)
+
+
 def approx_quantile_rollup(spark, sf_dir):
     """Shard-merge consistency for rank sketches — the HLL
     rollup-consistency treatment (analytics.approx_distinct_rollup,
@@ -109,32 +161,8 @@ def approx_quantile_rollup(spark, sf_dir):
     Small-group guard mirrors the sketch entry: the interpolated exact
     envelope only provably brackets an actual grid value when the 0.5*
     BASE_ERR*n rank margin is >= ~2 ranks."""
-    from pyspark.sql.window import Window
-
     li = fan_out(spark, load_table(spark, sf_dir, "lineitem"))
-    grid = [j / GRID_N for j in range(GRID_N + 1)]
-    grid_a = "array(" + ",".join(repr(p) for p in grid) + ")"
-    shard = li.groupBy(
-        "l_returnflag", F.trunc("l_shipdate", "month").alias("shard_month")
-    ).agg(
-        F.count("*").cast("double").alias("sn"),
-        F.expr(
-            f"approx_percentile(l_extendedprice, {grid_a}, {ACCURACY})"
-        ).alias("g"),
-    )
-    # right-endpoint weighted CDF points: cumulative weight at g[j] is
-    # exactly j*sn/GRID_N, the sketch's rank estimate for g[j]
-    pts = shard.select(
-        "l_returnflag",
-        F.explode(F.expr(
-            f"transform(sequence(1, {GRID_N}), "
-            f"j -> struct(CAST(element_at(g, j + 1) AS DOUBLE) AS v, "
-            f"sn / {GRID_N} AS w))"
-        )).alias("pt"),
-    ).select("l_returnflag", F.col("pt.v").alias("v"), F.col("pt.w").alias("w"))
-    cum = Window.partitionBy("l_returnflag").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0)
-    cdf = pts.withColumn("cw", F.sum("w").over(cum))
+    cdf = _shard_cdf(li)[1]
     lo = [max(0.0, p - _EPS_MERGE) for p in QUANTILES]
     hi = [min(1.0, p + _EPS_MERGE) for p in QUANTILES]
     lo_a = "array(" + ",".join(repr(p) for p in lo) + ")"
@@ -144,17 +172,7 @@ def approx_quantile_rollup(spark, sf_dir):
         F.expr(f"percentile(l_extendedprice, {lo_a})").alias("qlo"),
         F.expr(f"percentile(l_extendedprice, {hi_a})").alias("qhi"),
     )
-    m = cdf.join(F.broadcast(tot), "l_returnflag")
-    sel = [
-        F.min(
-            F.when(
-                F.col("cw") >= F.col("n_rows") * F.lit(p) - F.lit(1e-6),
-                F.col("v"),
-            )
-        ).alias(f"mq{int(p * 100)}")
-        for p in QUANTILES
-    ]
-    merged = m.groupBy("l_returnflag", "n_rows", "qlo", "qhi").agg(*sel)
+    merged = _merge_cdf(cdf, tot, "mq", "qlo", "qhi")
     tiny = F.col("n_rows") * F.lit(0.5 * _BASE_ERR) < F.lit(2.0)
     cols = [F.col("l_returnflag"), F.col("n_rows")]
     for i, p in enumerate(QUANTILES, start=1):
@@ -175,44 +193,11 @@ def approx_quantile_rollup_raw(spark, sf_dir):
     form is test-pinned (no-exact-aggregate plan + monotone quantiles,
     tests/test_approx.py); the registry entry is the derived-oracle
     gate above (same pattern as approx_distinct_rollup_sketch_raw)."""
-    from pyspark.sql.window import Window
-
-    li = fan_out(spark, load_table(spark, sf_dir, "lineitem"))
-    grid = [j / GRID_N for j in range(GRID_N + 1)]
-    grid_a = "array(" + ",".join(repr(p) for p in grid) + ")"
-    shard = li.groupBy(
-        "l_returnflag", F.trunc("l_shipdate", "month").alias("shard_month")
-    ).agg(
-        F.count("*").cast("double").alias("sn"),
-        F.expr(
-            f"approx_percentile(l_extendedprice, {grid_a}, {ACCURACY})"
-        ).alias("g"),
-    )
-    pts = shard.select(
-        "l_returnflag",
-        F.explode(F.expr(
-            f"transform(sequence(1, {GRID_N}), "
-            f"j -> struct(CAST(element_at(g, j + 1) AS DOUBLE) AS v, "
-            f"sn / {GRID_N} AS w))"
-        )).alias("pt"),
-    ).select("l_returnflag", F.col("pt.v").alias("v"), F.col("pt.w").alias("w"))
-    cum = Window.partitionBy("l_returnflag").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0)
-    cdf = pts.withColumn("cw", F.sum("w").over(cum))
+    shard, cdf = _shard_cdf(
+        fan_out(spark, load_table(spark, sf_dir, "lineitem")))
     tot = shard.groupBy("l_returnflag").agg(
         F.sum("sn").cast("bigint").alias("n_rows"))
-    m = cdf.join(F.broadcast(tot), "l_returnflag")
-    sel = [
-        F.min(
-            F.when(
-                F.col("cw") >= F.col("n_rows") * F.lit(p) - F.lit(1e-6),
-                F.col("v"),
-            )
-        ).alias(f"q{int(p * 100)}")
-        for p in QUANTILES
-    ]
-    return m.groupBy("l_returnflag", "n_rows").agg(*sel).orderBy(
-        "l_returnflag")
+    return _merge_cdf(cdf, tot, "q").orderBy("l_returnflag")
 
 
 QUERIES = {

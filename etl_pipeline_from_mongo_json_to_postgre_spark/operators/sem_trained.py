@@ -26,20 +26,15 @@ are ~69 degrees apart — wide relative to any 16-cell partition of a
 64-dim sphere — which is exactly why the entries keep multi-probe ON
 TOP of the trained quantizer instead of replacing it.
 
-Assignment rule: vectors are normalized (v̂ = v / ||v||) and assigned
-by argmax(v̂·c − |c|²/2) == argmin ||v̂ − c||² — the SAME rule the
-trainer fits with (kmeans._assign), which on normalized inputs is
-spherical k-means assignment. Ties break to the lowest cell id
-(array_position takes the first max) and the top-2 probe reuses
-similarity._top2_cells's mask-then-argmax — identical rank rule
-(score DESC, cell ASC) as the r11 mp family, so the oracles' rank-
-window derivation carries over unchanged.
-
-Shuffle discipline is the family's: candidates self-join (cell,
-vec_id) ID PAIRS only, vectors rejoin the distinct candidate list for
-the exact-cosine verify, keep-first canonical (min vec_id — the
-reference's dedup semantics, repositories/
-postgres_audit_repository.py:68-70).
+Assignment rule: vectors are normalized (v̂ = v / ||v||) and scored
+by v̂·c − |c|²/2 (_scores), whose argmax == argmin ||v̂ − c||² — the
+SAME rule the trainer fits with (kmeans._assign), which on normalized
+inputs is spherical k-means assignment. Only the scores are this
+module's: cell assignment, pairing, verification, keep-first and the
+census are the similarity family's steps (assign_cells,
+_near_dup_pairs, _semantic_dedup, _probe_census), so the tie rule
+(score DESC, cell ASC) and the oracles' rank-window derivation are
+the seeded entries' own.
 
 Reference parity: the reference (a Mongo->Postgres ETL) has no vector
 ops; this completes SURVEY.md's semantic-dedup scale path with the
@@ -59,12 +54,13 @@ from .similarity import (
     _DUCK_V,
     NEAR_DUP_THRESHOLD,
     SEM_PROBES,
-    _dot,
     _duck_dot,
     _duck_list,
     _matrix_dots,
-    _top2_cells,
+    _probe_census,
+    _semantic_dedup,
     _vectors,
+    assign_cells,
 )
 
 _TRAINED_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -115,125 +111,35 @@ def _scores(vcol, nrmcol):
 
 
 def _assigned(spark, sf_dir):
-    """(vec_id, v, nrm, cell_id, cell2) — every vector scored against
-    the trained quantizer, primary + second-best cells derived under
-    the family's shared rank rule, checkpointed once (probe and both
-    verify sides read it)."""
+    """Every vector assigned to its primary and second-best TRAINED
+    cells (assign_cells over _scores, multi-probe), checkpointed once
+    (probe and both verify sides read it)."""
     _require_trained()
-    vecs = _vectors(spark, sf_dir)
-    return (
-        vecs.select("vec_id", "v", "nrm",
-                    _scores(F.col("v"), F.col("nrm")).alias("scores"))
-        .withColumn(
-            "cell_id",
-            F.array_position("scores", F.array_max("scores")).cast("long"),
-        )
-        .withColumn(
-            "cell2",
-            _top2_cells(F.col("scores"), F.col("cell_id")).cast("long"),
-        )
-        .drop("scores")
-        .localCheckpoint(eager=True)
-    )
+    return assign_cells(
+        _vectors(spark, sf_dir), _scores(F.col("v"), F.col("nrm")),
+        multi_probe=True,
+    ).localCheckpoint(eager=True)
 
 
 def dedup_semantic_cells_trained(spark, sf_dir):
     """The full production SemDeDup recipe: TRAINED quantizer + top-2
-    multi-probe + exact-cosine verify + keep-first canonical. Same
+    multi-probe + exact-cosine verify + keep-first canonical — the
+    similarity family's steps (_semantic_dedup) over _assigned. Same
     output schema as dedup_semantic_cells (vec_id, cluster_id = the
-    PRIMARY trained cell, canonical_id, is_duplicate); same 16-byte-row
-    candidate shuffle; candidate pairs distinct before vectors rejoin
-    (a pair sharing both probed cells must score once)."""
-    assigned = _assigned(spark, sf_dir)
-    probes = assigned.select(
-        "vec_id",
-        F.explode(F.array(F.col("cell_id"), F.col("cell2")))
-        .alias("probe_cell"),
-    )
-    a, b = probes.alias("a"), probes.alias("b")
-    cand = (
-        a.join(b, "probe_cell")
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
-    x = assigned.select(F.col("vec_id").alias("vec_a"),
-                        F.col("v").alias("va"), F.col("nrm").alias("na"))
-    y = assigned.select(F.col("vec_id").alias("vec_b"),
-                        F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    pairs = (
-        cand.join(x, "vec_a").join(y, "vec_b")
-        .where(F.round(cos, 6) >= NEAR_DUP_THRESHOLD)
-        .select("vec_a", "vec_b")
-    )
-    partner_min = pairs.groupBy(F.col("vec_b").alias("vec_id")).agg(
-        F.min("vec_a").alias("min_partner")
-    )
-    return (
-        assigned.select("vec_id", F.col("cell_id").alias("cluster_id"))
-        .join(partner_min, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cluster_id",
-            F.least(
-                F.col("vec_id"),
-                F.coalesce(F.col("min_partner"), F.col("vec_id")),
-            ).alias("canonical_id"),
-        )
-        .withColumn("is_duplicate", F.col("canonical_id") != F.col("vec_id"))
-    )
+    PRIMARY trained cell, canonical_id, is_duplicate)."""
+    return _semantic_dedup(_assigned(spark, sf_dir))
 
 
 def sem_probe_eval_trained(spark, sf_dir):
-    """sem_probe_eval re-run under the TRAINED quantizer — the census
-    that closes r12 task 3's loop: of all verified near-dup pairs
-    reachable under trained top-2 probing, how many share a primary
-    cell (single-probe would catch them) vs straddle a boundary?
-    Pinned against the seeded census in tests/test_sem_trained.py:
-    trained boundary_share strictly below seeded AND the trained probe
-    window reaches at least as many verified pairs."""
-    assigned = _assigned(spark, sf_dir)
-    probes = assigned.select(
-        "vec_id", F.col("cell_id").alias("prim"),
-        F.explode(F.array(F.col("cell_id"), F.col("cell2")))
-        .alias("probe_cell"),
-    )
-    a, b = probes.alias("a"), probes.alias("b")
-    cand = (
-        a.join(b, "probe_cell")
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            (F.col("a.prim") == F.col("b.prim")).alias("same_primary"),
-        )
-        .distinct()  # same_primary is a pure function of the pair
-    )
-    x = assigned.select(F.col("vec_id").alias("vec_a"),
-                        F.col("v").alias("va"), F.col("nrm").alias("na"))
-    y = assigned.select(F.col("vec_id").alias("vec_b"),
-                        F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    verified = (
-        cand.join(x, "vec_a").join(y, "vec_b")
-        .where(F.round(cos, 6) >= NEAR_DUP_THRESHOLD)
-        .select("same_primary")
-    )
-    n_multi = F.count("*")
-    n_single = F.sum(F.col("same_primary").cast("bigint"))
-    return verified.agg(
-        n_multi.alias("n_pairs_multi"),
-        n_single.alias("n_pairs_single"),
-        (n_multi - n_single).alias("n_boundary_pairs"),
-        F.when(
-            n_multi > 0,
-            F.round((n_multi - n_single).cast("double") / n_multi, 6),
-        ).alias("boundary_share"),
-    )
+    """sem_probe_eval re-run under the TRAINED quantizer
+    (_probe_census over _assigned) — the census that closes r12 task
+    3's loop: of all verified near-dup pairs reachable under trained
+    top-2 probing, how many share a primary cell (single-probe would
+    catch them) vs straddle a boundary? Pinned against the seeded
+    census in tests/test_sem_trained.py: trained boundary_share
+    strictly below seeded AND the trained probe window reaches at
+    least as many verified pairs."""
+    return _probe_census(_assigned(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -23,7 +23,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.sampling import scrambled_bucket, scrambled_bucket_sql
 from ..sources.parquet import fan_out, load_table
@@ -122,6 +122,338 @@ def _vectors(spark, sf_dir, *extra_cols: str):
         *extra_cols,
         _emb_d(F.col("embedding")).alias("v"),
         _norm(_emb_d(F.col("embedding"))).alias("nrm"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# The family's steps: how a vector is assigned to cells, paired, verified
+# and scored. Every entry below composes these; none keeps its own copy.
+# ---------------------------------------------------------------------------
+
+# Multi-probe width. STRUCTURALLY PINNED to 2 on the Spark side: the
+# engine derives the probe set by mask-then-argmax (_top2_cells), which
+# yields exactly one extra cell; only the oracles' `rk <= SEM_PROBES`
+# is numeric. Widening to 3+ requires replacing _top2_cells with a
+# rank-k derivation IN THE SAME HELPER so engine and oracle move
+# together (r11 review finding).
+SEM_PROBES = 2
+if SEM_PROBES != 2:  # explicit raise: an assert is stripped under -O (ADVICE r11)
+    raise ValueError(
+        "engine probe derivation (_top2_cells) is pinned to 2; widening "
+        "requires a rank-k derivation shared by engine and oracles")
+
+
+def _primary_cell(dots: Column) -> Column:
+    """1-based argmax cell under the shared tie rule: FIRST occurrence
+    of the max (== smallest cell index among ties) — the single source
+    of the coarse-quantizer assignment (see assign_cells)."""
+    return F.array_position(dots, F.array_max(dots))
+
+
+def _top2_cells(dots: Column, primary: Column) -> Column:
+    """1-based SECOND-best cell: mask the primary slot to -inf, argmax
+    again. Equivalent to rank 2 under (dot DESC, cell ASC) for every
+    tie layout, because array_position always returns the FIRST
+    occurrence of the max — the one place the engine's top-2 rule
+    lives; the oracles replicate it as a rank-rule window."""
+    masked = F.transform(
+        dots,
+        lambda x, i: F.when((i + 1) == primary, F.lit(float("-inf")))
+        .otherwise(x),
+    )
+    return F.array_position(masked, F.array_max(masked))
+
+
+def assign_cells(vecs: DataFrame, scores: Column | None = None,
+                 multi_probe: bool = False) -> DataFrame:
+    """Cell assignment, the one implementation: ``vecs`` plus bigint
+    ``cell_id``, the argmax of the per-cell ``scores`` array under the
+    shared tie rule (_primary_cell), and under ``multi_probe`` the
+    second-best ``cell2`` (_top2_cells). ``scores`` defaults to the
+    dots against the seeded CENTROIDS (a map-side expression over
+    broadcast literals, no shuffle); sem_trained passes its trained
+    scores. The score array is bound once as a column — the argmax
+    reads it twice and interpreted HOFs get no common-subexpression
+    elimination — and dropped from the result."""
+    if scores is None:
+        scores = _matrix_dots(F.col("v"), CENTROIDS)
+    out = vecs.withColumn("scores", scores).withColumn(
+        "cell_id", _primary_cell(F.col("scores")))
+    if multi_probe:
+        out = out.withColumn(
+            "cell2", _top2_cells(F.col("scores"), F.col("cell_id")))
+    return out.drop("scores")
+
+
+def _probe_cells(df: DataFrame) -> Column:
+    """The cells a row probes: its ``cell_id``, and also its ``cell2``
+    when assign_cells ran multi-probe (then one row per probed cell)."""
+    if "cell2" in df.columns:
+        return F.explode(F.array(F.col("cell_id"), F.col("cell2")))
+    return F.col("cell_id")
+
+
+def _near_dup_pairs(assigned: DataFrame, *pair_cols: Column) -> DataFrame:
+    """Corpus near-dup verification over an assign_cells frame:
+    (vec_a < vec_b) ID pairs that share a probed cell, made distinct
+    under multi-probe (a pair sharing both probed cells must score
+    once), then the vectors rejoin for the exact check cos >=
+    NEAR_DUP_THRESHOLD. The quadratic-per-cell self-join moves
+    (cell, vec_id) ID rows only. Output: vec_a, vec_b and ``pair_cols``,
+    which read the two probe rows as ``a.`` / ``b.`` (vec_id, cell_id).
+    A pair is a candidate only inside a probed cell, so a cross-cell
+    pair is unrepresentable in the plan (the SemDeDup miss class)."""
+    probes = assigned.select(
+        "vec_id", "cell_id", _probe_cells(assigned).alias("probe_cell"))
+    a, b = probes.alias("a"), probes.alias("b")
+    cand = (
+        a.join(b, "probe_cell")
+        .where(F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
+            *pair_cols,
+        )
+    )
+    if "cell2" in assigned.columns:
+        cand = cand.distinct()
+    x = assigned.select(F.col("vec_id").alias("vec_a"),
+                        F.col("v").alias("va"), F.col("nrm").alias("na"))
+    y = assigned.select(F.col("vec_id").alias("vec_b"),
+                        F.col("v").alias("vb"), F.col("nrm").alias("nb"))
+    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    return (
+        cand.join(x, "vec_a").join(y, "vec_b")
+        .where(F.round(cos, 6) >= NEAR_DUP_THRESHOLD)
+        .select(*cand.columns)
+    )
+
+
+def _keep_first(ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Single-hop keep-first canonical over verified (vec_a < vec_b)
+    pairs: each row of ``ids`` gets the smallest vec_id among itself
+    and its partners — the reference's keep-first dedup semantics
+    (postgres_audit_repository.py:68-70). Output: ids' columns +
+    canonical_id, is_duplicate."""
+    partner_min = pairs.groupBy(F.col("vec_b").alias("vec_id")).agg(
+        F.min("vec_a").alias("min_partner")
+    )
+    return (
+        ids.join(partner_min, "vec_id", "left")
+        .select(
+            *ids.columns,
+            F.least(
+                F.col("vec_id"),
+                F.coalesce(F.col("min_partner"), F.col("vec_id")),
+            ).alias("canonical_id"),
+        )
+        .withColumn("is_duplicate", F.col("canonical_id") != F.col("vec_id"))
+    )
+
+
+def _semantic_dedup(assigned: DataFrame) -> DataFrame:
+    """Keep-first dedup over an assign_cells frame's verified pairs.
+    Output: (vec_id, cluster_id = the PRIMARY cell, canonical_id,
+    is_duplicate)."""
+    return _keep_first(
+        assigned.select("vec_id", F.col("cell_id").alias("cluster_id")),
+        _near_dup_pairs(assigned),
+    )
+
+
+def _probe_census(assigned: DataFrame) -> DataFrame:
+    """Of the verified pairs a multi-probe assign_cells frame reaches,
+    how many share a primary cell (single-probe would catch them) and
+    how many straddle a boundary — one 1-row aggregate on top of the
+    verification step, so no second pipeline runs."""
+    verified = _near_dup_pairs(
+        assigned,
+        (F.col("a.cell_id") == F.col("b.cell_id")).alias("same_primary"),
+    ).select("same_primary")
+    n_multi = F.count("*")
+    n_single = F.sum(F.col("same_primary").cast("bigint"))
+    return verified.agg(
+        n_multi.alias("n_pairs_multi"),
+        n_single.alias("n_pairs_single"),
+        (n_multi - n_single).alias("n_boundary_pairs"),
+        F.when(
+            n_multi > 0,
+            F.round((n_multi - n_single).cast("double") / n_multi, 6),
+        ).alias("boundary_share"),
+    )
+
+
+def split_arrivals(assigned: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(arriving batch, index) of an assign_cells frame: the batch is
+    the deterministic 10% slice via scrambled_bucket — the two-stage
+    scramble, because scrambled_key's single multiply is the IDENTITY
+    mod 10 (KNUTH_MULT ≡ 1 mod 10, r10 review) and an id-periodic
+    corpus would bias a plain stride slice. The index side is
+    (cell_id, idx_id, iv, inrm), the shape classify_semantic_batch
+    joins against."""
+    is_batch = scrambled_bucket(F.col("vec_id"), INC_VEC_BATCH_MOD) == 0
+    index = assigned.where(~is_batch).select(
+        "cell_id",
+        F.col("vec_id").alias("idx_id"),
+        F.col("v").alias("iv"), F.col("nrm").alias("inrm"),
+    )
+    return assigned.where(is_batch), index
+
+
+def classify_semantic_batch(batch_df: DataFrame,
+                            index_df: DataFrame) -> DataFrame:
+    """Batch-against-index classify: each arriving vector probes its
+    cells (both, under multi-probe — the textbook multi-probe IVF
+    shape: index vectors stay in their single primary cell, only
+    queries fan out), candidates join BATCH x INDEX on cell_id only —
+    never index x index, so per-batch cost is |batch| x probed-cell
+    occupancy, and an index vector lives in ONE cell so no candidate
+    pair is generated twice (MIN needs no distinct). Exact-cosine
+    verify at NEAR_DUP_THRESHOLD; keep-first canonical = min matching
+    index id, the index always winning over the arrival. batch_df:
+    (vec_id, v, nrm, cell_id[, cell2]); index_df: split_arrivals'
+    index side. Output: (vec_id, is_dup, canonical_id)."""
+    probes = batch_df.select(
+        "vec_id",
+        F.col("v").alias("bv"), F.col("nrm").alias("bn"),
+        _probe_cells(batch_df).alias("cell_id"),
+    )
+    cos = _dot(F.col("bv"), F.col("iv")) / (F.col("bn") * F.col("inrm"))
+    matches = (
+        probes.join(index_df, "cell_id")
+        .where(F.round(cos, 6) >= NEAR_DUP_THRESHOLD)
+        .groupBy("vec_id")
+        .agg(F.min("idx_id").alias("min_idx"))
+    )
+    return (
+        batch_df.select("vec_id")
+        .join(matches, "vec_id", "left")
+        .select(
+            "vec_id",
+            F.col("min_idx").isNotNull().alias("is_dup"),
+            F.coalesce("min_idx", F.col("vec_id")).alias("canonical_id"),
+        )
+    )
+
+
+def _batch_hard(pairs: DataFrame, keys: tuple[str, ...] = (),
+                anchors: DataFrame | None = None) -> DataFrame:
+    """Batch-hard triplet extremes (FaceNet, Schroff CVPR'15) over
+    (anchor, candidate) rows — an _anchor_side frame joined to the
+    corpus: per anchor, the HARDEST positive (same label, LOWEST
+    cosine) and HARDEST negative (other label, HIGHEST cosine), plus
+    the margin pos_cos - neg_cos. Both extremes are min/max over
+    (cos, id) structs, so scoring partial-aggregates map-side and the
+    one Exchange carries |anchors| partially-combined rows, never the
+    scored set. Ties break to the lowest vec_id on both sides; NULL
+    extremes surface instead of dropping the anchor. With ``anchors``
+    (rows of anchor_id, anchor_label, *keys) every one of them keeps a
+    row, NULLs when it has no pairs at all."""
+    cos = _dot(F.col("av"), F.col("v")) / (F.col("an") * F.col("nrm"))
+    scored = pairs.where(F.col("vec_id") != F.col("anchor_id")).select(
+        *keys,
+        "anchor_id",
+        "anchor_label",
+        "vec_id",
+        cos.alias("cos"),
+        (F.col("label") == F.col("anchor_label")).alias("same"),
+    )
+    # min(struct) / max(struct): lexicographic, so cos decides first and
+    # the id field breaks ties; NULL branches are ignored by min/max, so
+    # each side partial-aggregates map-side (no window, no big shuffle).
+    pos = F.min(
+        F.when(
+            F.col("same"),
+            F.struct(F.col("cos").alias("c"), F.col("vec_id").alias("id")),
+        )
+    ).alias("pos")
+    neg = F.max(
+        F.when(
+            ~F.col("same"),
+            F.struct(
+                F.col("cos").alias("c"),
+                (-F.col("vec_id")).alias("nid"),
+                F.col("vec_id").alias("id"),
+            ),
+        )
+    ).alias("neg")
+    mined = (
+        scored.groupBy(*keys, "anchor_id", "anchor_label")
+        .agg(pos, neg)
+        .select(
+            "anchor_id",
+            "anchor_label",
+            *keys,
+            F.col("pos.id").alias("pos_id"),
+            F.col("neg.id").alias("neg_id"),
+            F.round("pos.c", 6).alias("pos_cos"),
+            F.round("neg.c", 6).alias("neg_cos"),
+            F.round(F.col("pos.c") - F.col("neg.c"), 6).alias("margin"),
+        )
+    )
+    if anchors is None:
+        return mined
+    return anchors.select("anchor_id", "anchor_label", *keys).join(
+        mined, ["anchor_id", "anchor_label", *keys], "left")
+
+
+def _anchor_side(vecs: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, anchor_id, anchor_label, av, an): the anchor columns
+    _batch_hard scores against the corpus side's (vec_id, label, v,
+    nrm)."""
+    return vecs.select(
+        *keys,
+        F.col("vec_id").alias("anchor_id"),
+        F.col("label").alias("anchor_label"),
+        F.col("v").alias("av"),
+        F.col("nrm").alias("an"),
+    )
+
+
+def _exact_l2_topk(vecs: DataFrame, n_queries: int, k: int) -> DataFrame:
+    """Exact squared-L2 top-k (query_id, neighbor_id) for vec_id <
+    n_queries: the brute-force recall baseline (broadcast queries,
+    corpus streamed once; rank d2 ASC, neighbor_id ASC). vecs: (vec_id,
+    v, ...)."""
+    from pyspark.sql.window import Window
+
+    queries = vecs.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
+    l2 = _fold_sum(F.zip_with(F.col("qv"), F.col("v"),
+                              lambda x, y: (x - y) * (x - y)))
+    w = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
+    return (
+        F.broadcast(queries).crossJoin(vecs)
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                l2.alias("d2"))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id")
+    )
+
+
+def recall_at_k(approx: DataFrame, exact: DataFrame, k: int) -> DataFrame:
+    """Recall@k per query of an approximate (query_id, neighbor_id)
+    top-k against the exact one: (query_id, hits, recall = hits / k).
+    Both inputs are queries x k rows, so the overlap join and count
+    never touch the corpus; a query with no hit keeps a 0 row."""
+    hitcnt = (
+        approx.join(exact, ["query_id", "neighbor_id"])
+        .groupBy("query_id")
+        .agg(F.count("*").alias("hits"))
+    )
+    qids = exact.select("query_id").distinct()
+    return (
+        qids.join(hitcnt, "query_id", "left")
+        .select(
+            "query_id",
+            F.coalesce("hits", F.lit(0).cast("bigint")).alias("hits"),
+            (
+                F.coalesce("hits", F.lit(0).cast("bigint")).cast("double")
+                / F.lit(float(k))
+            ).alias("recall"),
+        )
     )
 
 
@@ -244,23 +576,8 @@ def dedup_embedding_cosine(spark, sf_dir):
     Output: (vec_id, canonical_id, is_duplicate).
     """
     vecs = _vectors(spark, sf_dir).localCheckpoint(eager=True)
-    pairs = _lsh_verified_pairs(vecs, NEAR_DUP_THRESHOLD)
-    # partner_min(vec_b) = min vec_a over pairs (vec_a < vec_b always)
-    partner_min = pairs.groupBy(F.col("vec_b").alias("vec_id")).agg(
-        F.min("vec_a").alias("min_partner")
-    )
-    out = (
-        vecs.select("vec_id")
-        .join(partner_min, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.least(
-                F.col("vec_id"), F.coalesce(F.col("min_partner"), F.col("vec_id"))
-            ).alias("canonical_id"),
-        )
-        .withColumn("is_duplicate", F.col("canonical_id") != F.col("vec_id"))
-    )
-    return out
+    return _keep_first(vecs.select("vec_id"),
+                       _lsh_verified_pairs(vecs, NEAR_DUP_THRESHOLD))
 
 
 def emb_quantize_int8(spark, sf_dir):
@@ -470,8 +787,8 @@ def ann_ivf_topk(spark, sf_dir, nprobe: int = N_PROBE):
     literals -> map-side expression, no shuffle); each query probes its
     `nprobe` nearest centroids (probe rank: dot DESC, cell ASC) and
     searches ONLY those inverted lists. The probe->corpus equi-join on
-    cluster_id is the IVF partition pruning: at 100 TB the corpus is
-    written bucketed/partitioned by cluster_id and a probe touches
+    cell_id is the IVF partition pruning: at 100 TB the corpus is
+    written bucketed/partitioned by cell_id and a probe touches
     nprobe/nlist of the data. Query side (20 x nprobe probes) is
     broadcast. The probe width is a per-query search setting of the
     one index: only the number of probed cells varies with it, so
@@ -480,10 +797,10 @@ def ann_ivf_topk(spark, sf_dir, nprobe: int = N_PROBE):
     from pyspark.sql.window import Window
 
     vecs = _vectors(spark, sf_dir)
-    # The checkpoint carries (vec_id, v, nrm, cluster_id) but NOT the
+    # The checkpoint carries (vec_id, v, nrm, cell_id) but NOT the
     # 16-double dots array (r14): dots was materialized for EVERY
     # corpus row while only the N_QUERIES probe rows ever read it —
-    # the centroid scores are bound once for the cluster_id argmax and
+    # the centroid scores are bound once for the cell_id argmax and
     # dropped, and the query side recomputes them for its bounded row
     # set from the checkpointed v (same literals, same fold — bit-
     # identical). At 100 TB this narrows the corpus-sized
@@ -493,13 +810,8 @@ def ann_ivf_topk(spark, sf_dir, nprobe: int = N_PROBE):
     # literal matrix is ~1k py4j round trips (a measured +0.4 s of
     # driver time per extra construction at any scale).
     dots = _matrix_dots(F.col("v"), CENTROIDS)
-    assigned = vecs.select(
-        "vec_id", "v", "nrm",
-        dots.alias("dots"),
-    ).select(
-        "vec_id", "v", "nrm",
-        F.array_position("dots", F.array_max("dots")).alias("cluster_id"),
-    ).localCheckpoint(eager=True)  # corpus + query side both read it; GC-reclaimed
+    # corpus + query side both read it; GC-reclaimed
+    assigned = assign_cells(vecs, dots).localCheckpoint(eager=True)
 
     qprobe_w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("cid"))
     probes = (
@@ -513,9 +825,9 @@ def ann_ivf_topk(spark, sf_dir, nprobe: int = N_PROBE):
         .withColumn("cid", (F.col("pos") + 1).cast("long"))
         .withColumn("probe_rank", F.row_number().over(qprobe_w))
         .where(F.col("probe_rank") <= nprobe)
-        .select("query_id", "qv", "qn", F.col("cid").alias("cluster_id"))
+        .select("query_id", "qv", "qn", F.col("cid").alias("cell_id"))
     )
-    cand = F.broadcast(probes).join(assigned, "cluster_id").where(
+    cand = F.broadcast(probes).join(assigned, "cell_id").where(
         F.col("vec_id") != F.col("query_id")
     )
     cos = _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm"))
@@ -760,7 +1072,7 @@ def sim_knn_graph(spark, sf_dir):
     vector's KNN_K nearest same-cluster neighbors by exact cosine.
 
     Scale shape: the quadratic term is confined WITHIN IVF cells — the
-    self-join key is cluster_id, so candidate volume is sum over cells
+    self-join key is cell_id, so candidate volume is sum over cells
     of |cell|^2, not |corpus|^2 (with balanced cells that is
     |corpus|^2 / n_cells; hot cells are AQE's skew-join case and, at
     100 TB, the cue to deepen the quantizer via kmeans_train). The
@@ -770,27 +1082,20 @@ def sim_knn_graph(spark, sf_dir):
     oracle replicates the same cell rule, so parity is exact."""
     from pyspark.sql.window import Window
 
-    vecs = _vectors(spark, sf_dir)
-    assigned = vecs.select(
-        "vec_id", "v", "nrm",
-        _matrix_dots(F.col("v"), CENTROIDS).alias("dots"),
-    ).select(
-        "vec_id", "v", "nrm",
-        F.array_position("dots", F.array_max("dots")).alias("cluster_id"),
-    ).localCheckpoint(eager=True)  # both self-join sides read it
-
+    assigned = assign_cells(_vectors(spark, sf_dir)).localCheckpoint(
+        eager=True)  # both self-join sides read it
     a = assigned.select(
-        "cluster_id", F.col("vec_id").alias("src"),
+        "cell_id", F.col("vec_id").alias("src"),
         F.col("v").alias("sv"), F.col("nrm").alias("sn"),
     )
     b = assigned.select(
-        "cluster_id", F.col("vec_id").alias("dst"),
+        "cell_id", F.col("vec_id").alias("dst"),
         F.col("v").alias("dv"), F.col("nrm").alias("dn"),
     )
     cos = _dot(F.col("sv"), F.col("dv")) / (F.col("sn") * F.col("dn"))
     w = Window.partitionBy("src").orderBy(F.desc("cos"), F.asc("dst"))
     return (
-        a.join(b, "cluster_id")
+        a.join(b, "cell_id")
         .where(F.col("src") != F.col("dst"))
         .select("src", "dst", cos.alias("cos"))
         .withColumn("rank", F.row_number().over(w))
@@ -860,23 +1165,7 @@ def ann_recall_eval(spark, sf_dir):
     vec_id < N_QUERIES slice."""
     exact = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
     ivf = ann_ivf_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    hitcnt = (
-        ivf.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("hits"))
-    )
-    qids = exact.select("query_id").distinct()
-    return (
-        qids.join(hitcnt, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("hits", F.lit(0).cast("bigint")).alias("hits"),
-            (
-                F.coalesce("hits", F.lit(0).cast("bigint")).cast("double")
-                / F.lit(float(TOPK))
-            ).alias("recall"),
-        )
-    )
+    return recall_at_k(ivf, exact, TOPK)
 
 
 ORACLE_SQL["ann_recall_eval"] = f"""
@@ -1031,6 +1320,33 @@ def _pq_subdists():
     ])
 
 
+def adc_topk(probes: DataFrame, cand: DataFrame, n_sub: int,
+             k: int) -> DataFrame:
+    """Asymmetric-distance top-k: each (query, candidate) distance is
+    ``n_sub`` lookups lut[s][codes[s]] summed, ranked (adc ASC,
+    neighbor_id ASC). probes: (query_id, lut, cell_id), broadcast;
+    cand: (vec_id, cell_id, codes), the corpus side, which never
+    carries vectors. Output: (query_id, neighbor_id, rank, adc_dist)."""
+    from pyspark.sql.window import Window
+
+    adc = None
+    for s in range(1, n_sub + 1):
+        term = F.element_at(F.element_at("lut", s), F.element_at("codes", s))
+        adc = term if adc is None else adc + term
+    rank_w = Window.partitionBy("query_id").orderBy(
+        F.asc("adc"), F.asc("neighbor_id"))
+    return (
+        F.broadcast(probes).join(cand, "cell_id")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                adc.alias("adc"))
+        .withColumn("rank", F.row_number().over(rank_w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank",
+                F.round("adc", 6).alias("adc_dist"))
+    )
+
+
 def ann_ivf_pq_topk(spark, sf_dir):
     """IVF + product-quantization search with asymmetric distance
     computation (the IVFADC index of Jegou/Douze/Schmid, PAMI 2011 —
@@ -1041,7 +1357,7 @@ def ann_ivf_pq_topk(spark, sf_dir):
     reads + 3 adds — candidate vectors are never touched.
 
     Scale shape: the corpus side of the probe join carries (vec_id,
-    cluster_id, codes) — ~12 bytes of payload per vector instead of
+    cell_id, codes) — ~12 bytes of payload per vector instead of
     the 512-byte float64 embedding; the LUT rides the broadcast query
     side. At 100 TB this is why PQ exists: the scored set never
     re-reads vector storage. Approximation contract: ADC ranks by
@@ -1050,15 +1366,14 @@ def ann_ivf_pq_topk(spark, sf_dir):
     pipeline itself exactly (same codebooks, same LUT, same ranking)."""
     vecs = _vectors(spark, sf_dir)
     base = (
-        vecs.select("vec_id", "v",
-                    _matrix_dots(F.col("v"), CENTROIDS).alias("dots"))
-        .select(
-            "vec_id", "dots",
-            F.array_position("dots", F.array_max("dots")).alias("cluster_id"),
-            _pq_subdists().alias("subdists"),
+        assign_cells(
+            vecs.select("vec_id", "v",
+                        _matrix_dots(F.col("v"), CENTROIDS).alias("dots")),
+            F.col("dots"),
         )
+        .select("vec_id", "dots", "cell_id", _pq_subdists().alias("subdists"))
         .select(
-            "vec_id", "dots", "cluster_id", "subdists",
+            "vec_id", "dots", "cell_id", "subdists",
             F.transform(
                 F.col("subdists"),
                 lambda d: F.array_position(d, F.array_min(d)).cast("int"),
@@ -1066,7 +1381,7 @@ def ann_ivf_pq_topk(spark, sf_dir):
         )
         .localCheckpoint(eager=True)  # corpus cand side + query side
     )
-    cand = base.select("vec_id", "cluster_id", "codes")
+    cand = base.select("vec_id", "cell_id", "codes")
 
     from pyspark.sql.window import Window
 
@@ -1081,24 +1396,9 @@ def ann_ivf_pq_topk(spark, sf_dir):
         .withColumn("cid", (F.col("pos") + 1).cast("long"))
         .withColumn("probe_rank", F.row_number().over(qprobe_w))
         .where(F.col("probe_rank") <= N_PROBE)
-        .select("query_id", "lut", F.col("cid").alias("cluster_id"))
+        .select("query_id", "lut", F.col("cid").alias("cell_id"))
     )
-    adc = None
-    for s in range(1, PQ_SUBSPACES + 1):
-        term = F.element_at(F.element_at("lut", s), F.element_at("codes", s))
-        adc = term if adc is None else adc + term
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        F.broadcast(probes).join(cand, "cluster_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                adc.alias("adc"))
-        .withColumn("rank", F.row_number().over(rank_w))
-        .where(F.col("rank") <= TOPK)
-        .select("query_id", "neighbor_id", "rank",
-                F.round("adc", 6).alias("adc_dist"))
-    )
+    return adc_topk(probes, cand, PQ_SUBSPACES, TOPK)
 
 
 def _duck_pq_dist(sub_off: int, code: list[float]) -> str:
@@ -1199,41 +1499,10 @@ def ann_pq_recall_eval(spark, sf_dir):
     baseline (broadcast queries, corpus streamed once); both result
     sets are queries x k rows and the overlap join never touches the
     corpus."""
-    from pyspark.sql.window import Window
-
     vecs = _vectors(spark, sf_dir).localCheckpoint(eager=True)
-    queries = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    l2 = _fold_sum(F.zip_with(F.col("qv"), F.col("v"),
-                              lambda x, y: (x - y) * (x - y)))
-    w = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
-    exact = (
-        F.broadcast(queries).crossJoin(vecs)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                l2.alias("d2"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select("query_id", "neighbor_id")
-    )
+    exact = _exact_l2_topk(vecs, N_QUERIES, TOPK)
     pq = ann_ivf_pq_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    hitcnt = (
-        pq.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("hits"))
-    )
-    qids = exact.select("query_id").distinct()
-    return (
-        qids.join(hitcnt, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("hits", F.lit(0).cast("bigint")).alias("hits"),
-            (
-                F.coalesce("hits", F.lit(0).cast("bigint")).cast("double")
-                / F.lit(float(TOPK))
-            ).alias("recall"),
-        )
-    )
+    return recall_at_k(pq, exact, TOPK)
 
 
 ORACLE_SQL["ann_pq_recall_eval"] = f"""
@@ -1484,14 +1753,10 @@ def emb_triplet_mining(spark, sf_dir, n_anchors: int = N_TRIPLET_ANCHORS):
 
     Scale shape: the anchor batch is broadcast (guarded by
     MAX_BRUTE_FORCE_QUERIES, same discipline as ann_cosine_topk) and
-    the corpus streams ONCE; both extremes come from min/max over
-    (cos, id) structs, so the scoring never leaves the map side — the
-    single Exchange carries |anchors| partially-combined rows, not the
-    |anchors| x |corpus| scored set a window-rank formulation would
-    shuffle. Ties break to the lowest vec_id on both sides. Anchors
-    whose label has no other member surface NULL positives rather than
-    vanishing. Same sequential-fold dot products as the rest of the
-    family -> bit-exact oracle."""
+    the corpus streams ONCE into _batch_hard, whose map-side extremes
+    keep the |anchors| x |corpus| scored set out of the shuffle.
+    Anchors whose label has no other member surface NULL positives
+    rather than vanishing."""
     if n_anchors > MAX_BRUTE_FORCE_QUERIES:
         raise ValueError(
             f"emb_triplet_mining broadcasts the anchor batch; "
@@ -1502,55 +1767,10 @@ def emb_triplet_mining(spark, sf_dir, n_anchors: int = N_TRIPLET_ANCHORS):
         )
     # one materialization feeds the anchor slice and the corpus side
     vecs = _vectors(spark, sf_dir, "label").localCheckpoint(eager=True)
-    anchors = vecs.where(F.col("vec_id") < n_anchors).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("anchor_label"),
-        F.col("v").alias("av"),
-        F.col("nrm").alias("an"),
-    )
-    pairs = F.broadcast(anchors).crossJoin(vecs).where(
-        F.col("vec_id") != F.col("anchor_id")
-    )
-    cos = _dot(F.col("av"), F.col("v")) / (F.col("an") * F.col("nrm"))
-    scored = pairs.select(
-        "anchor_id",
-        "anchor_label",
-        "vec_id",
-        cos.alias("cos"),
-        (F.col("label") == F.col("anchor_label")).alias("same"),
-    )
-    # min(struct) / max(struct): lexicographic, so cos decides first and
-    # the id field breaks ties; NULL branches are ignored by min/max, so
-    # each side partial-aggregates map-side (no window, no big shuffle).
-    pos = F.min(
-        F.when(
-            F.col("same"),
-            F.struct(F.col("cos").alias("c"), F.col("vec_id").alias("id")),
-        )
-    ).alias("pos")
-    neg = F.max(
-        F.when(
-            ~F.col("same"),
-            F.struct(
-                F.col("cos").alias("c"),
-                (-F.col("vec_id")).alias("nid"),
-                F.col("vec_id").alias("id"),
-            ),
-        )
-    ).alias("neg")
-    return (
-        scored.groupBy("anchor_id", "anchor_label")
-        .agg(pos, neg)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            F.col("pos.id").alias("pos_id"),
-            F.col("neg.id").alias("neg_id"),
-            F.round("pos.c", 6).alias("pos_cos"),
-            F.round("neg.c", 6).alias("neg_cos"),
-            F.round(F.col("pos.c") - F.col("neg.c"), 6).alias("margin"),
-        )
-    )
+    anchors = _anchor_side(vecs.where(F.col("vec_id") < n_anchors))
+    # no every-anchor rejoin: an anchor is scored against the whole
+    # corpus, and the oracle keeps exactly the anchors that have pairs
+    return _batch_hard(F.broadcast(anchors).crossJoin(vecs))
 
 
 ORACLE_SQL["emb_triplet_mining"] = f"""
@@ -1598,16 +1818,12 @@ def emb_triplet_mining_sharded(spark, sf_dir):
     corpus while per-batch cost stays B^2, so total cost is n x B,
     linear), each batch self-joins on batch_id (co-partitioned, one
     corpus shuffle per side, pairs never leave their partition), and
-    per-anchor extremes come from the same struct-min/max map-side
-    aggregation as the brute form — the final Exchange carries
-    |anchors| partially-combined rows, never the n x B scored set.
+    the per-anchor extremes are _batch_hard's, as in the brute form.
 
     NULL contract (superset of the brute form's): an anchor whose batch
     holds no other member of its label gets a NULL positive; an anchor
     whose batch is single-label gets a NULL negative; margin is NULL
-    when either side is. Rows are never dropped. Ties break to the
-    lowest vec_id on both sides; same sequential-fold dot products ->
-    bit-exact oracle."""
+    when either side is. Rows are never dropped."""
     vecs = _vectors(spark, sf_dir, "label")
     batched = vecs.select(
         "vec_id", "label", "v", "nrm",
@@ -1617,64 +1833,10 @@ def emb_triplet_mining_sharded(spark, sf_dir):
         F.floor(F.col("vec_id") / TRIPLET_BATCH_SIZE).cast("long")
         .alias("batch_id"),
     ).localCheckpoint(eager=True)  # both join sides read it
-    anchors = batched.select(
-        "batch_id",
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("anchor_label"),
-        F.col("v").alias("av"),
-        F.col("nrm").alias("an"),
-    )
-    pairs = anchors.join(batched, "batch_id").where(
-        F.col("vec_id") != F.col("anchor_id")
-    )
-    cos = _dot(F.col("av"), F.col("v")) / (F.col("an") * F.col("nrm"))
-    scored = pairs.select(
-        "batch_id",
-        "anchor_id",
-        "anchor_label",
-        "vec_id",
-        cos.alias("cos"),
-        (F.col("label") == F.col("anchor_label")).alias("same"),
-    )
-    pos = F.min(
-        F.when(
-            F.col("same"),
-            F.struct(F.col("cos").alias("c"), F.col("vec_id").alias("id")),
-        )
-    ).alias("pos")
-    neg = F.max(
-        F.when(
-            ~F.col("same"),
-            F.struct(
-                F.col("cos").alias("c"),
-                (-F.col("vec_id")).alias("nid"),
-                F.col("vec_id").alias("id"),
-            ),
-        )
-    ).alias("neg")
-    mined = (
-        scored.groupBy("batch_id", "anchor_id", "anchor_label")
-        .agg(pos, neg)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "batch_id",
-            F.col("pos.id").alias("pos_id"),
-            F.col("neg.id").alias("neg_id"),
-            F.round("pos.c", 6).alias("pos_cos"),
-            F.round("neg.c", 6).alias("neg_cos"),
-            F.round(F.col("pos.c") - F.col("neg.c"), 6).alias("margin"),
-        )
-    )
+    anchors = _anchor_side(batched, "batch_id")
     # lone-vector batches (no pair rows at all) still owe a NULL row
-    return (
-        batched.select(
-            F.col("vec_id").alias("anchor_id"),
-            F.col("label").alias("anchor_label"),
-            "batch_id",
-        )
-        .join(mined, ["anchor_id", "anchor_label", "batch_id"], "left")
-    )
+    return _batch_hard(anchors.join(batched, "batch_id"), ("batch_id",),
+                       anchors=anchors)
 
 
 ORACLE_SQL["emb_triplet_mining_sharded"] = f"""
@@ -1720,79 +1882,17 @@ def emb_triplet_mining_cells(spark, sf_dir):
     it — the same bounded-candidate tradeoff dedup_semantic_cells
     documents, and why this is 'approximate batch-hard'.
 
-    Same engine shape as the sharded form: map-side cell assignment
-    over broadcast centroid literals, ONE co-partitioned self-join on
-    cell_id, struct-min/max extremes map-side, final Exchange carries
-    |anchors| rows. Cost bounded by cell occupancy (at 100 TB the
+    Same engine shape as the sharded form: assign_cells, ONE
+    co-partitioned self-join on cell_id, _batch_hard extremes. Cost
+    bounded by cell occupancy (at 100 TB the
     quantizer is trained so cells are balanced; a skewed cell is AQE's
     skew-join case). NULL contract identical to the sharded form,
     per-cell."""
-    vecs = _vectors(spark, sf_dir, "label")
-    assigned = vecs.select(
-        "vec_id", "label", "v", "nrm",
-        _matrix_dots(F.col("v"), CENTROIDS).alias("dots"),
-    ).select(
-        "vec_id", "label", "v", "nrm",
-        F.array_position("dots", F.array_max("dots")).cast("long")
-        .alias("cell_id"),
-    ).localCheckpoint(eager=True)  # both join sides read it
-    anchors = assigned.select(
-        "cell_id",
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("anchor_label"),
-        F.col("v").alias("av"),
-        F.col("nrm").alias("an"),
-    )
-    pairs = anchors.join(assigned, "cell_id").where(
-        F.col("vec_id") != F.col("anchor_id")
-    )
-    cos = _dot(F.col("av"), F.col("v")) / (F.col("an") * F.col("nrm"))
-    scored = pairs.select(
-        "cell_id",
-        "anchor_id",
-        "anchor_label",
-        "vec_id",
-        cos.alias("cos"),
-        (F.col("label") == F.col("anchor_label")).alias("same"),
-    )
-    pos = F.min(
-        F.when(
-            F.col("same"),
-            F.struct(F.col("cos").alias("c"), F.col("vec_id").alias("id")),
-        )
-    ).alias("pos")
-    neg = F.max(
-        F.when(
-            ~F.col("same"),
-            F.struct(
-                F.col("cos").alias("c"),
-                (-F.col("vec_id")).alias("nid"),
-                F.col("vec_id").alias("id"),
-            ),
-        )
-    ).alias("neg")
-    mined = (
-        scored.groupBy("cell_id", "anchor_id", "anchor_label")
-        .agg(pos, neg)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "cell_id",
-            F.col("pos.id").alias("pos_id"),
-            F.col("neg.id").alias("neg_id"),
-            F.round("pos.c", 6).alias("pos_cos"),
-            F.round("neg.c", 6).alias("neg_cos"),
-            F.round(F.col("pos.c") - F.col("neg.c"), 6).alias("margin"),
-        )
-    )
-    return (
-        assigned.select(
-            F.col("vec_id").alias("anchor_id"),
-            F.col("label").alias("anchor_label"),
-            "cell_id",
-        )
-        .join(mined, ["anchor_id", "anchor_label", "cell_id"], "left")
-    )
+    assigned = assign_cells(_vectors(spark, sf_dir, "label")).localCheckpoint(
+        eager=True)  # both join sides read it
+    anchors = _anchor_side(assigned, "cell_id")
+    return _batch_hard(anchors.join(assigned, "cell_id"), ("cell_id",),
+                       anchors=anchors)
 
 
 ORACLE_SQL["emb_triplet_mining_cells"] = f"""
@@ -1836,108 +1936,20 @@ def dedup_semantic_cells(spark, sf_dir):
     WITHIN cells only — the published 100 TB semantic-dedup recipe.
     LSH candidate generation (dedup_embedding_cosine) depends on
     collision luck; here the candidate set is bounded by cell occupancy
-    by construction: the pair join is keyed on cluster_id, so a
-    cross-cell pair is unrepresentable in the plan. The price is the
-    documented SemDeDup miss class — near-dups that straddle a cell
-    boundary — acceptable when the quantizer is trained (kmeans.train
-    is the trainer; the fixed CENTROID literals stand in for its output
-    exactly as in ann_ivf_topk).
+    by construction. The price is the documented SemDeDup miss class —
+    near-dups that straddle a cell boundary — acceptable when the
+    quantizer is trained (kmeans.train is the trainer; the fixed
+    CENTROID literals stand in for its output exactly as in
+    ann_ivf_topk).
 
-    Shuffle discipline: cell assignment is a map-side expression over
-    broadcast centroid literals (no shuffle); pair generation self-joins
-    (cluster_id, vec_id) ID PAIRS only — the 64-double vectors rejoin
-    the verified-candidate list afterwards, so the quadratic-per-cell
-    stage moves 16-byte rows. Canonical rule: keep-first (smallest
-    vec_id among a vector and its same-cell near-dups) — the reference's
-    keep-first dedup semantics (postgres_audit_repository.py:68-70),
-    same single-hop contract as dedup_embedding_cosine.
+    Steps: assign_cells (seeded centroids, single probe) ->
+    _near_dup_pairs -> keep-first (_semantic_dedup), the same
+    single-hop contract as dedup_embedding_cosine.
 
     Output: (vec_id, cluster_id, canonical_id, is_duplicate).
     """
-    vecs = _vectors(spark, sf_dir)
-    assigned = vecs.select(
-        "vec_id", "v", "nrm",
-        _matrix_dots(F.col("v"), CENTROIDS).alias("dots"),
-    ).select(
-        "vec_id", "v", "nrm",
-        F.array_position("dots", F.array_max("dots")).alias("cluster_id"),
-    ).localCheckpoint(eager=True)  # ids + both verify sides read it
-
-    ids = assigned.select("cluster_id", "vec_id")
-    a, b = ids.alias("a"), ids.alias("b")
-    cand = (
-        a.join(b, "cluster_id")
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-    )
-    x = assigned.select(F.col("vec_id").alias("vec_a"),
-                        F.col("v").alias("va"), F.col("nrm").alias("na"))
-    y = assigned.select(F.col("vec_id").alias("vec_b"),
-                        F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    pairs = (
-        cand.join(x, "vec_a").join(y, "vec_b")
-        .where(F.round(cos, 6) >= NEAR_DUP_THRESHOLD)
-        .select("vec_a", "vec_b")
-    )
-    partner_min = pairs.groupBy(F.col("vec_b").alias("vec_id")).agg(
-        F.min("vec_a").alias("min_partner")
-    )
-    return (
-        assigned.select("vec_id", "cluster_id")
-        .join(partner_min, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("cluster_id").cast("long").alias("cluster_id"),
-            F.least(
-                F.col("vec_id"),
-                F.coalesce(F.col("min_partner"), F.col("vec_id")),
-            ).alias("canonical_id"),
-        )
-        .withColumn("is_duplicate", F.col("canonical_id") != F.col("vec_id"))
-    )
-
-
-# Multi-probe width. STRUCTURALLY PINNED to 2 on the Spark side: the
-# engine derives the probe set by mask-then-argmax (_top2_cells), which
-# yields exactly one extra cell; only the oracles' `rk <= SEM_PROBES`
-# is numeric. Widening to 3+ requires replacing _top2_cells with a
-# rank-k derivation IN THE SAME HELPER so engine and oracle move
-# together (r11 review finding).
-SEM_PROBES = 2
-if SEM_PROBES != 2:  # explicit raise: an assert is stripped under -O (ADVICE r11)
-    raise ValueError(
-        "engine probe derivation (_top2_cells) is pinned to 2; widening "
-        "requires a rank-k derivation shared by engine and oracles")
-
-
-def _primary_cell(dots: Column) -> Column:
-    """1-based argmax cell under the shared tie rule: FIRST occurrence
-    of the max (== smallest cell index among ties) — the single source
-    of the coarse-quantizer assignment for the r11 multi-probe family
-    and streaming.semantic.assign_cells. (inc_semantic_dedup /
-    dedup_semantic_cells, green-stamped r10, keep their identical
-    inline forms — re-deriving them through this helper would only
-    drift-mark two proven entries; their docstrings cross-reference
-    this rule.)"""
-    return F.array_position(dots, F.array_max(dots))
-
-
-def _top2_cells(dots: Column, primary: Column) -> Column:
-    """1-based SECOND-best cell: mask the primary slot to -inf, argmax
-    again. Equivalent to rank 2 under (dot DESC, cell ASC) for every
-    tie layout, because array_position always returns the FIRST
-    occurrence of the max — the one place the engine's top-2 rule
-    lives; the oracles replicate it as a rank-rule window."""
-    masked = F.transform(
-        dots,
-        lambda x, i: F.when((i + 1) == primary, F.lit(float("-inf")))
-        .otherwise(x),
-    )
-    return F.array_position(masked, F.array_max(masked))
+    return _semantic_dedup(
+        assign_cells(_vectors(spark, sf_dir)).localCheckpoint(eager=True))
 
 
 def dedup_semantic_cells_mp(spark, sf_dir):
@@ -1947,75 +1959,15 @@ def dedup_semantic_cells_mp(spark, sf_dir):
     unrepresentable in the plan (the acknowledged SemDeDup residual,
     Abbas et al. 2023). The standard mitigation is multi-probe
     assignment (the multi-probe LSH idea, Lv et al. VLDB'07, applied to
-    the IVF quantizer): each vector candidates under its TOP-2 cells,
-    so a boundary pair meets in whichever cell is second-best for one
-    side. Cost is 2x candidate rows — still bounded by cell occupancy,
-    never a cross-cell cartesian.
-
-    Top-2 rule (both engines): rank cells by (dot DESC, cell ASC); the
-    Spark side takes argmax, masks that slot to -inf, and takes argmax
-    again — equivalent to the rank rule for every tie layout, because
-    array_position always returns the FIRST occurrence of the max.
-    A pair sharing BOTH probed cells would double-count, so candidates
-    are distinct id pairs before the vectors rejoin (same 16-byte-row
-    shuffle discipline as the single-probe entry). Canonical rule:
-    keep-first (smallest vec_id), the reference's dedup semantics
-    (postgres_audit_repository.py:68-70). Output schema matches
-    dedup_semantic_cells: (vec_id, cluster_id = PRIMARY cell,
-    canonical_id, is_duplicate)."""
-    vecs = _vectors(spark, sf_dir)
-    dots = _matrix_dots(F.col("v"), CENTROIDS)
-    assigned = (
-        vecs.select("vec_id", "v", "nrm", dots.alias("dots"))
-        .withColumn("cluster_id", _primary_cell(F.col("dots")))
-        .withColumn(
-            "cell2", _top2_cells(F.col("dots"), F.col("cluster_id"))
-        )
-        .drop("dots")
-        .localCheckpoint(eager=True)  # probes + both verify sides read it
-    )
-
-    probes = assigned.select(
-        "vec_id",
-        F.explode(F.array(F.col("cluster_id"), F.col("cell2")))
-        .alias("probe_cell"),
-    )
-    a, b = probes.alias("a"), probes.alias("b")
-    cand = (
-        a.join(b, "probe_cell")
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .distinct()  # a pair sharing both probed cells must score once
-    )
-    x = assigned.select(F.col("vec_id").alias("vec_a"),
-                        F.col("v").alias("va"), F.col("nrm").alias("na"))
-    y = assigned.select(F.col("vec_id").alias("vec_b"),
-                        F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    pairs = (
-        cand.join(x, "vec_a").join(y, "vec_b")
-        .where(F.round(cos, 6) >= NEAR_DUP_THRESHOLD)
-        .select("vec_a", "vec_b")
-    )
-    partner_min = pairs.groupBy(F.col("vec_b").alias("vec_id")).agg(
-        F.min("vec_a").alias("min_partner")
-    )
-    return (
-        assigned.select("vec_id", "cluster_id")
-        .join(partner_min, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("cluster_id").cast("long").alias("cluster_id"),
-            F.least(
-                F.col("vec_id"),
-                F.coalesce(F.col("min_partner"), F.col("vec_id")),
-            ).alias("canonical_id"),
-        )
-        .withColumn("is_duplicate", F.col("canonical_id") != F.col("vec_id"))
-    )
+    the IVF quantizer): each vector candidates under its TOP-2 cells
+    (assign_cells with multi_probe; rule in _top2_cells), so a boundary
+    pair meets in whichever cell is second-best for one side. Cost is
+    2x candidate rows — still bounded by cell occupancy, never a
+    cross-cell cartesian. Same steps and output schema as
+    dedup_semantic_cells (cluster_id = the PRIMARY cell)."""
+    return _semantic_dedup(
+        assign_cells(_vectors(spark, sf_dir), multi_probe=True)
+        .localCheckpoint(eager=True))  # probes + both verify sides read it
 
 
 ORACLE_SQL["dedup_semantic_cells_mp"] = f"""
@@ -2070,58 +2022,13 @@ def sem_probe_eval(spark, sf_dir):
     quantizer (reference anchor: evaluates the same keep-first dedup
     family, postgres_audit_repository.py:68-70).
 
-    Scale shape: one probe self-join (occupancy-bounded id rows
-    carrying both primaries), pair-keyed distinct, vectors rejoin the
-    candidate list for the exact-cosine verify, then a single global
-    aggregate — nothing beyond the mp pipeline it instruments, ending
-    in a 1-row frame. single-caught is derivable per pair (primary(a)
-    == primary(b)), so no second pipeline runs."""
-    vecs = _vectors(spark, sf_dir)
-    dots = _matrix_dots(F.col("v"), CENTROIDS)
-    assigned = (
-        vecs.select("vec_id", "v", "nrm", dots.alias("dots"))
-        .withColumn("prim", _primary_cell(F.col("dots")))
-        .withColumn("cell2", _top2_cells(F.col("dots"), F.col("prim")))
-        .drop("dots")
-        .localCheckpoint(eager=True)  # probes + verify sides read it
-    )
-    probes = assigned.select(
-        "vec_id", "prim",
-        F.explode(F.array(F.col("prim"), F.col("cell2")))
-        .alias("probe_cell"),
-    )
-    a, b = probes.alias("a"), probes.alias("b")
-    cand = (
-        a.join(b, "probe_cell")
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            (F.col("a.prim") == F.col("b.prim")).alias("same_primary"),
-        )
-        .distinct()  # same_primary is a pure function of the pair
-    )
-    x = assigned.select(F.col("vec_id").alias("vec_a"),
-                        F.col("v").alias("va"), F.col("nrm").alias("na"))
-    y = assigned.select(F.col("vec_id").alias("vec_b"),
-                        F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    verified = (
-        cand.join(x, "vec_a").join(y, "vec_b")
-        .where(F.round(cos, 6) >= NEAR_DUP_THRESHOLD)
-        .select("same_primary")
-    )
-    n_multi = F.count("*")
-    n_single = F.sum(F.col("same_primary").cast("bigint"))
-    return verified.agg(
-        n_multi.alias("n_pairs_multi"),
-        n_single.alias("n_pairs_single"),
-        (n_multi - n_single).alias("n_boundary_pairs"),
-        F.when(
-            n_multi > 0,
-            F.round((n_multi - n_single).cast("double") / n_multi, 6),
-        ).alias("boundary_share"),
-    )
+    Steps: assign_cells (multi-probe) -> _near_dup_pairs carrying
+    same_primary -> one global aggregate (_probe_census), ending in a
+    1-row frame; single-caught is derivable per pair (primary(a) ==
+    primary(b)), so no second pipeline runs."""
+    return _probe_census(
+        assign_cells(_vectors(spark, sf_dir), multi_probe=True)
+        .localCheckpoint(eager=True))  # probes + verify sides read it
 
 
 ORACLE_SQL["sem_probe_eval"] = f"""
@@ -2177,53 +2084,14 @@ def inc_semantic_dedup(spark, sf_dir):
     dedup_semantic_cells exactly as inc_dedup_merge twins the LSH
     dedup and inc_chunk_dedup twins chunk dedup.
 
-    The batch is a deterministic 10% slice via scrambled_bucket — the
-    two-stage scramble, because scrambled_key's single multiply is the
-    IDENTITY mod 10 (KNUTH_MULT ≡ 1 mod 10, r10 review) and an
-    id-periodic corpus would bias a plain stride slice. Everything
-    else is the index. Candidates join BATCH x INDEX on cell_id only —
-    never index x index, so per-batch cost is |batch| x occupancy of
-    the probed cells; at 100 TB the index is a cell-bucketed table
-    (the ann_ivf_topk layout) and this is a bucket-pruned probe.
-    Verify by exact cosine >= NEAR_DUP_THRESHOLD; each batch vector
-    gets is_dup + its canonical (min matching index id, or itself) —
-    the keep-first contract, with the index always winning over the
-    arrival."""
-    vecs = _vectors(spark, sf_dir)
-    assigned = vecs.select(
-        "vec_id", "v", "nrm",
-        _matrix_dots(F.col("v"), CENTROIDS).alias("dots"),
-    ).select(
-        "vec_id", "v", "nrm",
-        F.array_position("dots", F.array_max(F.col("dots"))).cast("long")
-        .alias("cell_id"),
-    ).localCheckpoint(eager=True)  # batch + index slices read it once
-    is_batch = scrambled_bucket(F.col("vec_id"), INC_VEC_BATCH_MOD) == 0
-    batch = assigned.where(is_batch).select(
-        "cell_id", "vec_id",
-        F.col("v").alias("bv"), F.col("nrm").alias("bn"),
-    )
-    index = assigned.where(~is_batch).select(
-        "cell_id",
-        F.col("vec_id").alias("idx_id"),
-        F.col("v").alias("iv"), F.col("nrm").alias("inrm"),
-    )
-    cos = _dot(F.col("bv"), F.col("iv")) / (F.col("bn") * F.col("inrm"))
-    matches = (
-        batch.join(index, "cell_id")
-        .where(F.round(cos, 6) >= NEAR_DUP_THRESHOLD)
-        .groupBy("vec_id")
-        .agg(F.min("idx_id").alias("min_idx"))
-    )
-    return (
-        assigned.where(is_batch).select("vec_id")
-        .join(matches, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("min_idx").isNotNull().alias("is_dup"),
-            F.coalesce("min_idx", F.col("vec_id")).alias("canonical_id"),
-        )
-    )
+    Steps: assign_cells -> split_arrivals (the scrambled 10% batch vs
+    the index) -> classify_semantic_batch. At 100 TB the index is a
+    cell-bucketed table (the ann_ivf_topk layout) and the classify join
+    is a bucket-pruned probe. Each batch vector gets is_dup + its
+    canonical (min matching index id, or itself)."""
+    assigned = assign_cells(_vectors(spark, sf_dir)).localCheckpoint(
+        eager=True)  # batch + index slices read it once
+    return classify_semantic_batch(*split_arrivals(assigned))
 
 
 ORACLE_SQL["inc_semantic_dedup"] = f"""
@@ -2255,64 +2123,18 @@ ORACLE_SQL["inc_semantic_dedup"] = f"""
 
 def inc_semantic_dedup_mp(spark, sf_dir):
     """Multi-probe incremental semantic dedup: inc_semantic_dedup with
-    the ARRIVING side probing its top-2 cells — the textbook
-    multi-probe IVF search shape (index vectors stay in their single
-    primary cell; only queries fan out), closing the same boundary-miss
-    class dedup_semantic_cells_mp closes for the batch entry: an
-    arrival whose primary cell differs from its near-dup's index cell
-    is invisible to the single-probe join by construction, but its
-    SECOND-best cell is the index vector's primary, so the multi-probe
-    join finds it (planted straddle fixture in
-    test_degenerate_parity.py).
-
-    Cost: exactly 2x the probed-cell occupancy per arrival — the
-    candidate join is still BATCH x INDEX keyed on cell_id, never
-    index x index, and an index vector lives in ONE cell so no
-    candidate pair can be generated twice (MIN needs no distinct).
-    Same top-2 rule as the batch twin (mask-then-argmax == the
-    oracle's (dot DESC, cell ASC) rank rule for every tie layout);
-    same keep-first contract with the index always winning
-    (postgres_audit_repository.py:68-70)."""
-    vecs = _vectors(spark, sf_dir)
-    dots = _matrix_dots(F.col("v"), CENTROIDS)
-    assigned = (
-        vecs.select("vec_id", "v", "nrm", dots.alias("dots"))
-        .withColumn("cell_id", _primary_cell(F.col("dots")).cast("long"))
-        .withColumn(
-            "cell2", _top2_cells(F.col("dots"), F.col("cell_id"))
-            .cast("long")
-        )
-        .drop("dots")
-        .localCheckpoint(eager=True)  # batch + index slices read it once
-    )
-    is_batch = scrambled_bucket(F.col("vec_id"), INC_VEC_BATCH_MOD) == 0
-    probes = assigned.where(is_batch).select(
-        "vec_id",
-        F.col("v").alias("bv"), F.col("nrm").alias("bn"),
-        F.explode(F.array(F.col("cell_id"), F.col("cell2")))
-        .alias("cell_id"),
-    )
-    index = assigned.where(~is_batch).select(
-        "cell_id",
-        F.col("vec_id").alias("idx_id"),
-        F.col("v").alias("iv"), F.col("nrm").alias("inrm"),
-    )
-    cos = _dot(F.col("bv"), F.col("iv")) / (F.col("bn") * F.col("inrm"))
-    matches = (
-        probes.join(index, "cell_id")
-        .where(F.round(cos, 6) >= NEAR_DUP_THRESHOLD)
-        .groupBy("vec_id")
-        .agg(F.min("idx_id").alias("min_idx"))
-    )
-    return (
-        assigned.where(is_batch).select("vec_id")
-        .join(matches, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("min_idx").isNotNull().alias("is_dup"),
-            F.coalesce("min_idx", F.col("vec_id")).alias("canonical_id"),
-        )
-    )
+    the ARRIVING side probing its top-2 cells, closing the same
+    boundary-miss class dedup_semantic_cells_mp closes for the batch
+    entry: an arrival whose primary cell differs from its near-dup's
+    index cell is invisible to the single-probe join by construction,
+    but its SECOND-best cell is the index vector's primary, so the
+    multi-probe join finds it (planted straddle fixture in
+    test_degenerate_parity.py). Cost: exactly 2x the probed-cell
+    occupancy per arrival (see classify_semantic_batch)."""
+    assigned = assign_cells(
+        _vectors(spark, sf_dir), multi_probe=True
+    ).localCheckpoint(eager=True)  # batch + index slices read it once
+    return classify_semantic_batch(*split_arrivals(assigned))
 
 
 ORACLE_SQL["inc_semantic_dedup_mp"] = f"""

@@ -87,6 +87,8 @@ class RunResult:
     target_tables: dict[str, str]                  # collection -> target table
     audit_df: DataFrame                            # full run audit trail
     object_statuses: dict[str, str]                # object_name -> status
+    plans: dict[str, MappingPlan]                  # collection -> the run's plan
+    app_config: dict[str, Any]                     # validated app config
     missing_collections: set[str] = field(default_factory=set)
     unmapped_collections: set[str] = field(default_factory=set)
     missing_tables_input: set[str] = field(default_factory=set)
@@ -198,11 +200,12 @@ def run(
     from .config.defaults import default_app_config
 
     app = _resolve_config(app_config, validate_app_config, default_app_config())
+    runtime = app["runtime"]
     mapping = _resolve_config(
         mapping_config,
-        lambda cfg: validate_mapping_config(cfg, on_duplicate=on_duplicate),
+        lambda cfg: validate_mapping_config(
+            cfg, runtime["type_mappings"], on_duplicate=on_duplicate),
     )
-    runtime = app["runtime"]
     audit_cfg = app["audit"]
 
     if isinstance(input_data, str):
@@ -248,6 +251,7 @@ def run(
     unmapped: set[str] = set()
     data_frames: dict[str, DataFrame] = {}
     target_tables: dict[str, str] = {}
+    plans: dict[str, MappingPlan] = {}
     audit_parts: list[DataFrame] = []
 
     for table in sorted(missing_input_tables):
@@ -288,6 +292,7 @@ def run(
         data_df, audit_df = split_enriched(enriched, plan, object_status=status)
         data_frames[coll] = data_df
         target_tables[coll] = target
+        plans[coll] = plan
         audit_parts.append(audit_df)
 
     if audit_parts:
@@ -307,6 +312,8 @@ def run(
         target_tables=target_tables,
         audit_df=audit_df,
         object_statuses=object_statuses,
+        plans=plans,
+        app_config=app,
         missing_collections=missing_collections,
         unmapped_collections=unmapped,
         missing_tables_input={table_lookup.get(t, t) for t in missing_input_tables},
@@ -318,33 +325,25 @@ def run(
     )
 
 
-def write_run_jdbc(spark: SparkSession, result: RunResult, app_config: Mapping,
-                   mapping: Mapping) -> None:
+def write_run_jdbc(spark: SparkSession, result: RunResult) -> None:
     """Sink a run into Postgres: DDL bootstrap + batched appends
     (reference pipeline.py:94-101 connect/DDL + per-doc inserts,
-    re-expressed as 1 bootstrap + N partition-parallel writes)."""
+    re-expressed as 1 bootstrap + N partition-parallel writes). The
+    DDL comes from the run's own plans (renamed columns included) and
+    its runtime.type_mappings; write_table serializes array columns."""
     from .sinks import jdbc
 
-    db = app_config["database"]
-    collections = mapping.get("collections", mapping)
-    plans = [
-        MappingPlan.from_config(c, s) for c, s in collections.items()
-        if c in result.data_frames
-    ]
-    jdbc.bootstrap_destination(spark, db, plans)
+    app = result.app_config
+    db = app["database"]
+    jdbc.bootstrap_destination(spark, db, result.plans.values(),
+                               app["runtime"]["type_mappings"])
     for coll, df in result.data_frames.items():
         jdbc.write_table(df, result.target_tables[coll], db)
-    jdbc.write_table(
-        result.audit_df.withColumn("missing_columns", F.to_json("missing_columns")),
-        app_config["audit"]["audit_table"], db,
-    )
+    jdbc.write_table(result.audit_df, app["audit"]["audit_table"], db)
     jdbc.write_table(result.missing_collections_report(spark),
                      "doc_audit.missing_collections_report", db)
-    jdbc.write_table(
-        result.missing_attributes_report().withColumn(
-            "missing_columns", F.to_json("missing_columns")),
-        "doc_audit.missing_attributes_report", db,
-    )
+    jdbc.write_table(result.missing_attributes_report(),
+                     "doc_audit.missing_attributes_report", db)
 
 
 def write_run_parquet(result: RunResult, out_dir: str) -> None:

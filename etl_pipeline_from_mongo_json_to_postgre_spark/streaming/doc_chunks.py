@@ -66,19 +66,16 @@ def ann_cell_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         _require_trained,
         planted_v_column,
     )
+    from ..operators.similarity import assign_cells
 
     _require_trained()
     stream = watch_table(spark, sf_dir, "embeddings").select("vec_id")
-    # ONE definition of the planted vector, shared with the batch path;
-    # scores staged as a column so the 16x64 dot block evaluates once
-    # per row (CollapseProject keeps multi-referenced columns staged)
-    assigned = stream.select(
-        _coarse_scores(planted_v_column()).alias("scores")
-    ).select(
-        F.array_position("scores", F.array_max("scores"))
-        .cast("bigint").alias("cell")
-    )
-    return assigned.groupBy("cell").agg(F.count("*").alias("n_vecs"))
+    # ONE definition of the planted vector and ONE cell assignment,
+    # both shared with the batch path
+    assigned = assign_cells(stream.select(planted_v_column().alias("v")),
+                            _coarse_scores(F.col("v")))
+    return assigned.groupBy(F.col("cell_id").alias("cell")).agg(
+        F.count("*").alias("n_vecs"))
 
 
 def stream_ann_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:

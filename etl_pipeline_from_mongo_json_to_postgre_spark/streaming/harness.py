@@ -25,6 +25,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from ..sources.parquet import read_normalized
 
@@ -83,7 +84,7 @@ def drain_to_memory(df: DataFrame, name: str,
 
 
 @contextmanager
-def staged_stream(spark: SparkSession, frame: DataFrame, schema: str):
+def staged_stream(spark: SparkSession, frame: DataFrame, schema: StructType | str):
     """Write ``frame`` as 4 arrival files and yield ``(stream, scratch)``:
     the file stream over them (one micro-batch per file) and a dir for
     the caller's sink and checkpoint. Both are removed on exit, so a

@@ -414,3 +414,60 @@ def test_rename_map_reaches_run_report(spark):
     assert res.rename_maps == {"widgets": {"raw_json": "raw_json1"}}
     assert res.summary()["rename_maps"] == {"widgets": {"raw_json": "raw_json1"}}
     assert "raw_json1" in res.data_frames["widgets"].columns
+
+
+TICKETS = {
+    "collections": {
+        "tickets": {
+            "target_table": "public.tickets",
+            "object_id_attribute": "id",
+            "mappings": {
+                "id": {"column": "id", "type": "integer"},
+                # 'status' collides with the reserved business column
+                "state": {"column": "status", "type": "text"},
+            },
+        }
+    }
+}
+
+
+def test_write_run_jdbc_uses_the_runs_plans(spark, monkeypatch):
+    """The JDBC sink builds its DDL from the plans run() built —
+    renamed columns included — with the app's runtime.type_mappings,
+    and writes the run's frames as they are (array columns are left
+    to write_table to serialize)."""
+    from etl_pipeline_from_mongo_json_to_postgre_spark.sinks import jdbc
+
+    statements, writes = [], {}
+    monkeypatch.setattr(jdbc, "execute_statements",
+                        lambda spark, db, stmts: statements.extend(stmts))
+    monkeypatch.setattr(jdbc, "write_table",
+                        lambda df, table, db, **kw: writes.update({table: df}))
+    app = {"runtime": {"type_mappings": {"integer": "BIGINT",
+                                         "text": "VARCHAR(32)"}}}
+    res = pipeline.run(spark, {"tickets": [{"id": 1, "state": "open"}]},
+                       TICKETS, app_config=app, ingestion_date="2024-06-01",
+                       on_duplicate="rename")
+    pipeline.write_run_jdbc(spark, res)
+
+    ddl = [s for s in statements if '"public"."tickets"' in s]
+    assert len(ddl) == 1
+    assert '"id" BIGINT' in ddl[0]
+    assert '"status1" VARCHAR(32)' in ddl[0]
+    assert {"id", "status1", "status"} <= set(writes["public.tickets"].columns)
+    audit = writes["doc_audit.ingestion_audit"]
+    assert dict(audit.dtypes)["missing_columns"] == "array<string>"
+
+
+def test_run_checks_mapping_types_against_app_type_mappings(spark):
+    """A mapping type the app's runtime.type_mappings omit is a
+    ConfigError at run(), as in the reference's config loader."""
+    app = {"runtime": {"type_mappings": {"integer": "BIGINT",
+                                         "string": "TEXT"}}}
+    mapping = {"collections": {"events": {
+        "target_table": "public.events",
+        "mappings": {"day": {"column": "day", "type": "date"}},
+    }}}
+    with pytest.raises(ConfigError, match="unsupported type 'date'"):
+        pipeline.run(spark, {"events": [{"day": "2024-01-01"}]}, mapping,
+                     app_config=app)

@@ -34,15 +34,13 @@ def test_redelivered_batch_adds_no_canonicals(spark, tmp_path):
     own directory and coexists."""
     from etl_pipeline_from_mongo_json_to_postgre_spark.operators.similarity import (
         CENTROIDS,
+        _vectors,
+        assign_cells,
+        classify_semantic_batch,
     )
     from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.semantic import (
         BATCH_OUT_SCHEMA,
-        assign_cells,
-        classify_semantic_batch,
         semantic_batch_writer,
-    )
-    from etl_pipeline_from_mongo_json_to_postgre_spark.operators.similarity import (
-        _vectors,
     )
 
     rng = np.random.RandomState(5)
