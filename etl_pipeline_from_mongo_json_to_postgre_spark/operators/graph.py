@@ -110,11 +110,14 @@ def checkpoint_partitioned(df: DataFrame, *keys: str) -> DataFrame:
     Concurrency note (r9 advice): the AQE toggle is a SESSION-global
     conf flip around the second materialization — any query planned
     concurrently on the same SparkSession during that window would
-    silently plan with AQE off. The engine's query entry points are
-    single-threaded per session (driver/bench/tests all plan
-    sequentially), so this is safe today; if concurrent planning ever
-    arrives, scope the override via ``SparkSession.newSession()`` (per-
-    session conf view over the shared SparkContext) instead of a lock.
+    silently plan with AQE off. The one multi-threaded entry point is
+    the ETL run's collection pool (``pipeline._concurrently``), which
+    builds and writes mapping projections only and never reaches this
+    function; the registry's query entry points stay single-threaded
+    per session (driver/bench/tests all plan sequentially). If
+    concurrent planning ever reaches this flip, scope the override via
+    ``SparkSession.newSession()`` (per-session conf view over the
+    shared SparkContext) instead of a lock.
     """
     return _layout_checkpoint(df.localCheckpoint(eager=True), *keys)
 

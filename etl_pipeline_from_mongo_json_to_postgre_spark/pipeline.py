@@ -13,14 +13,30 @@ part and every later sink or report read those rows, so each document
 is parsed once per run. The stored blocks are freed when the
 RunResult's frames are garbage-collected.
 
+Concurrency: the collections of a run are independent, so the work of
+each one runs on a driver thread pool (``_concurrently``). In ``run()``
+that is the Column building, analysis and physical planning of its
+enriched frame (``enrich_collection`` -> ``localCheckpoint`` ->
+``split_enriched``); config validation, the static analysis and
+``MappingPlan.from_config`` stay sequential, so config errors surface
+before any thread starts. ``write_run_parquet`` writes the data frames
+concurrently first: each data write is the first sink of its
+collection and stores its enriched rows. Only then do the audit write
+and the missing-attributes report run (together), so both read stored
+rows and no document is parsed twice. Pool threads inherit the
+caller's job group and local properties and set no session conf.
+
 Static-analysis phase parity (pipeline.py:43-92): expected-vs-input
 collection diff, schema.sql table scan, table lookups, ingestion-date
 stamp. Per-collection phase parity (:128-186): unmapped-collection
 skip, NEW/MISSING/ALREADY_EXISTS object status, DDL-on-demand (JDBC
 mode). Summary parity (reporting.py:36-95): the PipelineReport counters
-come from one per-collection aggregation over the stored audit rows,
-summed on the driver for the run totals — no mutable driver-side
-accumulation.
+are per-collection processed, error and missing-column counts, summed
+on the driver for the run totals — no mutable driver-side
+accumulation. A parquet write collects them inside the audit write job
+(an ``Observation``), so ``summary()`` after it starts no Spark job;
+without one (no write yet, or the JDBC sink) ``summary()`` runs the
+same counts as one aggregation over the stored audit rows.
 
 Failure-isolation semantics (SURVEY §7 hard-part #2): the reference
 rolls back individual failed INSERTs and continues (pipeline.py:238-249).
@@ -36,11 +52,14 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any, Mapping
+from functools import partial
+from typing import Any, Callable, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .config.defaults import (
     OBJECT_STATUS_ALREADY_EXISTS,
@@ -76,6 +95,51 @@ def load_schema_tables(schema_path: str) -> set[str]:
     return {normalize_table_name(m.strip().rstrip("(")) for m in matches}
 
 
+def _concurrently(spark: SparkSession, thunks: Mapping[str, Callable[[], Any]]) -> dict[str, Any]:
+    """Run independent thunks on a driver thread pool of
+    min(len(thunks), defaultParallelism) workers; return their results
+    by key, in sorted-key order. Each thunk carries the caller's job
+    group, local properties and tags (``inheritable_thread_target``),
+    so its Spark jobs are labelled like the caller's. The first failure
+    in key order is re-raised as it is; pending thunks are cancelled,
+    and no pool thread outlives the call."""
+    names = sorted(thunks)
+    if not names:
+        return {}
+    pool = ThreadPoolExecutor(min(len(names), spark.sparkContext.defaultParallelism),
+                              thread_name_prefix="etl-collection")
+    try:
+        futures = {n: pool.submit(inheritable_thread_target(spark)(thunks[n])) for n in names}
+        return {n: futures[n].result() for n in names}
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
+
+
+_COUNTERS = ("processed", "errors", "missing")
+
+
+def _audit_counters(collections: list[str]) -> dict[str, Column]:
+    """The run report's counters as aggregate Columns over the audit
+    frame, ``<counter>_<i>`` for the i-th collection: documents
+    processed, with errors, and with missing columns. Missing-TABLE
+    audit rows (processing_status='missing', no document) count
+    nowhere."""
+    document = F.col("processing_status").isin(STATUS_SUCCESS, STATUS_ERROR)
+    cols = {}
+    for i, coll in enumerate(collections):
+        mine = document & (F.col("source_collection") == coll)
+        cols[f"processed_{i}"] = F.count(F.when(mine, 1))
+        cols[f"errors_{i}"] = F.count(
+            F.when(mine & (F.col("processing_status") == STATUS_ERROR), 1))
+        cols[f"missing_{i}"] = F.count(F.when(mine & (F.size("missing_columns") > 0), 1))
+    return cols
+
+
+def _by_collection(collections: list[str], values: Mapping[str, int]) -> dict[str, dict[str, int]]:
+    """collection -> {processed, errors, missing} from ``_audit_counters`` values."""
+    return {c: {k: values[f"{k}_{i}"] for k in _COUNTERS} for i, c in enumerate(collections)}
+
+
 @dataclass
 class RunResult:
     """Everything the reference's PipelineReport + side effects carried,
@@ -99,6 +163,9 @@ class RunResult:
     # (reference ui/mapping_editor.py:527-554); the backend run report
     # carries them so non-interactive callers see where data landed.
     rename_maps: dict[str, dict[str, str]] = field(default_factory=dict)
+    # collection -> {processed, errors, missing}, collected by the audit
+    # write of write_run_parquet; None until such a write has run
+    audit_counts: dict[str, dict[str, int]] | None = None
 
     def missing_collections_report(self, spark: SparkSession) -> DataFrame:
         """(ingestion_date, object_name, object_status) — reference
@@ -131,35 +198,31 @@ class RunResult:
         )
 
     def summary(self) -> dict[str, Any]:
-        """KPI + per-collection metrics (reference reporting.py:36-95),
-        one aggregation over the audit frame: per-collection counts,
-        whose sums on the driver are the KPI totals."""
-        # missing-TABLE audit rows carry processing_status='missing' and no
-        # document; everything else is one row per processed document
-        counts = (
-            self.audit_df
-            .where(F.col("processing_status").isin(STATUS_SUCCESS, STATUS_ERROR))
-            .groupBy("source_collection")
-            .agg(
-                F.count("*").alias("processed"),
-                F.count(F.when(F.col("processing_status") == STATUS_ERROR, 1)).alias("errors"),
-                F.count(F.when(F.size("missing_columns") > 0, 1)).alias("missing"),
-            )
-            .collect()
-        )
-        total = sum(r["processed"] for r in counts)
-        errors = sum(r["errors"] for r in counts)
+        """KPI + per-collection metrics (reference reporting.py:36-95):
+        per-collection counts, whose sums on the driver are the KPI
+        totals. After write_run_parquet they are the counters its audit
+        write collected (no Spark job); otherwise one aggregation over
+        the audit frame computes the same counters."""
+        counts = self.audit_counts
+        if counts is None:
+            colls = sorted(self.data_frames)
+            row = self.audit_df.agg(*[
+                c.alias(n) for n, c in _audit_counters(colls).items()
+            ]).first() if colls else {}
+            counts = _by_collection(colls, row)
+        total = sum(m["processed"] for m in counts.values())
+        errors = sum(m["errors"] for m in counts.values())
+        # an empty collection has no audit row, so no entry here
         per_collection = {
-            r["source_collection"]: {"processed": r["processed"], "errors": r["errors"]}
-            for r in counts
-            if r["source_collection"] is not None
+            c: {"processed": m["processed"], "errors": m["errors"]}
+            for c, m in counts.items() if m["processed"]
         }
         return {
             "ingestion_date": self.ingestion_date,
             "total_documents": total,
             "successful_documents": total - errors,
             "documents_with_errors": errors,
-            "documents_with_missing_columns": sum(r["missing"] for r in counts),
+            "documents_with_missing_columns": sum(m["missing"] for m in counts.values()),
             "insert_failures": 0,  # validate-before-write: see module docstring
             "missing_collections": sorted(self.missing_collections),
             "unmapped_collections": sorted(self.unmapped_collections),
@@ -249,7 +312,6 @@ def run(
     object_statuses: dict[str, str] = {}
     missing_tables_db: set[str] = set()
     unmapped: set[str] = set()
-    data_frames: dict[str, DataFrame] = {}
     target_tables: dict[str, str] = {}
     plans: dict[str, MappingPlan] = {}
     audit_parts: list[DataFrame] = []
@@ -282,18 +344,22 @@ def run(
             status = OBJECT_STATUS_MISSING
             missing_tables_db.add(target)
         object_statuses[target] = status
+        target_tables[coll] = target
+        plans[coll] = MappingPlan.from_config(
+            coll, spec, date_formats=runtime.get("date_formats"))
 
-        plan = MappingPlan.from_config(coll, spec, date_formats=runtime.get("date_formats"))
+    def build(coll: str) -> tuple[DataFrame, DataFrame]:
         # stored by the first sink that runs it; every later sink and
         # report reads the stored rows instead of parsing again
         enriched = enrich_collection(
-            raw_frames[coll], plan, ingested_at=ing_date
+            raw_frames[coll], plans[coll], ingested_at=ing_date
         ).localCheckpoint(eager=False)
-        data_df, audit_df = split_enriched(enriched, plan, object_status=status)
-        data_frames[coll] = data_df
-        target_tables[coll] = target
-        plans[coll] = plan
-        audit_parts.append(audit_df)
+        return split_enriched(enriched, plans[coll],
+                              object_status=object_statuses[target_tables[coll]])
+
+    built = _concurrently(spark, {c: partial(build, c) for c in plans})
+    data_frames = {c: data_df for c, (data_df, _) in built.items()}
+    audit_parts += [audit_df for _, audit_df in built.values()]
 
     if audit_parts:
         audit_df = audit_parts[0]
@@ -348,12 +414,26 @@ def write_run_jdbc(spark: SparkSession, result: RunResult) -> None:
 
 def write_run_parquet(result: RunResult, out_dir: str) -> None:
     """DB-less sink: destination + audit + report frames as parquet
-    (the engine's native staging format; JDBC is a swap-in)."""
-    for coll, df in result.data_frames.items():
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, f"data_{coll}.parquet"))
-    result.audit_df.write.mode("overwrite").parquet(os.path.join(out_dir, "ingestion_audit.parquet"))
-    result.missing_attributes_report().write.mode("overwrite").parquet(
-        os.path.join(out_dir, "missing_attributes_report.parquet"))
+    (the engine's native staging format; JDBC is a swap-in).
+
+    The data writes run concurrently, one per collection, and store the
+    enriched rows; then the audit write and the missing-attributes
+    report run together over the stored rows. The audit write collects
+    the run's counters, which ``summary()`` then returns."""
+    def write(df: DataFrame, name: str) -> Callable[[], None]:
+        return lambda: df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+
+    spark = result.audit_df.sparkSession
+    _concurrently(spark, {c: write(df, f"data_{c}.parquet")
+                          for c, df in result.data_frames.items()})
+    colls = sorted(result.data_frames)
+    done = _concurrently(spark, {
+        "audit": lambda: write_with_metrics(
+            result.audit_df, os.path.join(out_dir, "ingestion_audit.parquet"),
+            _audit_counters(colls)),
+        "report": write(result.missing_attributes_report(), "missing_attributes_report.parquet"),
+    })
+    result.audit_counts = _by_collection(colls, done["audit"])
 
 
 def format_summary(summary: Mapping[str, Any]) -> str:

@@ -64,6 +64,11 @@ def get_spark(app_name: str = "etl_pipeline_from_mongo_json_to_postgre_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # generated-class cache (a static conf, so it is set here and not
+        # in SESSION_CONFS): the default 100 entries thrash, and every
+        # warm pass of the iterative graph/k-means/dedup queries
+        # recompiled ~200 classes; 2000 keeps them all
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # codegen-heavy plans (multi-format casts) generate a lot of JIT
         # code over a long suite; keep the code cache from filling
         .config("spark.driver.extraJavaOptions",

@@ -471,3 +471,187 @@ def test_run_checks_mapping_types_against_app_type_mappings(spark):
     with pytest.raises(ConfigError, match="unsupported type 'date'"):
         pipeline.run(spark, {"events": [{"day": "2024-01-01"}]}, mapping,
                      app_config=app)
+
+
+def _job_ids(spark):
+    """Ids of every job the driver's status store knows, once the
+    listener bus has delivered all pending events."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    it = jsc.statusStore().jobsList(None).iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next().jobId())
+    return ids
+
+
+def test_pooled_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """Every job run() and write_run_parquet start, those of their pool
+    threads included, belongs to the caller's job group; summary()
+    after the write starts no job and equals the summary of a fresh,
+    unwritten run of the same input."""
+    sc = spark.sparkContext
+    group = "pipeline-run-under-test"
+    before = _job_ids(spark)
+    sc.setJobGroup(group, "run + write_run_parquet")
+    try:
+        res = pipeline.run(spark, INPUT, MAPPING, ingestion_date="2024-06-01")
+        pipeline.write_run_parquet(res, str(tmp_path / "out"))
+    finally:
+        sc._jsc.clearJobGroup()
+    started = _job_ids(spark) - before
+    assert len(started) >= len(res.data_frames) + 2  # data writes, audit, report
+    assert started == set(sc.statusTracker().getJobIdsForGroup(group))
+
+    before = _job_ids(spark)
+    written = res.summary()
+    assert _job_ids(spark) == before
+    fresh = pipeline.run(spark, INPUT, MAPPING, ingestion_date="2024-06-01")
+    assert written == fresh.summary()
+
+
+# five collections given out of order: carts is empty, deliveries
+# holds a document whose mapped attributes are an object and a list
+WIDE_MAPPING = {"collections": {
+    "events": {"target_table": "public.events", "object_id_attribute": "event_id",
+               "mappings": {"event_id": {"column": "event_id", "type": "integer"},
+                            "kind": {"column": "kind", "type": "text"}}},
+    "accounts": {"target_table": "public.accounts", "object_id_attribute": "account_id",
+                 "mappings": {"account_id": {"column": "account_id", "type": "integer"},
+                              "opened": {"column": "opened", "type": "date"}}},
+    "deliveries": {"target_table": "public.deliveries", "object_id_attribute": "delivery_id",
+                   "mappings": {"delivery_id": {"column": "delivery_id", "type": "integer"},
+                                "eta": {"column": "eta", "type": "date"}}},
+    "carts": {"target_table": "public.carts", "object_id_attribute": "cart_id",
+              "mappings": {"cart_id": {"column": "cart_id", "type": "integer"}}},
+    "books": {"target_table": "public.books", "object_id_attribute": "isbn",
+              "mappings": {"isbn": {"column": "isbn", "type": "text"},
+                           "price": {"column": "price", "type": "numeric"}}},
+}}
+WIDE_INPUT = {
+    "events": [{"event_id": 7, "kind": "click"}, {"event_id": 8}],
+    "deliveries": [{"delivery_id": 20, "eta": "2024-02-01"},
+                   {"delivery_id": {"id": 21}, "eta": [2024, 2, 2]}],
+    "carts": [],
+    "books": [{"isbn": "978-1", "price": "9.99"}],
+    "accounts": [{"account_id": 1, "opened": "2023-12-31"},
+                 {"account_id": 2, "opened": "2024-13-01"}],
+}
+WIDE_BAD_ID = '{"id":21}'  # the object_id attribute is an object
+WIDE_SUMMARY_COUNTS = {
+    "total_documents": 7,
+    "successful_documents": 5,
+    "documents_with_errors": 2,
+    "documents_with_missing_columns": 1,
+    "per_collection": {"accounts": {"processed": 2, "errors": 1},
+                       "books": {"processed": 1, "errors": 0},
+                       "deliveries": {"processed": 2, "errors": 1},
+                       "events": {"processed": 2, "errors": 0}},
+}
+WIDE_PARQUET = {
+    "data_accounts.parquet": (
+        "struct<account_id:int,opened:date,raw_json:string,"
+        "ingested_at:timestamp,source_collection:string,status:string>",
+        [(1, datetime.date(2023, 12, 31), '{"account_id": 1, "opened": "2023-12-31"}',
+          TS, "accounts", "success"),
+         (2, None, '{"account_id": 2, "opened": "2024-13-01"}', TS, "accounts", "error")],
+    ),
+    "data_books.parquet": (
+        "struct<isbn:string,price:decimal(38,18),raw_json:string,"
+        "ingested_at:timestamp,source_collection:string,status:string>",
+        [("978-1", Decimal("9.990000000000000000"), '{"isbn": "978-1", "price": "9.99"}',
+          TS, "books", "success")],
+    ),
+    "data_carts.parquet": (
+        "struct<cart_id:int,raw_json:string,ingested_at:timestamp,"
+        "source_collection:string,status:string>",
+        [],
+    ),
+    "data_deliveries.parquet": (
+        "struct<delivery_id:int,eta:date,raw_json:string,"
+        "ingested_at:timestamp,source_collection:string,status:string>",
+        [(20, datetime.date(2024, 2, 1), '{"delivery_id": 20, "eta": "2024-02-01"}',
+          TS, "deliveries", "success"),
+         (None, None, '{"delivery_id": {"id": 21}, "eta": [2024, 2, 2]}',
+          TS, "deliveries", "error")],
+    ),
+    "data_events.parquet": (
+        "struct<event_id:int,kind:string,raw_json:string,"
+        "ingested_at:timestamp,source_collection:string,status:string>",
+        [(7, "click", '{"event_id": 7, "kind": "click"}', TS, "events", "success"),
+         (8, None, '{"event_id": 8}', TS, "events", "success")],
+    ),
+    "ingestion_audit.parquet": (
+        GOLDEN_PARQUET["ingestion_audit.parquet"][0],
+        [(TS, "1", "accounts", "public.accounts", "NEW", [], "success"),
+         (TS, "2", "accounts", "public.accounts", "NEW", [], "error"),
+         (TS, "20", "deliveries", "public.deliveries", "NEW", [], "success"),
+         (TS, "7", "events", "public.events", "NEW", [], "success"),
+         (TS, "8", "events", "public.events", "NEW", ["kind"], "success"),
+         (TS, "978-1", "books", "public.books", "NEW", [], "success"),
+         (TS, WIDE_BAD_ID, "deliveries", "public.deliveries", "NEW", [], "error")],
+    ),
+    "missing_attributes_report.parquet": (
+        GOLDEN_PARQUET["missing_attributes_report.parquet"][0],
+        [(datetime.date(2024, 6, 1), "public.events", ["kind"])],
+    ),
+}
+
+
+def test_wide_run_keeps_collection_order_and_golden_outputs(spark, tmp_path):
+    """A run over five collections — one empty, one with a malformed
+    document — keeps data_frames and the audit union in sorted
+    collection order, and writes and reports the same values as a
+    sequential run would: literal rows and counts."""
+    res = pipeline.run(spark, WIDE_INPUT, WIDE_MAPPING, ingestion_date="2024-06-01")
+    assert list(res.data_frames) == ["accounts", "books", "carts", "deliveries", "events"]
+    assert [(r["source_collection"], r["object_id"]) for r in res.audit_df.collect()] == [
+        ("accounts", "1"), ("accounts", "2"), ("books", "978-1"),
+        ("deliveries", "20"), ("deliveries", WIDE_BAD_ID), ("events", "7"), ("events", "8"),
+    ]
+    out = str(tmp_path / "out")
+    pipeline.write_run_parquet(res, out)
+    assert sorted(os.listdir(out)) == sorted(WIDE_PARQUET)
+    for name, want in WIDE_PARQUET.items():
+        assert _parquet_values(spark, os.path.join(out, name)) == want, name
+    s = res.summary()
+    assert {k: s[k] for k in WIDE_SUMMARY_COUNTS} == WIDE_SUMMARY_COUNTS
+    assert s["object_statuses"] == {f"public.{c}": "NEW" for c in sorted(WIDE_INPUT)}
+
+
+def test_pooled_failure_propagates_with_its_type(spark, tmp_path):
+    """An error inside one collection's pooled data write leaves
+    write_run_parquet with the type a direct write of that frame
+    raises, and no pool thread is left alive."""
+    import threading
+
+    res = pipeline.run(spark, WIDE_INPUT, WIDE_MAPPING, ingestion_date="2024-06-01")
+    res.data_frames["deliveries"] = res.data_frames["deliveries"].withColumn(
+        "eta", F.raise_error(F.lit("unwritable delivery")))
+    with pytest.raises(Exception) as direct:
+        res.data_frames["deliveries"].write.parquet(str(tmp_path / "direct"))
+    with pytest.raises(Exception) as pooled:
+        pipeline.write_run_parquet(res, str(tmp_path / "out"))
+    assert type(pooled.value) is type(direct.value)
+    assert "unwritable delivery" in str(pooled.value)
+    assert res.audit_counts is None
+    assert not [t for t in threading.enumerate() if t.name.startswith("etl-collection")]
+
+
+def test_stored_enriched_blocks_can_spill(spark, tmp_path):
+    """After write_run_parquet every stored RDD that backs a run's
+    enriched frames has a storage level that may use disk: concurrent
+    writes keep several collections' blocks in flight at once. Every
+    non-empty collection has stored blocks; the empty one stores none."""
+    res = pipeline.run(spark, WIDE_INPUT, WIDE_MAPPING, ingestion_date="2024-06-01")
+    pipeline.write_run_parquet(res, str(tmp_path / "out"))
+    backing = {}  # checkpointed RDD id -> collection
+    for coll, df in res.data_frames.items():
+        leaves = df._jdf.queryExecution().logical().collectLeaves()
+        leaf = leaves.apply(0)
+        assert leaves.length() == 1 and leaf.getClass().getSimpleName() == "LogicalRDD"
+        backing[leaf.rdd().id()] = coll
+    stored = {info.id(): info for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+              if info.id() in backing}
+    assert sorted(backing[i] for i in stored) == ["accounts", "books", "deliveries", "events"]
+    assert all(info.storageLevel().useDisk() for info in stored.values())
