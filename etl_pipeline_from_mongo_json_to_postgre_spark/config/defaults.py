@@ -52,8 +52,9 @@ SUPPORTED_TYPES = frozenset(DEFAULT_TYPE_MAPPINGS)
 BUSINESS_COLUMNS = ("ingested_at", "source_collection", "status")
 RAW_JSON_COLUMN_DEFAULT = "raw_json"
 
-# Reserved destination column names (reference: ui/mapping_editor.py:506-554)
-RESERVED_COLUMNS = frozenset({"raw_json", "ingested_at", "source_collection", "status"})
+# Columns the engine stamps onto every target table; user mappings may
+# not claim them (reference ui/mapping_editor.py:505-554).
+RESERVED_COLUMNS = ("raw_json", "ingested_at", "source_collection", "status")
 
 # reference: config/app_config.yaml:56-76 and sql/schema.sql:25-33
 AUDIT_SCHEMA = "doc_audit"

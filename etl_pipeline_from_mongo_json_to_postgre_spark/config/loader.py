@@ -14,7 +14,7 @@ import os
 from typing import Any
 
 from ..errors import ConfigError
-from .defaults import SUPPORTED_TYPES, default_app_config
+from .defaults import RESERVED_COLUMNS, SUPPORTED_TYPES, default_app_config
 
 try:
     import yaml  # PyYAML ships with pyspark images; gate anyway
@@ -79,11 +79,6 @@ def validate_app_config(config: dict) -> dict:
         raise ConfigError("runtime.type_mappings must be a non-empty mapping")
     runtime["type_mappings"] = {normalize_type(k): v for k, v in tm.items()}
     return merged
-
-
-# Columns the engine stamps onto every target table; user mappings may
-# not claim them (reference ui/mapping_editor.py:505-507).
-RESERVED_COLUMNS = ("raw_json", "ingested_at", "source_collection", "status")
 
 
 def resolve_duplicate_columns(

@@ -21,25 +21,10 @@ from pyspark.sql import functions as F
 
 from ..config.defaults import DEFAULT_DATE_FORMATS
 from ..config.loader import normalize_type
-from .datetime_fmt import has_time_component, strptime_to_java, strptime_to_regex
+from .datetime_fmt import strptime_to_java, strptime_to_regex
 
 TRUTHY = ("true", "t", "yes", "y", "1")
 FALSY = ("false", "f", "no", "n", "0")
-
-
-def _try_cast(col: Column, dtype: str) -> Column:
-    """NULL-on-failure cast independent of spark.sql.ansi.enabled."""
-    try:
-        return col.try_cast(dtype)  # Spark >= 4.0 / 3.5 Column API
-    except AttributeError:  # pragma: no cover - older Spark
-        return col.cast(dtype)
-
-
-def try_to_timestamp(col: Column, java_fmt: str) -> Column:
-    try:
-        return F.try_to_timestamp(col, F.lit(java_fmt))
-    except AttributeError:  # pragma: no cover - older Spark
-        return F.to_timestamp(col, java_fmt)
 
 
 def multi_format_timestamp(col: Column, formats: list[str] | None = None) -> Column:
@@ -53,7 +38,8 @@ def multi_format_timestamp(col: Column, formats: list[str] | None = None) -> Col
     """
     formats = formats or DEFAULT_DATE_FORMATS
     attempts = [
-        F.when(col.rlike(strptime_to_regex(f)), try_to_timestamp(col, strptime_to_java(f)))
+        F.when(col.rlike(strptime_to_regex(f)),
+               F.try_to_timestamp(col, F.lit(strptime_to_java(f))))
         for f in formats
     ]
     return F.coalesce(*attempts)
@@ -74,7 +60,7 @@ def normalize_boolean(col: Column) -> Column:
     strips ALL whitespace (tabs, newlines, ...), so trim via regex —
     found by the hypothesis property test."""
     norm = F.lower(F.regexp_replace(col.cast("string"), r"^\s+|\s+$", ""))
-    as_num = _try_cast(norm, "double")
+    as_num = norm.try_cast("double")
     return (
         F.when(norm.isin(*TRUTHY), F.lit(True))
         .when(norm.isin(*FALSY), F.lit(False))
@@ -90,8 +76,8 @@ def cast_integer(col: Column, dtype: str = "int") -> Column:
     """
     # decimal -> integral cast already truncates toward zero in Spark,
     # and try_cast NULLs on overflow; one decimal parse per value.
-    as_dec = _try_cast(F.trim(col.cast("string")), "decimal(38,18)")
-    return _try_cast(as_dec, dtype)
+    as_dec = F.trim(col.cast("string")).try_cast("decimal(38,18)")
+    return as_dec.try_cast(dtype)
 
 
 # type name -> (value_expr_builder, spark_sql_type)
@@ -111,14 +97,14 @@ register_type(["smallint"], "smallint", lambda c, _: cast_integer(c, "smallint")
 register_type(
     ["float", "double", "double precision"],
     "double",
-    lambda c, _: _try_cast(F.trim(c.cast("string")), "double"),
+    lambda c, _: F.trim(c.cast("string")).try_cast("double"),
 )
 register_type(
     ["numeric", "decimal"],
     "decimal(38,18)",
     # Decimal(str(value)) — through string to avoid float artifacts
     # (reference transformer.py:62-63)
-    lambda c, _: _try_cast(F.trim(c.cast("string")), "decimal(38,18)"),
+    lambda c, _: F.trim(c.cast("string")).try_cast("decimal(38,18)"),
 )
 register_type(["boolean", "bool"], "boolean", lambda c, _: normalize_boolean(c))
 register_type(

@@ -19,12 +19,15 @@ that is the Column building, analysis and physical planning of its
 enriched frame (``enrich_collection`` -> ``localCheckpoint`` ->
 ``split_enriched``); config validation, the static analysis and
 ``MappingPlan.from_config`` stay sequential, so config errors surface
-before any thread starts. ``write_run_parquet`` writes the data frames
+before any thread starts. Both sinks write through one path,
+``_write_run``: ``write_run_parquet`` and ``write_run_jdbc`` only map
+each output name to a file or a table. The data frames are written
 concurrently first: each data write is the first sink of its
 collection and stores its enriched rows. Only then do the audit write
-and the missing-attributes report run (together), so both read stored
-rows and no document is parsed twice. Pool threads inherit the
-caller's job group and local properties and set no session conf.
+and both reports run (together), so they read stored rows and no
+document is parsed twice; JDBC writes run concurrently the same way.
+Pool threads inherit the caller's job group and local properties and
+set no session conf.
 
 Static-analysis phase parity (pipeline.py:43-92): expected-vs-input
 collection diff, schema.sql table scan, table lookups, ingestion-date
@@ -33,10 +36,10 @@ skip, NEW/MISSING/ALREADY_EXISTS object status, DDL-on-demand (JDBC
 mode). Summary parity (reporting.py:36-95): the PipelineReport counters
 are per-collection processed, error and missing-column counts, summed
 on the driver for the run totals — no mutable driver-side
-accumulation. A parquet write collects them inside the audit write job
-(an ``Observation``), so ``summary()`` after it starts no Spark job;
-without one (no write yet, or the JDBC sink) ``summary()`` runs the
-same counts as one aggregation over the stored audit rows.
+accumulation. Either sink collects them inside the audit write job
+(an ``Observation``), so ``summary()`` after a write starts no Spark
+job; before any write ``summary()`` runs the same counts as one
+aggregation over the audit frame.
 
 Failure-isolation semantics (SURVEY §7 hard-part #2): the reference
 rolls back individual failed INSERTs and continues (pipeline.py:238-249).
@@ -57,11 +60,13 @@ from dataclasses import dataclass, field
 from functools import partial
 from typing import Any, Callable, Mapping
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from .config.defaults import (
+    AUDIT_SCHEMA,
+    AUDIT_TABLE,
     OBJECT_STATUS_ALREADY_EXISTS,
     OBJECT_STATUS_MISSING,
     OBJECT_STATUS_NEW,
@@ -163,17 +168,22 @@ class RunResult:
     # (reference ui/mapping_editor.py:527-554); the backend run report
     # carries them so non-interactive callers see where data landed.
     rename_maps: dict[str, dict[str, str]] = field(default_factory=dict)
-    # collection -> {processed, errors, missing}, collected by the audit
-    # write of write_run_parquet; None until such a write has run
+    # collection -> {processed, errors, missing}, observed by the audit
+    # write of write_run_parquet or write_run_jdbc; None until one has run
     audit_counts: dict[str, dict[str, int]] | None = None
 
     def missing_collections_report(self, spark: SparkSession) -> DataFrame:
         """(ingestion_date, object_name, object_status) — reference
-        ui/run_pipeline.py:413-421."""
-        rows = [(self.ingestion_date, n, s) for n, s in sorted(self.object_statuses.items())]
-        df = spark.createDataFrame(
-            rows or [], "ingestion_date string, object_name string, object_status string"
-        )
+        ui/run_pipeline.py:413-421. Built from an Arrow table, a local
+        table scan: writing it starts no Python worker."""
+        import pyarrow as pa
+
+        items = sorted(self.object_statuses.items())
+        df = spark.createDataFrame(pa.table({
+            "ingestion_date": pa.array([self.ingestion_date] * len(items), pa.string()),
+            "object_name": pa.array([n for n, _ in items], pa.string()),
+            "object_status": pa.array([s for _, s in items], pa.string()),
+        }))
         return df.withColumn("ingestion_date", F.col("ingestion_date").cast("date"))
 
     def missing_attributes_report(self) -> DataFrame:
@@ -200,9 +210,9 @@ class RunResult:
     def summary(self) -> dict[str, Any]:
         """KPI + per-collection metrics (reference reporting.py:36-95):
         per-collection counts, whose sums on the driver are the KPI
-        totals. After write_run_parquet they are the counters its audit
-        write collected (no Spark job); otherwise one aggregation over
-        the audit frame computes the same counters."""
+        totals. After either sink's write they are the counters its
+        audit write observed (no Spark job); before any write one
+        aggregation over the audit frame computes the same counters."""
         counts = self.audit_counts
         if counts is None:
             colls = sorted(self.data_frames)
@@ -281,7 +291,7 @@ def run(
     # --- static analysis phase (reference pipeline.py:43-92) ---
     schema_tables = load_schema_tables(runtime.get("schema_path", ""))
     audit_schema = (audit_cfg.get("audit_schema") or "").lower()
-    audit_table = normalize_table_name(audit_cfg.get("audit_table", "doc_audit.ingestion_audit"))
+    audit_table = normalize_table_name(audit_cfg.get("audit_table", AUDIT_TABLE))
     schema_tables_no_audit = {
         t for t in schema_tables
         if t != audit_table and not (audit_schema and t.startswith(audit_schema + "."))
@@ -391,49 +401,72 @@ def run(
     )
 
 
+def _observe(df: DataFrame, metrics: Mapping[str, Column]) -> tuple[DataFrame, Observation]:
+    """``df`` observed by a new Observation of ``rows_written`` plus
+    ``metrics`` (name -> aggregate Column): the aggregates ride the
+    tasks of whatever action runs the returned frame."""
+    obs = Observation("write_metrics")
+    return df.observe(obs, F.count(F.lit(1)).alias("rows_written"),
+                      *[c.alias(n) for n, c in metrics.items()]), obs
+
+
+def _write_run(result: RunResult, write: Callable[[DataFrame, str], None]) -> None:
+    """Write a run's outputs through ``write(df, name)``, which writes
+    one named output in the sink's format: ``data_<collection>`` per
+    collection, ``ingestion_audit``, ``missing_attributes_report`` and
+    ``missing_collections_report``. The data writes run concurrently
+    first, each storing its collection's enriched rows; then the audit
+    write and both reports run together over the stored rows. The
+    audit write's Observation sets ``result.audit_counts``; it is read
+    only after that write returns, so a failed write raises as it is."""
+    spark = result.audit_df.sparkSession
+    _concurrently(spark, {c: partial(write, df, f"data_{c}")
+                          for c, df in result.data_frames.items()})
+    colls = sorted(result.data_frames)
+    audit, obs = _observe(result.audit_df, _audit_counters(colls))
+
+    def write_audit() -> dict:
+        write(audit, "ingestion_audit")
+        return obs.get
+
+    done = _concurrently(spark, {
+        "ingestion_audit": write_audit,
+        "missing_attributes_report": partial(
+            write, result.missing_attributes_report(), "missing_attributes_report"),
+        "missing_collections_report": partial(
+            write, result.missing_collections_report(spark), "missing_collections_report"),
+    })
+    result.audit_counts = _by_collection(colls, done["ingestion_audit"])
+
+
 def write_run_jdbc(spark: SparkSession, result: RunResult) -> None:
-    """Sink a run into Postgres: DDL bootstrap + batched appends
-    (reference pipeline.py:94-101 connect/DDL + per-doc inserts,
-    re-expressed as 1 bootstrap + N partition-parallel writes). The
+    """Sink a run into Postgres: one DDL bootstrap that creates every
+    table the run writes (the configured audit table included), then
+    the run's outputs as partition-parallel batched appends
+    (reference pipeline.py:94-101 connect/DDL + per-doc inserts). The
     DDL comes from the run's own plans (renamed columns included) and
     its runtime.type_mappings; write_table serializes array columns."""
     from .sinks import jdbc
 
     app = result.app_config
-    db = app["database"]
-    jdbc.bootstrap_destination(spark, db, result.plans.values(),
-                               app["runtime"]["type_mappings"])
-    for coll, df in result.data_frames.items():
-        jdbc.write_table(df, result.target_tables[coll], db)
-    jdbc.write_table(result.audit_df, app["audit"]["audit_table"], db)
-    jdbc.write_table(result.missing_collections_report(spark),
-                     "doc_audit.missing_collections_report", db)
-    jdbc.write_table(result.missing_attributes_report(),
-                     "doc_audit.missing_attributes_report", db)
+    db, audit_table = app["database"], app["audit"]["audit_table"]
+    tables = {f"data_{c}": t for c, t in result.target_tables.items()}
+    tables["ingestion_audit"] = audit_table
+    for report in ("missing_attributes_report", "missing_collections_report"):
+        tables[report] = f"{AUDIT_SCHEMA}.{report}"
+    jdbc.execute_statements(spark, db, jdbc.audit_bootstrap_ddl(audit_table=audit_table) + [
+        jdbc.create_table_ddl(p.target_table,
+                              jdbc.table_columns_from_plan(p, app["runtime"]["type_mappings"]))
+        for p in result.plans.values()
+    ])
+    _write_run(result, lambda df, name: jdbc.write_table(df, tables[name], db))
 
 
 def write_run_parquet(result: RunResult, out_dir: str) -> None:
-    """DB-less sink: destination + audit + report frames as parquet
-    (the engine's native staging format; JDBC is a swap-in).
-
-    The data writes run concurrently, one per collection, and store the
-    enriched rows; then the audit write and the missing-attributes
-    report run together over the stored rows. The audit write collects
-    the run's counters, which ``summary()`` then returns."""
-    def write(df: DataFrame, name: str) -> Callable[[], None]:
-        return lambda: df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-
-    spark = result.audit_df.sparkSession
-    _concurrently(spark, {c: write(df, f"data_{c}.parquet")
-                          for c, df in result.data_frames.items()})
-    colls = sorted(result.data_frames)
-    done = _concurrently(spark, {
-        "audit": lambda: write_with_metrics(
-            result.audit_df, os.path.join(out_dir, "ingestion_audit.parquet"),
-            _audit_counters(colls)),
-        "report": write(result.missing_attributes_report(), "missing_attributes_report.parquet"),
-    })
-    result.audit_counts = _by_collection(colls, done["audit"])
+    """DB-less sink: the run's outputs as ``<out_dir>/<name>.parquet``
+    (the engine's native staging format; JDBC is a swap-in)."""
+    _write_run(result, lambda df, name: df.write.mode("overwrite").parquet(
+        os.path.join(out_dir, f"{name}.parquet")))
 
 
 def format_summary(summary: Mapping[str, Any]) -> str:
@@ -481,12 +514,6 @@ def write_with_metrics(df: DataFrame, path: str,
     a ``rows_written`` count is always included. Returns the collected
     metric dict after the write completes.
     """
-    from pyspark.sql import Observation
-
-    obs = Observation("write_metrics")
-    agg_cols = [F.count(F.lit(1)).alias("rows_written")]
-    for name, col in (metrics or {}).items():
-        agg_cols.append(col.alias(name))
-    observed = df.observe(obs, *agg_cols)
+    observed, obs = _observe(df, metrics or {})
     observed.write.mode("overwrite").parquet(path)
     return dict(obs.get)

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..config.defaults import DEFAULT_DATE_FORMATS
 from ..config.loader import normalize_type
-from ..functions.casts import build_cast, spark_type_for
+from ..functions.casts import build_cast, cast_error, spark_type_for
 
 # compiled-Column cache: plan-spec fingerprint -> apply()'s expression
 # bundle (see MappingPlan._build_columns); bounded, cleared wholesale
@@ -149,13 +149,11 @@ class MappingPlan:
         errors = F.filter(
             F.array(
                 parse_error,
+                # an absent key looks up NULL, so a non-NULL source
+                # implies the document has the attribute
                 *[
-                    F.when(
-                        F.array_contains(F.col("__keys"), a.source_attr)
-                        & F.col(src[a.column]).isNotNull()
-                        & F.col(a.column).isNull(),
-                        F.lit(f"{a.source_attr}: invalid {a.logical_type} value"),
-                    )
+                    cast_error(F.col(src[a.column]), F.col(a.column),
+                               a.source_attr, a.logical_type)
                     for a in self.attributes
                 ]
             ),

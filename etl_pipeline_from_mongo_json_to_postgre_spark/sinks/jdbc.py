@@ -12,9 +12,10 @@ connection.
 
 Scale notes (100 TB target):
 - writes are per-partition transactions; `num_partitions` bounds the
-  concurrent Postgres connections (default 32 — one per local core;
+  Postgres connections of one write (default 32 — one per local core;
   on a cluster size it to the DB's connection budget, not the
-  executor count).
+  executor count). A run's writes go concurrently, so the run as a
+  whole holds at most one connection per task slot.
 - `batchsize` 10_000 amortizes network round-trips; `rewriteBatchedInserts`
   turns executeBatch into multi-row INSERTs server-side.
 - `stringtype=unspecified` lets Postgres re-parse strings into JSONB /
@@ -43,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config.defaults import (
     AUDIT_SCHEMA,
+    AUDIT_TABLE,
     BUSINESS_COLUMNS,
     DEFAULT_TYPE_MAPPINGS,
     RAW_JSON_COLUMN_DEFAULT,
@@ -174,12 +176,13 @@ def table_columns_from_plan(
     return columns
 
 
-def audit_bootstrap_ddl(schema: str = AUDIT_SCHEMA) -> list[str]:
-    """Audit schema + three audit/report tables
+def audit_bootstrap_ddl(schema: str = AUDIT_SCHEMA, audit_table: str = AUDIT_TABLE) -> list[str]:
+    """Audit schema (and ``audit_table``'s, when another) + the audit
+    table and the two report tables in ``schema``
     (reference sql/schema.sql:23-45, etl_pipeline/pipeline.py:311-338)."""
-    return [
-        create_schema_ddl(schema),
-        create_table_ddl(f"{schema}.ingestion_audit", [
+    schemas = dict.fromkeys([schema.lower(), split_table_name(audit_table)[0]])
+    return [create_schema_ddl(s) for s in schemas] + [
+        create_table_ddl(audit_table, [
             {"name": "ingested_at", "type": "TIMESTAMP WITH TIME ZONE", "not_null": True},
             {"name": "object_id", "type": "TEXT"},
             {"name": "source_collection", "type": "TEXT"},
@@ -275,10 +278,13 @@ def write_table(
     """Partition-parallel batched JDBC write (replaces the reference's
     per-row INSERT + per-document COMMIT, postgres_loader.py:63-77).
 
-    ``num_partitions`` caps concurrent DB connections; each partition is
-    one transaction, so a task failure rolls back only its batch —
-    row-level isolation is handled *before* the write by routing
-    invalid rows to the audit frame (SURVEY §7 hard-part #2).
+    ``num_partitions`` caps the DB connections of this one write; each
+    partition is one transaction, so a task failure rolls back only
+    its batch — row-level isolation is handled *before* the write by
+    routing invalid rows to the audit frame (SURVEY §7 hard-part #2).
+    A pipeline run issues several writes at once (``write_run_jdbc``),
+    so its open connections are bounded by the cluster's task slots,
+    not by ``num_partitions``.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import ArrayType, MapType, StructType
@@ -292,7 +298,9 @@ def write_table(
     for field in df.schema.fields:
         if isinstance(field.dataType, (ArrayType, MapType, StructType)):
             df = df.withColumn(field.name, F.to_json(field.name))
-    if num_partitions is not None and df.rdd.getNumPartitions() > num_partitions:
+    if num_partitions is not None:
+        # coalesce never raises the partition count; asking for the
+        # count first would run a grouped frame's shuffle map stage twice
         df = df.coalesce(num_partitions)
     writer = df.write.format("jdbc").mode(mode)
     for key, value in jdbc_options(db_config, table_name, batchsize).items():
@@ -328,19 +336,3 @@ def execute_statements(
     finally:
         conn.close()
 
-
-def bootstrap_destination(
-    spark: SparkSession,
-    db_config: Mapping[str, Any],
-    plans: Iterable[MappingPlan],
-    type_mappings: Mapping[str, str] | None = None,
-) -> list[str]:
-    """Full DDL bootstrap: audit schema + one table per plan. Returns the
-    executed statements (callers/tests can inspect them without a DB)."""
-    statements = audit_bootstrap_ddl()
-    for plan in plans:
-        statements.append(
-            create_table_ddl(plan.target_table, table_columns_from_plan(plan, type_mappings))
-        )
-    execute_statements(spark, db_config, statements)
-    return statements

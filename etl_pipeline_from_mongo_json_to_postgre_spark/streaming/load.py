@@ -32,14 +32,12 @@ from collections.abc import Callable, Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config.defaults import OBJECT_STATUS_NEW
+from ..config.defaults import AUDIT_TABLE, OBJECT_STATUS_NEW
 from ..operators.transform import enrich_collection, split_enriched
 from ..plans.mapping_plan import MappingPlan
 from ..sinks.jdbc import write_table
 from ..sources.parquet import load_table
 from .harness import staged_stream
-
-AUDIT_TABLE = "doc_audit.ingestion_audit"
 
 BatchWriter = Callable[[DataFrame, DataFrame, int], None]
 

@@ -17,11 +17,16 @@ reach. Reference behavior matched: etl_pipeline/postgres_loader.py
 """
 
 import datetime
+import os
+from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
+from etl_pipeline_from_mongo_json_to_postgre_spark import pipeline
 from etl_pipeline_from_mongo_json_to_postgre_spark.errors import LoadError
 from etl_pipeline_from_mongo_json_to_postgre_spark.sinks import jdbc
+from tests.test_pipeline_run import INPUT, MAPPING, _job_ids
 
 
 def _derby_config(tmp_path, name="etl_live"):
@@ -98,6 +103,88 @@ def test_execute_statements_ddl_and_constraint(spark, db):
         .option("dbtable", jdbc.qualified_identifier("strict_t")).load()
     )
     assert [(r.id, r.name) for r in back.collect()] == [(7, "y")]
+
+
+def _read_jdbc(spark, db, table):
+    return (
+        spark.read.format("jdbc")
+        .option("url", db["url"]).option("driver", db["driver"])
+        .option("dbtable", jdbc.qualified_identifier(table)).load()
+    )
+
+
+def test_write_table_runs_a_grouped_frame_once(spark, db):
+    """write_table starts the jobs a plain write of the same grouped
+    frame starts: its shuffle map stage is not run a second time to
+    count partitions."""
+    grouped = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).agg(
+        F.sort_array(F.collect_list("id")).alias("ids"))
+    before = _job_ids(spark)
+    grouped.write.format("noop").mode("overwrite").save()
+    plain = len(_job_ids(spark) - before)
+    before = _job_ids(spark)
+    jdbc.write_table(grouped, "grouped_t", db)
+    assert len(_job_ids(spark) - before) == plain
+    assert _read_jdbc(spark, db, "grouped_t").count() == 7
+
+
+def _normalized(row):
+    """A row's values, comparable across sinks: decimals without their
+    scale (Derby caps it at 5), lists as tuples."""
+    def norm(v):
+        if isinstance(v, Decimal):
+            return v.normalize()
+        if isinstance(v, list):
+            return tuple(v)
+        return v
+    return tuple(norm(v) for v in row)
+
+
+# parquet output -> the table the JDBC sink writes it to
+SINK_OUTPUTS = {
+    "data_customers.parquet": "public.customers",
+    "data_orders.parquet": "public.orders",
+    "ingestion_audit.parquet": "doc_audit.ingestion_audit",
+    "missing_attributes_report.parquet": "doc_audit.missing_attributes_report",
+    "missing_collections_report.parquet": "doc_audit.missing_collections_report",
+}
+
+
+def test_parquet_and_jdbc_sinks_write_the_same_outputs(spark, db, tmp_path, monkeypatch):
+    """One run written by both sinks: the same outputs, holding the
+    same rows; summary() after the JDBC write starts no Spark job and
+    equals the summary of an unwritten run. Derby has no JSONB or
+    TIMESTAMPTZ, so the bootstrap only creates its schemas here and
+    the writes create the tables."""
+    execute = jdbc.execute_statements
+    monkeypatch.setattr(jdbc, "execute_statements", lambda spark, cfg, stmts: execute(
+        spark, cfg, [s.replace(" IF NOT EXISTS", "") for s in stmts
+                     if s.startswith("CREATE SCHEMA")]))
+    tables = []
+    write_table = jdbc.write_table
+    monkeypatch.setattr(jdbc, "write_table", lambda df, table, cfg, **kw: (
+        tables.append(table), write_table(df, table, cfg, **kw)))
+
+    res = pipeline.run(spark, INPUT, MAPPING, app_config={"database": db},
+                       ingestion_date="2024-06-01")
+    pipeline.write_run_jdbc(spark, res)
+    before = _job_ids(spark)
+    summary = res.summary()
+    assert _job_ids(spark) == before
+    assert summary == pipeline.run(spark, INPUT, MAPPING, ingestion_date="2024-06-01").summary()
+
+    out = tmp_path / "out"
+    pipeline.write_run_parquet(res, str(out))
+    assert sorted(os.listdir(out)) == sorted(SINK_OUTPUTS)
+    assert sorted(tables) == sorted(SINK_OUTPUTS.values())
+    for name, table in SINK_OUTPUTS.items():
+        want = spark.read.parquet(str(out / name))
+        got = _read_jdbc(spark, db, table).select(*want.columns)
+        if "missing_columns" in got.columns:
+            got = got.withColumn("missing_columns",
+                                 F.from_json("missing_columns", "array<string>"))
+        assert sorted(map(_normalized, got.collect()), key=repr) == sorted(
+            map(_normalized, want.collect()), key=repr), name
 
 
 def test_jdbc_options_derby_omits_pg_only_properties(tmp_path):

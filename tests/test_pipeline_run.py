@@ -226,6 +226,12 @@ GOLDEN_PARQUET = {
         "struct<ingestion_date:date,object_name:string,missing_columns:array<string>>",
         [(datetime.date(2024, 6, 1), "public.customers", ["signup_date"])],
     ),
+    "missing_collections_report.parquet": (
+        "struct<ingestion_date:date,object_name:string,object_status:string>",
+        [(datetime.date(2024, 6, 1), "public.customers", "MISSING"),
+         (datetime.date(2024, 6, 1), "public.legacy_widgets", "MISSING"),
+         (datetime.date(2024, 6, 1), "public.orders", "ALREADY_EXISTS")],
+    ),
 }
 
 
@@ -431,18 +437,29 @@ TICKETS = {
 }
 
 
-def test_write_run_jdbc_uses_the_runs_plans(spark, monkeypatch):
-    """The JDBC sink builds its DDL from the plans run() built —
-    renamed columns included — with the app's runtime.type_mappings,
-    and writes the run's frames as they are (array columns are left
-    to write_table to serialize)."""
+def _stub_jdbc(monkeypatch):
+    """Record the JDBC sink's DDL statements and written frames; each
+    write runs its frame (to a noop sink), as a real write would."""
     from etl_pipeline_from_mongo_json_to_postgre_spark.sinks import jdbc
 
     statements, writes = [], {}
     monkeypatch.setattr(jdbc, "execute_statements",
                         lambda spark, db, stmts: statements.extend(stmts))
-    monkeypatch.setattr(jdbc, "write_table",
-                        lambda df, table, db, **kw: writes.update({table: df}))
+
+    def write_table(df, table, db, **kw):
+        writes[table] = df
+        df.write.format("noop").mode("overwrite").save()
+
+    monkeypatch.setattr(jdbc, "write_table", write_table)
+    return statements, writes
+
+
+def test_write_run_jdbc_uses_the_runs_plans(spark, monkeypatch):
+    """The JDBC sink builds its DDL from the plans run() built —
+    renamed columns included — with the app's runtime.type_mappings,
+    and writes the run's frames as they are (array columns are left
+    to write_table to serialize)."""
+    statements, writes = _stub_jdbc(monkeypatch)
     app = {"runtime": {"type_mappings": {"integer": "BIGINT",
                                          "text": "VARCHAR(32)"}}}
     res = pipeline.run(spark, {"tickets": [{"id": 1, "state": "open"}]},
@@ -457,6 +474,25 @@ def test_write_run_jdbc_uses_the_runs_plans(spark, monkeypatch):
     assert {"id", "status1", "status"} <= set(writes["public.tickets"].columns)
     audit = writes["doc_audit.ingestion_audit"]
     assert dict(audit.dtypes)["missing_columns"] == "array<string>"
+
+
+def test_write_run_jdbc_creates_the_configured_audit_table(spark, monkeypatch):
+    """The DDL bootstrap creates the audit table the app config names,
+    with its schema, and the audit frame is written to that table."""
+    from etl_pipeline_from_mongo_json_to_postgre_spark.sinks import jdbc
+
+    statements, writes = _stub_jdbc(monkeypatch)
+    res = pipeline.run(spark, INPUT, MAPPING, ingestion_date="2024-06-01",
+                       app_config={"audit": {"audit_table": "audit_x.runs"}})
+    pipeline.write_run_jdbc(spark, res)
+
+    assert 'CREATE SCHEMA IF NOT EXISTS "audit_x"' in statements
+    assert [s for s in statements if '"audit_x"."runs"' in s][0].startswith(
+        'CREATE TABLE IF NOT EXISTS "audit_x"."runs" ("ingested_at"')
+    assert writes["audit_x.runs"].count() == 5
+    assert "doc_audit.ingestion_audit" not in writes
+    created = {s.split()[5] for s in statements if s.startswith("CREATE TABLE")}
+    assert created == {jdbc.qualified_identifier(t) for t in writes}
 
 
 def test_run_checks_mapping_types_against_app_type_mappings(spark):
@@ -594,6 +630,11 @@ WIDE_PARQUET = {
     "missing_attributes_report.parquet": (
         GOLDEN_PARQUET["missing_attributes_report.parquet"][0],
         [(datetime.date(2024, 6, 1), "public.events", ["kind"])],
+    ),
+    "missing_collections_report.parquet": (
+        GOLDEN_PARQUET["missing_collections_report.parquet"][0],
+        [(datetime.date(2024, 6, 1), f"public.{c}", "NEW")
+         for c in ("accounts", "books", "carts", "deliveries", "events")],
     ),
 }
 
