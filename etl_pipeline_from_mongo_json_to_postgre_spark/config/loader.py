@@ -14,17 +14,19 @@ import os
 from typing import Any
 
 from ..errors import ConfigError
-from .defaults import RESERVED_COLUMNS, SUPPORTED_TYPES, default_app_config
+from ..functions.casts import SUPPORTED_TYPES, normalize_type
+from .defaults import (
+    AUDIT_VALUES,
+    BUSINESS_COLUMNS,
+    RAW_JSON,
+    default_app_config,
+    reserved_columns,
+)
 
 try:
     import yaml  # PyYAML ships with pyspark images; gate anyway
 except ImportError:  # pragma: no cover
     yaml = None
-
-
-def normalize_type(type_name: str) -> str:
-    """Lowercase/strip a logical type name (reference type_utils.py:1-6)."""
-    return str(type_name).strip().lower()
 
 
 def load_config(path: str) -> dict:
@@ -59,12 +61,14 @@ def validate_app_config(config: dict) -> dict:
     """Validate app config; fill defaults for missing runtime knobs.
 
     Parity: reference config_loader.py:36-123 (required sections,
-    date-format list non-empty, type-mapping closure).
+    date-format list non-empty, type-mapping closure). Unread keys
+    (``logging``, output formats, admin database) are ignored; audit
+    status values other than the ones the engine writes are an error.
     """
     if not isinstance(config, dict):
         raise ConfigError("app config must be a mapping")
     merged = default_app_config()
-    for section in ("database", "runtime", "audit", "logging"):
+    for section in merged:
         sec = config.get(section)
         if sec is not None:
             if not isinstance(sec, dict):
@@ -78,11 +82,26 @@ def validate_app_config(config: dict) -> dict:
     if not isinstance(tm, dict) or not tm:
         raise ConfigError("runtime.type_mappings must be a non-empty mapping")
     runtime["type_mappings"] = {normalize_type(k): v for k, v in tm.items()}
+    audit = merged["audit"]
+    for key in ("audit_schema", "audit_table"):
+        _nonempty_name(audit[key], f"audit.{key}")
+    for key, engine in AUDIT_VALUES.items():
+        given = audit.get(key, engine)
+        if not isinstance(given, dict) or any(engine.get(k) != v for k, v in given.items()):
+            raise ConfigError(
+                f"audit.{key} must restate the values the engine writes, "
+                f"{engine}; got {given!r}")
     return merged
 
 
+def _nonempty_name(value: Any, ctx: str) -> str:
+    if not isinstance(value, str) or not value.strip():
+        raise ConfigError(f"{ctx} must be a non-empty string, got {value!r}")
+    return value
+
+
 def resolve_duplicate_columns(
-    columns: list[str], reserved: tuple[str, ...] = RESERVED_COLUMNS
+    columns: list[str], reserved: tuple[str, ...] = reserved_columns()
 ) -> tuple[list[str], dict[str, str]]:
     """Auto-rename target columns that collide (case-insensitively) with
     reserved columns or earlier targets: append a counter starting at 1
@@ -118,6 +137,9 @@ def validate_mapping_config(
     ``{collection: {target_table, raw_json_column?, object_id_attribute?,
     mappings: {source_attr: {column, type}}}}``.
 
+    ``raw_json_column`` (default ``raw_json``) may not be a business
+    column; it and the business columns are the reserved names.
+
     Parity: reference config_loader.py:126-171 (every mapping needs
     column+type; every type supported and present in type_mappings).
     Target columns that collide with reserved columns or each other are
@@ -152,13 +174,21 @@ def validate_mapping_config(
         mappings = _require(spec, "mappings", f"collection '{coll}'")
         if not isinstance(mappings, dict) or not mappings:
             raise ConfigError(f"collection '{coll}' has no attribute mappings")
-        seen_cols = {c.lower() for c in RESERVED_COLUMNS}
+        raw_column = _nonempty_name(spec.get("raw_json_column", RAW_JSON),
+                                    f"collection '{coll}' raw_json_column")
+        if raw_column.lower() in BUSINESS_COLUMNS:
+            raise ConfigError(
+                f"collection '{coll}' raw_json_column '{raw_column}' is a business "
+                f"column (reserved: {BUSINESS_COLUMNS})")
+        reserved = reserved_columns(raw_column)
+        seen_cols = {c.lower() for c in reserved}
         norm_mappings: dict[str, dict] = {}
         rename_map: dict[str, str] = {}
         for attr, m in mappings.items():
             if not isinstance(m, dict):
                 raise ConfigError(f"mapping '{coll}.{attr}' must be a mapping")
-            column = str(_require(m, "column", f"mapping '{coll}.{attr}'"))
+            column = _nonempty_name(str(_require(m, "column", f"mapping '{coll}.{attr}'")),
+                                    f"mapping '{coll}.{attr}' column")
             mtype = normalize_type(_require(m, "type", f"mapping '{coll}.{attr}'"))
             if mtype not in known_types:
                 raise ConfigError(
@@ -168,7 +198,7 @@ def validate_mapping_config(
                 if on_duplicate == "error":
                     raise ConfigError(
                         f"duplicate or reserved target column '{column}' in "
-                        f"collection '{coll}' (reserved: {RESERVED_COLUMNS}); "
+                        f"collection '{coll}' (reserved: {reserved}); "
                         f"rename it in the mapping config, or pass "
                         f"on_duplicate='rename' to opt into UI-style auto-rename"
                     )
@@ -181,7 +211,7 @@ def validate_mapping_config(
             norm_mappings[attr] = {"column": column, "type": mtype}
         out[coll] = {
             "target_table": str(target_table),
-            "raw_json_column": spec.get("raw_json_column", "raw_json"),
+            "raw_json_column": raw_column,
             "object_id_attribute": spec.get("object_id_attribute"),
             "mappings": norm_mappings,
             "rename_map": rename_map,

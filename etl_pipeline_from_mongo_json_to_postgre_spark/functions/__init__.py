@@ -1,5 +1,7 @@
 from .casts import (
+    DEFAULT_TYPE_MAPPINGS,
     FALSY,
+    SUPPORTED_TYPES,
     TRUTHY,
     build_cast,
     cast_error,
@@ -7,13 +9,14 @@ from .casts import (
     multi_format_date,
     multi_format_timestamp,
     normalize_boolean,
-    register_type,
-    spark_type_for,
+    normalize_type,
 )
 from .datetime_fmt import has_time_component, strptime_to_java, translate_formats
 
 __all__ = [
+    "DEFAULT_TYPE_MAPPINGS",
     "FALSY",
+    "SUPPORTED_TYPES",
     "TRUTHY",
     "build_cast",
     "cast_error",
@@ -21,8 +24,7 @@ __all__ = [
     "multi_format_date",
     "multi_format_timestamp",
     "normalize_boolean",
-    "register_type",
-    "spark_type_for",
+    "normalize_type",
     "has_time_component",
     "strptime_to_java",
     "translate_formats",

@@ -8,8 +8,10 @@ reference: a cast failure yields (NULL, error-message) instead of an
 exception — we use try_cast/try-parse forms so the plan works under
 both ANSI and legacy modes.
 
-Extensible registry: ``register_type(name, builder)`` mirrors the
-reference's runtime.type_mappings extensibility (config/app_config.yaml:26-42).
+``_CAST_GROUPS`` is the one table of logical types: config validation
+accepts exactly its names (``SUPPORTED_TYPES``), and the generated DDL
+gives each one its default SQL type (``DEFAULT_TYPE_MAPPINGS``) unless
+runtime.type_mappings overrides it. A new type is a new entry there.
 """
 
 from __future__ import annotations
@@ -19,12 +21,15 @@ from typing import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..config.defaults import DEFAULT_DATE_FORMATS
-from ..config.loader import normalize_type
-from .datetime_fmt import strptime_to_java, strptime_to_regex
+from .datetime_fmt import DEFAULT_DATE_FORMATS, strptime_to_java, strptime_to_regex
 
 TRUTHY = ("true", "t", "yes", "y", "1")
 FALSY = ("false", "f", "no", "n", "0")
+
+
+def normalize_type(type_name: str) -> str:
+    """Lowercase/strip a logical type name (reference type_utils.py:1-6)."""
+    return str(type_name).strip().lower()
 
 
 def multi_format_timestamp(col: Column, formats: list[str] | None = None) -> Column:
@@ -80,57 +85,38 @@ def cast_integer(col: Column, dtype: str = "int") -> Column:
     return as_dec.try_cast(dtype)
 
 
-# type name -> (value_expr_builder, spark_sql_type)
-_TypeBuilder = Callable[[Column, dict], Column]
-_REGISTRY: dict[str, tuple[_TypeBuilder, str]] = {}
-
-
-def register_type(names: list[str], spark_type: str, builder: _TypeBuilder) -> None:
-    for n in names:
-        _REGISTRY[normalize_type(n)] = (builder, spark_type)
-
-
-register_type(["text", "string", "varchar"], "string", lambda c, _: c.cast("string"))
-register_type(["integer", "int"], "int", lambda c, _: cast_integer(c, "int"))
-register_type(["bigint"], "bigint", lambda c, _: cast_integer(c, "bigint"))
-register_type(["smallint"], "smallint", lambda c, _: cast_integer(c, "smallint"))
-register_type(
-    ["float", "double", "double precision"],
-    "double",
-    lambda c, _: F.trim(c.cast("string")).try_cast("double"),
-)
-register_type(
-    ["numeric", "decimal"],
-    "decimal(38,18)",
+# The castable logical types: names -> (value expression over a string
+# Column and the date formats, default SQL type of the column in the
+# generated DDL, which runtime.type_mappings overrides). Names are
+# normalize_type()-ed (reference config/app_config.yaml:26-42,
+# etl_pipeline/type_utils.py:9-26).
+_CAST_GROUPS: dict[tuple[str, ...], tuple[Callable[[Column, list[str]], Column], str]] = {
+    ("text", "string", "varchar"): (lambda c, _: c.cast("string"), "TEXT"),
+    ("integer", "int"): (lambda c, _: cast_integer(c, "int"), "INTEGER"),
+    ("bigint",): (lambda c, _: cast_integer(c, "bigint"), "BIGINT"),
+    ("smallint",): (lambda c, _: cast_integer(c, "smallint"), "SMALLINT"),
+    ("float", "double", "double precision"): (
+        lambda c, _: F.trim(c.cast("string")).try_cast("double"), "DOUBLE PRECISION"),
     # Decimal(str(value)) — through string to avoid float artifacts
     # (reference transformer.py:62-63)
-    lambda c, _: F.trim(c.cast("string")).try_cast("decimal(38,18)"),
-)
-register_type(["boolean", "bool"], "boolean", lambda c, _: normalize_boolean(c))
-register_type(
-    ["date"], "date", lambda c, opts: multi_format_date(c, opts.get("date_formats"))
-)
-register_type(
-    ["datetime"],
-    "timestamp",
-    lambda c, opts: multi_format_timestamp(c, opts.get("date_formats")),
-)
+    ("numeric", "decimal"): (
+        lambda c, _: F.trim(c.cast("string")).try_cast("decimal(38,18)"), "NUMERIC"),
+    ("boolean", "bool"): (lambda c, _: normalize_boolean(c), "BOOLEAN"),
+    ("date",): (multi_format_date, "DATE"),
+    ("datetime",): (multi_format_timestamp, "TIMESTAMPTZ"),
+}
+_CASTS = {name: cast for names, cast in _CAST_GROUPS.items() for name in names}
+SUPPORTED_TYPES = frozenset(_CASTS)
+DEFAULT_TYPE_MAPPINGS: dict[str, str] = {t: sql for t, (_, sql) in _CASTS.items()}
 
 
-def spark_type_for(logical_type: str) -> str:
-    t = normalize_type(logical_type)
-    if t not in _REGISTRY:
-        raise KeyError(f"unsupported logical type: {logical_type}")
-    return _REGISTRY[t][1]
-
-
-def build_cast(col: Column, logical_type: str, opts: dict | None = None) -> Column:
+def build_cast(col: Column, logical_type: str,
+               date_formats: list[str] | None = None) -> Column:
     """Value expression for a logical type; NULL on uncastable input."""
     t = normalize_type(logical_type)
-    if t not in _REGISTRY:
+    if t not in _CASTS:
         raise KeyError(f"unsupported logical type: {logical_type}")
-    builder, _ = _REGISTRY[t]
-    return builder(col, opts or {})
+    return _CASTS[t][0](col, date_formats or DEFAULT_DATE_FORMATS)
 
 
 def cast_error(source: Column, casted: Column, attr: str, logical_type: str) -> Column:

@@ -10,6 +10,22 @@ pattern once (driver-side) and composes a coalesce() chain of try-parses
 
 from __future__ import annotations
 
+# The formats a date or datetime value is tried in, first match wins
+# (reference config/app_config.yaml:12-22); runtime.date_formats
+# replaces them.
+DEFAULT_DATE_FORMATS: list[str] = [
+    "%Y-%m-%d",
+    "%m/%d/%Y",
+    "%d-%m-%Y",
+    "%Y/%m/%d",
+    "%Y.%m.%d",
+    "%Y-%m-%dT%H:%M:%S",
+    "%Y-%m-%dT%H:%M:%S%z",
+    "%Y-%m-%dT%H:%M:%S.%fZ",
+    "%d-%m-%Y %H:%M:%S",
+    "%m/%d/%Y %I:%M %p",
+]
+
 # strptime directive -> Java DateTimeFormatter fragment.
 # %f: Python microseconds (6 digits) -> SSSSSS.
 # %z: Python +HHMM / +HH:MM / Z -> XX accepts +HHMM and Z.

@@ -6,6 +6,10 @@ with two outputs — the destination-table frame and the audit-trail
 frame — instead of per-row transform+insert+commit. Row-level failures
 become audit columns (validate-before-write), which strengthens the
 reference's per-row rollback semantics (SURVEY.md §7 hard-part #2).
+
+The input is any frame with the ``raw_json`` column every source emits;
+the plan's working columns (``MappingPlan.work_col``) feed the status
+and the audit frame and never reach the data frame.
 """
 
 from __future__ import annotations
@@ -20,19 +24,18 @@ from ..config.defaults import (
     STATUS_MISSING,
     STATUS_SUCCESS,
 )
-from ..plans.mapping_plan import MappingPlan
+from ..plans.mapping_plan import MappingPlan, exact_col
 
 
 def transform_collection(
     df: DataFrame,
     plan: MappingPlan,
-    raw_col: str | None = None,
     object_status: str = OBJECT_STATUS_NEW,
     ingested_at=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Apply a MappingPlan; return (data_df, audit_df).
 
-    data_df columns: mapped columns + raw_json + ingested_at +
+    data_df columns: mapped columns + raw_json_column + ingested_at +
     source_collection + status  (reference sql/schema.sql:1-10 shape).
     audit_df columns: ingested_at, object_id, source_collection,
     object_name, object_status, missing_columns, processing_status
@@ -42,14 +45,13 @@ def transform_collection(
     deterministic tests; defaults to current_timestamp() (reference
     stamps one ingestion_date per run, pipeline.py:91-92).
     """
-    enriched = enrich_collection(df, plan, raw_col=raw_col, ingested_at=ingested_at)
+    enriched = enrich_collection(df, plan, ingested_at=ingested_at)
     return split_enriched(enriched, plan, object_status=object_status)
 
 
 def enrich_collection(
     df: DataFrame,
     plan: MappingPlan,
-    raw_col: str | None = None,
     ingested_at=None,
 ) -> DataFrame:
     """The parse-and-cast half of transform_collection: the plan's
@@ -57,11 +59,11 @@ def enrich_collection(
     outputs of split_enriched are projections of this frame, so a
     caller that materializes it once parses each document once."""
     ts = F.lit(ingested_at).cast("timestamp") if ingested_at is not None else F.current_timestamp()
-    projected = plan.apply(df, raw_col=raw_col)
+    projected = plan.apply(df)
 
-    status = F.when(F.size("transform_errors") > 0, F.lit(STATUS_ERROR)).otherwise(
-        F.lit(STATUS_SUCCESS)
-    )
+    status = F.when(
+        F.size(plan.work_col("transform_errors")) > 0, F.lit(STATUS_ERROR)
+    ).otherwise(F.lit(STATUS_SUCCESS))
     return (
         projected.withColumn("ingested_at", ts)
         .withColumn("source_collection", F.lit(plan.collection))
@@ -81,15 +83,15 @@ def split_enriched(
         "source_collection",
         "status",
     ]
-    data_df = enriched.select(*data_cols)
+    data_df = enriched.select(*[exact_col(c) for c in data_cols])
 
     audit_df = enriched.select(
         F.col("ingested_at"),
-        F.col("_object_id").alias("object_id"),
+        F.col(plan.work_col("object_id")).alias("object_id"),
         F.col("source_collection"),
         F.lit(plan.target_table).alias("object_name"),
         F.lit(object_status).alias("object_status"),
-        F.array_sort("missing_columns").alias("missing_columns"),
+        F.array_sort(plan.work_col("missing_columns")).alias("missing_columns"),
         F.col("status").alias("processing_status"),
     )
     return data_df, audit_df
@@ -99,16 +101,28 @@ def missing_table_audit_rows(spark, tables: list[str], collection_lookup: dict[s
                              ingested_at=None) -> DataFrame:
     """One audit row per expected table absent from the input
     (reference pipeline.py:103-126): object_status=MISSING,
-    processing_status=missing, no object_id, empty missing_columns."""
-    ts = F.lit(ingested_at).cast("timestamp") if ingested_at is not None else F.current_timestamp()
-    rows = [(t, collection_lookup.get(t)) for t in sorted(tables)]
-    df = spark.createDataFrame(rows, "object_name string, source_collection string")
-    return df.select(
-        ts.alias("ingested_at"),
-        F.lit(None).cast("string").alias("object_id"),
-        F.col("source_collection"),
-        F.col("object_name"),
-        F.lit(OBJECT_STATUS_MISSING).alias("object_status"),
-        F.array().cast("array<string>").alias("missing_columns"),
-        F.lit(STATUS_MISSING).alias("processing_status"),
+    processing_status=missing, no object_id, empty missing_columns.
+    Built from an Arrow table, a local table scan: writing it starts no
+    Python worker; no table gives an empty frame. SQL expressions, not
+    Column methods: run() calls this on the driver's main thread while
+    the input documents are in memory, and Column methods there made
+    PySpark's call-site capture import IPython (26 MB of driver RSS)."""
+    import pyarrow as pa
+
+    names = sorted(tables)
+    stamp = None if ingested_at is None else str(ingested_at)
+    df = spark.createDataFrame(pa.table({
+        "ingested_at": pa.array([stamp] * len(names), pa.string()),
+        "object_name": pa.array(names, pa.string()),
+        "source_collection": pa.array([collection_lookup.get(t) for t in names], pa.string()),
+    }))
+    ts = "current_timestamp()" if stamp is None else "CAST(ingested_at AS TIMESTAMP)"
+    return df.selectExpr(
+        f"{ts} AS ingested_at",
+        "CAST(NULL AS STRING) AS object_id",
+        "source_collection",
+        "object_name",
+        f"'{OBJECT_STATUS_MISSING}' AS object_status",
+        "CAST(array() AS ARRAY<STRING>) AS missing_columns",
+        f"'{STATUS_MISSING}' AS processing_status",
     )

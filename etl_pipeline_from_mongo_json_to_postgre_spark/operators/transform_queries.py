@@ -330,7 +330,7 @@ def p2_p3_missing_error_semantics(spark, sf_dir):
     df = spark.createDataFrame(rows, "doc_idx int, raw_json string")
     data, audit = transform_collection(df, _DOCS_PLAN, ingested_at=RUN_TS)
     # join projected data back to doc_idx via the raw json (unique per doc)
-    proj = _DOCS_PLAN.apply(df, raw_col="raw_json")
+    proj = _DOCS_PLAN.apply(df)
     return df.select("doc_idx", "raw_json").join(
         proj.select(
             "raw_json",
@@ -339,8 +339,9 @@ def p2_p3_missing_error_semantics(spark, sf_dir):
             "signup_date",
             "balance",
             "active",
-            F.array_join(F.array_sort("missing_columns"), ",").alias("missing_cols"),
-            F.array_join("transform_errors", ",").alias("errors"),
+            F.array_join(F.array_sort(_DOCS_PLAN.work_col("missing_columns")), ",")
+            .alias("missing_cols"),
+            F.array_join(_DOCS_PLAN.work_col("transform_errors"), ",").alias("errors"),
         ),
         "raw_json",
     ).drop("raw_json")

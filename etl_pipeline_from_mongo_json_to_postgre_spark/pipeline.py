@@ -65,8 +65,6 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from .config.defaults import (
-    AUDIT_SCHEMA,
-    AUDIT_TABLE,
     OBJECT_STATUS_ALREADY_EXISTS,
     OBJECT_STATUS_MISSING,
     OBJECT_STATUS_NEW,
@@ -244,9 +242,9 @@ class RunResult:
         }
 
 
-def _resolve_config(config: str | Mapping | None, validator, default=None):
+def _resolve_config(config: str | Mapping | None, validator):
     if config is None:
-        data = default if default is not None else {}
+        data = {}
     elif isinstance(config, str):
         data = load_config(config)
     else:
@@ -270,9 +268,7 @@ def run(
     the loader.table_exists probes (reference pipeline.py:145) — in JDBC
     mode pass the actual catalog state, tests pass sets directly.
     """
-    from .config.defaults import default_app_config
-
-    app = _resolve_config(app_config, validate_app_config, default_app_config())
+    app = _resolve_config(app_config, validate_app_config)
     runtime = app["runtime"]
     mapping = _resolve_config(
         mapping_config,
@@ -290,11 +286,11 @@ def run(
 
     # --- static analysis phase (reference pipeline.py:43-92) ---
     schema_tables = load_schema_tables(runtime.get("schema_path", ""))
-    audit_schema = (audit_cfg.get("audit_schema") or "").lower()
-    audit_table = normalize_table_name(audit_cfg.get("audit_table", AUDIT_TABLE))
+    audit_schema = audit_cfg["audit_schema"].lower()
+    audit_table = normalize_table_name(audit_cfg["audit_table"])
     schema_tables_no_audit = {
         t for t in schema_tables
-        if t != audit_table and not (audit_schema and t.startswith(audit_schema + "."))
+        if t != audit_table and not t.startswith(audit_schema + ".")
     }
 
     collections_cfg = mapping  # validate_mapping_config returns the flat shape
@@ -324,17 +320,17 @@ def run(
     unmapped: set[str] = set()
     target_tables: dict[str, str] = {}
     plans: dict[str, MappingPlan] = {}
-    audit_parts: list[DataFrame] = []
 
     for table in sorted(missing_input_tables):
         object_statuses[table_lookup.get(table, table)] = OBJECT_STATUS_MISSING
-    if missing_input_tables:
-        audit_parts.append(missing_table_audit_rows(
-            spark,
-            [table_lookup.get(t, t) for t in sorted(missing_input_tables)],
-            {table_lookup.get(t, t): table_to_collection.get(t) for t in missing_input_tables},
-            ingested_at=ing_date,
-        ))
+    # the union starts from the missing-table rows, empty when none is
+    # missing (an empty local relation the optimizer drops)
+    audit_df = missing_table_audit_rows(
+        spark,
+        [table_lookup.get(t, t) for t in sorted(missing_input_tables)],
+        {table_lookup.get(t, t): table_to_collection.get(t) for t in missing_input_tables},
+        ingested_at=ing_date,
+    )
 
     raw_frames = collections_to_raw_df(spark, data)
     for coll in sorted(input_collections):
@@ -369,18 +365,8 @@ def run(
 
     built = _concurrently(spark, {c: partial(build, c) for c in plans})
     data_frames = {c: data_df for c, (data_df, _) in built.items()}
-    audit_parts += [audit_df for _, audit_df in built.values()]
-
-    if audit_parts:
-        audit_df = audit_parts[0]
-        for part in audit_parts[1:]:
-            audit_df = audit_df.unionByName(part)
-    else:
-        audit_df = spark.createDataFrame([], (
-            "ingested_at timestamp, object_id string, source_collection string, "
-            "object_name string, object_status string, "
-            "missing_columns array<string>, processing_status string"
-        ))
+    for _, part in built.values():
+        audit_df = audit_df.unionByName(part)
 
     return RunResult(
         ingestion_date=ing_date,
@@ -441,20 +427,22 @@ def _write_run(result: RunResult, write: Callable[[DataFrame, str], None]) -> No
 
 def write_run_jdbc(spark: SparkSession, result: RunResult) -> None:
     """Sink a run into Postgres: one DDL bootstrap that creates every
-    table the run writes (the configured audit table included), then
-    the run's outputs as partition-parallel batched appends
+    table the run writes (the configured audit table, and both reports
+    in the configured audit schema), then the run's outputs as
+    partition-parallel batched appends
     (reference pipeline.py:94-101 connect/DDL + per-doc inserts). The
     DDL comes from the run's own plans (renamed columns included) and
     its runtime.type_mappings; write_table serializes array columns."""
     from .sinks import jdbc
 
     app = result.app_config
-    db, audit_table = app["database"], app["audit"]["audit_table"]
+    db, audit = app["database"], app["audit"]
     tables = {f"data_{c}": t for c, t in result.target_tables.items()}
-    tables["ingestion_audit"] = audit_table
+    tables["ingestion_audit"] = audit["audit_table"]
     for report in ("missing_attributes_report", "missing_collections_report"):
-        tables[report] = f"{AUDIT_SCHEMA}.{report}"
-    jdbc.execute_statements(spark, db, jdbc.audit_bootstrap_ddl(audit_table=audit_table) + [
+        tables[report] = f"{audit['audit_schema']}.{report}"
+    jdbc.execute_statements(spark, db, jdbc.audit_bootstrap_ddl(
+        audit["audit_schema"], audit["audit_table"]) + [
         jdbc.create_table_ddl(p.target_table,
                               jdbc.table_columns_from_plan(p, app["runtime"]["type_mappings"]))
         for p in result.plans.values()

@@ -17,22 +17,35 @@ Semantics preserved (SURVEY.md §7 "hard parts" #1):
 Absence is detected from the raw JSON itself via json_object_keys
 (Spark >= 3.1), since after a schema-applied read absent and null are
 indistinguishable.
+
+Column contract: the plan reads each document from the ``raw_json``
+column every source emits and returns it under ``raw_json_column``.
+Its working columns (``doc``, ``keys``, ``src_<i>``, ``object_id``,
+``missing_columns``, ``transform_errors``; see ``work_col``) carry a
+``prefix`` no output name starts with, so none takes a target's name;
+output names are referenced quoted, so dots and backticks in them are
+plain characters.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config.defaults import DEFAULT_DATE_FORMATS
-from ..config.loader import normalize_type
-from ..functions.casts import build_cast, cast_error, spark_type_for
+from ..config.defaults import DEFAULT_DATE_FORMATS, RAW_JSON
+from ..functions.casts import build_cast, cast_error, normalize_type
 
 # compiled-Column cache: plan-spec fingerprint -> apply()'s expression
 # bundle (see MappingPlan._build_columns); bounded, cleared wholesale
 _COMPILED_CACHE: dict = {}
+
+
+def exact_col(name: str) -> Column:
+    """The column named exactly ``name``: dots and backticks in it are
+    part of the name, not a path or quoting."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 @dataclass(frozen=True)
@@ -49,7 +62,7 @@ class MappingPlan:
     collection: str
     target_table: str
     attributes: list[AttributeMapping]
-    raw_json_column: str = "raw_json"
+    raw_json_column: str = RAW_JSON
     object_id_attribute: str | None = None
     date_formats: list[str] = field(default_factory=lambda: list(DEFAULT_DATE_FORMATS))
 
@@ -64,20 +77,30 @@ class MappingPlan:
             collection=collection,
             target_table=spec["target_table"],
             attributes=attrs,
-            raw_json_column=spec.get("raw_json_column") or "raw_json",
+            raw_json_column=spec.get("raw_json_column") or RAW_JSON,
             object_id_attribute=spec.get("object_id_attribute"),
             date_formats=list(date_formats or DEFAULT_DATE_FORMATS),
         )
 
-    # ---- expression builders over a raw-JSON string column ----
+    @property
+    def prefix(self) -> str:
+        """Prefix of every working column: the shortest run of two or
+        more underscores that no target and not the raw_json_column
+        starts with."""
+        names = [a.column for a in self.attributes] + [self.raw_json_column]
+        prefix = "__"
+        while any(n.startswith(prefix) for n in names):
+            prefix += "_"
+        return prefix
 
-    def _opts(self) -> dict:
-        return {"date_formats": self.date_formats}
+    def work_col(self, name: str) -> str:
+        """Name in apply()'s output of working column ``name``:
+        ``missing_columns``, ``transform_errors`` or ``object_id``."""
+        return self.prefix + name
 
-    def spark_schema_fields(self) -> list[tuple[str, str]]:
-        return [(a.column, spark_type_for(a.logical_type)) for a in self.attributes]
+    # ---- expression builders over the raw-JSON string column ----
 
-    def _cache_key(self, raw_col: str | None):
+    def _cache_key(self):
         from pyspark import SparkContext
 
         sc = SparkContext._active_spark_context
@@ -86,98 +109,85 @@ class MappingPlan:
             self.raw_json_column,
             self.object_id_attribute,
             tuple(self.date_formats),
-            raw_col,
             # a restarted JVM invalidates cached JVM-backed Columns
             id(sc._gateway) if sc is not None else None,
         )
 
-    def _build_columns(self, raw_col: str | None) -> dict:
+    def _build_columns(self) -> dict:
         """Compile every Column expression apply() needs, once.
 
         Building these is pure driver-side py4j traffic (~1,900 socket
         round trips, ~0.45 s per call measured) and the result depends
-        only on the plan's mapping spec + raw_col — identical plan
-        configs (module-level constants AND per-query reconstructions)
-        hit the module cache, so repeated transform_collection calls
-        cost DataFrame selects, not expression re-compilation. Column
+        only on the plan's mapping spec — identical plan configs
+        (module-level constants AND per-query reconstructions) hit the
+        module cache, so repeated transform_collection calls cost
+        DataFrame selects, not expression re-compilation. Column
         objects are immutable unresolved expressions; reusing them
         across input DataFrames is standard Spark."""
-        raw = F.col(raw_col or self.raw_json_column)
-        opts = self._opts()
-        src = {a.column: f"__src_{a.column}" for a in self.attributes}
+        p = self.prefix
+        doc, keys, object_id = F.col(f"{p}doc"), F.col(f"{p}keys"), F.col(f"{p}object_id")
+        src = [F.col(f"{p}src_{i}") for i in range(len(self.attributes))]
+        target = [exact_col(a.column) for a in self.attributes]
 
-        doc = F.from_json(raw, "map<string,string>")
         # the id is a top-level key of the parsed document, looked up
         # like every mapped attribute (a dotted name is not a JSON path)
-        object_id = (
-            F.col("__doc")[self.object_id_attribute]
-            if self.object_id_attribute
-            else F.lit(None).cast("string")
-        )
+        oid = (doc[self.object_id_attribute] if self.object_id_attribute
+               else F.lit(None).cast("string"))
         stage1_cols = [
-            F.col("__doc")[a.source_attr].alias(src[a.column])
-            for a in self.attributes
-        ] + [F.map_keys(F.col("__doc")).alias("__keys"), object_id.alias("__object_id")]
+            doc[a.source_attr].alias(f"{p}src_{i}") for i, a in enumerate(self.attributes)
+        ] + [F.map_keys(doc).alias(f"{p}keys"), oid.alias(f"{p}object_id")]
         stage2_cols = (
             [
-                build_cast(F.col(src[a.column]), a.logical_type, opts).alias(a.column)
-                for a in self.attributes
+                build_cast(s, a.logical_type, self.date_formats).alias(a.column)
+                for s, a in zip(src, self.attributes)
             ]
-            + [F.col(src[a.column]) for a in self.attributes]
-            + [F.col("__keys"), raw.alias(self.raw_json_column), F.col("__object_id")]
+            + src
+            + [keys, F.col(RAW_JSON).alias(self.raw_json_column), object_id]
         )
         missing = F.filter(
             F.array(
                 *[
-                    F.when(
-                        ~F.array_contains(F.col("__keys"), a.source_attr),
-                        F.lit(a.column),
-                    )
+                    F.when(~F.array_contains(keys, a.source_attr), F.lit(a.column))
                     for a in self.attributes
                 ]
             ),
             lambda x: x.isNotNull(),
         )
-        # a document that failed to parse as a JSON object (__keys NULL:
+        # a document that failed to parse as a JSON object (keys NULL:
         # malformed, empty, non-object, or NULL input) must surface as a
         # per-document ERROR, not an all-NULL "success" row — the
         # reference's per-document loop throws on it (transformer.py) and
         # marks that document failed while the batch continues.
-        parse_error = F.when(
-            F.col("__keys").isNull(), F.lit("document: invalid JSON object")
-        )
+        parse_error = F.when(keys.isNull(), F.lit("document: invalid JSON object"))
         errors = F.filter(
             F.array(
                 parse_error,
                 # an absent key looks up NULL, so a non-NULL source
                 # implies the document has the attribute
                 *[
-                    cast_error(F.col(src[a.column]), F.col(a.column),
-                               a.source_attr, a.logical_type)
-                    for a in self.attributes
+                    cast_error(s, t, a.source_attr, a.logical_type)
+                    for s, t, a in zip(src, target, self.attributes)
                 ]
             ),
             lambda x: x.isNotNull(),
         )
-        final_cols = (
-            [F.col(a.column) for a in self.attributes]
-            + [
-                F.col(self.raw_json_column),
-                missing.alias("missing_columns"),
-                errors.alias("transform_errors"),
-                F.col("__object_id").alias("_object_id"),
-            ]
-        )
+        final_cols = target + [
+            exact_col(self.raw_json_column),
+            missing.alias(self.work_col("missing_columns")),
+            errors.alias(self.work_col("transform_errors")),
+            object_id,
+        ]
         return {
-            "doc": doc.alias("__doc"),
+            "doc": F.from_json(F.col(RAW_JSON), "map<string,string>").alias(f"{p}doc"),
             "stage1": stage1_cols,
             "stage2": stage2_cols,
             "final": final_cols,
         }
 
-    def apply(self, df: DataFrame, raw_col: str | None = None) -> DataFrame:
-        """Project a DataFrame bearing a raw-JSON string column into
-        mapped columns + raw json + missing/error arrays.
+    def apply(self, df: DataFrame) -> DataFrame:
+        """Project a DataFrame bearing the ``raw_json`` string column into
+        mapped columns + raw json + the working columns (missing/error
+        arrays, object id).
 
         Staged so each JSON document is parsed ONCE (from_json to
         map<string,string> — scalar values arrive as their JSON text,
@@ -190,12 +200,12 @@ class MappingPlan:
         The compiled Column expressions are cached per plan spec
         (see _build_columns).
         """
-        key = self._cache_key(raw_col)
+        key = self._cache_key()
         cols = _COMPILED_CACHE.get(key)
         if cols is None:
             if len(_COMPILED_CACHE) >= 64:
                 _COMPILED_CACHE.clear()
-            cols = self._build_columns(raw_col)
+            cols = self._build_columns()
             _COMPILED_CACHE[key] = cols
         stage0 = df.select("*", cols["doc"])
         stage1 = stage0.select("*", *cols["stage1"])

@@ -4,9 +4,9 @@ The reference inserts one row per INSERT with a COMMIT per document
 (etl_pipeline/postgres_loader.py:63-77, etl_pipeline/pipeline.py:265-266)
 — the defining anti-pattern this engine replaces. Here every table write
 is a partition-parallel batched `df.write.jdbc` (K1/K2/K6); DDL
-bootstrap (K3/K4/K5: CREATE TABLE / SCHEMA / DATABASE, audit-schema
-init) is generated driver-side with the same injection-safe identifier
-quoting psycopg2's sql.Identifier provides
+bootstrap (K3/K4/K5: CREATE TABLE / SCHEMA, audit-schema init; the
+database must exist) is generated driver-side with the same
+injection-safe identifier quoting psycopg2's sql.Identifier provides
 (postgres_loader.py:68-76), executed over a single driver JDBC
 connection.
 
@@ -42,14 +42,9 @@ from typing import Any, Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config.defaults import (
-    AUDIT_SCHEMA,
-    AUDIT_TABLE,
-    BUSINESS_COLUMNS,
-    DEFAULT_TYPE_MAPPINGS,
-    RAW_JSON_COLUMN_DEFAULT,
-)
+from ..config.defaults import AUDIT_SCHEMA, AUDIT_TABLE, BUSINESS_COLUMNS
 from ..errors import ConfigError, LoadError
+from ..functions.casts import DEFAULT_TYPE_MAPPINGS
 from ..plans.mapping_plan import MappingPlan
 
 # ---------------------------------------------------------------------------
@@ -130,29 +125,14 @@ def create_schema_ddl(schema_name: str) -> str:
     return f"CREATE SCHEMA IF NOT EXISTS {quote_ident(schema_name.lower())}"
 
 
-def create_database_ddl(db_name: str) -> str:
-    """Reference postgres_loader.py:110-168 / ui/postgres_setup.py:199-214
-    (run against the admin DB; CREATE DATABASE has no IF NOT EXISTS,
-    callers probe pg_database first)."""
-    if not db_name:
-        raise LoadError("Database name is required.")
-    return f"CREATE DATABASE {quote_ident(db_name)}"
-
-
 def table_columns_from_plan(
     plan: MappingPlan,
     type_mappings: Mapping[str, str] | None = None,
-    business_column_types: Mapping[str, str] | None = None,
 ) -> list[dict[str, Any]]:
     """Destination-table column list from a MappingPlan: mapped columns
-    nullable, raw JSON JSONB NOT NULL, business columns NOT NULL;
-    duplicate names rejected (reference schema_manager.py:5-43)."""
+    nullable, the raw_json_column JSONB NOT NULL, business columns NOT
+    NULL; duplicate names rejected (reference schema_manager.py:5-43)."""
     tm = {k.lower(): v for k, v in (type_mappings or DEFAULT_TYPE_MAPPINGS).items()}
-    bct = dict(business_column_types or {
-        "ingested_at": "TIMESTAMPTZ",
-        "source_collection": "TEXT",
-        "status": "TEXT",
-    })
     columns: list[dict[str, Any]] = []
     seen: set[str] = set()
 
@@ -168,11 +148,9 @@ def table_columns_from_plan(
                 f"Missing SQL type mapping for '{attr.logical_type}' in runtime.type_mappings."
             )
         add(attr.column, tm[attr.logical_type], not_null=False)
-    add(plan.raw_json_column or RAW_JSON_COLUMN_DEFAULT, "JSONB", not_null=True)
-    for name in BUSINESS_COLUMNS:
-        if name not in bct:
-            raise ConfigError(f"Missing audit.business_column_types for '{name}'.")
-        add(name, bct[name], not_null=True)
+    add(plan.raw_json_column, "JSONB", not_null=True)
+    for name, sql_type in zip(BUSINESS_COLUMNS, ("TIMESTAMPTZ", "TEXT", "TEXT"), strict=True):
+        add(name, sql_type, not_null=True)
     return columns
 
 

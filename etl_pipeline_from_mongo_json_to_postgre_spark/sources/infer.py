@@ -34,7 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config.defaults import DEFAULT_DATE_FORMATS
+from ..config.defaults import DEFAULT_DATE_FORMATS, RAW_JSON, reserved_columns
+from ..config.loader import resolve_duplicate_columns
 from ..functions.datetime_fmt import has_time_component, strptime_to_java
 
 
@@ -107,7 +108,7 @@ def select_object_id(attributes: list[str]) -> str:
     return attributes[0] if attributes else "id"
 
 
-def observed_types(df: DataFrame, raw_col: str = "raw_json",
+def observed_types(df: DataFrame, raw_col: str = RAW_JSON,
                    date_formats: list[str] | None = None) -> DataFrame:
     """(attribute, observed_types array) per top-level JSON attribute —
     the distributed core. One variant parse, one explode, one
@@ -135,7 +136,7 @@ def observed_types(df: DataFrame, raw_col: str = "raw_json",
 
 def infer_collection_mapping(
     df: DataFrame,
-    raw_col: str = "raw_json",
+    raw_col: str = RAW_JSON,
     date_formats: list[str] | None = None,
 ) -> tuple[list[str], dict[str, dict]]:
     """(sorted attributes, {attr: {column, type}}) for one collection —
@@ -150,17 +151,22 @@ def infer_collection_mapping(
 def build_mapping_config(
     collections: dict[str, DataFrame],
     target_schema: str = "public",
-    raw_col: str = "raw_json",
+    raw_col: str = RAW_JSON,
     date_formats: list[str] | None = None,
 ) -> dict:
     """Full inferred mapping config, shaped exactly like the reference's
-    ``_build_mapping_config`` output (ui/run_pipeline.py:240-258)."""
+    ``_build_mapping_config`` output (ui/run_pipeline.py:240-258), with
+    the editor's auto-rename applied (a ``status`` key maps to
+    ``status1``), so it passes strict validation."""
     collections_config: dict[str, dict] = {}
     for name, df in collections.items():
         attributes, mappings = infer_collection_mapping(df, raw_col, date_formats)
+        columns, _ = resolve_duplicate_columns(attributes, reserved_columns(RAW_JSON))
+        for attr, column in zip(attributes, columns):
+            mappings[attr]["column"] = column
         collections_config[name] = {
             "target_table": f"{target_schema}.{name}",
-            "raw_json_column": "raw_json",
+            "raw_json_column": RAW_JSON,
             "object_id_attribute": select_object_id(attributes),
             "mappings": mappings,
         }

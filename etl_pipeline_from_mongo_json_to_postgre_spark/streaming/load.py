@@ -9,7 +9,9 @@ source feeding the SAME mapping/transform engine per micro-batch, with
 table + audit table) exactly like the batch path does. Each micro-batch
 takes the cut ``pipeline.run`` takes: ``enrich_collection`` once,
 stored, then ``split_enriched`` into the data and audit frames, so a
-document is parsed once for both writes.
+document is parsed once for both writes. The stream is read like every
+other source, from its ``raw_json`` column, under any mapping
+``validate_mapping_config`` accepts.
 
 Delivery semantics: foreachBatch + JDBC append is at-least-once — a
 retried micro-batch re-appends. Production dedup key: (batch_id stamped
@@ -57,10 +59,12 @@ def jdbc_batch_writer(plan: MappingPlan, db_config: Mapping,
 
 def stream_load(stream_df: DataFrame, plan: MappingPlan,
                 batch_writer: BatchWriter, checkpoint_dir: str,
-                raw_col: str | None = None, ingested_at=None):
+                ingested_at=None):
     """Run the mapping transform over every micro-batch of ``stream_df``
-    (a streaming DataFrame with the collection's raw JSON documents) and
-    hand (data_df, audit_df) to ``batch_writer``. ``checkpoint_dir`` is
+    (a streaming DataFrame with the collection's documents in a
+    ``raw_json`` text column, as every source emits them) and hand
+    (data_df, audit_df) to ``batch_writer``; the data frame carries the
+    text under the plan's ``raw_json_column``. ``checkpoint_dir`` is
     the caller's: a run on the same dir resumes after the last
     committed batch.
 
@@ -71,9 +75,7 @@ def stream_load(stream_df: DataFrame, plan: MappingPlan,
     """
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        enriched = enrich_collection(
-            batch_df, plan, raw_col=raw_col, ingested_at=ingested_at
-        ).persist()
+        enriched = enrich_collection(batch_df, plan, ingested_at=ingested_at).persist()
         try:
             data, audit = split_enriched(
                 enriched, plan, object_status=OBJECT_STATUS_NEW)

@@ -131,3 +131,62 @@ def test_validate_app_config_rejects_empty_formats():
 def test_normalize_table_name():
     assert normalize_table_name("Customers") == "public.customers"
     assert normalize_table_name("Doc_Audit.Ingestion_Audit") == "doc_audit.ingestion_audit"
+
+
+REFERENCE_APP_CONFIG = """\
+database:
+  host: localhost
+  port: 5432
+  name: etl_db
+  user: etl_user
+  password: ""
+  sslmode: disable
+  create_if_missing: true
+  admin_db: postgres
+runtime:
+  date_formats: ["%Y-%m-%d", "%m/%d/%Y"]
+  date_output_format: "%Y-%m-%d"
+  datetime_output_format: "%Y-%m-%dT%H:%M:%S%z"
+  type_mappings: {text: TEXT, integer: INTEGER}
+audit:
+  audit_schema: doc_audit
+  audit_table: doc_audit.ingestion_audit
+  status_values: {success: success, error: error, missing: missing}
+  object_status_values: {new: NEW, missing: MISSING, already_exists: ALREADY_EXISTS}
+logging:
+  level: INFO
+"""
+
+
+def test_reference_app_config_loads(tmp_path):
+    """A reference-shaped app_config.yaml loads whole: keys the engine
+    does not read are accepted, the ones it reads take effect."""
+    p = tmp_path / "app_config.yaml"
+    p.write_text(REFERENCE_APP_CONFIG)
+    cfg = validate_app_config(load_config(str(p)))
+    assert cfg["runtime"]["date_formats"] == ["%Y-%m-%d", "%m/%d/%Y"]
+    assert cfg["runtime"]["type_mappings"] == {"text": "TEXT", "integer": "INTEGER"}
+    assert cfg["audit"]["audit_table"] == "doc_audit.ingestion_audit"
+
+
+@pytest.mark.parametrize("key, values", [
+    ("status_values", {"success": "ok"}),
+    ("status_values", {"partial": "partial"}),
+    ("object_status_values", {"new": "CREATED"}),
+    ("object_status_values", ["NEW"]),
+])
+def test_audit_values_the_engine_does_not_write_raise(key, values):
+    """The engine writes fixed status values: a config asking for others
+    is an error naming the key, not a report with the old values."""
+    with pytest.raises(ConfigError, match=f"audit.{key}"):
+        validate_app_config({"audit": {key: values}})
+
+
+@pytest.mark.parametrize("raw", ["", 5, "status", "Ingested_At"])
+def test_validate_mapping_rejects_bad_raw_json_column(raw):
+    cfg = {"c": {"target_table": "t", "raw_json_column": raw,
+                 "mappings": {"a": {"column": "a", "type": "text"}}}}
+    with pytest.raises(ConfigError, match="raw_json_column"):
+        validate_mapping_config(cfg)
+    with pytest.raises(ConfigError, match="raw_json_column"):
+        validate_mapping_config(cfg, on_duplicate="rename")

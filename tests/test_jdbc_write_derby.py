@@ -237,7 +237,7 @@ def test_stream_load_foreachbatch_into_real_jdbc(spark, db, tmp_path, sf_dir):
     )
     ckpt = str(tmp_path / "ckpt")
     writer = jdbc_batch_writer(plan, db)
-    q = stream_load(stream, plan, writer, raw_col="raw_json",
+    q = stream_load(stream, plan, writer,
                     checkpoint_dir=ckpt, ingested_at="2024-06-01 00:00:00")
     q.awaitTermination(120)
 
@@ -260,7 +260,7 @@ def test_stream_load_foreachbatch_into_real_jdbc(spark, db, tmp_path, sf_dir):
     assert got_audit == expect
 
     # replay on the same checkpoint: availableNow finds no new data
-    q2 = stream_load(stream, plan, writer, raw_col="raw_json",
+    q2 = stream_load(stream, plan, writer,
                      checkpoint_dir=ckpt, ingested_at="2024-06-01 00:00:00")
     q2.awaitTermination(120)
     assert count("events_loaded") == expect, "checkpoint replay re-appended"

@@ -696,3 +696,143 @@ def test_stored_enriched_blocks_can_spill(spark, tmp_path):
               if info.id() in backing}
     assert sorted(backing[i] for i in stored) == ["accounts", "books", "deliveries", "events"]
     assert all(info.storageLevel().useDisk() for info in stored.values())
+
+
+def test_write_run_jdbc_puts_reports_in_the_configured_audit_schema(spark, monkeypatch):
+    """Both report tables go to the configured audit schema, and the DDL
+    bootstrap creates them there."""
+    from etl_pipeline_from_mongo_json_to_postgre_spark.sinks import jdbc
+
+    statements, writes = _stub_jdbc(monkeypatch)
+    res = pipeline.run(spark, INPUT, MAPPING, ingestion_date="2024-06-01",
+                       app_config={"audit": {"audit_schema": "audit_x"}})
+    pipeline.write_run_jdbc(spark, res)
+
+    assert 'CREATE SCHEMA IF NOT EXISTS "audit_x"' in statements
+    for report in ("missing_attributes_report", "missing_collections_report"):
+        assert f"audit_x.{report}" in writes
+        assert f"doc_audit.{report}" not in writes
+    created = {s.split()[5] for s in statements if s.startswith("CREATE TABLE")}
+    assert created == {jdbc.qualified_identifier(t) for t in writes}
+
+
+def test_missing_table_audit_rows_are_a_local_scan(spark, tmp_path):
+    """Tables schema.sql names but the input lacks each get one audit
+    row, read from a local table scan rather than a Python RDD; a
+    mapped table keeps its collection."""
+    schema = tmp_path / "schema.sql"
+    schema.write_text("CREATE TABLE IF NOT EXISTS public.products (id TEXT);\n"
+                      "CREATE TABLE IF NOT EXISTS public.legacy_widgets (id TEXT);\n")
+    res = pipeline.run(spark, INPUT, MAPPING, ingestion_date="2024-06-01",
+                       app_config={"runtime": {"schema_path": str(schema)}})
+    missing = res.audit_df.where(F.col("processing_status") == "missing")
+    assert sorted((tuple(r) for r in missing.select(
+        F.col("ingested_at").cast("string"), *missing.columns[1:]).collect()), key=repr) == [
+        (TS, None, "products", "public.products", "MISSING", [], "missing"),
+        (TS, None, None, "public.legacy_widgets", "MISSING", [], "missing"),
+    ]
+    # the only RDD scans left are the collections' stored enriched rows
+    plan = physical_plan(res.audit_df)
+    assert "LocalTableScan" in plan, plan
+    assert plan.count("Scan ExistingRDD") == len(res.data_frames) == 2, plan
+
+
+def test_unmapped_only_run_has_an_empty_audit_frame(spark, tmp_path):
+    """Input whose collections are all unmapped: an empty audit frame
+    with the usual schema, which the sinks write and summary() counts."""
+    res = pipeline.run(spark, {"ghosts": INPUT["ghosts"]}, MAPPING,
+                       ingestion_date="2024-06-01")
+    assert res.data_frames == {} and res.unmapped_collections == {"ghosts"}
+    assert res.audit_df.schema.simpleString() == GOLDEN_PARQUET["ingestion_audit.parquet"][0]
+    pipeline.write_run_parquet(res, str(tmp_path / "out"))
+    assert _parquet_values(spark, str(tmp_path / "out" / "ingestion_audit.parquet")) == (
+        GOLDEN_PARQUET["ingestion_audit.parquet"][0], [])
+    assert res.summary()["total_documents"] == 0
+
+
+DEGENERATE_DOCS = [{"id": 1, "val": 5}, {"id": 2, "val": "bad"}, {"id": 3}]
+
+# case -> (surface, target of "val", raw_json_column, on_duplicate,
+#          the column "val" lands in, or ConfigError)
+DEGENERATE = {
+    "raw_json_column_doc": ("run", "val", "doc", "error", "val"),
+    "target_missing_columns": ("run", "missing_columns", None, "error", "missing_columns"),
+    "target_transform_errors": ("run", "transform_errors", None, "error", "transform_errors"),
+    "target__object_id": ("run", "_object_id", None, "error", "_object_id"),
+    "target___keys": ("run", "__keys", None, "error", "__keys"),
+    "target___v": ("run", "__v", None, "error", "__v"),
+    "target_dotted": ("run", "a.b", None, "error", "a.b"),
+    "raw_json_column_status": ("run", "val", "status", "error", ConfigError),
+    "raw_json_column_status_rename": ("run", "val", "status", "rename", ConfigError),
+    "target_is_raw_column": ("run", "doc", "doc", "error", ConfigError),
+    "target_is_raw_column_rename": ("run", "doc", "doc", "rename", "doc1"),
+    "stream_load_raw_json_column_doc": ("stream", "val", "doc", "error", "val"),
+    "cli_raw_json_column_status": ("cli", "val", "status", "error", ConfigError),
+}
+
+
+@pytest.mark.parametrize("case", list(DEGENERATE))
+def test_degenerate_mappings(spark, monkeypatch, tmp_path, case):
+    """Every mapping the validator accepts runs, in run() with either
+    sink and in stream_load: a custom raw_json_column holds the document
+    text, and a target named like one of the plan's working columns
+    gets its values while the audit rows stay as they are. A mapping it
+    rejects is a ConfigError, and the CLI exits 1 on it."""
+    from etl_pipeline_from_mongo_json_to_postgre_spark.config import validate_mapping_config
+    from etl_pipeline_from_mongo_json_to_postgre_spark.plans.mapping_plan import MappingPlan
+    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.harness import staged_stream
+    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.load import stream_load
+
+    surface, target, raw, on_duplicate, want = DEGENERATE[case]
+    spec = {"target_table": "public.c", "object_id_attribute": "id",
+            "mappings": {"id": {"column": "id", "type": "integer"},
+                         "val": {"column": target, "type": "integer"}}}
+    if raw is not None:
+        spec["raw_json_column"] = raw
+    mapping, inp, raw = {"collections": {"c": spec}}, {"c": DEGENERATE_DOCS}, raw or "raw_json"
+
+    if surface == "cli":
+        (tmp_path / "in.json").write_text(json.dumps(inp))
+        (tmp_path / "mapping.json").write_text(json.dumps(mapping))
+        proc = _cli("--input", str(tmp_path / "in.json"),
+                    "--mapping-config", str(tmp_path / "mapping.json"),
+                    "--output-dir", str(tmp_path / "out"))
+        assert proc.returncode == 1 and "Pipeline error" in proc.stderr, proc.stderr[-2000:]
+        return
+    if want is ConfigError:
+        with pytest.raises(ConfigError):
+            pipeline.run(spark, inp, mapping, on_duplicate=on_duplicate)
+        return
+    if surface == "stream":
+        plan = MappingPlan.from_config("c", validate_mapping_config(mapping)["c"])
+        data, audit = [], []
+
+        def writer(data_df, audit_df, batch_id):
+            data.extend(data_df.collect())
+            audit.extend(audit_df.collect())
+
+        docs = spark.createDataFrame([(json.dumps(d),) for d in DEGENERATE_DOCS],
+                                     "raw_json string")
+        with staged_stream(spark, docs, "raw_json string") as (stream, scratch):
+            stream_load(stream, plan, writer, os.path.join(scratch, "ckpt"),
+                        ingested_at=TS).awaitTermination()
+    else:
+        res = pipeline.run(spark, inp, mapping, ingestion_date="2024-06-01",
+                           on_duplicate=on_duplicate)
+        out = tmp_path / "out"
+        pipeline.write_run_parquet(res, str(out))
+        data = spark.read.parquet(str(out / "data_c.parquet")).collect()
+        audit = spark.read.parquet(str(out / "ingestion_audit.parquet")).collect()
+        statements, _ = _stub_jdbc(monkeypatch)
+        pipeline.write_run_jdbc(spark, res)
+        ddl = [s for s in statements if '"public"."c"' in s][0]
+        assert f'"{raw}" JSONB NOT NULL' in ddl and f'"{want}" INTEGER' in ddl, ddl
+
+    assert sorted((r["id"], r[want], json.loads(r[raw]), r["status"]) for r in data) == [
+        (1, 5, DEGENERATE_DOCS[0], "success"),
+        (2, None, DEGENERATE_DOCS[1], "error"),
+        (3, None, DEGENERATE_DOCS[2], "success"),
+    ]
+    assert sorted((r["object_id"], r["processing_status"], list(r["missing_columns"]))
+                  for r in audit) == [
+        ("1", "success", []), ("2", "error", []), ("3", "success", [want])]

@@ -98,3 +98,32 @@ def test_build_mapping_config_shape(spark):
     assert cust["mappings"]["age"]["type"] == "integer"
     assert cfg["collections"]["orders"]["object_id_attribute"] == "id"
     assert cfg["collections"]["orders"]["mappings"]["total"]["type"] == "numeric"
+
+
+def test_inferred_mapping_runs_in_strict_mode(spark):
+    """Keys named like reserved columns get the reference editor's
+    auto-rename, keys named like the plan's working columns keep their
+    names, and the inferred config runs strict: every document lands
+    with its values."""
+    import json
+
+    from etl_pipeline_from_mongo_json_to_postgre_spark import pipeline
+
+    docs = [
+        {"_id": "a1", "status": "active", "raw_json": "r", "missing_columns": "m", "__v": 0},
+        {"_id": "a2", "status": "closed", "raw_json": "s", "missing_columns": "n", "__v": 1},
+    ]
+    cfg = infer.build_mapping_config(collections_to_raw_df(spark, {"accounts": docs}))
+    spec = cfg["collections"]["accounts"]
+    assert {a: m["column"] for a, m in spec["mappings"].items()} == {
+        "__v": "__v", "_id": "_id", "missing_columns": "missing_columns",
+        "raw_json": "raw_json1", "status": "status1"}
+
+    res = pipeline.run(spark, {"accounts": docs}, cfg, ingestion_date="2024-06-01")
+    rows = sorted(res.data_frames["accounts"].collect(), key=lambda r: r["_id"])
+    assert [(r["_id"], r["status1"], r["raw_json1"], r["missing_columns"], r["__v"],
+             r["status"]) for r in rows] == [
+        ("a1", "active", "r", "m", 0, "success"),
+        ("a2", "closed", "s", "n", 1, "success")]
+    assert [json.loads(r["raw_json"]) for r in rows] == docs
+    assert res.summary()["total_documents"] == 2

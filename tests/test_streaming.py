@@ -104,7 +104,7 @@ def test_stream_load_foreachbatch(spark, sf_dir, tmp_path):
         ).count()
         seen["batches"] += 1
 
-    q = stream_load(stream, plan, writer, raw_col="raw_json",
+    q = stream_load(stream, plan, writer,
                     checkpoint_dir=str(tmp_path / "ckpt"),
                     ingested_at="2024-06-01 00:00:00")
     assert q.awaitTermination(300)
