@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import json
 import os
+from datetime import datetime, timezone
 from typing import Any
 
 from ..errors import ConfigError
 from ..functions.casts import SUPPORTED_TYPES, normalize_type
+from ..functions.datetime_fmt import strptime_to_java
 from .defaults import (
     AUDIT_VALUES,
     BUSINESS_COLUMNS,
@@ -61,7 +63,7 @@ def validate_app_config(config: dict) -> dict:
     """Validate app config; fill defaults for missing runtime knobs.
 
     Parity: reference config_loader.py:36-123 (required sections,
-    date-format list non-empty, type-mapping closure). Unread keys
+    usable date formats, type-mapping closure). Unread keys
     (``logging``, output formats, admin database) are ignored; audit
     status values other than the ones the engine writes are an error.
     """
@@ -78,6 +80,8 @@ def validate_app_config(config: dict) -> dict:
     formats = _require(runtime, "date_formats", "runtime")
     if not isinstance(formats, list) or not formats:
         raise ConfigError("runtime.date_formats must be a non-empty list")
+    for fmt in formats:
+        _check_date_format(fmt)
     tm = _require(runtime, "type_mappings", "runtime")
     if not isinstance(tm, dict) or not tm:
         raise ConfigError("runtime.type_mappings must be a non-empty mapping")
@@ -92,6 +96,22 @@ def validate_app_config(config: dict) -> dict:
                 f"audit.{key} must restate the values the engine writes, "
                 f"{engine}; got {given!r}")
     return merged
+
+
+_PROBE_INSTANT = datetime(2024, 1, 15, 13, 4, 5, 123456, tzinfo=timezone.utc)
+
+
+def _check_date_format(fmt: Any) -> None:
+    """A usable runtime.date_formats entry is a non-empty string of known
+    directives that parses its own strftime rendering of _PROBE_INSTANT;
+    any other could never match, so it is a ConfigError naming it."""
+    try:
+        if not isinstance(fmt, str) or not fmt:
+            raise ValueError("not a non-empty string")
+        strptime_to_java(fmt)
+        datetime.strptime(_PROBE_INSTANT.strftime(fmt), fmt)
+    except ValueError as exc:
+        raise ConfigError(f"runtime.date_formats entry {fmt!r} is unusable: {exc}") from None
 
 
 def _nonempty_name(value: Any, ctx: str) -> str:

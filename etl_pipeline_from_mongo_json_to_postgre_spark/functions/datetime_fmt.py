@@ -4,8 +4,9 @@ The reference parses dates by trying a configured list of strptime
 formats in order (reference etl_pipeline/transformer.py:82-111, formats
 config/app_config.yaml:12-22). Spark's to_date/to_timestamp take Java
 DateTimeFormatter-style patterns, so the engine translates each strptime
-pattern once (driver-side) and composes a coalesce() chain of try-parses
-— pure Column expressions, JVM-side, whole-stage-codegen friendly.
+pattern once (driver-side) into a Java pattern and an RLIKE guard;
+``functions.casts`` composes them into a SQL coalesce() chain of
+try-parses — JVM-side, whole-stage-codegen friendly.
 """
 
 from __future__ import annotations
@@ -56,8 +57,9 @@ _TIME_DIRECTIVES = {"%H", "%I", "%M", "%S", "%f", "%p", "%z"}
 def strptime_to_java(fmt: str) -> str:
     """Translate one strptime pattern to a Java datetime pattern.
 
-    Literal ASCII letters are single-quoted (Java treats bare letters as
-    pattern chars): ``%Y-%m-%dT%H:%M:%S`` -> ``yyyy-MM-dd'T'HH:mm:ss``.
+    A literal run holding a letter or one of Java's reserved characters
+    ``'[]{}#`` is single-quoted, ``'`` doubled, so Java reads it as
+    literal text: ``%Y-%m-%dT%H:%M:%S`` -> ``yyyy-MM-dd'T'HH:mm:ss``.
     """
     out: list[str] = []
     literal: list[str] = []
@@ -66,7 +68,7 @@ def strptime_to_java(fmt: str) -> str:
         if not literal:
             return
         text = "".join(literal)
-        if any(c.isalpha() for c in text):
+        if any(c.isalpha() or c in "'[]{}#" for c in text):
             out.append("'" + text.replace("'", "''") + "'")
         else:
             out.append(text)

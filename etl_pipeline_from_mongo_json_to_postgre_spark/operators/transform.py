@@ -24,6 +24,7 @@ from ..config.defaults import (
     STATUS_MISSING,
     STATUS_SUCCESS,
 )
+from ..functions.casts import quote_ident, quote_literal
 from ..plans.mapping_plan import MappingPlan, exact_col
 
 
@@ -58,16 +59,15 @@ def enrich_collection(
     projection plus ingested_at, source_collection and status. Both
     outputs of split_enriched are projections of this frame, so a
     caller that materializes it once parses each document once."""
-    ts = F.lit(ingested_at).cast("timestamp") if ingested_at is not None else F.current_timestamp()
-    projected = plan.apply(df)
-
-    status = F.when(
-        F.size(plan.work_col("transform_errors")) > 0, F.lit(STATUS_ERROR)
-    ).otherwise(F.lit(STATUS_SUCCESS))
-    return (
-        projected.withColumn("ingested_at", ts)
-        .withColumn("source_collection", F.lit(plan.collection))
-        .withColumn("status", status)
+    ts = ("current_timestamp()" if ingested_at is None
+          else f"CAST({quote_literal(str(ingested_at))} AS TIMESTAMP)")
+    status = (f"CASE WHEN size({quote_ident(plan.work_col('transform_errors'))}) > 0 "
+              f"THEN {quote_literal(STATUS_ERROR)} ELSE {quote_literal(STATUS_SUCCESS)} END")
+    return plan.apply(df).selectExpr(
+        "*",
+        f"{ts} AS ingested_at",
+        f"{quote_literal(plan.collection)} AS source_collection",
+        f"{status} AS status",
     )
 
 
@@ -122,7 +122,7 @@ def missing_table_audit_rows(spark, tables: list[str], collection_lookup: dict[s
         "CAST(NULL AS STRING) AS object_id",
         "source_collection",
         "object_name",
-        f"'{OBJECT_STATUS_MISSING}' AS object_status",
+        f"{quote_literal(OBJECT_STATUS_MISSING)} AS object_status",
         "CAST(array() AS ARRAY<STRING>) AS missing_columns",
-        f"'{STATUS_MISSING}' AS processing_status",
+        f"{quote_literal(STATUS_MISSING)} AS processing_status",
     )

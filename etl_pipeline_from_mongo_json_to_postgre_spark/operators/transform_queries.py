@@ -450,7 +450,7 @@ _DATE_INPUTS = [
 
 def p4_multiformat_date(spark, sf_dir):
     df = spark.createDataFrame(_DATE_INPUTS, "idx int, raw string")
-    return df.select("idx", multi_format_date(F.col("raw")).alias("parsed"))
+    return df.selectExpr("idx", f"{multi_format_date('raw')} AS parsed")
 
 
 ORACLE_SQL["p4_multiformat_date"] = """
@@ -465,7 +465,7 @@ ORACLE_SQL["p4_multiformat_date"] = """
 
 def p5_multiformat_datetime(spark, sf_dir):
     df = spark.createDataFrame(_DATE_INPUTS, "idx int, raw string")
-    return df.select("idx", multi_format_timestamp(F.col("raw")).alias("parsed"))
+    return df.selectExpr("idx", f"{multi_format_timestamp('raw')} AS parsed")
 
 
 ORACLE_SQL["p5_multiformat_datetime"] = """
@@ -495,7 +495,7 @@ _BOOL_INPUTS = [
 
 def p6_boolean_normalize(spark, sf_dir):
     df = spark.createDataFrame(_BOOL_INPUTS, "idx int, raw string")
-    return df.select("idx", normalize_boolean(F.col("raw")).alias("flag"))
+    return df.selectExpr("idx", f"{normalize_boolean('raw')} AS flag")
 
 
 ORACLE_SQL["p6_boolean_normalize"] = """

@@ -15,7 +15,7 @@ RunResult's frames are garbage-collected.
 
 Concurrency: the collections of a run are independent, so the work of
 each one runs on a driver thread pool (``_concurrently``). In ``run()``
-that is the Column building, analysis and physical planning of its
+that is the SQL-text projections, analysis and physical planning of its
 enriched frame (``enrich_collection`` -> ``localCheckpoint`` ->
 ``split_enriched``); config validation, the static analysis and
 ``MappingPlan.from_config`` stay sequential, so config errors surface
@@ -89,11 +89,15 @@ from .sources.json_source import collections_to_raw_df, load_input_json
 
 def load_schema_tables(schema_path: str) -> set[str]:
     """Regex scan of CREATE TABLE IF NOT EXISTS names in a schema.sql
-    (reference etl_pipeline/schema_utils.py:8-21)."""
+    (reference etl_pipeline/schema_utils.py:8-21); no file, no tables.
+    A path not readable as text (a directory, not UTF-8) is a ConfigError."""
     if not schema_path or not os.path.exists(schema_path):
         return set()
-    with open(schema_path, "r", encoding="utf-8") as fh:
-        content = fh.read()
+    try:
+        with open(schema_path, "r", encoding="utf-8") as fh:
+            content = fh.read()
+    except (OSError, UnicodeDecodeError) as exc:
+        raise ConfigError(f"runtime.schema_path {schema_path!r} cannot be read: {exc}") from None
     matches = re.findall(r"CREATE TABLE IF NOT EXISTS\s+(\S+)", content, re.IGNORECASE)
     return {normalize_table_name(m.strip().rstrip("(")) for m in matches}
 

@@ -107,13 +107,18 @@ def _export_files(path: str) -> list[str]:
 
 
 class MongoDataSourceReader(DataSourceReader):
+    """Export mode loads each whole export file twice: ``partitions()``
+    runs ``json.load`` on it on the driver to list its collections, and
+    each partition's ``read`` loads it again, so the driver needs memory
+    for the largest export file; bigger exports belong in live mode."""
+
     def __init__(self, options: dict):
         self.options = options
         self.mode = options.get("mode", "export")
         if self.mode not in ("export", "live"):
             raise InputError(f"mongodb_py: unknown mode {self.mode!r}")
 
-    # -- planning (driver side, metadata only) ---------------------------
+    # -- planning (driver side) -------------------------------------------
 
     def partitions(self) -> list[InputPartition]:
         if self.mode == "export":
@@ -123,7 +128,6 @@ class MongoDataSourceReader(DataSourceReader):
             only = self.options.get("collection")
             parts: list[InputPartition] = []
             for f in _export_files(path):
-                # metadata-scale peek: top-level keys only
                 with open(f, "r", encoding="utf-8") as fh:
                     data = json.load(fh)
                 if not isinstance(data, dict):

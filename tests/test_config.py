@@ -5,6 +5,7 @@ import json
 import pytest
 
 from etl_pipeline_from_mongo_json_to_postgre_spark.config import (
+    DEFAULT_DATE_FORMATS,
     load_config,
     normalize_table_name,
     validate_app_config,
@@ -126,6 +127,12 @@ def test_validate_app_config_defaults():
 def test_validate_app_config_rejects_empty_formats():
     with pytest.raises(ConfigError):
         validate_app_config({"runtime": {"date_formats": []}})
+
+
+@pytest.mark.parametrize("fmt", DEFAULT_DATE_FORMATS)
+def test_each_default_date_format_is_usable(fmt):
+    assert validate_app_config({"runtime": {"date_formats": [fmt]}})[
+        "runtime"]["date_formats"] == [fmt]
 
 
 def test_normalize_table_name():

@@ -40,6 +40,16 @@ def test_literal_quoting():
     assert strptime_to_java("%d of %B") == "dd' of 'MMMM"
 
 
+@pytest.mark.parametrize("py,java", [
+    ("%Y-%m-%d'", "yyyy-MM-dd''''"),
+    ("%H o'clock", "HH' o''clock'"),
+    ("%Y[%m]", "yyyy'['MM']'"),
+    ("%Y#{%m}", "yyyy'#{'MM'}'"),
+])
+def test_java_reserved_literals_are_quoted(py, java):
+    assert strptime_to_java(py) == java
+
+
 def test_unknown_directive_raises():
     with pytest.raises(ValueError):
         strptime_to_java("%Q")

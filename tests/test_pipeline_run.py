@@ -9,8 +9,10 @@ documented control flow.
 import datetime
 import json
 import os
+import re
 import subprocess
 import sys
+import threading
 from decimal import Decimal
 
 import pytest
@@ -769,6 +771,12 @@ DEGENERATE = {
     "stream_load_raw_json_column_doc": ("stream", "val", "doc", "error", "val"),
     "cli_raw_json_column_status": ("cli", "val", "status", "error", ConfigError),
 }
+# Names that need quoting in SQL text: each is both the source key of
+# "val" in the documents and its target.
+QUOTED_NAMES = {"apostrophe": "it's", "backslash": "a\\b", "backtick": "a`b",
+                "dots": "a.b.c", "percent": "50%_x", "non_ascii": "prénom_日本"}
+DEGENERATE.update({f"quoted_{case}": ("run", name, None, "error", name)
+                   for case, name in QUOTED_NAMES.items()})
 
 
 @pytest.mark.parametrize("case", list(DEGENERATE))
@@ -776,20 +784,24 @@ def test_degenerate_mappings(spark, monkeypatch, tmp_path, case):
     """Every mapping the validator accepts runs, in run() with either
     sink and in stream_load: a custom raw_json_column holds the document
     text, and a target named like one of the plan's working columns
-    gets its values while the audit rows stay as they are. A mapping it
-    rejects is a ConfigError, and the CLI exits 1 on it."""
+    gets its values while the audit rows stay as they are, as does a
+    source key and target that SQL text must quote (quote, backslash,
+    backtick, dots, percent sign, non-ASCII). A mapping it rejects is a
+    ConfigError, and the CLI exits 1 on it."""
     from etl_pipeline_from_mongo_json_to_postgre_spark.config import validate_mapping_config
     from etl_pipeline_from_mongo_json_to_postgre_spark.plans.mapping_plan import MappingPlan
     from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.harness import staged_stream
     from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.load import stream_load
 
     surface, target, raw, on_duplicate, want = DEGENERATE[case]
+    key = target if case.startswith("quoted_") else "val"
+    docs = [{key if k == "val" else k: v for k, v in d.items()} for d in DEGENERATE_DOCS]
     spec = {"target_table": "public.c", "object_id_attribute": "id",
             "mappings": {"id": {"column": "id", "type": "integer"},
-                         "val": {"column": target, "type": "integer"}}}
+                         key: {"column": target, "type": "integer"}}}
     if raw is not None:
         spec["raw_json_column"] = raw
-    mapping, inp, raw = {"collections": {"c": spec}}, {"c": DEGENERATE_DOCS}, raw or "raw_json"
+    mapping, inp, raw = {"collections": {"c": spec}}, {"c": docs}, raw or "raw_json"
 
     if surface == "cli":
         (tmp_path / "in.json").write_text(json.dumps(inp))
@@ -811,9 +823,8 @@ def test_degenerate_mappings(spark, monkeypatch, tmp_path, case):
             data.extend(data_df.collect())
             audit.extend(audit_df.collect())
 
-        docs = spark.createDataFrame([(json.dumps(d),) for d in DEGENERATE_DOCS],
-                                     "raw_json string")
-        with staged_stream(spark, docs, "raw_json string") as (stream, scratch):
+        raw_docs = spark.createDataFrame([(json.dumps(d),) for d in docs], "raw_json string")
+        with staged_stream(spark, raw_docs, "raw_json string") as (stream, scratch):
             stream_load(stream, plan, writer, os.path.join(scratch, "ckpt"),
                         ingested_at=TS).awaitTermination()
     else:
@@ -829,10 +840,102 @@ def test_degenerate_mappings(spark, monkeypatch, tmp_path, case):
         assert f'"{raw}" JSONB NOT NULL' in ddl and f'"{want}" INTEGER' in ddl, ddl
 
     assert sorted((r["id"], r[want], json.loads(r[raw]), r["status"]) for r in data) == [
-        (1, 5, DEGENERATE_DOCS[0], "success"),
-        (2, None, DEGENERATE_DOCS[1], "error"),
-        (3, None, DEGENERATE_DOCS[2], "success"),
+        (1, 5, docs[0], "success"),
+        (2, None, docs[1], "error"),
+        (3, None, docs[2], "success"),
     ]
     assert sorted((r["object_id"], r["processing_status"], list(r["missing_columns"]))
                   for r in audit) == [
         ("1", "success", []), ("2", "error", []), ("3", "success", [want])]
+
+
+# case -> (surface, runtime overrides of the app config ("{tmp}" is the
+# test's scratch directory), the text the ConfigError names or the
+# date the document's "2024-01-15'" parses to)
+RUNTIME_CASES = {
+    "date_format_unknown_directive": ("run", {"date_formats": ["%Q-%m"]}, "'%Q-%m'"),
+    "date_format_empty": ("run", {"date_formats": ["%Y-%m-%d", ""]}, "''"),
+    "date_format_not_a_string": ("run", {"date_formats": [20240115]}, "20240115"),
+    "date_format_stray_percent": ("run", {"date_formats": ["%Y-%m-%d%"]}, "'%Y-%m-%d%'"),
+    "date_format_quote_parses": ("run", {"date_formats": ["%Y-%m-%d'"]},
+                                 datetime.date(2024, 1, 15)),
+    "schema_path_directory": ("run", {"schema_path": "{tmp}"}, "{tmp}"),
+    "schema_path_not_utf8": ("run", {"schema_path": "{tmp}/schema.sql"}, "{tmp}/schema.sql"),
+    "schema_path_missing": ("run", {"schema_path": "{tmp}/absent.sql",
+                                    "date_formats": ["%Y-%m-%d'"]}, datetime.date(2024, 1, 15)),
+    "cli_date_format_unknown_directive": ("cli", {"date_formats": ["%Q-%m"]}, "'%Q-%m'"),
+    "cli_schema_path_directory": ("cli", {"schema_path": "{tmp}"}, "{tmp}"),
+}
+
+
+@pytest.mark.parametrize("case", list(RUNTIME_CASES))
+def test_runtime_config_errors_name_the_value(spark, tmp_path, case):
+    """A runtime.date_formats entry that could never match (not a
+    non-empty string, an unknown directive, or one that does not parse
+    its own rendering) and a schema_path that is a directory or not
+    UTF-8 text are ConfigErrors naming the value, in run() and in the
+    CLI (exit 1, "Pipeline error"). A literal quote in a format is text,
+    and a missing schema_path means no schema tables."""
+    surface, runtime, want = RUNTIME_CASES[case]
+
+    def fill(value):
+        return value.replace("{tmp}", str(tmp_path)) if isinstance(value, str) else value
+
+    app, want = {"runtime": {k: fill(v) for k, v in runtime.items()}}, fill(want)
+    (tmp_path / "schema.sql").write_bytes(b"CREATE TABLE IF NOT EXISTS caf\xe9 (id INT);")
+    mapping = {"collections": {"c": {
+        "target_table": "public.c", "object_id_attribute": "id",
+        "mappings": {"id": {"column": "id", "type": "integer"},
+                     "day": {"column": "day", "type": "date"}}}}}
+    inp = {"c": [{"id": 1, "day": "2024-01-15'"}]}
+
+    if surface == "cli":
+        for name, cfg in (("in.json", inp), ("mapping.json", mapping), ("app.json", app)):
+            (tmp_path / name).write_text(json.dumps(cfg))
+        proc = _cli("--input", str(tmp_path / "in.json"),
+                    "--mapping-config", str(tmp_path / "mapping.json"),
+                    "--app-config", str(tmp_path / "app.json"),
+                    "--output-dir", str(tmp_path / "out"))
+        assert proc.returncode == 1 and "Pipeline error" in proc.stderr, proc.stderr[-2000:]
+        assert want in proc.stderr
+        return
+    if isinstance(want, str):
+        with pytest.raises(ConfigError, match=re.escape(want)):
+            pipeline.run(spark, inp, mapping, app)
+        return
+    res = pipeline.run(spark, inp, mapping, app)
+    assert [(r["day"], r["status"]) for r in res.data_frames["c"].collect()] == [
+        (want, "success")]
+
+
+def test_plan_building_py4j_traffic_is_flat(spark, monkeypatch):
+    """Building MappingPlan.apply for a fresh plan sends as many py4j
+    commands for 40 attributes as for 2: the plan is SQL text, one
+    string per stage. Only this thread's commands count (py4j releases
+    collected proxies from a finalizer thread)."""
+    from py4j.clientserver import ClientServerConnection
+
+    from etl_pipeline_from_mongo_json_to_postgre_spark.plans.mapping_plan import MappingPlan
+
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counted(conn, command):
+        sent.append(threading.get_ident())
+        return send(conn, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    df = spark.createDataFrame([('{"a0": "1"}',)], "raw_json string")
+    types = ("date", "integer", "datetime", "text", "boolean", "numeric")
+
+    def commands(width):
+        plan = MappingPlan.from_config(f"w{width}", {
+            "target_table": "t", "object_id_attribute": "a0",
+            "mappings": {f"a{i}_{width}": {"column": f"c{i}", "type": types[i % len(types)]}
+                         for i in range(width)}})
+        start = len(sent)
+        plan.apply(df)
+        return sum(t == threading.get_ident() for t in sent[start:])
+
+    commands(3)  # first-call lookups of JVM classes
+    assert commands(2) == commands(40)

@@ -57,7 +57,7 @@ def test_every_configured_format_parses_to_its_own_date(spark, pairs):
     df = spark.createDataFrame(rows, "idx int, raw string, want string")
     got = (
         df.select("idx", "want",
-                  F.date_format(multi_format_date(F.col("raw")), "yyyy-MM-dd")
+                  F.date_format(F.expr(multi_format_date("raw")), "yyyy-MM-dd")
                   .alias("got"))
         .collect()
     )
@@ -79,7 +79,7 @@ def test_timestamp_parse_matches_python_strptime(spark, pairs):
     df = spark.createDataFrame(rows, "idx int, raw string, want string")
     got = (
         df.select("idx", "want",
-                  F.date_format(multi_format_timestamp(F.col("raw")),
+                  F.date_format(F.expr(multi_format_timestamp("raw")),
                                 "yyyy-MM-dd HH:mm:ss").alias("got"))
         .collect()
     )
@@ -104,7 +104,7 @@ def test_boolean_table_under_case_and_whitespace(spark, cases):
         rows.append((i, pre + s + post, want))
     df = spark.createDataFrame(rows, "idx int, raw string, want boolean")
     got = df.select("idx", "want",
-                    normalize_boolean(F.col("raw")).alias("got")).collect()
+                    F.expr(normalize_boolean("raw")).alias("got")).collect()
     for r in got:
         assert r["got"] == r["want"], r
 
@@ -121,7 +121,7 @@ def test_casts_never_throw(spark, texts):
     out = df.select(
         "idx",
         *[
-            build_cast(F.col("raw"), t).alias(f"c_{t}")
+            F.expr(build_cast("raw", t)).alias(f"c_{t}")
             for t in ("text", "integer", "bigint", "float", "numeric",
                       "boolean", "date", "datetime")
         ],
