@@ -138,6 +138,7 @@ def main() -> None:
     headline = round(sum(timings[n] for n in HEADLINE if n in timings), 3)
     census = round(sum(timings[n] for n in CENSUS_TAIL if n in timings), 3)
     wall = round(time.time() - t_all, 3)
+    load_end = round(os.getloadavg()[0], 2)
 
     # `value` stays the BASELINE.md-comparable 27-query headline sum so
     # BENCH_r08+ compares mechanically to r1-r6 AND to the reference;
@@ -165,12 +166,12 @@ def main() -> None:
                              "anchors in BASELINE.md (r10: 22.4-24.0s "
                              "= 0.63-0.67x)",
                 # 1-min load average at rep start/end (VERDICT r12
-                # task 7): >2.0 at start means the rep ran against
-                # leftover host load and its wall time should not be
+                # task 7): >2.0 at either end means the rep ran against
+                # other host load and its wall time should not be
                 # compared to quiet-host anchors.
                 "load_avg_1m_start": load_start,
-                "load_avg_1m_end": round(os.getloadavg()[0], 2),
-                "load_contaminated": load_start > 2.0,
+                "load_avg_1m_end": load_end,
+                "load_contaminated": max(load_start, load_end) > 2.0,
                 # seconds slept by the bounded wait-for-quiet before the
                 # session started (0.0 = host was already quiet)
                 "load_wait_s": waited,

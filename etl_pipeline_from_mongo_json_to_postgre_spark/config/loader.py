@@ -14,9 +14,10 @@ import os
 from datetime import datetime, timezone
 from typing import Any
 
-from ..errors import ConfigError
+from ..errors import ConfigError, LoadError
 from ..functions.casts import SUPPORTED_TYPES, normalize_type
 from ..functions.datetime_fmt import strptime_to_java
+from ..sinks import jdbc
 from .defaults import (
     AUDIT_VALUES,
     BUSINESS_COLUMNS,
@@ -89,6 +90,7 @@ def validate_app_config(config: dict) -> dict:
     audit = merged["audit"]
     for key in ("audit_schema", "audit_table"):
         _nonempty_name(audit[key], f"audit.{key}")
+    _table_name(audit["audit_table"], "audit.audit_table")
     for key, engine in AUDIT_VALUES.items():
         given = audit.get(key, engine)
         if not isinstance(given, dict) or any(engine.get(k) != v for k, v in given.items()):
@@ -118,6 +120,15 @@ def _nonempty_name(value: Any, ctx: str) -> str:
     if not isinstance(value, str) or not value.strip():
         raise ConfigError(f"{ctx} must be a non-empty string, got {value!r}")
     return value
+
+
+def _table_name(name: str, ctx: str) -> str:
+    """``name`` if the JDBC sink can create it, else a ConfigError naming ``ctx``."""
+    try:
+        jdbc.split_table_name(name)
+    except LoadError as exc:
+        raise ConfigError(f"{ctx} {name!r} is not a [schema.]table name: {exc}") from None
+    return name
 
 
 def resolve_duplicate_columns(
@@ -190,7 +201,8 @@ def validate_mapping_config(
     for coll, spec in mapping_config.items():
         if not isinstance(spec, dict):
             raise ConfigError(f"mapping for collection '{coll}' must be a mapping")
-        target_table = _require(spec, "target_table", f"collection '{coll}'")
+        target_table = _table_name(str(_require(spec, "target_table", f"collection '{coll}'")),
+                                   f"collection '{coll}' target_table")
         mappings = _require(spec, "mappings", f"collection '{coll}'")
         if not isinstance(mappings, dict) or not mappings:
             raise ConfigError(f"collection '{coll}' has no attribute mappings")
@@ -230,7 +242,7 @@ def validate_mapping_config(
             seen_cols.add(column.lower())
             norm_mappings[attr] = {"column": column, "type": mtype}
         out[coll] = {
-            "target_table": str(target_table),
+            "target_table": target_table,
             "raw_json_column": raw_column,
             "object_id_attribute": spec.get("object_id_attribute"),
             "mappings": norm_mappings,
@@ -240,8 +252,6 @@ def validate_mapping_config(
 
 
 def normalize_table_name(name: str, default_schema: str = "public") -> str:
-    """Lowercase schema-qualified table name (reference schema_utils.py:24-26)."""
-    name = str(name).strip().lower()
-    if "." not in name:
-        return f"{default_schema}.{name}"
-    return name
+    """``schema.table``, lowercased, as ``sinks.jdbc.split_table_name``
+    parses it (reference schema_utils.py:24-26)."""
+    return ".".join(jdbc.split_table_name(str(name), default_schema))

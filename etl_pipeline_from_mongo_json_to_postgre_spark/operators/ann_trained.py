@@ -100,12 +100,18 @@ _TRAINED_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 
 
 def _load_trained():
+    """(centroids, codebooks); (None, None) only for a missing file, the
+    trainer's bootstrap case. A corrupt file raises, naming the path."""
     try:
         with open(_TRAINED_PATH) as fh:
             t = json.load(fh)
         return t["centroids"], t["codebooks"]
-    except (OSError, KeyError, json.JSONDecodeError):
+    except FileNotFoundError:
         return None, None
+    except (ValueError, KeyError, TypeError) as exc:
+        raise RuntimeError(
+            f"{_TRAINED_PATH} is corrupt ({exc!r}): restore it from git, or "
+            "delete it and re-train via tools/train_pq_ann.py") from None
 
 
 TRAINED_CENTROIDS, TRAINED_CODEBOOKS = _load_trained()

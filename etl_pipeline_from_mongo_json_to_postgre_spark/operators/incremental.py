@@ -401,6 +401,36 @@ def user_acquisition_census(spark, sf_dir):
     )
 
 
+# the SCD2 interval oracle; the as-of oracle reads it as a CTE
+_SCD2_INTERVALS_SQL = """
+        WITH flagged AS (
+            SELECT o_custkey, o_orderkey, o_orderstatus, o_orderdate,
+                   CASE WHEN lag(o_orderstatus) OVER w IS NULL
+                             OR lag(o_orderstatus) OVER w <> o_orderstatus
+                        THEN 1 ELSE 0 END AS chg
+            FROM orders
+            WINDOW w AS (PARTITION BY o_custkey
+                         ORDER BY o_orderdate, o_orderkey)
+        ), islands AS (
+            SELECT o_custkey, o_orderstatus, o_orderdate,
+                   CAST(sum(chg) OVER (PARTITION BY o_custkey
+                                  ORDER BY o_orderdate, o_orderkey
+                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS island
+            FROM flagged
+        ), grouped AS (
+            SELECT o_custkey, island,
+                   min(o_orderstatus) AS o_orderstatus,
+                   min(o_orderdate) AS valid_from,
+                   count(*) AS n_orders
+            FROM islands GROUP BY o_custkey, island
+        )
+        SELECT o_custkey, island, o_orderstatus, valid_from,
+               lead(valid_from) OVER (
+                   PARTITION BY o_custkey ORDER BY island) AS valid_to,
+               n_orders
+        FROM grouped
+    """
+
 ORACLE_SQL = {
     "inc_agg_refresh": f"""
         SELECT CAST(ts AS DATE) AS day, event_type,
@@ -502,63 +532,9 @@ ORACLE_SQL = {
                         OR o.o_totalprice <> n.o_totalprice THEN 'UPDATE'
               END IS NOT NULL
     """,
-    "inc_scd2_intervals": """
-        WITH flagged AS (
-            SELECT o_custkey, o_orderkey, o_orderstatus, o_orderdate,
-                   CASE WHEN lag(o_orderstatus) OVER w IS NULL
-                             OR lag(o_orderstatus) OVER w <> o_orderstatus
-                        THEN 1 ELSE 0 END AS chg
-            FROM orders
-            WINDOW w AS (PARTITION BY o_custkey
-                         ORDER BY o_orderdate, o_orderkey)
-        ), islands AS (
-            SELECT o_custkey, o_orderstatus, o_orderdate,
-                   CAST(sum(chg) OVER (PARTITION BY o_custkey
-                                  ORDER BY o_orderdate, o_orderkey
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS island
-            FROM flagged
-        ), grouped AS (
-            SELECT o_custkey, island,
-                   min(o_orderstatus) AS o_orderstatus,
-                   min(o_orderdate) AS valid_from,
-                   count(*) AS n_orders
-            FROM islands GROUP BY o_custkey, island
-        )
-        SELECT o_custkey, island, o_orderstatus, valid_from,
-               lead(valid_from) OVER (
-                   PARTITION BY o_custkey ORDER BY island) AS valid_to,
-               n_orders
-        FROM grouped
-    """,
-    "inc_scd2_as_of": """
-        WITH intervals AS (
-        WITH flagged AS (
-            SELECT o_custkey, o_orderkey, o_orderstatus, o_orderdate,
-                   CASE WHEN lag(o_orderstatus) OVER w IS NULL
-                             OR lag(o_orderstatus) OVER w <> o_orderstatus
-                        THEN 1 ELSE 0 END AS chg
-            FROM orders
-            WINDOW w AS (PARTITION BY o_custkey
-                         ORDER BY o_orderdate, o_orderkey)
-        ), islands AS (
-            SELECT o_custkey, o_orderstatus, o_orderdate,
-                   CAST(sum(chg) OVER (PARTITION BY o_custkey
-                                  ORDER BY o_orderdate, o_orderkey
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS island
-            FROM flagged
-        ), grouped AS (
-            SELECT o_custkey, island,
-                   min(o_orderstatus) AS o_orderstatus,
-                   min(o_orderdate) AS valid_from,
-                   count(*) AS n_orders
-            FROM islands GROUP BY o_custkey, island
-        )
-        SELECT o_custkey, island, o_orderstatus, valid_from,
-               lead(valid_from) OVER (
-                   PARTITION BY o_custkey ORDER BY island) AS valid_to,
-               n_orders
-        FROM grouped
-    )
+    "inc_scd2_intervals": _SCD2_INTERVALS_SQL,
+    "inc_scd2_as_of": f"""
+        WITH intervals AS ({_SCD2_INTERVALS_SQL})
         SELECT o_custkey, o_orderstatus, valid_from, valid_to
         FROM intervals
         WHERE valid_from <= TIMESTAMP '1998-06-15 00:00:00'

@@ -20,8 +20,9 @@ enriched frame (``enrich_collection`` -> ``localCheckpoint`` ->
 ``split_enriched``); config validation, the static analysis and
 ``MappingPlan.from_config`` stay sequential, so config errors surface
 before any thread starts. Both sinks write through one path,
-``_write_run``: ``write_run_parquet`` and ``write_run_jdbc`` only map
-each output name to a file or a table. The data frames are written
+``_write_run``, and differ only in ``write(df, name)``: a file per
+output name, or the table ``sinks.jdbc.sink`` (a stream's JDBC writer
+loads through it too) maps the name to. The data frames are written
 concurrently first: each data write is the first sink of its
 collection and stores its enriched rows. Only then do the audit write
 and both reports run (together), so they read stored rows and no
@@ -32,8 +33,8 @@ set no session conf.
 Static-analysis phase parity (pipeline.py:43-92): expected-vs-input
 collection diff, schema.sql table scan, table lookups, ingestion-date
 stamp. Per-collection phase parity (:128-186): unmapped-collection
-skip, NEW/MISSING/ALREADY_EXISTS object status, DDL-on-demand (JDBC
-mode). Summary parity (reporting.py:36-95): the PipelineReport counters
+skip, NEW/MISSING/ALREADY_EXISTS object status, DDL before the load
+(JDBC mode). Summary parity (reporting.py:36-95): the PipelineReport counters
 are per-collection processed, error and missing-column counts, summed
 on the driver for the run totals — no mutable driver-side
 accumulation. Either sink collects them inside the audit write job
@@ -77,29 +78,31 @@ from .config.loader import (
     validate_app_config,
     validate_mapping_config,
 )
-from .errors import ConfigError
+from .errors import ConfigError, LoadError
 from .operators.transform import (
     enrich_collection,
     missing_table_audit_rows,
     split_enriched,
 )
 from .plans.mapping_plan import MappingPlan
+from .sinks import jdbc
 from .sources.json_source import collections_to_raw_df, load_input_json
 
 
 def load_schema_tables(schema_path: str) -> set[str]:
     """Regex scan of CREATE TABLE IF NOT EXISTS names in a schema.sql
     (reference etl_pipeline/schema_utils.py:8-21); no file, no tables.
-    A path not readable as text (a directory, not UTF-8) is a ConfigError."""
+    A path not readable as text (a directory, not UTF-8) or naming a
+    table ``split_table_name`` rejects is a ConfigError."""
     if not schema_path or not os.path.exists(schema_path):
         return set()
     try:
         with open(schema_path, "r", encoding="utf-8") as fh:
             content = fh.read()
-    except (OSError, UnicodeDecodeError) as exc:
+        matches = re.findall(r"CREATE TABLE IF NOT EXISTS\s+(\S+)", content, re.IGNORECASE)
+        return {normalize_table_name(m.strip().rstrip("(")) for m in matches}
+    except (OSError, UnicodeDecodeError, LoadError) as exc:
         raise ConfigError(f"runtime.schema_path {schema_path!r} cannot be read: {exc}") from None
-    matches = re.findall(r"CREATE TABLE IF NOT EXISTS\s+(\S+)", content, re.IGNORECASE)
-    return {normalize_table_name(m.strip().rstrip("(")) for m in matches}
 
 
 def _concurrently(spark: SparkSession, thunks: Mapping[str, Callable[[], Any]]) -> dict[str, Any]:
@@ -155,7 +158,6 @@ class RunResult:
 
     ingestion_date: str
     data_frames: dict[str, DataFrame]              # collection -> destination frame
-    target_tables: dict[str, str]                  # collection -> target table
     audit_df: DataFrame                            # full run audit trail
     object_statuses: dict[str, str]                # object_name -> status
     plans: dict[str, MappingPlan]                  # collection -> the run's plan
@@ -294,7 +296,7 @@ def run(
     audit_table = normalize_table_name(audit_cfg["audit_table"])
     schema_tables_no_audit = {
         t for t in schema_tables
-        if t != audit_table and not t.startswith(audit_schema + ".")
+        if t != audit_table and jdbc.split_table_name(t)[0] != audit_schema
     }
 
     collections_cfg = mapping  # validate_mapping_config returns the flat shape
@@ -302,17 +304,11 @@ def run(
     input_collections = set(data)
     missing_collections = expected - input_collections
 
-    table_lookup: dict[str, str] = {}
-    table_to_collection: dict[str, str] = {}
-    for coll, spec in collections_cfg.items():
-        norm = normalize_table_name(spec["target_table"])
-        table_lookup[norm] = spec["target_table"]
-        table_to_collection[norm] = coll
-
-    input_tables = {
-        normalize_table_name(collections_cfg[c]["target_table"])
-        for c in input_collections if c in collections_cfg
-    }
+    normalized = {c: normalize_table_name(spec["target_table"])
+                  for c, spec in collections_cfg.items()}
+    table_lookup = {normalized[c]: spec["target_table"] for c, spec in collections_cfg.items()}
+    table_to_collection = {t: c for c, t in normalized.items()}
+    input_tables = {normalized[c] for c in input_collections & expected}
     missing_input_tables = schema_tables_no_audit - input_tables
 
     ing_date = ingestion_date or _dt.datetime.now(_dt.timezone.utc).date().isoformat()
@@ -343,12 +339,9 @@ def run(
             unmapped.add(coll)
             continue
         target = spec["target_table"]
-        norm = normalize_table_name(target)
-        in_schema = norm in schema_tables_no_audit
-        exists = norm in existing
-        if exists:
+        if normalized[coll] in existing:
             status = OBJECT_STATUS_ALREADY_EXISTS
-        elif not in_schema:
+        elif normalized[coll] not in schema_tables_no_audit:
             status = OBJECT_STATUS_NEW  # will be auto-created
         else:
             status = OBJECT_STATUS_MISSING
@@ -375,7 +368,6 @@ def run(
     return RunResult(
         ingestion_date=ing_date,
         data_frames=data_frames,
-        target_tables=target_tables,
         audit_df=audit_df,
         object_statuses=object_statuses,
         plans=plans,
@@ -430,28 +422,14 @@ def _write_run(result: RunResult, write: Callable[[DataFrame, str], None]) -> No
 
 
 def write_run_jdbc(spark: SparkSession, result: RunResult) -> None:
-    """Sink a run into Postgres: one DDL bootstrap that creates every
-    table the run writes (the configured audit table, and both reports
-    in the configured audit schema), then the run's outputs as
-    partition-parallel batched appends
-    (reference pipeline.py:94-101 connect/DDL + per-doc inserts). The
-    DDL comes from the run's own plans (renamed columns included) and
-    its runtime.type_mappings; write_table serializes array columns."""
-    from .sinks import jdbc
-
-    app = result.app_config
-    db, audit = app["database"], app["audit"]
-    tables = {f"data_{c}": t for c, t in result.target_tables.items()}
-    tables["ingestion_audit"] = audit["audit_table"]
-    for report in ("missing_attributes_report", "missing_collections_report"):
-        tables[report] = f"{audit['audit_schema']}.{report}"
-    jdbc.execute_statements(spark, db, jdbc.audit_bootstrap_ddl(
-        audit["audit_schema"], audit["audit_table"]) + [
-        jdbc.create_table_ddl(p.target_table,
-                              jdbc.table_columns_from_plan(p, app["runtime"]["type_mappings"]))
-        for p in result.plans.values()
-    ])
-    _write_run(result, lambda df, name: jdbc.write_table(df, tables[name], db))
+    """Sink a run into Postgres through ``sinks.jdbc.sink``, the sink a
+    stream's ``jdbc_batch_writer`` loads through (reference
+    pipeline.py:94-101 connect/DDL + per-doc inserts): one DDL bootstrap
+    creates every table, then each output is appended to its table,
+    ``data_<collection>`` to the collection's ``target_table``,
+    ``ingestion_audit`` to ``audit.audit_table`` and both reports to
+    tables of their names in ``audit.audit_schema``."""
+    _write_run(result, jdbc.sink(spark, result.app_config, list(result.plans.values())))
 
 
 def write_run_parquet(result: RunResult, out_dir: str) -> None:

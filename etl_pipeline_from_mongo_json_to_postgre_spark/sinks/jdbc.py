@@ -22,23 +22,19 @@ Scale notes (100 TB target):
   TIMESTAMPTZ columns, preserving the reference's psycopg2 Json()
   behavior (postgres_loader.py:171-174) without a custom dialect.
 
-Environment verdict on the pgjdbc gap (VERDICT r5 task 4): the
-container has NO pgjdbc jar and NO network egress (DNS to
-repo1.maven.org fails), so the Postgres JDBC write can never execute
-here. Every line of this sink IS exercised against real databases
-anyway: `write_table`/`execute_statements` run end-to-end against
-embedded Derby (driver ships inside the Spark distribution —
-tests/test_jdbc_write_derby.py), and the Postgres-specific surface
-(generated DDL grammar, IF NOT EXISTS idempotency, JSONB coercion,
-batched multi-row load shape, server-side audit census) runs against a
-live Postgres 15 via COPY (tests/test_live_postgres.py). The only
-never-run artifact is the pgjdbc driver binary itself.
+No pgjdbc jar ships with the test environment, so the Postgres JDBC
+write itself never runs in the suite. Every line of this sink still
+runs against real databases: `write_table`/`execute_statements`
+against embedded Derby, whose driver ships with Spark
+(tests/test_jdbc_write_derby.py), and the Postgres-specific surface
+(DDL grammar, IF NOT EXISTS, JSONB coercion, batched load shape, audit
+census) against a live Postgres 15 via COPY (tests/test_live_postgres.py).
 """
 
 from __future__ import annotations
 
 import re
-from typing import Any, Iterable, Mapping, Sequence
+from typing import Any, Callable, Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -69,7 +65,10 @@ def quote_ident(name: str) -> str:
 
 def split_table_name(table_name: str, default_schema: str = "public") -> tuple[str, str]:
     """``[schema.]table`` -> (schema, table), lowercased
-    (reference schema_utils.py:24-26, postgres_loader.py:177-181)."""
+    (reference schema_utils.py:24-26, postgres_loader.py:177-181). The
+    package's one parser of table names: the config validator,
+    ``normalize_table_name`` and the DDL all go through it, so a name
+    the validator accepts is one the sink can create."""
     normalized = table_name.strip().lower()
     if not normalized:
         raise LoadError("Table name must be non-empty.")
@@ -305,3 +304,37 @@ def execute_statements(
     finally:
         conn.close()
 
+
+# ---------------------------------------------------------------------------
+# The load contract of a batch run and of a stream
+# ---------------------------------------------------------------------------
+
+
+def sink(
+    spark: SparkSession,
+    app_config: Mapping[str, Any],
+    plans: Sequence[MappingPlan],
+) -> Callable[[DataFrame, str], None]:
+    """Create every table a load writes, then return ``write(df, name)``,
+    which appends ``df`` to the table of output ``name``:
+    ``data_<collection>`` to that plan's ``target_table``,
+    ``ingestion_audit`` to ``audit.audit_table``, and both reports to
+    tables of their names in ``audit.audit_schema``. The DDL bootstrap
+    (reference pipeline.py:94-101, :311-338) creates the audit schema
+    and tables, and each plan's table with its columns (renamed ones
+    included) typed by ``runtime.type_mappings`` of the validated
+    ``app_config``. A batch run (``write_run_jdbc``) and a stream
+    (``jdbc_batch_writer``) both load through it, so under the same
+    configs they create and write the same tables."""
+    db, audit = app_config["database"], app_config["audit"]
+    tables = {f"data_{p.collection}": p.target_table for p in plans}
+    tables["ingestion_audit"] = audit["audit_table"]
+    for report in ("missing_attributes_report", "missing_collections_report"):
+        tables[report] = f"{audit['audit_schema']}.{report}"
+    type_mappings = app_config["runtime"]["type_mappings"]
+    execute_statements(spark, db, audit_bootstrap_ddl(
+        audit["audit_schema"], audit["audit_table"]) + [
+        create_table_ddl(p.target_table, table_columns_from_plan(p, type_mappings))
+        for p in plans
+    ])
+    return lambda df, name: write_table(df, tables[name], db)

@@ -46,6 +46,14 @@ MAX_STAGE_ROWS = 1_000_000
 
 MARKER = "_STAGED"
 
+STAGE_ROOT = "/tmp/spark_graft_{fmt}_stage"
+
+
+def stage_prefix(sf_dir: str) -> str:
+    """The start of the name of every stage of ``sf_dir`` (or of a directory
+    under it) in a ``STAGE_ROOT``; the source fingerprint follows it."""
+    return sf_dir.strip("/").replace("/", "_") + "_"
+
 
 def source_fingerprint(sf_dir: str, table: str = "documents") -> str:
     """Cheap content fingerprint of the parquet source files (names,
@@ -91,10 +99,8 @@ def stage_documents(
     ``write(df, out)`` writes the ``STAGED_COLUMNS`` of the rows
     ``where`` keeps (all when None) to ``out``; more than ``max_rows``
     such rows raise before anything is written."""
-    out = os.path.join(
-        f"/tmp/spark_graft_{fmt}_stage",
-        sf_dir.strip("/").replace("/", "_") + "_" + source_fingerprint(sf_dir),
-    )
+    out = os.path.join(STAGE_ROOT.format(fmt=fmt),
+                       stage_prefix(sf_dir) + source_fingerprint(sf_dir))
     marker = os.path.join(out, MARKER)
     if os.path.exists(marker):
         return out

@@ -36,8 +36,8 @@ from pyspark.sql import functions as F
 
 from ..config.defaults import DEFAULT_DATE_FORMATS, RAW_JSON, reserved_columns
 from ..config.loader import resolve_duplicate_columns
-from ..functions.casts import quote_ident
-from ..functions.datetime_fmt import has_time_component, strptime_to_java
+from ..functions.casts import multi_format_timestamp, quote_ident
+from ..functions.datetime_fmt import has_time_component
 
 
 def _split_formats(date_formats: list[str]) -> tuple[list[str], list[str]]:
@@ -47,31 +47,35 @@ def _split_formats(date_formats: list[str]) -> tuple[list[str], list[str]]:
     return date_only, with_time
 
 
-def classify_string(col: Column, date_formats: list[str] | None = None) -> Column:
-    """Type label for a string value (reference ui/run_pipeline.py:310-355):
-    datetime formats first, then date-only, then int-string, then
-    float-string, else text."""
+def classify_string(expr: str, date_formats: list[str] | None = None) -> Column:
+    """Type label for a string value, the SQL expression ``expr``
+    (reference ui/run_pipeline.py:310-355): datetime formats first, then
+    date-only, then int-string, then float-string, else text. A format
+    matches through the transform's own kernel,
+    ``casts.multi_format_timestamp``, so a value labelled ``date`` or
+    ``datetime`` is one the transform parses."""
     date_only, with_time = _split_formats(date_formats or list(DEFAULT_DATE_FORMATS))
-    is_datetime = F.coalesce(
-        *[F.try_to_timestamp(col, F.lit(strptime_to_java(f))) for f in with_time]
-    ).isNotNull() if with_time else F.lit(False)
-    is_date = F.coalesce(
-        *[F.try_to_timestamp(col, F.lit(strptime_to_java(f))) for f in date_only]
-    ).isNotNull() if date_only else F.lit(False)
+
+    def parses(formats: list[str]) -> Column:
+        if not formats:
+            return F.lit(False)
+        return F.expr(f"{multi_format_timestamp(expr, formats)} IS NOT NULL")
+
+    col = F.expr(expr)
     return (
-        F.when(is_datetime, F.lit("datetime"))
-        .when(is_date, F.lit("date"))
+        F.when(parses(with_time), F.lit("datetime"))
+        .when(parses(date_only), F.lit("date"))
         .when(col.try_cast("bigint").isNotNull(), F.lit("integer"))
         .when(col.try_cast("double").isNotNull(), F.lit("numeric"))
         .otherwise(F.lit("text"))
     )
 
 
-def classify_variant_type(vtype: Column, sval: Column,
+def classify_variant_type(vtype: Column, sval: str,
                           date_formats: list[str] | None = None) -> Column:
-    """Label from ``schema_of_variant`` output + the string rendering.
-    VOID (JSON null) -> NULL label, filtered by the caller (reference
-    skips None values, ui/run_pipeline.py:283-284)."""
+    """Label from ``schema_of_variant`` output + the string rendering
+    (SQL text ``sval``). VOID (JSON null) -> NULL label, filtered by the
+    caller (reference skips None values, ui/run_pipeline.py:283-284)."""
     return (
         F.when(vtype == "VOID", F.lit(None).cast("string"))
         .when(vtype == "BOOLEAN", F.lit("boolean"))
@@ -127,7 +131,7 @@ def observed_types(df: DataFrame, date_formats: list[str] | None = None) -> Data
     )
     labeled = exploded.select(
         "attribute",
-        classify_variant_type(F.col("_vtype"), F.col("_sval"), date_formats).alias("_label"),
+        classify_variant_type(F.col("_vtype"), "_sval", date_formats).alias("_label"),
     )
     return labeled.groupBy("attribute").agg(
         F.sort_array(F.collect_set("_label")).alias("observed_types")

@@ -37,24 +37,23 @@ other source.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Any, Iterator
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from ..errors import InputError
+from ._stage import stage_documents
 from .json_source import load_input_json, raw_json_text
-from .mongo import serialize_document
+from .mongo import serialize_document, stage_to_json
 
 OBJECT_ID_BITS = 96  # 12-byte ObjectId keyspace
 
 SCHEMA = "collection string, raw_json string"
 
-# Hard ceiling on driver-side export-fixture staging (harness path of
-# s3_mongo_datasource_scan): ~2M rows of short docs stays well under a
-# GiB streamed one partition at a time; anything bigger must use live
-# mode. Raising, not truncating, keeps the oracle comparison honest.
+# Hard ceiling on export-fixture staging (harness path of
+# s3_mongo_datasource_scan); anything bigger belongs in live mode.
+# Raising, not truncating, keeps the oracle comparison honest.
 MAX_EXPORT_FIXTURE_ROWS = 2_000_000
 
 
@@ -217,6 +216,27 @@ def register(spark) -> None:
 # driver-checked query: export-mode scan round-trip over the documents table
 # ---------------------------------------------------------------------------
 
+def _write_export(df, out: str) -> None:
+    """Write ``df``'s documents as a directory of export files, one
+    ``{"documents": [...]}`` file per partition, from the executors.
+    A file is named after its partition, so a retried task rewrites
+    the same file."""
+    os.makedirs(out, exist_ok=True)
+
+    def _write(batches):
+        import pandas as pd
+        from pyspark import TaskContext
+
+        docs = [{"_id": f"{int(doc_id):024x}", "doc_id": int(doc_id), "lang": lang, "text": text}
+                for pdf in batches
+                for doc_id, lang, text in zip(pdf["doc_id"], pdf["lang"], pdf["text"])]
+        stage_to_json({"documents": docs},
+                      os.path.join(out, f"part-{TaskContext.get().partitionId():05d}.json"))
+        yield pd.DataFrame({"n": [len(docs)]})
+
+    df.select("doc_id", "lang", "text").mapInPandas(_write, "n long").count()
+
+
 def s3_mongo_datasource_scan(spark, sf_dir):
     """Oracle-checked connector round-trip: the documents table is
     staged into the reference's export JSON shape (test fixture — at
@@ -224,41 +244,15 @@ def s3_mongo_datasource_scan(spark, sf_dir):
     it), read back through the mongodb_py DataSource in executors, and
     the BSON-normalized raw_json is parsed back to typed columns.
     Proves row fidelity of the whole connector path against DuckDB on
-    the original parquet."""
-    import tempfile
-
+    the original parquet. The fixture is staged once per source by the
+    one staging routine (``_stage.stage_documents``): executors write
+    it, and more than ``MAX_EXPORT_FIXTURE_ROWS`` rows raise instead of
+    staging a truncated table the oracle would not match."""
     from pyspark.sql import functions as F
 
-    from .parquet import load_table
-
     register(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    # Stage the export fixture. Harness-only (at scale the data is
-    # already IN Mongo and mode=live partition-scans it), but still a
-    # registered query's execution path, so it must not be able to OOM
-    # the driver: stream via toLocalIterator (one partition resident at
-    # a time, never a whole-table driver collect) under a hard row cap that
-    # raises instead of silently truncating — the oracle compares the
-    # full table, so truncation would be a wrong answer, and an sf bump
-    # past the cap should fail loudly with the live-mode pointer.
-    out = os.path.join(tempfile.mkdtemp(prefix="mongo_export_"), "documents.json")
-    n = 0
-    with open(out, "w", encoding="utf-8") as fh:
-        fh.write('{"documents": [')
-        for r in docs.toLocalIterator(prefetchPartitions=True):
-            n += 1
-            if n > MAX_EXPORT_FIXTURE_ROWS:
-                raise RuntimeError(
-                    f"s3_mongo_datasource_scan: export fixture exceeds "
-                    f"{MAX_EXPORT_FIXTURE_ROWS} rows; staging a driver-side "
-                    "JSON dump at this scale is wrong — point the "
-                    "mongodb_py DataSource at a live server (mode=live) "
-                    "instead.")
-            rec = {"_id": f"{int(r['doc_id']):024x}",
-                   "doc_id": int(r["doc_id"]),
-                   "lang": r["lang"], "text": r["text"]}
-            fh.write(("," if n > 1 else "") + json.dumps(rec))
-        fh.write("]}")
+    out = stage_documents(spark, sf_dir, "mongo_export", _write_export,
+                          max_rows=MAX_EXPORT_FIXTURE_ROWS)
     scanned = (
         spark.read.format("mongodb_py")
         .option("path", out)

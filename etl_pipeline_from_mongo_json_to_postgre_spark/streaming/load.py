@@ -3,10 +3,14 @@ per-micro-batch sink (SURVEY §7 phase 6a).
 
 The reference's only incrementality is re-running the whole batch
 pipeline (etl_pipeline/pipeline.py:91-92 stamps a fresh ingestion_date
-per run). The idiomatic Spark replacement is a Structured Streaming
-source feeding the SAME mapping/transform engine per micro-batch, with
-``foreachBatch`` fanning each batch out to the two JDBC sinks (data
-table + audit table) exactly like the batch path does. Each micro-batch
+per run). The Spark replacement is a Structured Streaming source
+feeding the SAME mapping/transform engine per micro-batch, with
+``foreachBatch`` handing each batch to a writer. ``jdbc_batch_writer``
+loads exactly like the batch path does, through its JDBC sink
+``sinks.jdbc.sink``: the same DDL before the first batch (target table
+typed by ``runtime.type_mappings``, JSONB raw-JSON and
+``missing_columns``, the configured audit schema and table), and the
+same tables for each batch's data and audit rows. Each micro-batch
 takes the cut ``pipeline.run`` takes: ``enrich_collection`` once,
 stored, then ``split_enriched`` into the data and audit frames, so a
 document is parsed once for both writes. The stream is read like every
@@ -32,30 +36,34 @@ from __future__ import annotations
 import os
 from collections.abc import Callable, Mapping
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config.defaults import AUDIT_TABLE, OBJECT_STATUS_NEW
+from ..config.defaults import OBJECT_STATUS_NEW
 from ..operators.transform import enrich_collection, split_enriched
 from ..plans.mapping_plan import MappingPlan
-from ..sinks.jdbc import write_table
+from ..sinks import jdbc
 from ..sources.parquet import load_table
 from .harness import staged_stream
 
 BatchWriter = Callable[[DataFrame, DataFrame, int], None]
 
 
-def jdbc_batch_writer(plan: MappingPlan, db_config: Mapping,
-                      audit_table: str = AUDIT_TABLE) -> BatchWriter:
-    """Production writer: append data + audit frames over JDBC
-    (mirrors the reference's per-document data+audit insert pair,
-    pipeline.py:238-266, at micro-batch granularity)."""
+def jdbc_batch_writer(spark: SparkSession, plan: MappingPlan,
+                      app_config: Mapping) -> BatchWriter:
+    """Production writer: ``sinks.jdbc.sink`` over this one plan, whose
+    DDL runs here, before any batch; each batch's data and audit frames
+    are appended as its ``data_<collection>`` and ``ingestion_audit``
+    outputs. ``app_config`` is a validated app config. Mirrors the
+    reference's per-document data+audit insert pair, pipeline.py:238-266,
+    at micro-batch granularity."""
+    write = jdbc.sink(spark, app_config, [plan])
 
-    def write(data_df: DataFrame, audit_df: DataFrame, batch_id: int) -> None:
-        write_table(data_df, plan.target_table, db_config, mode="append")
-        write_table(audit_df, audit_table, db_config, mode="append")
+    def write_batch(data_df: DataFrame, audit_df: DataFrame, batch_id: int) -> None:
+        write(data_df, f"data_{plan.collection}")
+        write(audit_df, "ingestion_audit")
 
-    return write
+    return write_batch
 
 
 def stream_load(stream_df: DataFrame, plan: MappingPlan,
@@ -95,15 +103,10 @@ def stream_load(stream_df: DataFrame, plan: MappingPlan,
 
 
 # ---------------------------------------------------------------------------
-# Driver-checked end-to-end entry (VERDICT r7 task 6): the reference's
-# whole job — ingest -> transform -> load -> audit (pipeline.py:188-284)
-# — through the REAL streaming engine, with the audit census recomputed
-# over the WRITTEN sink output. If foreachBatch dropped a micro-batch or
-# wrote one twice, the counts could not match the oracle's census over
-# the raw input: the entry IS the exactly-once-per-batch check (with an
-# availableNow file source, every staged file is processed exactly once
-# per the checkpointed offsets; the parquet writer is the in-sandbox
-# twin of jdbc_batch_writer — swap writers, nothing else changes).
+# Driver-checked entry: ingest -> transform -> load -> audit
+# (pipeline.py:188-284) through the streaming engine, with the audit
+# census recomputed over the WRITTEN sink output, so a dropped or
+# doubled micro-batch cannot match the oracle's census of the input.
 # ---------------------------------------------------------------------------
 
 RUN_TS = "2024-06-01 00:00:00"

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .events import ORACLE_SQL as ORACLE_SQL_EVENTS
 from .events import SESSION_GAP_MIN
 from .harness import drain_to_memory, watch_table
 
@@ -90,31 +91,8 @@ QUERIES = {
 }
 
 ORACLE_SQL = {
-    # identical to the stream_sessionize oracle — the native operator's
-    # boundary rule matches the Python twin's exactly (probed: merge at
-    # diff == gap, split at diff > gap; see module docstring)
-    "stream_sessionize_native": f"""
-        WITH flagged AS (
-            SELECT user_id, event_id, ts, value,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                          OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                             > {SESSION_GAP_MIN * 60 * 1_000_000}
-                        THEN 1 ELSE 0 END AS new_session
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), numbered AS (
-            SELECT user_id, ts, value,
-                   sum(new_session) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS session_no
-            FROM flagged
-        )
-        SELECT user_id,
-               min(epoch_us(ts)) AS session_start,
-               max(epoch_us(ts)) AS session_end,
-               CAST(count(*) AS INT) AS n_events,
-               CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE) AS value_sum
-        FROM numbered GROUP BY user_id, session_no
-    """,
+    # the stream_sessionize oracle: the native operator's boundary rule
+    # matches the Python twin's exactly (probed: merge at diff == gap,
+    # split at diff > gap; see module docstring)
+    "stream_sessionize_native": ORACLE_SQL_EVENTS["stream_sessionize"],
 }

@@ -4,6 +4,9 @@ gate — the piece that converts the untrained-codebook verdict
 (similarity.ann_pq_recall_eval, recall ~0.01 by design) into a real
 index whose own gate passes."""
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_from_mongo_json_to_postgre_spark.operators import ann_trained
@@ -28,6 +31,19 @@ def test_trained_artifact_shape():
     for cb in TRAINED_CODEBOOKS:
         assert len(cb) == ann_trained.TCODES
         assert all(len(c) == ann_trained.TSUBDIM for c in cb)
+
+
+@pytest.mark.parametrize("content", ['{"centroids": [[0.1, 0.2]], "codeb',
+                                     '{"centroids": [[0.1, 0.2]]}', "[]"])
+def test_corrupt_artifact_raises_naming_the_path(tmp_path, monkeypatch, content):
+    """A truncated or key-less artifact raises naming its path instead of
+    silently emptying QUERIES; only a missing file is the bootstrap case."""
+    path = tmp_path / "trained_pq_ann.json"
+    monkeypatch.setattr(ann_trained, "_TRAINED_PATH", str(path))
+    assert ann_trained._load_trained() == (None, None)
+    path.write_text(content)
+    with pytest.raises(RuntimeError, match=re.escape(str(path))):
+        ann_trained._load_trained()
 
 
 def test_farthest_first_init_picks_one_seed_per_component(spark):

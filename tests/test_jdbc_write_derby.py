@@ -150,16 +150,20 @@ SINK_OUTPUTS = {
 }
 
 
-def test_parquet_and_jdbc_sinks_write_the_same_outputs(spark, db, tmp_path, monkeypatch):
-    """One run written by both sinks: the same outputs, holding the
-    same rows; summary() after the JDBC write starts no Spark job and
-    equals the summary of an unwritten run. Derby has no JSONB or
-    TIMESTAMPTZ, so the bootstrap only creates its schemas here and
-    the writes create the tables."""
+def _derby_ddl(monkeypatch):
+    """Derby has no JSONB or TIMESTAMPTZ: the sink's DDL bootstrap only
+    creates its schemas, and the writes create the tables."""
     execute = jdbc.execute_statements
     monkeypatch.setattr(jdbc, "execute_statements", lambda spark, cfg, stmts: execute(
         spark, cfg, [s.replace(" IF NOT EXISTS", "") for s in stmts
                      if s.startswith("CREATE SCHEMA")]))
+
+
+def test_parquet_and_jdbc_sinks_write_the_same_outputs(spark, db, tmp_path, monkeypatch):
+    """One run written by both sinks: the same outputs, holding the
+    same rows; summary() after the JDBC write starts no Spark job and
+    equals the summary of an unwritten run."""
+    _derby_ddl(monkeypatch)
     tables = []
     write_table = jdbc.write_table
     monkeypatch.setattr(jdbc, "write_table", lambda df, table, cfg, **kw: (
@@ -197,15 +201,17 @@ def test_jdbc_options_derby_omits_pg_only_properties(tmp_path):
     assert pg["url"].startswith("jdbc:postgresql://")
 
 
-def test_stream_load_foreachbatch_into_real_jdbc(spark, db, tmp_path, sf_dir):
+def test_stream_load_foreachbatch_into_real_jdbc(spark, db, tmp_path, sf_dir, monkeypatch):
     """The streaming incremental-load path END-TO-END against a real
     JDBC database: events stream -> mapping transform per micro-batch
-    -> jdbc_batch_writer (the production foreachBatch writer, data +
+    -> jdbc_batch_writer (the production foreachBatch writer: the run's
+    sink, whose DDL bootstrap creates the audit schema, then data +
     audit appends). Then a second availableNow run on the SAME
     checkpoint must append nothing — the checkpoint, not luck, is what
     makes replays safe."""
     from pyspark.sql import functions as F
 
+    from etl_pipeline_from_mongo_json_to_postgre_spark.config import validate_app_config
     from etl_pipeline_from_mongo_json_to_postgre_spark.plans.mapping_plan import (
         MappingPlan,
     )
@@ -217,7 +223,7 @@ def test_stream_load_foreachbatch_into_real_jdbc(spark, db, tmp_path, sf_dir):
         stream_load,
     )
 
-    jdbc.execute_statements(spark, db, ['CREATE SCHEMA "doc_audit"'])
+    _derby_ddl(monkeypatch)
     plan = MappingPlan.from_config(
         "events_stream",
         {
@@ -236,7 +242,7 @@ def test_stream_load_foreachbatch_into_real_jdbc(spark, db, tmp_path, sf_dir):
         .alias("raw_json")
     )
     ckpt = str(tmp_path / "ckpt")
-    writer = jdbc_batch_writer(plan, db)
+    writer = jdbc_batch_writer(spark, plan, validate_app_config({"database": db}))
     q = stream_load(stream, plan, writer,
                     checkpoint_dir=ckpt, ingested_at="2024-06-01 00:00:00")
     q.awaitTermination(120)

@@ -172,28 +172,30 @@ def test_live_mode_without_pymongo_raises_actionable_error():
         reader.partitions()
 
 
-def test_s3_scan_staging_is_capped_and_streams(spark, sf_dir):
-    """VERDICT r3 task 3: the export-fixture staging inside the
-    registered s3_mongo_datasource_scan query must not full-collect the
-    documents table (round-3 flagged `docs.toPandas()`); it streams via
-    toLocalIterator under a hard cap that raises rather than truncates."""
+def test_s3_scan_staging_is_capped_and_streams(spark, sf_dir, tmp_path, monkeypatch):
+    """The export-fixture staging inside the registered
+    s3_mongo_datasource_scan query never collects the documents table to
+    the driver: executors write it, through the one staging routine,
+    under a hard cap that raises rather than truncates."""
     import inspect
+    import os
+    import shutil
 
     from etl_pipeline_from_mongo_json_to_postgre_spark.sources import mongo_datasource as mds
 
-    src = inspect.getsource(mds.s3_mongo_datasource_scan)
-    assert "toPandas" not in src
-    assert "toLocalIterator" in src
+    src = inspect.getsource(mds.s3_mongo_datasource_scan) + inspect.getsource(mds._write_export)
+    for collect in ("toPandas", "toLocalIterator", ".collect("):
+        assert collect not in src
+    assert "stage_documents" in src
     assert mds.MAX_EXPORT_FIXTURE_ROWS >= 100_000
 
-    # cap enforcement: shrink the cap below the table size and expect a
-    # loud failure, never a truncated fixture
-    old = mds.MAX_EXPORT_FIXTURE_ROWS
-    mds.MAX_EXPORT_FIXTURE_ROWS = 3
-    try:
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="mode=live"):
-            mds.s3_mongo_datasource_scan(spark, sf_dir).count()
-    finally:
-        mds.MAX_EXPORT_FIXTURE_ROWS = old
+    # cap enforcement on a copy of the table that has no stage yet: shrink
+    # the cap below the table size and expect a loud failure, never a
+    # truncated fixture
+    table = os.path.join(sf_dir, "documents.parquet")
+    copy = shutil.copytree if os.path.isdir(table) else shutil.copy
+    (tmp_path / "sf").mkdir()
+    copy(table, tmp_path / "sf" / "documents.parquet")
+    monkeypatch.setattr(mds, "MAX_EXPORT_FIXTURE_ROWS", 3)
+    with pytest.raises(ValueError, match="refusing to stage"):
+        mds.s3_mongo_datasource_scan(spark, str(tmp_path / "sf"))

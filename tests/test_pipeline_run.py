@@ -718,6 +718,94 @@ def test_write_run_jdbc_puts_reports_in_the_configured_audit_schema(spark, monke
     assert created == {jdbc.qualified_identifier(t) for t in writes}
 
 
+def test_stream_and_run_load_through_one_jdbc_sink(spark, monkeypatch):
+    """A jdbc_batch_writer stream and write_run_jdbc, under one mapping
+    and an app config with its own audit table and audit schema, issue
+    the same CREATE statements for the data table and the audit table,
+    and write the same data and audit rows to those two tables."""
+    from etl_pipeline_from_mongo_json_to_postgre_spark.config import (
+        validate_app_config,
+        validate_mapping_config,
+    )
+    from etl_pipeline_from_mongo_json_to_postgre_spark.plans.mapping_plan import MappingPlan
+    from etl_pipeline_from_mongo_json_to_postgre_spark.sinks import jdbc
+    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.harness import staged_stream
+    from etl_pipeline_from_mongo_json_to_postgre_spark.streaming.load import (
+        jdbc_batch_writer,
+        stream_load,
+    )
+
+    app = validate_app_config({"audit": {"audit_schema": "audit_x",
+                                         "audit_table": "audit_y.runs"}})
+    mapping = {"collections": {"orders": MAPPING["collections"]["orders"]}}
+    docs = INPUT["orders"]
+    tables = ("public.orders", "audit_y.runs")
+
+    def load(surface):
+        statements, _ = _stub_jdbc(monkeypatch)
+        rows, stub = {}, jdbc.write_table
+        monkeypatch.setattr(jdbc, "write_table", lambda df, table, db, **kw: (
+            rows.setdefault(table, []).extend(df.collect()), stub(df, table, db, **kw)))
+        if surface == "run":
+            pipeline.write_run_jdbc(spark, pipeline.run(
+                spark, {"orders": docs}, mapping, app_config=app, ingestion_date="2024-06-01"))
+        else:
+            plan = MappingPlan.from_config("orders", validate_mapping_config(mapping)["orders"])
+            raw = spark.createDataFrame([(json.dumps(d),) for d in docs], "raw_json string")
+            with staged_stream(spark, raw, "raw_json string") as (stream, scratch):
+                stream_load(stream, plan, jdbc_batch_writer(spark, plan, app),
+                            os.path.join(scratch, "ckpt"), ingested_at=TS).awaitTermination()
+        created = [s for s in statements if s.startswith("CREATE TABLE")
+                   and s.split()[5] in {jdbc.qualified_identifier(t) for t in tables}]
+        return created, {t: sorted(map(tuple, r), key=repr) for t, r in rows.items()
+                         if t in tables}
+
+    run_ddl, run_rows = load("run")
+    stream_ddl, stream_rows = load("stream")
+    assert len(run_ddl) == 2 and stream_ddl == run_ddl
+    assert sorted(stream_rows) == sorted(tables)
+    assert stream_rows == run_rows
+    assert len(run_rows["public.orders"]) == len(run_rows["audit_y.runs"]) == 2
+
+
+# case -> (surface, mapping target_table, app config, the text the
+# ConfigError names)
+TABLE_NAME_CASES = {
+    "target_table_empty": ("", {}, "collection 'c' target_table"),
+    "target_table_schema_only": ("public.", {}, "collection 'c' target_table"),
+    "target_table_no_schema": (".t", {}, "collection 'c' target_table"),
+    "audit_table_schema_only": ("public.c", {"audit": {"audit_table": "doc_audit."}},
+                                "audit.audit_table"),
+}
+
+
+@pytest.mark.parametrize("surface", ["run", "cli"])
+@pytest.mark.parametrize("case", list(TABLE_NAME_CASES))
+def test_table_name_errors_name_the_collection_or_key(spark, tmp_path, case, surface):
+    """A target_table or audit.audit_table that the JDBC sink's table
+    parser rejects is a ConfigError naming the collection or the key,
+    in run() and in the CLI (exit 1, "Pipeline error"), before any sink
+    writes a table or a file under that name."""
+    target, app, want = TABLE_NAME_CASES[case]
+    mapping = {"collections": {"c": {
+        "target_table": target, "object_id_attribute": "id",
+        "mappings": {"id": {"column": "id", "type": "integer"}}}}}
+    inp = {"c": [{"id": 1}]}
+    if surface == "cli":
+        for name, cfg in (("in.json", inp), ("mapping.json", mapping), ("app.json", app)):
+            (tmp_path / name).write_text(json.dumps(cfg))
+        proc = _cli("--input", str(tmp_path / "in.json"),
+                    "--mapping-config", str(tmp_path / "mapping.json"),
+                    "--app-config", str(tmp_path / "app.json"),
+                    "--output-dir", str(tmp_path / "out"))
+        assert proc.returncode == 1 and "Pipeline error" in proc.stderr, proc.stderr[-2000:]
+        assert want in proc.stderr
+        assert not (tmp_path / "out").exists()
+        return
+    with pytest.raises(ConfigError, match=re.escape(want)):
+        pipeline.run(spark, inp, mapping, app)
+
+
 def test_missing_table_audit_rows_are_a_local_scan(spark, tmp_path):
     """Tables schema.sql names but the input lacks each get one audit
     row, read from a local table scan rather than a Python RDD; a

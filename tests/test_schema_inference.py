@@ -127,3 +127,38 @@ def test_inferred_mapping_runs_in_strict_mode(spark):
         ("a2", "closed", "s", "n", 1, "success")]
     assert [json.loads(r["raw_json"]) for r in rows] == docs
     assert res.summary()["total_documents"] == 2
+
+
+def test_inferred_config_of_a_file_loads_every_document(spark, tmp_path):
+    """infer_mapping_from_json on a file, then run() on the same file
+    under the inferred config: a ``status`` key is renamed, every value
+    labelled date or datetime is one the transform parses, and every
+    document lands as ``success``."""
+    import json
+
+    from etl_pipeline_from_mongo_json_to_postgre_spark import pipeline
+
+    docs = [
+        {"_id": "e1", "status": "open", "day": "2024-03-05", "at": "2024-03-05T10:11:12",
+         "seen": "07/15/2024 03:22 pm", "n": 3, "x": "4.25", "ok": True},
+        {"_id": "e2", "status": "closed", "day": "07/15/2024", "at": "2024-03-05T10:11:12+0100",
+         "seen": "07/15/2024 03:22 PM", "n": "7", "x": 1.5, "ok": False},
+        {"_id": "e3", "day": "2024.01.05", "at": "05-01-2024 10:11:12",
+         "seen": "2024-01-05T10:11:12.123Z"},
+    ]
+    path = tmp_path / "input.json"
+    path.write_text(json.dumps({"events": docs}))
+
+    cfg = infer.infer_mapping_from_json(spark, str(path))
+    spec = cfg["collections"]["events"]
+    assert {a: (m["column"], m["type"]) for a, m in spec["mappings"].items()} == {
+        "_id": ("_id", "text"), "status": ("status1", "text"), "day": ("day", "date"),
+        "at": ("at", "datetime"), "seen": ("seen", "datetime"), "n": ("n", "integer"),
+        "x": ("x", "numeric"), "ok": ("ok", "boolean")}
+
+    res = pipeline.run(spark, str(path), cfg, ingestion_date="2024-06-01")
+    rows = sorted(res.data_frames["events"].collect(), key=lambda r: r["_id"])
+    assert [r["status"] for r in rows] == ["success"] * 3
+    assert all(r["day"] is not None and r["at"] is not None and r["seen"] is not None
+               for r in rows)
+    assert res.summary()["successful_documents"] == 3
